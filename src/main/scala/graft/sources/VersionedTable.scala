@@ -949,6 +949,10 @@ object VersionedTable {
     // file is staged BEFORE the rename/marker publish)
     txnStamps.foreach { case (a, b) =>
       groupedMeta(GroupedTxnPrefix + a) = b.toString }
+    // each staged extra's schema, so [[readExtra]] reads it back without
+    // a footer-inference job
+    extrasData.foreach { case (name, extra) =>
+      groupedMeta(GroupedExtraSchemaPrefix + name) = extra.schema.json }
     // ONE PUT lands schema + mapping + constraints + properties +
     // info + txn stamps
     writeProps(f, groupedMetaFile(staging), groupedMeta.toMap)
@@ -1720,6 +1724,18 @@ object VersionedTable {
   private val GroupedPropPrefix = "p."
   private val GroupedInfoPrefix = "i."
   private val GroupedTxnPrefix = "t."
+  private val GroupedExtraSchemaPrefix = "x."
+
+  /** The schema extra `name` was staged with at version `v` — recorded
+    * in the grouped `_meta` object by [[commitWith]]. None for versions
+    * written before the record existed, or when the extra was written
+    * outside a commit. */
+  private def extraSchemaOf(
+      spark: SparkSession, root: String, v: Long,
+      name: String): Option[org.apache.spark.sql.types.StructType] =
+    groupedMetaOf(spark, root, v).get(GroupedExtraSchemaPrefix + name)
+      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Transaction stamps recorded with version `v` — app_id → high-water
     * batch_id. Grouped vintages read them from the one _meta object
@@ -1940,20 +1956,26 @@ object VersionedTable {
     * (on an object store each walk is driver-latency RPCs, and a masked
     * read sits on the per-commit hot path of every MOR writer). */
   private def dvOfChain(
-      spark: SparkSession, root: String, v: Long, chain: DvChain): DataFrame =
-    if (chain.barrier == v && chain.levels.isEmpty)
-      readExtra(spark, root, v, "dv").get
-    else {
-      import org.apache.spark.sql.functions.{col, not}
-      val dirs =
-        new Path(dataDir(spark, root, chain.barrier), "_dv").toString +:
-          chain.levels.map(l =>
-            new Path(dataDir(spark, root, l), "_dvdelta").toString)
-      val df = spark.read.parquet(dirs: _*)
-        .select(col("file"), col("pos"))
-      if (chain.removedTails.isEmpty) df
-      else df.where(not(col("file").isInCollection(chain.removedTails)))
-    }
+      spark: SparkSession, root: String, v: Long, chain: DvChain): DataFrame = {
+    import org.apache.spark.sql.functions.{col, not}
+    val dirs =
+      new Path(dataDir(spark, root, chain.barrier), "_dv").toString +:
+        chain.levels.map(l =>
+          new Path(dataDir(spark, root, l), "_dvdelta").toString)
+    // every mask writer lands exactly (file, pos): reading under that
+    // fixed schema skips Spark's footer-inference job on every masked read
+    val df = spark.read.schema(DvSchema).parquet(dirs: _*)
+    if (chain.removedTails.isEmpty) df
+    else df.where(not(col("file").isInCollection(chain.removedTails)))
+  }
+
+  /** The deletion-vector sidecar schema (`_dv`, `_dvdelta`): the masked
+    * row's file ref and its row index within that file. */
+  private val DvSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("file",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("pos",
+      org.apache.spark.sql.types.LongType)))
 
   /** On-disk byte size of version `v`'s mask, delta-aware — the
     * broadcast-gate input ([[DvBroadcastThresholdKey]]). Chained
@@ -5742,12 +5764,22 @@ object VersionedTable {
   /** Read a side table committed alongside version `v` via [[commit]]'s
     * `extras` (e.g. the change feed [[Sinks.upsertByKeyVersioned]]
     * stores as `changes`). None when that version carries no such extra —
-    * the caller distinguishes "no feed recorded" from "an empty feed". */
+    * the caller distinguishes "no feed recorded" from "an empty feed".
+    *
+    * Building the frame launches no Spark job: the schema the commit
+    * staged the extra with is recorded in the version's grouped `_meta`
+    * object ([[extraSchemaOf]]) and applied to the read, so Spark skips
+    * its footer-inference job. Versions committed before the record
+    * existed read with inference, as before. */
   def readExtra(
       spark: SparkSession, root: String, v: Long, name: String): Option[DataFrame] = {
     require(isCommitted(spark, root, v), s"version $v is not committed under $root")
     val p = new Path(dataDir(spark, root, v), s"_$name")
-    if (fs(spark, root).exists(p)) Some(spark.read.parquet(p.toString)) else None
+    if (!fs(spark, root).exists(p)) None
+    else Some(extraSchemaOf(spark, root, v, name) match {
+      case Some(sch) => spark.read.schema(sch).parquet(p.toString)
+      case None => spark.read.parquet(p.toString)
+    })
   }
 
   // ---- COPY INTO loaded-file ledger (incremental) -------------------------
@@ -5983,7 +6015,6 @@ object VersionedTable {
     * deletion vectors / a txn stamp, and the recorded schema width.
     * O(retained versions) driver work, newest first. */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val f = fs(spark, root)
     // ONE checkpoint read covers every checkpointed version's bytes —
     // the per-version snapshotBytes road (which also consults the
     // checkpoint) would re-read the file once per history row
@@ -5993,7 +6024,6 @@ object VersionedTable {
       val refs = dataFileRefs(spark, root, v)
       val ownPrefix = dataDirName(spark, root, v) + "/"
       val fresh = refs.count(_.startsWith(ownPrefix))
-      val vdir = dataDir(spark, root, v)
       // the commitinfo operation stamp (Delta's commitInfo.operation);
       // "" for pre-stamp vintages and unstamped paths
       val info = commitInfoOf(spark, root, v)
@@ -6003,7 +6033,8 @@ object VersionedTable {
         refs.size,
         ckptBytes.getOrElse(v, snapshotBytes(spark, root, v, Some(ckptBytes))),
         fresh, refs.size - fresh,
-        f.exists(new Path(vdir, "_changes")),
+        // the same answer readChanges serves: sidecar OR virtual feed
+        hasChangeFeed(spark, root, v),
         // chain-aware: a delta-form version's mask may live in its own
         // `_dvdelta` or ride the chain with no sidecar at all — the
         // introspection face must agree with what dvOf/readVersion serve
@@ -6152,14 +6183,8 @@ object VersionedTable {
         if (df.columns.contains(sf.name)) col(sf.name).cast(sf.dataType).as(sf.name)
         else lit(null).cast(sf.dataType).as(sf.name)): _*)
     def dvFrameOf(v: Long): DataFrame = VersionedTable.dvOf(spark, root, v)
-      .map(_.select(col("file"), col("pos")))
       .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("file",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pos",
-            org.apache.spark.sql.types.LongType)))))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], DvSchema))
     val curDv = dvFrameOf(cur); val tgtDv = dvFrameOf(tgt)
     var parts = List.empty[DataFrame]
     val tgtOnly = tgtRefs.filterNot(curSet)

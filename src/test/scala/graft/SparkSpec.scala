@@ -7,6 +7,26 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for operator specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Run `body` and count the Spark jobs started while it ran. Suites
+    * run one at a time in the forked test JVM, so every job in the
+    * window is the body's. */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBusBridge.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -83,4 +83,31 @@ class CommitInfoSpec extends SparkSpec {
     assert(VersionedTable.history(spark, root)
       .select("operation").head.getString(0) == "")
   }
+
+  test("history's change_feed column agrees with the feed readers on " +
+    "sidecar, virtual and routed versions") {
+    val root = freshRoot()
+    VersionedTable.commit(
+      (1L to 10L).map(i => (i, s"r$i")).toDF("id", "x"), root) // v1: no feed
+    VersionedTable.commitAppend(Seq((11L, "a")).toDF("id", "x"), root,
+      changeFeed = true)                                    // v2: virtual insertAll
+    VersionedTable.setProperties(spark, root, Map("owner" -> "t")) // v3: virtual none
+    VersionedTable.deleteWhere(spark, root, $"id" === 1L)   // v4: flat sidecar
+    spark.conf.set(VersionedTable.RouteMinBytesKey, "0")
+    try VersionedTable.deleteWhere(spark, root, $"id" === 2L) // v5: routed
+    finally spark.conf.unset(VersionedTable.RouteMinBytesKey)
+    assert(VersionedTable.commitInfoOf(spark, root, 5L)
+      .get(VersionedTable.ChangesLayoutKey).contains("routed"))
+    val feedCol = VersionedTable.history(spark, root)
+      .select("version", "change_feed").as[(Long, Boolean)].collect().toMap
+    assert(feedCol == Map(1L -> false, 2L -> true, 3L -> true, 4L -> true,
+      5L -> true))
+    (1L to 5L).foreach { v =>
+      assert(feedCol(v) == VersionedTable.hasChangeFeed(spark, root, v), s"v$v")
+    }
+    // every version the column calls feed-carrying serves its feed
+    assert(VersionedTable.readChanges(spark, root, 2L, 5L)
+      .select("id", "_change_type").as[(Long, String)].collect().toSet ==
+      Set((11L, "insert"), (1L, "delete"), (2L, "delete")))
+  }
 }

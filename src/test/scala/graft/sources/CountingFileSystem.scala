@@ -26,7 +26,15 @@ object CountingFileSystem {
   }
   def enter(): Boolean = { val d = depth.get; depth.set(d + 1); d == 0 }
   def exit(): Unit = depth.set(depth.get - 1)
-  def reset(): Unit = ops.clear()
+  // the path of every counted open, for specs that count how often one
+  // table's data files are read
+  private val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { ops.clear(); opened.clear() }
+  def openedPaths(): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    opened.asScala.toSeq
+  }
+  def recordOpen(p: String): Unit = opened.add(p)
   def add(op: String): Unit =
     ops.computeIfAbsent(op, _ => new LongAdder).increment()
   def snapshot(): Map[String, Long] = {
@@ -41,9 +49,12 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "cnt"
   override def getUri: java.net.URI = java.net.URI.create("cnt:///")
 
-  private def counted[A](op: String)(body: => A): A = {
+  private def counted[A](op: String, opened: Option[Path] = None)(body: => A): A = {
     val top = enter()
-    try { if (top) add(op); body } finally exit()
+    try {
+      if (top) { add(op); opened.foreach(p => CountingFileSystem.recordOpen(p.toString)) }
+      body
+    } finally exit()
   }
 
   override def create(
@@ -64,7 +75,7 @@ class CountingFileSystem extends RawLocalFileSystem {
       super.create(p, overwrite, bufferSize, replication, blockSize, progress)
     }
   override def open(p: Path, bufferSize: Int): FSDataInputStream =
-    counted("open") { super.open(p, bufferSize) }
+    counted("open", Some(p)) { super.open(p, bufferSize) }
   override def rename(src: Path, dst: Path): Boolean =
     counted("rename") { super.rename(src, dst) }
   override def delete(p: Path, recursive: Boolean): Boolean =

@@ -565,4 +565,65 @@ class JoinViewSpec extends SparkSpec {
     AggReplica.refreshView(spark, mv)
     assert(st() == Seq((None, 2L, 16L)))
   }
+
+  test("EXTREMA star refresh that retracts a segment's min runs the " +
+    "recompute ONCE: bounded Spark jobs, one fact scan, and the view " +
+    "still equals the batch recompute") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cnt.impl", classOf[CountingFileSystem].getName)
+    // the fact lives on the counting filesystem, so every open of its
+    // data files is recorded with its path
+    val fact = "cnt://" + freshDir("graft_jv_f") + "/t"
+    val dim = freshDir("graft_jv_d") + "/t"
+    val mv = freshDir("graft_jv_mv") + "/t"
+    seedFact(fact); seedDim(dim)
+    AggReplica.createJoinView(spark, mv, fact, dim,
+      Seq(("cust", "cust")), Seq((false, "seg")), "amount", extrema = true)
+    // gold's min (7, cust 20) leaves: the fold is unsound, so gold's
+    // extrema recompute from the star at the refresh's pinned versions
+    VersionedTable.deleteWhere(spark, fact, col("id") === 3L)
+    def factDataOpens(): Int = {
+      val prefix = new org.apache.hadoop.fs.Path(fact).toString + "/"
+      CountingFileSystem.openedPaths().count { p =>
+        p.startsWith(prefix) && p.endsWith(".parquet") &&
+          !p.substring(prefix.length).split('/').exists(_.startsWith("_"))
+      }
+    }
+    CountingFileSystem.reset()
+    val (_, jobs) = jobsDuring(AggReplica.refreshView(spark, mv))
+    val refreshOpens = factDataOpens()
+    CountingFileSystem.reset()
+    VersionedTable.read(spark, fact).collect()
+    val oneScan = factDataOpens()
+    info(s"refresh: $jobs Spark jobs, $refreshOpens fact data-file " +
+      s"opens (one full fact scan opens $oneScan)")
+    // the merge consumes its source in several executions (hull probe,
+    // detection, both staged writes): a lazy recompute re-scanned the
+    // fact in each of them
+    assert(refreshOpens > 0, "the retraction must take the recompute road")
+    assert(refreshOpens <= oneScan,
+      s"the fact's recompute scan must execute once: $refreshOpens opens " +
+        s"vs $oneScan for one scan")
+    // 24 jobs when pinned; the lazy recompute ran 33 on this shape
+    assert(jobs <= 28, s"refresh ran $jobs Spark jobs")
+    val rc = {
+      val f = VersionedTable.read(spark, fact)
+      val d = VersionedTable.read(spark, dim).withColumnRenamed("cust", "dcust")
+      f.join(d, f("cust") === d("dcust"), "inner").groupBy(col("seg"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("amount")).as("value_sum"),
+          count(col("amount")).as("n_vals"),
+          min(col("amount")).as("value_min"),
+          max(col("amount")).as("value_max"))
+    }
+    def rows(df: DataFrame) = df
+      .select(col("seg"), col("n_rows"), col("value_sum").cast("long"),
+        col("n_vals"), col("value_min").cast("long"),
+        col("value_max").cast("long"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSeq.sorted
+    assert(rows(VersionedTable.read(spark, mv)) == rows(rc))
+    assert(rows(VersionedTable.read(spark, mv)) == Seq(
+      ("gold", 2L, 150L, 2L, 50L, 100L),
+      ("iron", 1L, 1000L, 1L, 1000L, 1000L)))
+  }
 }
