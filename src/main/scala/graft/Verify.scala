@@ -14,7 +14,7 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(',').map(_.trim).toSet)
     // optional runtime conf overrides (Bench's SPARK_GRAFT_BENCH_CONF
     // twin) — lets the dev gate prove BOTH sides of a conf-gated road
-    // (e.g. spark.graft.routeChanges.minBytes=0) against the oracle;
+    // (e.g. spark.graft.localCheckpoint.enabled=false) against the oracle;
     // unset for the driver, whose run stays the defaults
     sys.env.get("SPARK_GRAFT_VERIFY_CONF").foreach(_.split(',').foreach { kv =>
       val Array(k, v) = kv.split("=", 2)

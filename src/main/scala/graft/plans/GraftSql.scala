@@ -985,7 +985,7 @@ object GraftSql {
             // recorded non-null flags over data storeCast lets through
             // null-as-null would record a lie)
             try out = Some(VersionedTable.commit(populated, root,
-              extras = Map("changes" -> VersionedTable.feedWritable(feed)),
+              extras = Map("changes" -> feed),
               recordProperties =
                 if (idAdvProps.isEmpty) None else Some(baseProps ++ idAdvProps),
               preCommit = w => {
@@ -2300,59 +2300,28 @@ object GraftSql {
             .select(tSchema.fields.toSeq.map(f =>
               when(tPresent, survivorValue(f)).otherwise(insertValue(f))
                 .as(f.name)): _*)))
-      // the two change images a joined row can emit (≤2: delete/pre as
-      // the first, post/insert as the second) — shared by the fused feed
-      // frame and the ROUTED single-execution frame below
-      def feedImgs: (Column, Column) = {
-        def img(cols: Seq[Column], ct: String): Column =
-          struct((cols :+ lit(ct).as("_change_type")): _*)
-        val postCols = tSchema.fields.toSeq.map(f =>
-          survivorValue(f).as(f.name))
-        val insImgCols = tSchema.fields.toSeq.map(f =>
-          insertValue(f).as(f.name))
-        val first = when(tPresent && fate === -1, img(tCols, "delete"))
-          .when(tPresent && updFilter, img(tCols, "update_preimage"))
-        val second = when(tPresent && updFilter,
-            img(postCols, "update_postimage"))
-          .when(insertFilter, img(insImgCols, "insert"))
-        (first, second)
-      }
+      // the fused feed frame: the ≤2 change images a joined row can emit
+      // (delete/pre as the first, post/insert as the second)
       val fusedFeed: Option[DataFrame] =
         if (freeIdents.nonEmpty) None
         else Some {
-          val (first, second) = feedImgs
+          def img(cols: Seq[Column], ct: String): Column =
+            struct((cols :+ lit(ct).as("_change_type")): _*)
+          val postCols = tSchema.fields.toSeq.map(f =>
+            survivorValue(f).as(f.name))
+          val insImgCols = tSchema.fields.toSeq.map(f =>
+            insertValue(f).as(f.name))
+          val first = when(tPresent && fate === -1, img(tCols, "delete"))
+            .when(tPresent && updFilter, img(tCols, "update_preimage"))
+          val second = when(tPresent && updFilter,
+              img(postCols, "update_postimage"))
+            .when(insertFilter, img(insImgCols, "insert"))
           // regen over the flattened images is the branch road's rule
           // applied uniformly: post/insert images compute from their
           // bases, delete/pre images recompute to themselves
           // (deterministic generators — the recorded contract)
           regenExprs(joined
             .select(explode(filter(array(first, second),
-              x => x.isNotNull)).as("__cdf"))
-            .select(col("__cdf.*")))
-        }
-      // ROUTED single-execution MERGE (r21 — the remaining half of the
-      // guide-§1.2 fusion): the data image and the ≤2 change images ride
-      // ONE exploded frame whose `_change_type` routes each row at the
-      // staged write (commitWith partitions by it — one execution, one
-      // pass over the merge join, where the fused frames still executed
-      // the join once per staged write, concurrently). Eligibility is
-      // [[VersionedTable.routableFeedTable]] (no partitions/mapping/
-      // generators — those tables keep the two-execution road) plus the
-      // same no-identity-allocation gate as the fused frames; the
-      // claimed-bucket COW road keeps its aligned branch frames.
-      def routedFrame(
-          rowFilter: Column, routeRefs: => Seq[String]): Option[DataFrame] =
-        if (freeIdents.nonEmpty ||
-            !VersionedTable.routeWorthwhile(spark, root, base, routeRefs)) None
-        else Some {
-          val (first, second) = feedImgs
-          val dataImg = when(rowFilter, struct(
-            (tSchema.fields.toSeq.map(f =>
-              when(tPresent, survivorValue(f)).otherwise(insertValue(f))
-                .as(f.name)) :+
-              lit(null).cast("string").as("_change_type")): _*))
-          regenExprs(joined
-            .select(explode(filter(array(dataImg, first, second),
               x => x.isNotNull)).as("__cdf"))
             .select(col("__cdf.*")))
         }
@@ -2383,7 +2352,7 @@ object GraftSql {
           val morData = fusedData((tPresent && updFilter) || insertFilter)
           // empty-safety (a 0-partition plan leaving a schemaless
           // sidecar) is enforced at staging time by commitWith's
-          // ensure-readable pass — probing .rdd here re-executed the
+          // ensureSchemaPart backstop — probing .rdd here re-executed the
           // whole mask computation under AQE just to count partitions
           val newDelWritable = affected.select(col("__dv_file").as("file"),
             col("__dv_pos").as("pos"))
@@ -2397,45 +2366,19 @@ object GraftSql {
           // orphan the layout (its fresh files' origin commit carries
           // no spec, so pureBuckets degrades every later merge to the
           // key-range road).
-          // routed MOR: data images + change images in one staged
-          // execution; the dv extra keeps its own (third) frame — the
-          // (file,pos) schema can't ride the router — so a routed MOR
-          // merge stages two executions where it staged three
-          val routedMor: Option[DataFrame] =
-            if (morBucket.nonEmpty) None
-            else routedFrame((tPresent && updFilter) || insertFilter,
-              touchedRefs.getOrElse(Nil))
-          routedMor match {
-            case Some(rf) =>
-              VersionedTable.commitCow(rf, root,
-                VersionedTable.dataFileRefs(spark, root, base),
-                extras = Map("dv" -> newDelWritable) ++ extraTables,
-                preCommit = occCheck,
-                recordProperties = advProps, routeChanges = true)
+          val morWritten = morData.getOrElse(updated.unionByName(inserts))
+          val (morOut, morInfo) = morBucket match {
+            case Some((_, bkeys, n)) =>
+              graft.sources.Bucketing.relayout(morWritten, bkeys, n)
             case None =>
-              val morWritten = morData.getOrElse(updated.unionByName(inserts))
-              val (morOut, morInfo) = morBucket match {
-                case Some((_, bkeys, n)) =>
-                  graft.sources.Bucketing.relayout(morWritten, bkeys, n)
-                case None =>
-                  (morWritten, Map.empty[String, String])
-              }
-              VersionedTable.commitCow(morOut, root,
-                VersionedTable.dataFileRefs(spark, root, base),
-                extras = Map("dv" -> newDelWritable, "changes" -> feed) ++ extraTables,
-                preCommit = occCheck, recordInfo = morInfo,
-                recordProperties = advProps)
+              (morWritten, Map.empty[String, String])
           }
+          VersionedTable.commitCow(morOut, root,
+            VersionedTable.dataFileRefs(spark, root, base),
+            extras = Map("dv" -> newDelWritable, "changes" -> feed) ++ extraTables,
+            preCommit = occCheck, recordInfo = morInfo,
+            recordProperties = advProps)
         } else keptRefs match {
-          case Some(kept) if bucketRoad.isEmpty &&
-              routedFrame((tPresent && fate =!= -1) || insertFilter,
-                touchedRefs.getOrElse(Nil)).isDefined =>
-            VersionedTable.commitCow(
-              routedFrame((tPresent && fate =!= -1) || insertFilter,
-                touchedRefs.getOrElse(Nil)).get,
-              root, kept, extras = extraTables,
-              preCommit = occCheck, recordProperties = advProps,
-              routeChanges = true)
           case Some(kept) =>
             // on the bucket road, keep the written rows in the layout and
             // STAMP the commit, so the NEXT merge rides the claimed road
@@ -2479,20 +2422,14 @@ object GraftSql {
               preCommit = occCheck,
               recordInfo = bucketInfo,
               recordProperties = advProps)
-          case None => routedFrame((tPresent && fate =!= -1) || insertFilter,
-              VersionedTable.dataFileRefs(spark, root, base)) match {
-            case Some(rf) => VersionedTable.commit(rf, root,
-              extras = extraTables, preCommit = occCheck,
-              recordProperties = advProps, routeChanges = true)
-            case None => VersionedTable.commit(
-              fusedData((tPresent && fate =!= -1) || insertFilter)
-                .getOrElse(regenExprs(survivors).unionByName(inserts)), root,
-              // column defaults survive via commitWith's metadata-merge
-              // fallback; nullability stays the frame's (a not-matched
-              // INSERT null-fills unassigned columns by design)
-              extras = Map("changes" -> feed) ++ extraTables, preCommit = occCheck,
-              recordProperties = advProps)
-          }
+          case None => VersionedTable.commit(
+            fusedData((tPresent && fate =!= -1) || insertFilter)
+              .getOrElse(regenExprs(survivors).unionByName(inserts)), root,
+            // column defaults survive via commitWith's metadata-merge
+            // fallback; nullability stays the frame's (a not-matched
+            // INSERT null-fills unassigned columns by design)
+            extras = Map("changes" -> feed) ++ extraTables, preCommit = occCheck,
+            recordProperties = advProps)
         })
       catch {
         case _: Sinks.ConcurrentWriteException if attempt < maxAttempts =>

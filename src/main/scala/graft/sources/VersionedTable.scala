@@ -339,14 +339,12 @@ object VersionedTable {
       partitionBy: Seq[String] = Nil,
       recordProperties: Option[Map[String, String]] = None,
       recordInfo: Map[String, String] = Map("operation" -> "write"),
-      recordSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      routeChanges: Boolean = false): Long =
+      recordSchema: Option[org.apache.spark.sql.types.StructType] = None): Long =
     commitWith(df, root, collectStats, extras, (_, _, _) => (), bloomCols,
       preCommit, partitionBy = partitionBy,
       recordProperties = recordProperties,
       recordInfo = recordInfo,
-      recordSchema = recordSchema,
-      routeChanges = routeChanges)
+      recordSchema = recordSchema)
 
   /** Shared identity-allocation step of every commit road (commitWith,
     * commitCow, commitAppend, the SQL merge): populate the identity
@@ -399,8 +397,7 @@ object VersionedTable {
       recordMapping: Option[(Map[String, String], Set[String])] = None,
       partitionBy: Seq[String] = Nil,
       recordInfo: Map[String, String] = Map.empty,
-      extraReaderFeatures: Set[String] = Set.empty,
-      routeChanges: Boolean = false): Long = {
+      extraReaderFeatures: Set[String] = Set.empty): Long = {
     val profT0 = System.nanoTime()
     val spark = df.sparkSession
     val f = fs(spark, root)
@@ -464,33 +461,6 @@ object VersionedTable {
     val (df0, idAdvProps, idCheck, idRelease) =
       identityAllocate(spark, root, df0e, carriedProps, None)
     val preCommitId: Long => Unit = w => { idCheck(w); preCommit(w) }
-    // ROUTED CHANGE FEED (one staged execution for data + feed — the
-    // Delta-CDF write shape): the frame carries a `_change_type` column
-    // whose NULL rows are the data snapshot and whose non-null rows are
-    // the change images. The staged write partitions by it (a single
-    // pass over the frame's plan — the join/slice computes ONCE where
-    // the sidecar road executed it twice, concurrently); the driver then
-    // moves the null-partition files up as the data layout and the typed
-    // dirs under `_changes/`. Callers gate eligibility
-    // ([[routableFeedTable]]); the requires here are the invariants the
-    // move/readers depend on, enforced at the seam.
-    if (routeChanges) {
-      require(partSpec.isEmpty && colMap.isEmpty && retired.isEmpty &&
-        gens.isEmpty && exprGens.isEmpty && idAdvProps.isEmpty &&
-        GeneratedCols.identitiesOf(carriedProps).isEmpty,
-        s"routed change-feed commit against $root requires an " +
-          "unpartitioned, unmapped, generator-free table")
-      require(!extras.contains("changes"),
-        "routed change-feed commit cannot also carry a changes extra")
-      require(df0.columns.exists(_ == "_change_type"),
-        "routed change-feed commit needs a _change_type router column")
-    }
-    // the DATA schema of this commit — identical to df0.schema except on
-    // the routed road, where the router column is layout, not data
-    val dataSchemaOf: org.apache.spark.sql.types.StructType =
-      if (!routeChanges) df0.schema
-      else org.apache.spark.sql.types.StructType(
-        df0.schema.filterNot(_.name == "_change_type"))
     // caller-provided = present WITHOUT the populate marker: a column
     // this library computed (here or on the append road) is correct by
     // construction and skips the enforcement scan; a column the caller
@@ -569,10 +539,6 @@ object VersionedTable {
       df.collect().map(r =>
         (r.getAs[String]("app_id"), r.getAs[Long]("batch_id"))))
     val extrasData = extras - "txn"
-    // set by the routed-move pass below: whether this commit's feed
-    // actually landed as typed dirs (rows existed) — decides the
-    // recorded layout marker and the reader feature
-    var routedFeedLanded = false
     locally {
       // per-column parquet BLOOM FILTERS (probed by readWhere's equality
       // pruning): footer-adjacent, kilobytes per column per row group.
@@ -602,18 +568,10 @@ object VersionedTable {
       val populatedPartCols = partSpec.filter(p =>
         (gens.keys ++ exprGens.keys).exists(_.equalsIgnoreCase(p)) &&
           !df.columns.exists(_.equalsIgnoreCase(p)))
-      val frame1 =
+      val frame =
         if (populatedPartCols.isEmpty) frame0
         else frame0.repartition(physSpec.map(p =>
           org.apache.spark.sql.functions.col(PartDirPrefix + p)): _*)
-      // routed road: the router column becomes the write's partition
-      // column under a NON-underscore name (Spark's listings hide
-      // `_`-prefixed dirs, which is exactly what keeps the typed dirs
-      // invisible to data readers once they sit under `_changes/` — but
-      // the partition DISCOVERY of the feed reader needs to see them)
-      val frame =
-        if (!routeChanges) frame1
-        else frame1.withColumnRenamed("_change_type", RoutedCtCol)
       // APPEND, not Overwrite: the staging dir is a fresh UUID (nothing
       // to overwrite by construction), and Overwrite DELETES the target
       // dir first — which, now that the extras' jobs run concurrently
@@ -621,8 +579,7 @@ object VersionedTable {
       // committers' `_temporary` trees out from under them
       val writer0 = frame.write.mode(SaveMode.Append)
       val writer1 =
-        if (routeChanges) writer0.partitionBy(RoutedCtCol)
-        else if (physSpec.isEmpty) writer0
+        if (physSpec.isEmpty) writer0
         else writer0.partitionBy(physSpec.map(PartDirPrefix + _): _*)
       val writer = bloomCols.foldLeft(writer1) {
         (w, c) => w.option(
@@ -668,66 +625,11 @@ object VersionedTable {
         Await.result(
           Future.sequence(stagingWrites.map(t => Future(t()))), Duration.Inf)
       }
-      // ROUTED MOVE: the single staged execution left
-      //   <staging>/graft_ct=__HIVE_DEFAULT_PARTITION__/  (data rows)
-      //   <staging>/graft_ct=<type>/                      (change images)
-      // Promote the data files to the staging root (the normal flat
-      // layout every downstream pass expects) and the typed dirs under
-      // `_changes/`. Driver renames, O(files + types) — the same cost
-      // class as the output committer's own job-commit renames. An
-      // empty feed (no typed dirs) lands the legacy flat empty part
-      // file instead, so such versions read on the unrouted road.
-      if (routeChanges) CommitProfiler.phase("routed_move") {
-        val nullDir = new Path(staging,
-          s"$RoutedCtCol=__HIVE_DEFAULT_PARTITION__")
-        if (f.exists(nullDir)) {
-          f.listStatus(nullDir).foreach { s =>
-            if (s.isFile && !f.rename(s.getPath,
-                new Path(staging, s.getPath.getName)))
-              throw new java.io.IOException(
-                s"routed move failed: ${s.getPath} -> $staging")
-          }
-          f.delete(nullDir, true)
-        }
-        val typed = f.listStatus(staging).filter { s =>
-          s.isDirectory && s.getPath.getName.startsWith(RoutedCtCol + "=")
-        }
-        val changesDir = new Path(staging, "_changes")
-        if (typed.nonEmpty) {
-          f.mkdirs(changesDir)
-          typed.foreach { d =>
-            if (!f.rename(d.getPath,
-                new Path(changesDir, d.getPath.getName)))
-              throw new java.io.IOException(
-                s"routed move failed: ${d.getPath} -> $changesDir")
-          }
-          routedFeedLanded = true
-        } else
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(dataSchemaOf.fields.toSeq :+
-                org.apache.spark.sql.types.StructField("_change_type",
-                  org.apache.spark.sql.types.StringType)))
-            .repartition(1)
-            .write.mode(SaveMode.Overwrite).parquet(changesDir.toString)
-      }
       // an extra whose frame planned to ZERO partitions (an empty
       // LocalRelation feed) leaves a schemaless dir that
-      // readExtra/readChanges cannot recover a schema from — land one
-      // empty part file with the schema. One driver listStatus per
-      // extra; the [[feedWritable]] probe this replaces re-executed the
-      // whole feed computation under AQE just to count partitions.
+      // readExtra/readChanges cannot recover a schema from
       extrasData.foreach { case (name, extra) =>
-        val d = new Path(staging, s"_$name")
-        val hasPart = f.exists(d) && f.listStatus(d).exists { s =>
-          val n = s.getPath.getName
-          n.startsWith("part-") && n.endsWith(".parquet")
-        }
-        if (!hasPart)
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], extra.schema)
-            .repartition(1)
-            .write.mode(SaveMode.Overwrite).parquet(d.toString)
+        ensureSchemaPart(spark, f, new Path(staging, s"_$name"), extra.schema)
       }
       // DERIVED per-file bitmaps beside the row-level DV parquet: the
       // scan-integrated mask road ([[DvBitmaps]]) for reads above the
@@ -779,9 +681,9 @@ object VersionedTable {
     // truly wants to drop metadata records an explicit schema.
     val schemaToRecord = recordSchema.getOrElse {
       currentVersion(spark, root).map(cv => schemaOf(spark, root, cv)) match {
-        case None => dataSchemaOf
+        case None => df0.schema
         case Some(prior) => org.apache.spark.sql.types.StructType(
-          dataSchemaOf.map { fld =>
+          df0.schema.map { fld =>
             if (fld.metadata != org.apache.spark.sql.types.Metadata.empty) fld
             else prior.find(_.name.equalsIgnoreCase(fld.name))
               .filter(_.metadata !=
@@ -855,7 +757,7 @@ object VersionedTable {
       // read physical, rename back before evaluating
       try CommitProfiler.phase("constraint_enforce") { enforceConstraints(spark,
         toLogical(spark.read.option("recursiveFileLookup", "true")
-          .schema(physicalSchema(dataSchemaOf, colMap))
+          .schema(physicalSchema(df0.schema, colMap))
           .parquet(staging.toString), colMap),
         checksToEnforce, root) }
       catch { case e: Throwable => f.delete(staging, true); throw e }
@@ -893,12 +795,7 @@ object VersionedTable {
       // reader would raise a confusing feed-gap error (or a stream
       // would mis-classify the version as feed-less) — refuse cleanly
       if (recordInfo.contains(ChangesFormKey))
-        Some("virtual-change-feed") else None,
-      // a ROUTED feed's sidecar holds `graft_ct=<type>/` dirs instead of
-      // flat parquet: a pre-routing build's feed read would see an empty
-      // dir (its listings hide nothing-but-subdirs) and serve an empty
-      // feed — silently wrong; refuse loudly instead
-      if (routedFeedLanded) Some("routed-change-feed") else None
+        Some("virtual-change-feed") else None
     ).flatten ++
       // caller-declared features (e.g. commitCowInternal's delta-form
       // manifest — decided before this write, recorded with it)
@@ -940,9 +837,7 @@ object VersionedTable {
     // trusts to merge a concurrent append into a losing writer's
     // manifest instead of recomputing the whole DML. Absent section =
     // an unknown operation, which conflict resolution treats as opaque.
-    (recordInfo ++
-      (if (routedFeedLanded) Map(ChangesLayoutKey -> "routed")
-       else Map.empty)).foreach { case (k, v2) =>
+    recordInfo.foreach { case (k, v2) =>
       groupedMeta(GroupedInfoPrefix + k) = v2 }
     // txn stamps (collected driver-side above) ride the same object —
     // same atomicity as the parquet extra they replace (the grouped
@@ -1451,6 +1346,25 @@ object VersionedTable {
     f.delete(new Path(dir, "_dvdelta"), true)
   }
 
+  /** The empty-extra backstop of every direct sidecar write: a frame
+    * that planned to zero partitions leaves `dir` without a part file
+    * (or absent), and a reader cannot recover a schema from it. Lands one
+    * zero-row part file carrying `schema` when `dir` holds no
+    * `part-*.parquet`; one driver listStatus otherwise. */
+  private def ensureSchemaPart(
+      spark: SparkSession, f: org.apache.hadoop.fs.FileSystem, dir: Path,
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    val hasPart = f.exists(dir) && f.listStatus(dir).exists { st =>
+      val n = st.getPath.getName
+      n.startsWith("part-") && n.endsWith(".parquet")
+    }
+    if (!hasPart)
+      spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        .repartition(1)
+        .write.mode(SaveMode.Overwrite).parquet(dir.toString)
+  }
+
   private def materializeManifest(
       spark: SparkSession, root: String, v: Long): Unit = {
     val f = fs(spark, root)
@@ -1474,24 +1388,11 @@ object VersionedTable {
         val folded = dvOf(spark, root, v).get
         val tmp = new Path(dir, "_dvtmp")
         if (f.exists(tmp)) f.delete(tmp, true)
-        feedWritable(folded).write.mode(SaveMode.Overwrite)
-          .parquet(tmp.toString)
-        // the staging-path ensure-readable backstop, applied to this
-        // direct write too (r20 advice): an EMPTY fold can plan to zero
-        // partitions and leave a schemaless dir — but the comment above
-        // requires a zero-row, SCHEMA-CARRYING sidecar (later chained
-        // levels fold against a mask-carrying base). One driver
-        // listStatus; lands an empty part file only when none exists.
-        val hasPart = f.exists(tmp) && f.listStatus(tmp).exists { st =>
-          val n = st.getPath.getName
-          n.startsWith("part-") && n.endsWith(".parquet")
-        }
-        if (!hasPart)
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              folded.schema)
-            .repartition(1)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        folded.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        // an EMPTY fold can plan to zero partitions and leave a
+        // schemaless dir — but the comment above requires a zero-row,
+        // SCHEMA-CARRYING sidecar
+        ensureSchemaPart(spark, f, tmp, folded.schema)
         val dvDir = new Path(dir, "_dv")
         if (f.exists(dvDir)) f.delete(dvDir, true)
         if (!f.rename(tmp, dvDir))
@@ -1620,7 +1521,7 @@ object VersionedTable {
     "deletion-vectors", "column-mapping", "partition-spec",
     "widened-types", "copy-ledger", "default-columns",
     "in-commit-timestamps", "delta-manifest", "dv-delta", "grouped-meta",
-    "virtual-change-feed", "routed-change-feed")
+    "virtual-change-feed")
 
   /** Features THIS build can write against. Writing to a table whose
     * current version requires an unknown feature could break that
@@ -2386,9 +2287,9 @@ object VersionedTable {
     val kept = dataFileRefs(spark, root, cur).filterNot(dropRefs.toSet)
     val extras =
       if (!changeFeed) Map.empty[String, DataFrame]
-      else Map("changes" -> feedWritable(
+      else Map("changes" ->
         readFilesOf(spark, root, cur, dropRefs).withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("delete"))))
+          org.apache.spark.sql.functions.lit("delete")))
     // caller's in-claim gate (txn idempotence, validation) runs on this
     // road too — the COW and MOR roads of the same deleteWhere honor it
     commitCowInternal(empty, root, cur, kept, extras, Nil,
@@ -2493,7 +2394,7 @@ object VersionedTable {
             if (dropped.isEmpty) inserts
             else readFilesOf(spark, root, cur, dropped)
               .withColumn("_change_type", lit("delete")).unionByName(inserts)
-          Map("changes" -> feedWritable(feed))
+          Map("changes" -> feed)
         }
       commitCow(newData0, root, kept, extras = extras,
         preCommit = occValidate(spark, root, cur))
@@ -2561,19 +2462,12 @@ object VersionedTable {
           // measure 0 here and, for a DV mask, sneak a huge vector through
           // the broadcast gate — so an unexpected subdir fails loudly. The
           // derived `_bitmaps` index is the one known (and intended) subdir.
-          val (routedDirs, otherDirs) = children.iterator.filter(_.isDirectory)
-            .toSeq.partition(_.getPath.getName.startsWith(RoutedCtCol + "="))
-          val unexpected = otherDirs
-            .map(_.getPath.getName).filterNot(_ == DvBitmaps.DirName)
+          val unexpected = children.iterator.filter(_.isDirectory)
+            .map(_.getPath.getName).filterNot(_ == DvBitmaps.DirName).toSeq
           require(unexpected.isEmpty,
             s"sidecar _$name under $p is not flat (subdirs: " +
               s"${unexpected.mkString(",")}); extraBytes would undercount it")
-          // routed change feeds ([[readChangesSidecar]]) nest one level of
-          // `graft_ct=<type>/` dirs — count their direct files (one extra
-          // listing per type, ≤4 types)
-          children.iterator.filter(_.isFile).map(_.getLen).sum +
-            routedDirs.iterator.flatMap(d => f.listStatus(d.getPath))
-              .filter(_.isFile).map(_.getLen).sum
+          children.iterator.filter(_.isFile).map(_.getLen).sum
         }
       memoPut(extraBytesMemo, key, java.lang.Long.valueOf(bytes))
       bytes
@@ -3080,8 +2974,7 @@ object VersionedTable {
       preCommit: Long => Unit = _ => (),
       rebase: Option[AppendRebase] = None,
       recordInfo: Map[String, String] = Map.empty,
-      recordProperties: Option[Map[String, String]] = None,
-      routeChanges: Boolean = false): Long = {
+      recordProperties: Option[Map[String, String]] = None): Long = {
     val spark = newData.sparkSession
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.io.IOException(
@@ -3115,12 +3008,7 @@ object VersionedTable {
     // by name; nullability not compared — reading non-null data through a
     // nullable schema is always sound)
     val curMap = curSchema.map(sf => sf.name -> sf.dataType).toMap
-    // the routed road's frame carries the `_change_type` router column —
-    // layout, not data; the gate compares the data columns
-    val newFields =
-      if (!routeChanges) newData0.schema.toSeq
-      else newData0.schema.toSeq.filterNot(_.name == "_change_type")
-    val newMap = newFields.map(sf => sf.name -> sf.dataType).toMap
+    val newMap = newData0.schema.map(sf => sf.name -> sf.dataType).toMap
     if (curMap != newMap)
       throw new SchemaMismatchException(root, cur, curSchema, newData0.schema)
     // record the CURRENT schema (canonical order + evolve's nullability
@@ -3131,8 +3019,7 @@ object VersionedTable {
     try commitCowInternal(newData0, root, cur, keptFiles, extras, bloomCols,
       preCommit = w => { idCheck(w); preCommit(w) },
       recordSchema = Some(curSchema), rebase = rebase,
-      recordInfo = recordInfo, recordProperties = propsWithAdvance,
-      routeChanges = routeChanges)
+      recordInfo = recordInfo, recordProperties = propsWithAdvance)
     finally idRelease()
   }
 
@@ -3172,8 +3059,7 @@ object VersionedTable {
         (String, String, Option[String], Option[String]) =>
           (String, Option[String], Option[String])] = None,
       rebase: Option[AppendRebase] = None,
-      recordInfo: Map[String, String] = Map.empty,
-      routeChanges: Boolean = false): Long = {
+      recordInfo: Map[String, String] = Map.empty): Long = {
     val spark = newData.sparkSession
     val f = fs(spark, root)
     // kept files were written under the current mapping's physical names:
@@ -3285,7 +3171,6 @@ object VersionedTable {
       recordProperties = recordProperties,
       recordMapping = Some(mappingToRecord),
       recordInfo = recordInfo,
-      routeChanges = routeChanges,
       finalizeVersion = (fh, dir, v) => {
         // refs TOLERATED in at claim time ([[AppendRebase]]): blind
         // appends (added) and disjoint DML winners (added + removed)
@@ -3471,14 +3356,7 @@ object VersionedTable {
           case None =>
             cowRewriteAt(spark, root, cur, predicate, "delete", preCommit)(
               df => df.where(not(coalesce(predicate, lit(false)))),
-              feed = deleteFeed,
-              // one pass: a slice row is EITHER a survivor (data) or a
-              // delete image (feed) — the router column decides per row
-              routed =
-                if (!changeFeed) None
-                else Some(slice => slice.withColumn("_change_type",
-                  org.apache.spark.sql.functions.when(
-                    coalesce(predicate, lit(false)), lit("delete")))))
+              feed = deleteFeed)
         }
       }
     else occRetry(spark, root) { cur =>
@@ -3504,9 +3382,9 @@ object VersionedTable {
               val tableCols = schemaOf(spark, root, cur).fieldNames.toSeq
               val extras = Map("dv" -> newDel) ++
                 (if (!changeFeed) Map.empty[String, DataFrame]
-                 else Map("changes" -> feedWritable(
+                 else Map("changes" ->
                    hit.select(tableCols.map(col): _*)
-                     .withColumn("_change_type", lit("delete")))))
+                     .withColumn("_change_type", lit("delete"))))
               // interest = the files this commit masks: a tolerated winner
               // must not have rewritten them (its rewrite read the masks of
               // ITS pinned version — these fresh deletions would be lost)
@@ -3696,39 +3574,7 @@ object VersionedTable {
           Some(pre.withColumn("_change_type", lit("update_preimage"))
             .unionByName(applySet(pre)
               .withColumn("_change_type", lit("update_postimage"))))
-        },
-        // one pass: every slice row emits its data image (the SET
-        // projection — identity on unmatched rows) plus, when matched,
-        // its pre/post change images. Same per-field expressions as
-        // applySet (routable tables have no expression generators, so
-        // `regenerated` would be identity there anyway).
-        routed =
-          if (!changeFeed) None
-          else Some { slice =>
-            import org.apache.spark.sql.functions.{array, explode, filter, struct}
-            val badSet = setG.keySet -- slice.columns.toSet
-            require(badSet.isEmpty,
-              s"unknown columns in SET: ${badSet.mkString(", ")}")
-            val cond = coalesce(predicate, lit(false))
-            val names = slice.columns.toSeq
-            def postExpr(c: String): Column = setG.get(c) match {
-              case Some(v) =>
-                when(cond, v.cast(slice.schema(c).dataType)).otherwise(col(c))
-              case None => col(c)
-            }
-            val ctNull = lit(null).cast("string").as("_change_type")
-            val dataImg = struct(
-              (names.map(c => postExpr(c).as(c)) :+ ctNull): _*)
-            val preImg = when(cond, struct(
-              (names.map(c => col(c).as(c)) :+
-                lit("update_preimage").as("_change_type")): _*))
-            val postImg = when(cond, struct(
-              (names.map(c => postExpr(c).as(c)) :+
-                lit("update_postimage").as("_change_type")): _*))
-            slice.select(explode(filter(array(dataImg, preImg, postImg),
-                x => x.isNotNull)).as("__cdf"))
-              .select(col("__cdf.*"))
-          })
+        })
     else occRetry(spark, root) { cur =>
       // the unknown-column contract holds regardless of matches: a typo'd
       // SET must throw, not silently no-op through the pruning shortcut
@@ -3759,10 +3605,10 @@ object VersionedTable {
               val post = applySet(pre)
               val extras = Map("dv" -> newDel) ++
                 (if (!changeFeed) Map.empty[String, DataFrame]
-                 else Map("changes" -> feedWritable(
+                 else Map("changes" ->
                    pre.withColumn("_change_type", lit("update_preimage"))
                      .unionByName(post
-                       .withColumn("_change_type", lit("update_postimage"))))))
+                       .withColumn("_change_type", lit("update_postimage")))))
               // as the MOR delete: the masked files are the interest set
               val maskedRefs = () =>
                 dataFileRefs(spark, root, cur).filter(r => tails(refTail(r))).toSet
@@ -4002,10 +3848,9 @@ object VersionedTable {
       spark: SparkSession, root: String, predicate: Column, op: String,
       hook: Long => Unit = _ => ())(
       rewrite: DataFrame => DataFrame,
-      feed: DataFrame => Option[DataFrame] = _ => None,
-      routed: Option[DataFrame => DataFrame] = None): Long =
+      feed: DataFrame => Option[DataFrame] = _ => None): Long =
     occRetry(spark, root) { cur =>
-      cowRewriteAt(spark, root, cur, predicate, op, hook)(rewrite, feed, routed)
+      cowRewriteAt(spark, root, cur, predicate, op, hook)(rewrite, feed)
     }
 
   /** One attempt of [[cowRewrite]] against a pinned `cur` — split out so
@@ -4015,8 +3860,7 @@ object VersionedTable {
       spark: SparkSession, root: String, cur: Long, predicate: Column,
       op: String, hook: Long => Unit)(
       rewrite: DataFrame => DataFrame,
-      feed: DataFrame => Option[DataFrame],
-      routed: Option[DataFrame => DataFrame] = None): Long = {
+      feed: DataFrame => Option[DataFrame]): Long = {
       val (mayMatch, _) = prunedFiles(spark, root, cur, predicate)
       if (mayMatch.isEmpty) cur // provably no row matches: no-op, no commit
       else {
@@ -4046,51 +3890,21 @@ object VersionedTable {
         val rb = new AppendRebase(spark, root, cur,
           allowDml = true, interest = () => touchedRefs,
           readPredicate = Some(predicate))
-        // ROUTED single-execution form (guide §1.2 — the touched slice
-        // used to be read TWICE, once by the rewrite's staged write and
-        // once by the feed's): the caller's `routed` builder emits every
-        // row's data image and change images in one pass, and the commit
-        // stages them in one write ([[commitWith]]'s routeChanges)
-        val routedFrame =
-          if (routed.isEmpty || feed(slice).isEmpty ||
-              !routeWorthwhile(spark, root, cur, touchedRefs.toSeq)) None
-          else routed.map(_(slice))
-        routedFrame match {
-          case Some(rf) =>
-            commitCow(rf, root, keptRefs, extras = Map.empty,
-              preCommit = v => { hook(v); rb.validate(v) },
-              rebase = Some(rb), recordInfo = Map("operation" -> op),
-              routeChanges = true)
-          case None =>
-            val rewritten = rewrite(slice)
-            val extras = feed(slice)
-              .map(fd => Map("changes" -> feedWritable(fd))).getOrElse(Map.empty)
-            commitCow(rewritten, root, keptRefs, extras = extras,
-              preCommit = v => { hook(v); rb.validate(v) },
-              rebase = Some(rb), recordInfo = Map("operation" -> op))
-        }
+        val extras = feed(slice)
+          .map(fd => Map("changes" -> fd)).getOrElse(Map.empty)
+        commitCow(rewrite(slice), root, keptRefs, extras = extras,
+          preCommit = v => { hook(v); rb.validate(v) },
+          rebase = Some(rb), recordInfo = Map("operation" -> op))
       }
     }
-
-  /** A feed frame safe to land as an extra even when EMPTY. Historically
-    * this probed `fd.rdd.getNumPartitions` and repartition(1)-ed the
-    * 0-partition case — but under AQE `.rdd` materializes EVERY query
-    * stage just to count partitions, so each feed frame computed twice
-    * (once for the probe, once for the staged write). The schema-
-    * recovery invariant ([[readExtra]]/[[readChanges]] need at least one
-    * part file) is now enforced post-hoc at staging time
-    * ([[ensureExtraReadable]]) with one driver listStatus per extra, so
-    * this is identity. Kept as the documented seam every feed passes
-    * through. */
-  private[graft] def feedWritable(fd: DataFrame): DataFrame = fd
 
   /** The zero-row change feed of a LAYOUT-ONLY commit (compaction,
     * clustering, schema evolution): "this version changed no rows",
     * stated explicitly so incremental consumers pass through instead of
     * failing on a feed gap. */
   private def emptyFeed(df: DataFrame): DataFrame =
-    feedWritable(df.limit(0).withColumn("_change_type",
-      org.apache.spark.sql.functions.lit("")))
+    df.limit(0).withColumn("_change_type",
+      org.apache.spark.sql.functions.lit(""))
 
   // ---- VIRTUAL change feeds (the Delta CDF blind-append rule) --------------
   //
@@ -4112,105 +3926,6 @@ object VersionedTable {
   // `virtual-change-feed` READER feature, so a pre-virtual build refuses
   // the version loudly instead of raising a confusing feed-gap error.
   private[graft] val ChangesFormKey = "changesForm"
-
-  // ---- ROUTED change feeds (single-execution data + feed writes) ----------
-  //
-  // A feed-carrying COW/MERGE commit used to stage TWO executions — the
-  // data frame and the change-image frame — each one pass over the same
-  // join/slice (concurrent, so local wall hides some of it, but the
-  // join's compute and the touched slice's read are PAID TWICE at any
-  // scale). A routed commit stages ONE execution: the caller hands
-  // commitWith a single frame whose `_change_type` column is NULL on
-  // data rows and the image type on change rows; the write partitions by
-  // it (`graft_ct=<type>/` dirs — deliberately NOT underscore-prefixed,
-  // so the feed reader's listing can see them once they live under
-  // `_changes/`, while Spark's hidden-path filter keeps `_changes`
-  // itself invisible to every data scan), and the driver promotes the
-  // null-partition files to the flat data layout. Readers branch on the
-  // recorded `changesLayout=routed` marker; such versions also record
-  // the `routed-change-feed` READER feature so a pre-routing build
-  // refuses them loudly instead of serving an empty feed.
-  private[graft] val RoutedCtCol = "graft_ct"
-  private[graft] val ChangesLayoutKey = "changesLayout"
-
-  /** Whether a feed-carrying write against version `v` of `root` may use
-    * the routed single-execution form: the table must be unpartitioned
-    * (the routed layout owns the partition dirs), identity-mapped (feed
-    * files are read back under the recorded schema directly), and free
-    * of generated/identity columns (population would have to see the
-    * data rows only). Everything else keeps the two-execution road. */
-  private[graft] def routableFeedTable(
-      spark: SparkSession, root: String, v: Long): Boolean = {
-    val props = propertiesOf(spark, root, v)
-    !props.contains(PartitionByProp) &&
-      GeneratedCols.of(props).isEmpty &&
-      GeneratedCols.exprsOf(props).isEmpty &&
-      GeneratedCols.identitiesOf(props).isEmpty &&
-      columnMapping(spark, root, v).isEmpty &&
-      retiredPhysicals(spark, root, v).isEmpty
-  }
-
-  /** Byte floor for taking the routed road (`spark.graft.routeChanges.
-    * minBytes`). MEASURED crossover shape (r21, local[32], sf0.1 paired
-    * best-of-5): on KB-scale touched slices the routed form REGRESSES
-    * ~10% (d10 1.52→1.73, q27 1.80→1.97, q43 4.17→4.65) — the two
-    * branch executions are launch-bound and overlap for free on idle
-    * cores, while the unified frame pays a bigger plan, an explode and
-    * the dynamic-partition sort in one serial execution. Above the
-    * floor the duplicated road's cost is real at any concurrency: the
-    * touched slice is scanned and the join computed TWICE, 2× the
-    * cluster's scan+join work per DML/refresh. The default routes
-    * slices past ~2 scan tasks' worth (guide §1.2/§6); `0` routes
-    * everything (what the RoutedFeedSpec pins to cover the road). */
-  private[graft] val RouteMinBytesKey = "spark.graft.routeChanges.minBytes"
-  private[graft] val RouteMinBytesDefault: Long = 256L * 1024 * 1024
-
-  /** [[routableFeedTable]] AND the touched slice clears the byte floor —
-    * the per-write decision of every routed call site. `touchedRefs` is
-    * by-name: the floor-disabled and non-routable cases never resolve
-    * it. Byte lookups ride the memoized size sidecar (metadata-scale). */
-  private[graft] def routeWorthwhile(
-      spark: SparkSession, root: String, v: Long,
-      touchedRefs: => Seq[String]): Boolean =
-    routableFeedTable(spark, root, v) && {
-      val floor = spark.conf
-        .get(RouteMinBytesKey, RouteMinBytesDefault.toString).toLong
-      floor <= 0L || {
-        val sizes = fileSizes(spark, root, v)
-        touchedRefs.iterator.map(r => sizes.getOrElse(r, 0L)).sum >= floor
-      }
-    }
-
-  /** Version `v`'s change feed from its sidecar, layout-aware: routed
-    * versions reassemble `_change_type` from the `graft_ct=<type>/` dir
-    * names (the files carry exactly the recorded data schema); everything
-    * else reads the flat sidecar as always. None when the version has no
-    * sidecar at all (virtual feeds are the caller's next stop). */
-  private[graft] def readChangesSidecar(
-      spark: SparkSession, root: String, v: Long): Option[DataFrame] =
-    if (!commitInfoOf(spark, root, v).get(ChangesLayoutKey).contains("routed"))
-      readExtra(spark, root, v, "changes")
-    else {
-      val dir = new Path(dataDir(spark, root, v), "_changes")
-      val f = fs(spark, root)
-      val sch = schemaOf(spark, root, v)
-      val typed = f.listStatus(dir).toSeq.filter { s =>
-        s.isDirectory && s.getPath.getName.startsWith(RoutedCtCol + "=")
-      }
-      // routed is only recorded when typed dirs landed; an empty listing
-      // here would mean the sidecar was tampered with — serve the empty
-      // feed (what zero images mean), not a schema-inference crash
-      if (typed.isEmpty) Some(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(sch.fields.toSeq :+
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType))))
-      else Some(typed.map { d =>
-        val t = d.getPath.getName.substring(RoutedCtCol.length + 1)
-        spark.read.schema(sch).parquet(d.getPath.toString)
-          .withColumn("_change_type", org.apache.spark.sql.functions.lit(t))
-      }.reduce(_.unionByName(_)))
-    }
 
   /** recordInfo for a commit whose feed is "insert of exactly this
     * commit's own files" — seeds, bootstraps, the append road. */
@@ -5947,7 +5662,7 @@ object VersionedTable {
       // feature could alter the feed's encoding). Cheap — the probe is
       // memoized per JVM, so the tail pays one file read per version ever.
       assertReadable(spark, root, v)
-      val df = readChangesSidecar(spark, root, v)
+      val df = readExtra(spark, root, v, "changes")
         .orElse(syntheticChanges(spark, root, v))
         .getOrElse(throw new java.io.IOException(
           s"version $v under $root has no change feed — feed range is incomplete"))
@@ -6114,8 +5829,8 @@ object VersionedTable {
           // stored it in (its chain may be vacuumed away later)
           dvOf(spark, root, toVersion).map("dv" -> _).toMap ++
             (if (!changeFeed) Map.empty[String, DataFrame]
-             else Map("changes" -> feedWritable(
-               restoreFeed(spark, root, cur, toVersion, schema))))
+             else Map("changes" ->
+               restoreFeed(spark, root, cur, toVersion, schema)))
         // the target's stats carry forward re-keyed, exactly as
         // commitCowInternal carries a kept file's rows
         val tgtKeyed: Map[String, String] = manifestOf(spark, root, toVersion)

@@ -97,7 +97,7 @@ object ChangeFeedStream {
         .getOrElse(throw new IllegalArgumentException(
           s"no version under $root carries a change feed — " +
             "write the table with the versioned upsert paths"))
-      val feed = VersionedTable.readChangesSidecar(spark, root, withFeed)
+      val feed = VersionedTable.readExtra(spark, root, withFeed, "changes")
         .orElse(VersionedTable.syntheticChanges(spark, root, withFeed)).get
       (StructType(feed.schema.fields.toSeq :+
         StructField("_commit_version", LongType)), withFeed)
@@ -181,7 +181,7 @@ class ChangeFeedSource(
     alignMemo.getOrElseUpdate(v, {
       val vSchema: Seq[StructField] =
         VersionedTable.tableSchema(spark, root, v).map(_.fields.toSeq)
-          .orElse(VersionedTable.readChangesSidecar(spark, root, v)
+          .orElse(VersionedTable.readExtra(spark, root, v, "changes")
             .map(_.schema.fields.toSeq.filterNot(f => metaCols(f.name))))
           .getOrElse(Seq.empty)
       if (vSchema.isEmpty) Map.empty

@@ -30,7 +30,7 @@ class ConfInvariantSpec extends SparkSpec {
     ).toDF("seg", "nat", "flag", "v")
       .withColumn("ts", to_timestamp(lit("2026-03-01 12:00:00")))
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
   }
 
   test("cube CREATE + cascading REFRESH (the parallelOver road) leaves " +

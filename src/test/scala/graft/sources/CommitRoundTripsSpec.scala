@@ -28,8 +28,7 @@ class CommitRoundTripsSpec extends SparkSpec {
     val root = freshRoot("graft_rt")
     val seed = Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "grp", "v")
     VersionedTable.commit(seed, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(
-        seed.withColumn("_change_type", lit("insert")))))
+      seed.withColumn("_change_type", lit("insert"))))
     // the steady-state motion: ONE micro-batch append with its feed
     CountingFileSystem.reset()
     VersionedTable.commitAppend(

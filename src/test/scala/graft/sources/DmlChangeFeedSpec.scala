@@ -22,10 +22,10 @@ class DmlChangeFeedSpec extends SparkSpec {
         (1L to 10L).map(i => (i, s"r$i", "insert")).toDF("id", "x", "_change_type")))
 
   private def feedOf(root: String, v: Long) =
-    // sidecar (flat or ROUTED `graft_ct=<type>/` layout) or VIRTUAL
-    // (append/bootstrap feeds are commit-info markers synthesized at
-    // read time) — the same fallback chain readChanges applies
-    VersionedTable.readChangesSidecar(spark, root, v)
+    // the flat `_changes` sidecar or VIRTUAL (append/bootstrap feeds are
+    // commit-info markers synthesized at read time) — the same fallback
+    // chain readChanges applies
+    VersionedTable.readExtra(spark, root, v, "changes")
       .orElse(VersionedTable.syntheticChanges(spark, root, v)).get
       .select("id", "x", "_change_type").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet

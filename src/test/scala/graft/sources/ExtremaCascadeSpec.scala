@@ -25,7 +25,7 @@ class ExtremaCascadeSpec extends SparkSpec {
       ("b", 1L, 100L), ("b", 3L, 7L), ("b", 3L, 3L)
     ).toDF("seg", "nat", "v")
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
   }
 
   private type Row6 = (String, Long, Long, Long, Long, Long)
@@ -118,7 +118,7 @@ class ExtremaCascadeSpec extends SparkSpec {
       (Option.empty[String], 1L, 7L)
     ).toDF("seg", "nat", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     AggReplica.createRollupView(spark, mv, src, Seq("seg", "nat"), "v",
       extrema = true)
     // SQL ROLLUP pads absent keys with NULL, so the recompute/serve
@@ -159,7 +159,7 @@ class ExtremaCascadeSpec extends SparkSpec {
       ("a", 3L, Option.empty[Long]), ("b", 1L, Option(5L))
     ).toDF("seg", "nat", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     AggReplica.createRollupView(spark, mv, src, Seq("seg", "nat"), "v",
       extrema = true)
     val child = VersionedTable.read(spark, s"${mv}__rollup1")
@@ -213,7 +213,7 @@ class ExtremaCascadeSpec extends SparkSpec {
       ("b", 1L, "x", 100L), ("b", 3L, "y", 7L), ("b", 3L, "x", 3L)
     ).toDF("seg", "nat", "flag", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     AggReplica.createRollupView(spark, mv, src, Seq("seg", "nat", "flag"),
       "v", extrema = true)
     def recompute(): Seq[(String, Long, String, Long, Long, Long, Long)] =

@@ -24,14 +24,14 @@ class JoinViewSpec extends SparkSpec {
       (5L, 99L, 5L) // cust 99 has no dim row: never joins
     ).toDF("id", "cust", "amount")
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
   }
 
   private def seedDim(root: String): Unit = {
     val df = Seq((10L, "gold"), (20L, "gold"), (30L, "iron"))
       .toDF("cust", "seg")
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
   }
 
   private def viewState(root: String): Seq[(String, Long, Long)] =
@@ -148,11 +148,11 @@ class JoinViewSpec extends SparkSpec {
       (1L, 10L, "eu", "web", 5L), (2L, 10L, "us", "web", 7L),
       (3L, 20L, "eu", "app", 11L)).toDF("id", "cust", "region", "chan", "amount")
     VersionedTable.commit(f, fact, extras = Map("changes" ->
-      VersionedTable.feedWritable(f.withColumn("_change_type", lit("insert")))))
+      f.withColumn("_change_type", lit("insert"))))
     val d = Seq((10L, "eu", "gold"), (10L, "us", "silver"), (20L, "eu", "gold"))
       .toDF("cust", "region", "seg")
     VersionedTable.commit(d, dim, extras = Map("changes" ->
-      VersionedTable.feedWritable(d.withColumn("_change_type", lit("insert")))))
+      d.withColumn("_change_type", lit("insert"))))
     AggReplica.createJoinView(spark, mv, fact, dim,
       joinOn = Seq(("cust", "cust"), ("region", "region")),
       groupCols = Seq((false, "seg"), (true, "chan")), valueCol = "amount")
@@ -337,13 +337,13 @@ class JoinViewSpec extends SparkSpec {
       (4L, 20L, 200L, 13L), (5L, 30L, 100L, 17L))
       .toDF("id", "cust", "prod", "amount")
     VersionedTable.commit(f, fact, extras = Map("changes" ->
-      VersionedTable.feedWritable(f.withColumn("_change_type", lit("insert")))))
+      f.withColumn("_change_type", lit("insert"))))
     val c = Seq((10L, "gold"), (20L, "iron")).toDF("cust", "seg") // 30 missing
     VersionedTable.commit(c, d1, extras = Map("changes" ->
-      VersionedTable.feedWritable(c.withColumn("_change_type", lit("insert")))))
+      c.withColumn("_change_type", lit("insert"))))
     val p = Seq((100L, "food"), (200L, "toys")).toDF("prod", "cat")
     VersionedTable.commit(p, d2, extras = Map("changes" ->
-      VersionedTable.feedWritable(p.withColumn("_change_type", lit("insert")))))
+      p.withColumn("_change_type", lit("insert"))))
     GraftSql.execute(spark,
       s"""CREATE MATERIALIZED VIEW '$mv' AS
          |SELECT c.seg, p.cat, count(*) AS n_rows, sum(f.amount) AS value_sum
@@ -459,10 +459,10 @@ class JoinViewSpec extends SparkSpec {
       (1L, 10L, 20L, 5L), (2L, 10L, 10L, 7L), (3L, 20L, 10L, 11L))
       .toDF("id", "ship_cust", "bill_cust", "amount")
     VersionedTable.commit(f, fact, extras = Map("changes" ->
-      VersionedTable.feedWritable(f.withColumn("_change_type", lit("insert")))))
+      f.withColumn("_change_type", lit("insert"))))
     val d = Seq((10L, "gold"), (20L, "iron")).toDF("cust", "seg")
     VersionedTable.commit(d, dim, extras = Map("changes" ->
-      VersionedTable.feedWritable(d.withColumn("_change_type", lit("insert")))))
+      d.withColumn("_change_type", lit("insert"))))
     // group by the SHIP role's segment; the BILL role join restricts
     // (group-col output names must be unique, so one role groups)
     AggReplica.createStarView(spark, mv, fact,
@@ -547,10 +547,10 @@ class JoinViewSpec extends SparkSpec {
     val f = Seq((1L, Some(10L), 5L), (2L, None, 7L), (3L, Some(20L), 11L))
       .toDF("id", "cust", "amount")
     VersionedTable.commit(f, fact, extras = Map("changes" ->
-      VersionedTable.feedWritable(f.withColumn("_change_type", lit("insert")))))
+      f.withColumn("_change_type", lit("insert"))))
     val d = Seq((10L, Some("gold")), (20L, None)).toDF("cust", "seg")
     VersionedTable.commit(d, dim, extras = Map("changes" ->
-      VersionedTable.feedWritable(d.withColumn("_change_type", lit("insert")))))
+      d.withColumn("_change_type", lit("insert"))))
     AggReplica.createJoinView(spark, mv, fact, dim,
       Seq(("cust", "cust")), Seq((false, "seg")), "amount")
     def st() = VersionedTable.read(spark, mv)

@@ -135,7 +135,7 @@ class MaintenanceSpec extends SparkSpec {
     val src = s"$tmp/src"; val mv = s"$tmp/mv"
     val df = Seq((1L, "a", 10L), (2L, "b", 5L)).toDF("id", "grp", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     AggReplica.createView(spark, mv, src, Seq("grp"), "v")
     val fresh = VersionedTable.maintenanceReport(spark, mv)
     assert(fresh.mvVersionsBehind == 0L &&

@@ -22,7 +22,7 @@ class MvManageSpec extends SparkSpec {
       ("b", 1L, 100L), ("b", 3L, 7L)
     ).toDF("seg", "nat", "v")
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
   }
 
   private def rollupState(mv: String): Seq[(String, Long, Long, Long)] =

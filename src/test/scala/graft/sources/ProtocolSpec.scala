@@ -50,41 +50,43 @@ class ProtocolSpec extends SparkSpec {
   }
 
   test("a version requiring an unknown feature refuses reads and writes loudly") {
-    val root = freshRoot()
-    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
-    VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "x"), root) // v2
-    // inject a future feature into v2's protocol record (what a newer
-    // build would have written)
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(
-      s"$root/v00000002/_protocol/features.properties")
-    f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    try out.write("reader=time-machine\nwriter=time-machine\n".getBytes("UTF-8"))
-    finally out.close()
-
-    val readErr = intercept[VersionedTable.ProtocolException] {
-      VersionedTable.read(spark, root).count()
+    // a future build's feature, and a retired one: the routed change-feed
+    // layout (`_changes/graft_ct=<type>/`) is no longer read, so a version
+    // an older build wrote with it must be refused, never served
+    Seq("time-machine", "routed-change-feed").foreach { feature =>
+      val root = freshRoot()
+      VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
+      VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "x"), root,
+        changeFeed = true) // v2 carries a feed
+      // what the other build would have written
+      injectFutureFeature(root, 2L, feature)
+      val readErr = intercept[VersionedTable.ProtocolException] {
+        VersionedTable.read(spark, root).count()
+      }
+      assert(readErr.getMessage.contains(feature))
+      val feedErr = intercept[VersionedTable.ProtocolException] {
+        VersionedTable.readChanges(spark, root, 2L, 2L).count()
+      }
+      assert(feedErr.getMessage.contains(feature))
+      val writeErr = intercept[VersionedTable.ProtocolException] {
+        VersionedTable.commitAppend(Seq((3L, "c")).toDF("id", "x"), root)
+      }
+      assert(writeErr.getMessage.contains(feature))
+      // nothing landed, and OLDER versions (no requirement) still time-travel
+      assert(VersionedTable.versions(spark, root) == Seq(1L, 2L))
+      assert(VersionedTable.readVersion(spark, root, 1L).count() == 1L)
     }
-    assert(readErr.getMessage.contains("time-machine"))
-    val writeErr = intercept[VersionedTable.ProtocolException] {
-      VersionedTable.commitAppend(Seq((3L, "c")).toDF("id", "x"), root)
-    }
-    assert(writeErr.getMessage.contains("time-machine"))
-    // nothing landed, and OLDER versions (no requirement) still time-travel
-    assert(VersionedTable.versions(spark, root) == Seq(1L, 2L))
-    assert(VersionedTable.readVersion(spark, root, 1L).count() == 1L)
   }
 
-  private def injectFutureFeature(root: String, v: Long): Unit = {
+  private def injectFutureFeature(
+      root: String, v: Long, feature: String = "time-machine"): Unit = {
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new org.apache.hadoop.fs.Path(
       f"$root/v$v%08d/_protocol/features.properties")
     f.mkdirs(p.getParent)
     val out = f.create(p, true)
-    try out.write("reader=time-machine\nwriter=time-machine\n".getBytes("UTF-8"))
+    try out.write(s"reader=$feature\nwriter=$feature\n".getBytes("UTF-8"))
     finally out.close()
   }
 

@@ -23,7 +23,7 @@ class SidecarSchemaSpec extends SparkSpec {
     val df = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
       .toDF("id", "grp", "amount")
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
   }
 
   private def feedRows(df: org.apache.spark.sql.DataFrame, cols: String*) =

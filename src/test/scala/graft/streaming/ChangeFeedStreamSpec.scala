@@ -123,9 +123,9 @@ class ChangeFeedStreamSpec extends SparkSpec {
     (1 to 100).foreach { i =>
       VersionedTable.commit(Seq((i.toLong, s"r$i")).toDF("id", "x"), root,
         collectStats = false,
-        extras = Map("changes" -> VersionedTable.feedWritable(
+        extras = Map("changes" ->
           Seq((i.toLong, s"r$i")).toDF("id", "x")
-            .withColumn("_change_type", lit("insert")))))
+            .withColumn("_change_type", lit("insert"))))
     }
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val spans = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -235,9 +235,9 @@ class ChangeFeedStreamSpec extends SparkSpec {
     (1 to 100).foreach { i =>
       VersionedTable.commit(Seq((i.toLong, s"r$i")).toDF("id", "x"), root,
         collectStats = false,
-        extras = Map("changes" -> VersionedTable.feedWritable(
+        extras = Map("changes" ->
           Seq((i.toLong, s"r$i")).toDF("id", "x")
-            .withColumn("_change_type", lit("insert")))))
+            .withColumn("_change_type", lit("insert"))))
     }
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val spans = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -287,8 +287,8 @@ class ChangeFeedStreamSpec extends SparkSpec {
       val df = (1 to rows).map(i => (tag * 100000L + i, s"v$tag-$i"))
         .toDF("id", "x")
       VersionedTable.commit(df, root, collectStats = false,
-        extras = Map("changes" -> VersionedTable.feedWritable(
-          df.withColumn("_change_type", lit("insert")))))
+        extras = Map("changes" ->
+          df.withColumn("_change_type", lit("insert"))))
     }
     (1 to 12).foreach(i => feed(if (i % 4 == 3) 5000 else 1, i))
     val perVersion = (1L to 12L)

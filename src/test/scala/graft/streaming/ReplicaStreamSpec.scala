@@ -19,7 +19,7 @@ class ReplicaStreamSpec extends SparkSpec {
   private def seedSource(root: String): Unit = {
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "x")
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     VersionedTable.commitAppend(Seq((3L, "c")).toDF("id", "x"), root,
       changeFeed = true)
     VersionedTable.updateWhere(spark, root, col("id") === 2L,

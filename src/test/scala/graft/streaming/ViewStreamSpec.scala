@@ -22,7 +22,7 @@ class ViewStreamSpec extends SparkSpec {
     val df = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L))
       .toDF("id", "grp", "v")
     VersionedTable.commit(df, root, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     VersionedTable.commitAppend(
       Seq((4L, "b", 7L), (5L, "c", 100L)).toDF("id", "grp", "v"), root,
       changeFeed = true)
@@ -155,7 +155,7 @@ class ViewStreamSpec extends SparkSpec {
     val df = (0L until 200L).map(i => (i, s"g${i % 40}", i))
       .toDF("id", "grp", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     ViewStream.start(spark, src, dst, Seq("grp"), "v", ck,
       appId = "vs-bkt", availableNow = true).awaitTermination()
     graft.sources.Bucketing.bucketize(spark, dst, "grp", 8)
@@ -186,7 +186,7 @@ class ViewStreamSpec extends SparkSpec {
     val src = s"$tmp/src"; val mv = s"$tmp/mv"
     val df = Seq((1L, "a", 10L), (2L, "b", 5L)).toDF("id", "grp", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     graft.plans.GraftSql.execute(spark,
       s"""CREATE MATERIALIZED VIEW '$mv' AS
          |SELECT grp, count(*) AS n_rows, sum(v) AS value_sum
@@ -241,7 +241,7 @@ class ViewStreamSpec extends SparkSpec {
       (1L, "a", Some(10L)), (2L, "a", Some(20L)), (3L, "a", None),
       (4L, "b", Some(5L))).toDF("id", "grp", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     AggReplica.createView(spark, mv, src, Seq("grp"), "v", extrema = true)
     assert(extState(mv) == Seq(
       ("a", 3L, 30L, 2L, Some(10L), Some(20L)),
@@ -305,8 +305,7 @@ class ViewStreamSpec extends SparkSpec {
       val df = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L),
         (4L, "b", 50L)).toDF("id", "grp", "v")
       VersionedTable.commit(df, src, extras = Map("changes" ->
-        VersionedTable.feedWritable(
-          df.withColumn("_change_type", lit("insert")))))
+        df.withColumn("_change_type", lit("insert"))))
       AggReplica.createView(spark, mv, src, Seq("grp"), "v", extrema = true)
       // retract every group's max AND min in one refresh
       VersionedTable.deleteWhere(spark, src, col("id").isin(1L, 4L))
@@ -396,7 +395,7 @@ class ViewStreamSpec extends SparkSpec {
     val src = s"$tmp/src"; val mv = s"$tmp/mv"
     val df = Seq((1L, "a", 10L)).toDF("id", "grp", "v")
     VersionedTable.commit(df, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(df.withColumn("_change_type", lit("insert")))))
+      df.withColumn("_change_type", lit("insert"))))
     // mismatched casing at CREATE must not produce a view whose every
     // REFRESH throws: the definition persists in the schema's casing
     AggReplica.createView(spark, mv, src, Seq("GRP"), "V")
@@ -409,7 +408,7 @@ class ViewStreamSpec extends SparkSpec {
     val src2 = s"$tmp/src2"
     val odd = Seq(("x", 1L)).toDF("a,b", "v")
     VersionedTable.commit(odd, src2, extras = Map("changes" ->
-      VersionedTable.feedWritable(odd.withColumn("_change_type", lit("insert")))))
+      odd.withColumn("_change_type", lit("insert"))))
     val e = intercept[IllegalArgumentException] {
       AggReplica.createView(spark, s"$tmp/mv2", src2, Seq("a,b"), "v")
     }
@@ -469,7 +468,7 @@ class ViewStreamSpec extends SparkSpec {
     val seed = Seq((1L, "a", 10L, 2L), (2L, "a", 20L, 3L), (3L, "b", 5L, 7L))
       .toDF("id", "grp", "amount", "qty")
     VersionedTable.commit(seed, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(seed.withColumn("_change_type", lit("insert")))))
+      seed.withColumn("_change_type", lit("insert"))))
     graft.plans.GraftSql.execute(spark,
       s"""CREATE MATERIALIZED VIEW '$mv' AS
          |SELECT grp, count(*) AS n_rows, sum(amount) AS amount_sum,
@@ -522,7 +521,7 @@ class ViewStreamSpec extends SparkSpec {
     val seed = Seq((1L, "a", "x", 10L), (2L, "a", "y", 20L), (3L, "b", "x", 5L))
       .toDF("id", "seg", "band", "v")
     VersionedTable.commit(seed, src, extras = Map("changes" ->
-      VersionedTable.feedWritable(seed.withColumn("_change_type", lit("insert")))))
+      seed.withColumn("_change_type", lit("insert"))))
     // MV1 = γ_(seg,band)(src); MV2 = γ_seg(MV1) summing MV1's value_sum
     // — MV2's n_rows counts LIVE (seg, band) groups per seg, so every
     // feed fate of MV1's merge (insert / pre+post image / delete) must
