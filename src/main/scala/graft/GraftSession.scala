@@ -48,6 +48,11 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.ui.enabled", "false")
 
+  /** Core count for the measurement mains: `SPARK_GRAFT_CPUS`, else the
+    * host's available processors. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** local[cpus] session with shuffle parallelism = cpus. */
   def local(cpus: Int): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // a fixed 4, not GraftSession.cpus: the oracle gate's run must not
+    // change with the host it lands on
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()

@@ -1430,8 +1430,8 @@ object Similarity {
     * `sampleEvery` so the brute-force slice fits the maintenance window
     * (at 1/1000 sampling a 10⁹-row corpus pays a 10⁶×10⁹ partial
     * product, the same shape [[knnBruteForce]] already bounds per
-    * partition). Run it where RecallProbe runs today: per ingest epoch,
-    * not per query. */
+    * partition). Run it per ingest epoch, not per query (SCALING.md §
+    * "Round 9: ANN rebuild policy"). */
   def driftReport(
       spark: org.apache.spark.sql.SparkSession,
       tableName: String,

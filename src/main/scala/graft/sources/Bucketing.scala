@@ -310,8 +310,9 @@ object Bucketing {
     *    regroup scan partitions by bucket through a narrow dependency
     *    ([[org.apache.spark.sql.graft.PartitionBridge.regroupClaim]]).
     *    Driver cost O(1) plans in the bucket count, vs the per-bucket
-    *    road's ~20 ms x n of analysis+codegen (BucketScaleBench: 22
-    *    ms/bucket — minutes per merge at 4096 buckets).
+    *    road's ~20 ms x n of analysis+codegen (22 ms/bucket — minutes
+    *    per merge at 4096 buckets; SCALING.md § "the bucket road's
+    *    driver term, measured and cut").
     *  - PER-BUCKET PLANS (the fallback): one frame per bucket, RDD
     *    union, claim — kept for any shape the regroup can't PROVE
     *    single-bucket per partition (it declines rather than

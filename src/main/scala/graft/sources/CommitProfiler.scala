@@ -10,9 +10,10 @@ import java.util.concurrent.atomic.LongAdder
   * refresh runs sub-second aggregation inside ~1 s of commit motions),
   * and at 100 TB the same decomposition is object-store round trips per
   * micro-batch. This profiler answers "where does one commit's second
-  * go" empirically: [[graft.FormatBench]] enables it around a scripted
-  * commit sequence and prints per-phase totals, and the numbers land in
-  * SCALING.md so optimization targets the measured term, not a guess.
+  * go" empirically: Bench's profile pass ([[graft.Bench.profile]])
+  * enables it around each query key and writes the per-phase totals into
+  * the bench JSON, and perfbench's traced run reads it at every span
+  * boundary, so optimization targets the measured term, not a guess.
   *
   * DISABLED by default and free when disabled (one volatile read per
   * phase); phases nest (a `commit_total` span contains its parts), so

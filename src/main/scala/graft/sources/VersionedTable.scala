@@ -2419,7 +2419,7 @@ object VersionedTable {
     * threshold below this floor falls back to the distributed-join road
     * for the un-indexed versions: correct, just not exchange-free (set
     * both knobs together when simulating above-gate reads at toy scale,
-    * as the specs and DvBench do). */
+    * as the specs do; SCALING.md § "Round 12: write-side bitmap floor"). */
   private[graft] val DvBitmapFloorKey = "spark.graft.dv.bitmapFloorBytes"
   private val DvBitmapFloorDefault: Long = 1L << 20
 

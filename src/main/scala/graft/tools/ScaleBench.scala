@@ -24,8 +24,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, factorS) = args
     val factor = factorS.toInt
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2").toInt.max(1)
     val nCells = 16 * factor
     // cosine threshold for the d5/d6 pair ops. 0.4 (the query-key value)

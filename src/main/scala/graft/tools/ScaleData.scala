@@ -41,8 +41,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
-    val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     // events.ts is raw nanos-as-long in the driver's parquet
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

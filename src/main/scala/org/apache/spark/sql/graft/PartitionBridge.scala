@@ -127,9 +127,10 @@ object PartitionBridge {
     *
     * Why it exists: building one DataFrame per bucket costs one
     * analysis + physical planning + codegen PER BUCKET (~20 ms each,
-    * measured — BucketScaleBench), which is the bucket road's driver
-    * term: 22 ms x 4096 buckets would be minutes per merge. One plan
-    * makes the driver cost O(1) in the bucket count.
+    * measured — SCALING.md § "the bucket road's driver term, measured
+    * and cut"), which is the bucket road's driver term: 22 ms x 4096
+    * buckets would be minutes per merge. One plan makes the driver cost
+    * O(1) in the bucket count.
     *
     * Returns None — callers keep the per-bucket road — when the plan's
     * partition↔file mapping can't be PROVEN single-bucket: a scan
