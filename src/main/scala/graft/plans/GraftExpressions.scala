@@ -687,20 +687,19 @@ case class DvMasked private[plans] (
 
 object DvMasked {
   /** The ONE way to build the probe (the constructor is package-private):
-    * the cache-key `identity` and the executor-bound Hadoop conf are
-    * DERIVED here from the version being masked, so no call site can
-    * forget either — exactly the omission that once broke the build.
+    * the cache-key `identity` (the masked snapshot's commit-marker
+    * identity) and the executor-bound Hadoop conf are required here, so
+    * no call site can forget either — exactly the omission that once
+    * broke the build.
     * `dirs` is the masked version's CHAIN of bitmap dirs, base-first
     * (one element for a full-form mask; ≤ fold-interval under the DV
     * delta chain) — a position is masked when ANY level's bitmap holds
     * it, and levels are disjoint, so order only affects probe cost. */
   def forVersion(
       spark: org.apache.spark.sql.SparkSession,
-      root: String, v: Long, dirs: Seq[String],
+      identity: Long, dirs: Seq[String],
       file: Expression, pos: Expression): DvMasked =
-    DvMasked(dirs.toList,
-      graft.sources.VersionedTable.markerIdentity(spark, root, v),
-      file, pos)(
+    DvMasked(dirs.toList, identity, file, pos)(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
 }

@@ -1571,7 +1571,7 @@ object GraftSql {
     * All-null-key files carry no boundaries and are provably untouched by
     * an equi (NULL matches nothing), so they never become candidates. */
   private def candidateRefs(
-      spark: SparkSession, root: String, base: Long,
+      spark: SparkSession, base: graft.sources.Snapshot,
       m: MergeIntoTable, sDet: DataFrame): Option[Set[String]] = {
     // per-key usable stats, resolved driver-side first: (source col,
     // cast type, per-file bounds). A key with NO boundary-carrying file
@@ -1581,7 +1581,7 @@ object GraftSql {
     case class KeyStats(sk: String, cast: String,
         bounds: Seq[(String, String, String)])
     val ks: Seq[KeyStats] = equiKeys(m).flatMap { case (tk, sk) =>
-      VersionedTable.fileKeyRanges(spark, root, base, tk).flatMap { ranges =>
+      VersionedTable.fileKeyRanges(spark, base, tk).flatMap { ranges =>
         val boundaries = ranges.collect { case (rel, Some((_, mn, mx))) =>
           (rel, mn.toString, mx.toString)
         }
@@ -1857,9 +1857,11 @@ object GraftSql {
     var out: Option[Long] = None
     while (out.isEmpty) {
       attempt += 1
-      val base = VersionedTable.currentVersion(spark, root).getOrElse(
+      // the target snapshot this attempt derives from, resolved once
+      val snap = VersionedTable.latest(spark, root).getOrElse(
         throw new java.io.IOException(s"no committed version under $root"))
-      val readDf = VersionedTable.readVersion(spark, root, base)
+      val base = snap.version
+      val readDf = VersionedTable.readVersion(spark, snap)
       val tSchema = readDf.schema
       // bucket-road eligibility (graft.sources.Bucketing), decided once
       // per attempt and reused by the touched-file DETECTION scan below
@@ -1867,7 +1869,7 @@ object GraftSql {
       // only the source) and the merge slice/commit (phase 2)
       val bucketEligible: Option[(Map[String, Int], Seq[String], Int)] =
         graft.sources.Bucketing
-          .specOf(VersionedTable.propertiesOf(spark, root, base))
+          .specOf(VersionedTable.propertiesOf(spark, snap))
           .flatMap { case (bkeys, n) =>
             // EVERY layout key must be equi-joined by the ON condition
             // (a composite layout hashed (a, b) co-locates nothing for
@@ -1875,7 +1877,7 @@ object GraftSql {
             if (!bkeys.forall(k =>
                 onTargetEquiKeys(m).contains(k.toLowerCase))) None
             else graft.sources.Bucketing
-              .pureBucketsBounded(spark, root, base, bkeys, n)
+              .pureBucketsBounded(spark, snap, bkeys, n)
               .map(fb => (fb, bkeys, n))
           }
       // phase 1 — touched-file detection (COW-eligible merges only):
@@ -1914,7 +1916,7 @@ object GraftSql {
               UnresolvedAttribute(a.nameParts.tail)
           }
           m.notMatchedBySourceActions.flatMap { act =>
-            VersionedTable.prunedFileRefs(spark, root, base,
+            VersionedTable.prunedFileRefs(spark, snap,
               ColumnBridge.column(deQualified(act.condition.get)))
           }.toSet
         }.toOption
@@ -1940,7 +1942,7 @@ object GraftSql {
               if (m.matchedActions.isEmpty && m.notMatchedActions.isEmpty)
                 Set.empty
               else {
-                val cand = candidateRefs(spark, root, base, m, sDet)
+                val cand = candidateRefs(spark, snap, m, sDet)
                 cand match {
                   case Some(c) if c.isEmpty =>
                     detectionDup = Some(false) // provably nothing matches
@@ -1949,15 +1951,15 @@ object GraftSql {
                     val scan = bucketEligible match {
                       case Some((fb, bkeys, n)) =>
                         val refsToScan = c.map(_.toSeq).getOrElse(
-                          VersionedTable.dataFileRefs(spark, root, base))
+                          VersionedTable.dataFileRefs(spark, snap))
                         val byBucket = refsToScan.map(r => r -> fb(r))
                           .groupBy(_._2)
                           .map { case (b, rs) => b -> rs.map(_._1) }
                         graft.sources.Bucketing.bucketAlignedSliceWithRef(
-                          spark, root, base, bkeys, n, byBucket,
+                          spark, snap, bkeys, n, byBucket,
                           readDf.schema, "__t_file")
                       case None => VersionedTable.readVersionWithFileRef(
-                        spark, root, base, "__t_file", c.map(_.toSeq.sorted))
+                        spark, snap, "__t_file", c.map(_.toSeq.sorted))
                     }
                     // a per-row id on the DETECTION scan: multiplicity per
                     // matched target row rides the same job as the file
@@ -1978,7 +1980,7 @@ object GraftSql {
                     det.map(_.getString(0)).toSet
                 }
               }
-            Some(VersionedTable.dataFileRefs(spark, root, base)
+            Some(VersionedTable.dataFileRefs(spark, snap)
               .filterNot(r => touched(r) || nmbs(r)))
         }
       // phase 2 — the merge itself, over the touched slice (COW/MOR) or
@@ -1990,7 +1992,7 @@ object GraftSql {
       // are masked where they sit, and only updated images + inserts are
       // written — bytes ∝ affected rows, not touched files.
       val touchedRefs: Option[Seq[String]] = keptRefs.map(kept =>
-        VersionedTable.dataFileRefs(spark, root, base).filterNot(kept.toSet))
+        VersionedTable.dataFileRefs(spark, snap).filterNot(kept.toSet))
       val morMode = touchedRefs.exists(_.nonEmpty) &&
         VersionedTable.boolProperty(spark, root, DvProperty)
       // RECORDED BUCKET LAYOUT road for the statement users actually
@@ -2021,17 +2023,17 @@ object GraftSql {
           else if (morMode) morBucket match {
             case Some((fb, bkeys, n)) =>
               graft.sources.Bucketing.bucketAlignedSliceTagged(
-                spark, root, base, bkeys, n, byBucketOf(fb, touched),
+                spark, snap, bkeys, n, byBucketOf(fb, touched),
                 readDf.schema)
             case None =>
-              VersionedTable.readFilesTagged(spark, root, base, touched)
+              VersionedTable.readFilesTagged(spark, snap, touched)
           }
           else bucketRoad match {
             case Some((fb, bkeys, n)) =>
               graft.sources.Bucketing.bucketAlignedSlice(
-                spark, root, base, bkeys, n, byBucketOf(fb, touched),
+                spark, snap, bkeys, n, byBucketOf(fb, touched),
                 readDf.schema)
-            case None => VersionedTable.readFilesOf(spark, root, base, touched)
+            case None => VersionedTable.readFilesOf(spark, snap, touched)
           }
         case None => readDf
       }
@@ -2079,7 +2081,7 @@ object GraftSql {
       // moving the base keeps the partition value in agreement. An
       // action assigning BOTH is validated by the enforcement scan.
       val genDefs = graft.sources.GeneratedCols.of(
-        VersionedTable.propertiesOf(spark, root, base))
+        VersionedTable.propertiesOf(spark, snap))
       def withGenerated(as: Map[String, Column]): Map[String, Column] =
         genDefs.foldLeft(as) { case (m0, (c, g)) =>
           if (m0.keys.exists(_.equalsIgnoreCase(c))) m0
@@ -2099,7 +2101,7 @@ object GraftSql {
       // DEFAULT — explicit values (named or via star from a source that
       // carries the column) pass through; only unassigned identity
       // columns allocate.
-      val tableProps = VersionedTable.propertiesOf(spark, root, base)
+      val tableProps = VersionedTable.propertiesOf(spark, snap)
       val exprGenDefs = graft.sources.GeneratedCols.exprsOf(tableProps)
       val identDefs = graft.sources.GeneratedCols.identitiesOf(tableProps)
       val namedAssigns: Set[String] =
@@ -2374,7 +2376,7 @@ object GraftSql {
               (morWritten, Map.empty[String, String])
           }
           VersionedTable.commitCow(morOut, root,
-            VersionedTable.dataFileRefs(spark, root, base),
+            VersionedTable.dataFileRefs(spark, snap),
             extras = Map("dv" -> newDelWritable, "changes" -> feed) ++ extraTables,
             preCommit = occCheck, recordInfo = morInfo,
             recordProperties = advProps)

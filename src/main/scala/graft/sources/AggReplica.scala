@@ -765,9 +765,10 @@ object AggReplica {
     * for a fact-only extremum-retracting refresh, 29 when it also folds
     * a dim update (44 on average before the pins). */
   def refreshView(spark: SparkSession, dstRoot: String): Long = {
-    val cur = VersionedTable.currentVersion(spark, dstRoot).getOrElse(
+    val view = VersionedTable.latest(spark, dstRoot).getOrElse(
       throw new java.io.IOException(s"no committed version under $dstRoot"))
-    val props = VersionedTable.propertiesOf(spark, dstRoot, cur)
+    val cur = view.version
+    val props = VersionedTable.propertiesOf(spark, view)
     val src = props.getOrElse(MvSourceProp, throw new IllegalArgumentException(
       s"$dstRoot is not a materialized view (no $MvSourceProp property)"))
     val result =

@@ -76,9 +76,8 @@ object Bucketing {
     * TBLPROPERTIES` (or the evolve commit `MERGE WITH SCHEMA EVOLUTION`
     * runs first) would silently orphan the layout. Empty when the table
     * has no recorded spec. */
-  def carryStamp(
-      spark: SparkSession, root: String, cur: Long): Map[String, String] =
-    stampOf(VersionedTable.propertiesOf(spark, root, cur))
+  def carryStamp(spark: SparkSession, cur: Snapshot): Map[String, String] =
+    stampOf(VersionedTable.propertiesOf(spark, cur))
 
   /** [[carryStamp]] from an EXPLICIT (possibly just-adjusted) props
     * map — the schema-change sites compute their post-change properties
@@ -200,10 +199,15 @@ object Bucketing {
   private[graft] def pureBucketsBounded(
       spark: SparkSession, root: String, v: Long, keys: Seq[String], n: Int)
       : Option[Map[String, Int]] =
-    pureBuckets(spark, root, v, keys, n).filter { fb =>
+    pureBucketsBounded(spark, VersionedTable.snapshotAt(spark, root, v), keys, n)
+
+  private[graft] def pureBucketsBounded(
+      spark: SparkSession, v: Snapshot, keys: Seq[String], n: Int)
+      : Option[Map[String, Int]] =
+    pureBuckets(spark, v, keys, n).filter { fb =>
       val cap = spark.conf
         .get(MaxBucketBytesKey, MaxBucketBytesDefault.toString).toLong
-      val sizes = VersionedTable.fileSizes(spark, root, v)
+      val sizes = VersionedTable.fileSizes(spark, v)
       fb.groupBy(_._2).values.forall { refs =>
         refs.keys.forall(sizes.contains) &&
           refs.keys.iterator.map(sizes).sum <= cap
@@ -216,11 +220,15 @@ object Bucketing {
     * origin version. */
   def pureBuckets(
       spark: SparkSession, root: String, v: Long, keys: Seq[String], n: Int)
+      : Option[Map[String, Int]] =
+    pureBuckets(spark, VersionedTable.snapshotAt(spark, root, v), keys, n)
+
+  private[graft] def pureBuckets(
+      spark: SparkSession, v: Snapshot, keys: Seq[String], n: Int)
       : Option[Map[String, Int]] = {
     val spec = specString(keys, n)
-    val refs = VersionedTable.dataFileRefs(spark, root, v)
-    val dirToV = VersionedTable.versions(spark, root)
-      .map(w => VersionedTable.dataDirNameOf(spark, root, w) -> w).toMap
+    val refs = VersionedTable.dataFileRefs(spark, v)
+    val dirToV = VersionedTable.snapshots(spark, v.root).map(w => w.dirName -> w).toMap
     val stamped = scala.collection.mutable.Map.empty[Long, Boolean]
     val out = Map.newBuilder[String, Int]
     refs.foreach { r =>
@@ -228,8 +236,8 @@ object Bucketing {
       if (seg.length != 2) return None // original/absolute ref — unproven
       val w = dirToV.get(seg.head).getOrElse(return None)
       // the stamp must name the SAME spec the merge is about to trust
-      val ok = stamped.getOrElseUpdate(w,
-        VersionedTable.commitInfoOf(spark, root, w)
+      val ok = stamped.getOrElseUpdate(w.version,
+        VersionedTable.commitInfoOf(spark, w)
           .get(BucketedInfoKey).contains(spec))
       val b = refBucket(r).getOrElse(return None)
       if (!ok || b >= n) return None
@@ -245,10 +253,10 @@ object Bucketing {
     * (DV masks and column mapping fold map-side, so rows stay
     * bucket-pure). */
   private[graft] def bucketAlignedSlice(
-      spark: SparkSession, root: String, v: Long, keys: Seq[String], n: Int,
+      spark: SparkSession, v: Snapshot, keys: Seq[String], n: Int,
       filesByBucket: Map[Int, Seq[String]],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    alignedSlice(spark, root, v, keys, n, filesByBucket, schema,
+    alignedSlice(spark, v, keys, n, filesByBucket, schema,
       needFile = false, needPos = false)
       .select(casts(schema): _*)
 
@@ -259,11 +267,11 @@ object Bucketing {
     * detection join shuffles only the SOURCE (O(delta)) instead of the
     * candidate slice (O(table) on a hash-scattered delta). */
   private[graft] def bucketAlignedSliceWithRef(
-      spark: SparkSession, root: String, v: Long, keys: Seq[String], n: Int,
+      spark: SparkSession, v: Snapshot, keys: Seq[String], n: Int,
       filesByBucket: Map[Int, Seq[String]],
       schema: org.apache.spark.sql.types.StructType,
       refCol: String): DataFrame =
-    alignedSlice(spark, root, v, keys, n, filesByBucket, schema,
+    alignedSlice(spark, v, keys, n, filesByBucket, schema,
       needFile = true, needPos = false)
       .select((casts(schema) :+ col("__dv_file").as(refCol)): _*)
 
@@ -276,10 +284,10 @@ object Bucketing {
     * ride along in the claimed schema (mask folding only REMOVES rows,
     * so a bucket's survivors still all hash to their bucket). */
   private[graft] def bucketAlignedSliceTagged(
-      spark: SparkSession, root: String, v: Long, keys: Seq[String], n: Int,
+      spark: SparkSession, v: Snapshot, keys: Seq[String], n: Int,
       filesByBucket: Map[Int, Seq[String]],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
-    alignedSlice(spark, root, v, keys, n, filesByBucket, schema,
+    alignedSlice(spark, v, keys, n, filesByBucket, schema,
       needFile = true, needPos = true)
       .select((casts(schema) :+ col("__dv_file") :+ col("__dv_pos")): _*)
 
@@ -318,17 +326,18 @@ object Bucketing {
     *    single-bucket per partition (it declines rather than
     *    mis-claims). */
   private def alignedSlice(
-      spark: SparkSession, root: String, v: Long, keys: Seq[String], n: Int,
+      spark: SparkSession, v: Snapshot, keys: Seq[String], n: Int,
       filesByBucket: Map[Int, Seq[String]],
       schema: org.apache.spark.sql.types.StructType,
       needFile: Boolean, needPos: Boolean): DataFrame = {
+    val root = v.root
     val bridge = org.apache.spark.sql.graft.PartitionBridge
     // the physical tags are CODEGEN'D PER ROW (a regexp over the file
     // path, the metadata row index) and the claim is an optimizer
     // barrier no later projection reaches through — so build only the
     // tags this slice actually consumes: the face's own needs, or both
     // when a mask must fold above the claim
-    val masked = VersionedTable.hasDeletionVectors(spark, root, v)
+    val masked = VersionedTable.hasDeletionVectors(spark, v)
     val tagFile = needFile || masked
     val tagPos = needPos || masked
     var outSchema = schema
@@ -340,7 +349,7 @@ object Bucketing {
       (if (tagFile) Seq(col("__dv_file")) else Nil) ++
       (if (tagPos) Seq(col("__dv_pos")) else Nil)
     def readBucketFiles(refs: Seq[String]) = VersionedTable
-      .readFilesRaw(spark, root, v, refs, tagFile, tagPos).select(cs: _*)
+      .readFilesRaw(spark, v, refs, tagFile, tagPos).select(cs: _*)
     val onePlan: Option[org.apache.spark.sql.DataFrame] =
       if (filesByBucket.isEmpty) None
       else {
@@ -380,7 +389,7 @@ object Bucketing {
       }
       bridge.claimHashPartitioned(spark, outSchema, parts, keys)
     }
-    if (masked) VersionedTable.foldMaskOnce(spark, root, v, claimed)
+    if (masked) VersionedTable.foldMaskOnce(spark, v, claimed)
     else claimed
   }
 
@@ -400,15 +409,23 @@ object Bucketing {
       spark: SparkSession, root: String, cur: Long, staging: DataFrame,
       key: String, runTs: org.apache.spark.sql.Column,
       statusCol: String, doneValue: String, changeFeed: Boolean)
+      : Option[(DataFrame, Seq[String], Option[DataFrame], String)] =
+    mergeFrames(spark, VersionedTable.snapshotAt(spark, root, cur), staging,
+      key, runTs, statusCol, doneValue, changeFeed)
+
+  private[graft] def mergeFrames(
+      spark: SparkSession, cur: Snapshot, staging: DataFrame,
+      key: String, runTs: org.apache.spark.sql.Column,
+      statusCol: String, doneValue: String, changeFeed: Boolean)
       : Option[(DataFrame, Seq[String], Option[DataFrame], String)] = {
-    val props = VersionedTable.propertiesOf(spark, root, cur)
+    val props = VersionedTable.propertiesOf(spark, cur)
     specOf(props) match {
       // this road's merge machinery (IncrementalMerge) is single-key;
       // a composite-key layout declines here and rides the SQL MERGE
       // face, whose ON condition carries every key conjunct
       case Some((Seq(bkey), n)) if bkey.equalsIgnoreCase(key) =>
-        pureBucketsBounded(spark, root, cur, Seq(bkey), n).flatMap { fb =>
-          val target = VersionedTable.readVersion(spark, root, cur)
+        pureBucketsBounded(spark, cur, Seq(bkey), n).flatMap { fb =>
+          val target = VersionedTable.readVersion(spark, cur)
           // the staging key must hash under the SAME binary layout the
           // files were written with: murmur3 of INT and BIGINT differ,
           // so a type-drifted delta would prune the wrong buckets and
@@ -434,9 +451,9 @@ object Bucketing {
               .groupBy(_._2).map { case (b, rs) => b -> rs.map(_._1) }
             val touchedFiles: Set[String] =
               filesByBucket.values.flatten.toSet
-            val kept = VersionedTable.dataFileRefs(spark, root, cur)
+            val kept = VersionedTable.dataFileRefs(spark, cur)
               .filterNot(touchedFiles)
-            val slice = bucketAlignedSlice(spark, root, cur, Seq(bkey), n,
+            val slice = bucketAlignedSlice(spark, cur, Seq(bkey), n,
               filesByBucket, target.schema)
             // co-partition the DELTA explicitly to the layout's
             // partitioning — the one exchange this merge performs, and

@@ -151,7 +151,12 @@ object DvBitmaps {
       spark.sparkContext.hadoopConfiguration)
     val outStr = outDir.toString
     try {
-      spark.read.parquet(dvDir.toString)
+      // the mask's part files, not the `_`-prefixed dir: Spark would log
+      // a hidden root path as ignored
+      val parts = fsc.listStatus(dvDir).map(_.getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .map(_.toString)
+      spark.read.parquet(parts.toSeq: _*)
         .select(col("file").cast("string"), col("pos").cast("long"))
         .repartition(col("file"))
         .sortWithinPartitions("file", "pos")

@@ -60,28 +60,71 @@ object VersionedTable {
   private def versionDir(root: String, v: Long) = new Path(root, f"v$v%08d")
   private def pad(v: Long) = f"$v%08d"
 
+  /** `dir`'s entries — one listing, no existence probe first; an absent
+    * dir lists empty. */
+  private def listOrEmpty(
+      f: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    try f.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The version-numbered entries of `dir` (`_commits` markers or
+    * `_claims`), ascending. */
+  private def listMarkers(
+      f: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    listOrEmpty(f, dir)
+      .filter { st =>
+        val n = st.getPath.getName
+        n.nonEmpty && n.forall(_.isDigit)
+      }
+      .sortBy(_.getPath.getName.toLong)
+
   private def listVersions(f: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Long] =
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toLong)
-      .sorted
+    listMarkers(f, dir).map(_.getPath.getName.toLong)
 
   /** All committed versions, ascending (empty for a fresh/unborn table). */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    listVersions(f, commitDir(root))
-  }
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    listVersions(fs(spark, root), commitDir(root))
 
   def currentVersion(spark: SparkSession, root: String): Option[Long] =
     versions(spark, root).lastOption
 
-  /** O(1) membership probe — one `exists()` on the commit marker instead
-    * of a directory listing: a reader validating one version of a
-    * 100k-commit streaming table must not list the whole log to do it. */
-  private def isCommitted(spark: SparkSession, root: String, v: Long): Boolean =
-    fs(spark, root).exists(new Path(commitDir(root), pad(v)))
+  /** The latest committed [[Snapshot]]. Always lists `_commits`, so an
+    * operation never starts from a version older than one whose publish
+    * finished before it; the listing's rows carry every marker's
+    * identity, so a warm repeat stats no marker. */
+  private[graft] def latest(spark: SparkSession, root: String): Option[Snapshot] = {
+    val f = fs(spark, root)
+    listMarkers(f, commitDir(root)).lastOption.map(Snapshot.of(f, root, _))
+  }
+
+  /** The committed [[Snapshot]]s whose versions pass `keep`, ascending —
+    * one listing; only the kept markers resolve. */
+  private[graft] def snapshots(
+      spark: SparkSession, root: String,
+      keep: Long => Boolean = _ => true): Seq[Snapshot] = {
+    val f = fs(spark, root)
+    listMarkers(f, commitDir(root))
+      .filter(st => keep(st.getPath.getName.toLong))
+      .map(Snapshot.of(f, root, _))
+  }
+
+  /** Committed version `v` as a [[Snapshot]]: one `stat` of its marker,
+    * which proves the version is committed and checks the cached entry's
+    * identity — a reader validating one version of a 100k-commit
+    * streaming table must not list the whole log to do it. */
+  private[graft] def snapshotAt(spark: SparkSession, root: String, v: Long): Snapshot = {
+    val f = fs(spark, root)
+    val marker =
+      try f.getFileStatus(new Path(commitDir(root), pad(v)))
+      catch { case _: java.io.FileNotFoundException => null }
+    require(marker != null, s"version $v is not committed under $root")
+    Snapshot.of(f, root, marker)
+  }
+
+  /** The latest snapshot, or the error every read of an unborn table raises. */
+  private def latestOrFail(spark: SparkSession, root: String): Snapshot =
+    latest(spark, root).getOrElse(
+      throw new java.io.IOException(s"no committed version under $root"))
 
   // ---- vacuum tombstones -------------------------------------------------
 
@@ -95,19 +138,14 @@ object VersionedTable {
     * per dropped version; a year of hourly commits vacuumed is ~9 KB).
     * Empty for never-vacuumed and pre-upgrade tables — the guard then
     * stands down, so old tables keep reading exactly as before. */
-  def vacuumedVersions(spark: SparkSession, root: String): Set[Long] = {
-    val f = fs(spark, root)
-    val file = vacuumedFile(root)
-    if (!f.exists(file)) Set.empty
-    else
-      try {
-        val in = f.open(file)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                   finally in.close()
-        text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-          .flatMap(_.toLongOption).toSet
-      } catch { case _: Exception => Set.empty }
-  }
+  def vacuumedVersions(spark: SparkSession, root: String): Set[Long] =
+    try {
+      val in = fs(spark, root).open(vacuumedFile(root))
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+                 finally in.close()
+      text.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
+        .flatMap(_.toLongOption).toSet
+    } catch { case _: Exception => Set.empty }
 
   /** Record `dropped` in the tombstone ledger BEFORE the markers are
     * deleted — crash-safe in that order because the feed guard only fires
@@ -136,7 +174,7 @@ object VersionedTable {
     * the hole immediately). Where fresh consumers ([[consumeChanges]],
     * the streaming source) begin. */
   def earliestFeedStart(spark: SparkSession, root: String): Long = {
-    val vs = versions(spark, root)
+    val vs = listMarkers(fs(spark, root), commitDir(root))
     val pastDropped = vacuumedVersions(spark, root)
       .foldLeft(0L)(math.max) + 1L
     // CDC starts at the first version that CARRIES a feed: a table whose
@@ -148,9 +186,11 @@ object VersionedTable {
     // is O(pre-CDC prefix) existence probes — once per BATCH consumer
     // call; the streaming source memoizes it across polls
     // (ChangeFeedSource.feedStart).
-    val firstFed = vs.find(v => hasChangeFeed(spark, root, v))
-    math.max(firstFed.getOrElse(vs.lastOption.map(_ + 1L).getOrElse(1L)),
-      pastDropped)
+    val f = fs(spark, root)
+    val firstFed = vs.iterator.map(Snapshot.of(f, root, _))
+      .find(hasChangeFeed(spark, _)).map(_.version)
+    math.max(firstFed.getOrElse(vs.lastOption
+      .map(_.getPath.getName.toLong + 1L).getOrElse(1L)), pastDropped)
   }
 
   // ---- version-log checkpoint --------------------------------------------
@@ -189,38 +229,33 @@ object VersionedTable {
     * checkpoint tables) or the file is unreadable — callers fall back to
     * the full log scan, so a lost checkpoint costs time, never
     * correctness. */
-  def readCheckpoint(spark: SparkSession, root: String): Option[Checkpoint] = {
-    val f = fs(spark, root)
-    val file = checkpointFile(root)
-    if (!f.exists(file)) None
-    else
-      try {
-        val in = f.open(file)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                   finally in.close()
-        val lines = text.split('\n').filter(_.nonEmpty)
-        val (byteLines, txnLines) =
-          lines.tail.partition(_.startsWith(CkptBytesTag + "\t"))
-        val txns = txnLines.map { l =>
-          val a = l.split('\t')
-          java.net.URLDecoder.decode(a(0), "UTF-8") -> a(1).toLong
-        }.toMap
-        val bytes = byteLines.map { l =>
-          val a = l.split('\t')
-          a(1).toLong -> a(2).toLong
-        }.toMap
-        // header: `2\t<version>` since the bytes lines shipped (the format
-        // marker makes a pre-bytes reader FAIL the header's toLong and fall
-        // back to the full log scan, instead of mis-parsing `!b` lines as a
-        // txn app literally named "!b"); a bare `<version>` header is the
-        // original vintage and still accepted
-        val head = lines.head.split('\t')
-        val version =
-          if (head.length >= 2 && head(0) == CkptFormatV) head(1).toLong
-          else lines.head.toLong
-        Some(Checkpoint(version, txns, bytes))
-      } catch { case _: Exception => None }
-  }
+  def readCheckpoint(spark: SparkSession, root: String): Option[Checkpoint] =
+    try {
+      val in = fs(spark, root).open(checkpointFile(root))
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+                 finally in.close()
+      val lines = text.split('\n').filter(_.nonEmpty)
+      val (byteLines, txnLines) =
+        lines.tail.partition(_.startsWith(CkptBytesTag + "\t"))
+      val txns = txnLines.map { l =>
+        val a = l.split('\t')
+        java.net.URLDecoder.decode(a(0), "UTF-8") -> a(1).toLong
+      }.toMap
+      val bytes = byteLines.map { l =>
+        val a = l.split('\t')
+        a(1).toLong -> a(2).toLong
+      }.toMap
+      // header: `2\t<version>` since the bytes lines shipped (the format
+      // marker makes a pre-bytes reader FAIL the header's toLong and fall
+      // back to the full log scan, instead of mis-parsing `!b` lines as a
+      // txn app literally named "!b"); a bare `<version>` header is the
+      // original vintage and still accepted
+      val head = lines.head.split('\t')
+      val version =
+        if (head.length >= 2 && head(0) == CkptFormatV) head(1).toLong
+        else lines.head.toLong
+      Some(Checkpoint(version, txns, bytes))
+    } catch { case _: Exception => None }
 
   /** Advance the checkpoint after publishing version `v`. Merges the
     * previous checkpoint with the txn extras of every version it did not
@@ -238,8 +273,8 @@ object VersionedTable {
       val prev = readCheckpoint(spark, root)
       if (!prev.exists(_.version >= v)) {
         val from = prev.map(_.version).getOrElse(0L)
-        val gap = versions(spark, root).filter(x => x > from && x <= v)
-        val txns = gap.sorted
+        val gap = snapshots(spark, root, x => x > from && x <= v)
+        val txns = gap
           .foldLeft(prev.map(_.txns).getOrElse(Map.empty[String, Long])) { (m, vv) =>
             // version v's stamps ARE the pairs this commit just staged
             // (`ownTxn`, already collected driver-side): folding them
@@ -250,7 +285,7 @@ object VersionedTable {
             // ([[txnStampsOf]]).
             val stamps: Map[String, Long] =
               ownTxn match {
-                case Some(own) if vv == v =>
+                case Some(own) if vv.version == v =>
                   // THIS commit's own stamps are authoritative — also
                   // when empty (Some(Nil): an unstamped commit stamps
                   // nothing; no metadata read needed to know that)
@@ -262,7 +297,7 @@ object VersionedTable {
                   // that as "no stamps" would drop the newest version's
                   // stamps from the checkpoint forever (lastTxn only
                   // scans above the checkpoint version)
-                  txnStampsOf(spark, root, vv)
+                  txnStampsOf(spark, vv)
               }
             stamps.foldLeft(m) { case (mm, (app, b)) =>
               mm.updated(app, math.max(mm.getOrElse(app, Long.MinValue), b))
@@ -282,10 +317,10 @@ object VersionedTable {
         // bytes FOREVER (checkpoint-first readers never recompute a
         // covered version); an uncovered version instead answers through
         // the live fileSizes road, which heals when the store does.
-        val bytes0 = gap.sorted
+        val bytes0 = gap
           .foldLeft(prev.map(_.bytes).getOrElse(Map.empty[Long, Long])) { (m, vv) =>
-            completeSnapshotBytes(spark, root, vv, knownBase = m.get) match {
-              case Some(b) => m.updated(vv, b)
+            completeSnapshotBytes(spark, vv, knownBase = m.get) match {
+              case Some(b) => m.updated(vv.version, b)
               case None => m
             }
           }
@@ -369,11 +404,11 @@ object VersionedTable {
     val advProps = adv.map { case (c, (_, newHigh)) =>
       (GeneratedCols.IdentityHighPrefix + c) -> newHigh.toString
     }
-    val check: Long => Unit = _ => currentVersion(spark, root).foreach { nowV =>
-      val nowProps = propertiesOf(spark, root, nowV)
+    val check: Long => Unit = _ => latest(spark, root).foreach { now =>
+      val nowProps = propertiesOf(spark, now)
       adv.foreach { case (c, (basis, _)) =>
         if (nowProps.get(GeneratedCols.IdentityHighPrefix + c) != basis)
-          throw new Sinks.ConcurrentWriteException(root, base, Some(nowV))
+          throw new Sinks.ConcurrentWriteException(root, base, Some(now.version))
       }
     }
     (df1, advProps, check, release)
@@ -401,10 +436,12 @@ object VersionedTable {
     val profT0 = System.nanoTime()
     val spark = df.sparkSession
     val f = fs(spark, root)
+    // the current state this commit derives from, resolved once
+    val base = latest(spark, root)
     // PROTOCOL GATE: refuse to write against a table whose current
     // version requires features outside this build (and to read it —
     // every commit path reads the current state it commits against)
-    currentVersion(spark, root).foreach(assertWritable(spark, root, _))
+    base.foreach(assertWritable(spark, _))
     // COLUMN MAPPING: data files always carry PHYSICAL names. None =
     // reset (a full rewrite re-births every column under its logical
     // name); COW/append/metadata paths pass the carried or updated map.
@@ -416,8 +453,7 @@ object VersionedTable {
     // matches the recorded spec. Computed BEFORE the data write because
     // it shapes the staging layout.
     val carriedProps = recordProperties.getOrElse(
-      currentVersion(spark, root)
-        .map(cv => propertiesOf(spark, root, cv)).getOrElse(Map.empty))
+      base.map(propertiesOf(spark, _)).getOrElse(Map.empty))
     val recordedSpec = carriedProps.get(PartitionByProp)
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     require(partitionBy.isEmpty || recordedSpec.isEmpty ||
@@ -454,8 +490,7 @@ object VersionedTable {
     val exprTypes: Map[String, org.apache.spark.sql.types.DataType] =
       if (exprGens.isEmpty) Map.empty
       else recordSchema
-        .orElse(currentVersion(spark, root).flatMap(cv =>
-          scala.util.Try(schemaOf(spark, root, cv)).toOption))
+        .orElse(base.flatMap(b => scala.util.Try(schemaOf(spark, b)).toOption))
         .map(_.map(sf => sf.name -> sf.dataType).toMap).getOrElse(Map.empty)
     val df0e = GeneratedCols.populateExprs(df0g, exprGens, exprTypes)
     val (df0, idAdvProps, idCheck, idRelease) =
@@ -643,8 +678,7 @@ object VersionedTable {
       if (extras.contains("dv")) {
         val dvStaged = new Path(staging, "_dv")
         val stagedBytes =
-          if (!f.exists(dvStaged)) 0L
-          else f.listStatus(dvStaged).iterator.filter(_.isFile).map(_.getLen).sum
+          listOrEmpty(f, dvStaged).iterator.filter(_.isFile).map(_.getLen).sum
         val floor = spark.conf
           .get(DvBitmapFloorKey, DvBitmapFloorDefault.toString).toLong
         if (stagedBytes > floor)
@@ -680,7 +714,7 @@ object VersionedTable {
     // rewrite may re-birth them); only metadata carries. A caller that
     // truly wants to drop metadata records an explicit schema.
     val schemaToRecord = recordSchema.getOrElse {
-      currentVersion(spark, root).map(cv => schemaOf(spark, root, cv)) match {
+      base.map(schemaOf(spark, _)) match {
         case None => df0.schema
         case Some(prior) => org.apache.spark.sql.types.StructType(
           df0.schema.map { fld =>
@@ -724,8 +758,8 @@ object VersionedTable {
     // whole table, so the table-wide invariant holds by induction. The
     // new version re-records the set (or the caller's explicit one, for
     // add/drop), so constraints survive every commit path.
-    val activeConstraints = currentVersion(spark, root)
-      .map(cv => constraintsOf(spark, root, cv)).getOrElse(Map.empty)
+    val activeConstraints =
+      base.map(constraintsOf(spark, _)).getOrElse(Map.empty)
     // enforce the set RECORDED WITH THIS COMMIT (= active unless the
     // caller rewrites it — add/drop constraint, or RESTORE re-recording
     // the target era's set): enforcing the current era's set against a
@@ -935,7 +969,8 @@ object VersionedTable {
       // between the two reads silently bumped n past it and a stale
       // merge published with no re-check: a cross-process lost update,
       // caught as a rare StoreAdapterSpec flake.)
-      var n = currentVersion(spark, root).getOrElse(0L) + 1
+      var observed = latest(spark, root)
+      var n = observed.map(_.version).getOrElse(0L) + 1
       try preCommitId(v)
       catch { case e: Throwable => f.delete(dir, true); throw e }
       var won = -1L
@@ -951,18 +986,17 @@ object VersionedTable {
         // IN-COMMIT TIMESTAMP (marker line 2, [[commitTimeOf]]): the
         // wall clock clamped monotone against the PREDECESSOR's recorded
         // time — computed per attempt (a lost race re-targets n, so the
-        // predecessor changes) through commitTimeOf's marker-identity
-        // memo: one stat + (first time per version) one small read, the
-        // AddFile-bookkeeping cost class. Deliberately NOT a bare
-        // per-root cache: a table recreated at the same root mid-JVM
-        // would satisfy a version-number match with the OLD table's
-        // stamp and record non-monotone history; the identity-keyed memo
-        // re-reads when the marker changes. TIMESTAMP AS OF and history
-        // then resolve from what the commit SAID, not from file mtimes a
-        // copy/restore rewrites.
+        // predecessor changes), normally from the observed current
+        // snapshot itself. Deliberately NOT a bare per-root cache: a
+        // table recreated at the same root mid-JVM would satisfy a
+        // version-number match with the OLD table's stamp and record
+        // non-monotone history; the snapshot is keyed on the marker's
+        // identity. TIMESTAMP AS OF and history then resolve from what
+        // the commit SAID, not from file mtimes a copy/restore rewrites.
         val prevIct: Long =
           if (n <= 1L) 0L
-          else try commitTimeOf(spark, root, n - 1)
+          else try observed.filter(_.version == n - 1)
+                 .getOrElse(snapshotAt(spark, root, n - 1)).commitTime
                catch { case _: Exception => 0L }
         val ict = math.max(System.currentTimeMillis(), prevIct + 1L)
         if (!store.putIfAbsent(f, target,
@@ -975,12 +1009,13 @@ object VersionedTable {
           // version too — the concurrent winner may be a newer build
           // whose commit carries features this build cannot write over
           // (the entry-time assertWritable saw the pre-race state only).
-          val cvNow = currentVersion(spark, root)
-          val next = math.max(n + 1, cvNow.getOrElse(n) + 1)
+          val cvNow = latest(spark, root)
+          val next = math.max(n + 1, cvNow.map(_.version).getOrElse(n) + 1)
           try preCommitId(next)
           catch { case e: Throwable => f.delete(dir, true); throw e }
-          try cvNow.foreach(assertWritable(spark, root, _))
+          try cvNow.foreach(assertWritable(spark, _))
           catch { case e: Throwable => f.delete(dir, true); throw e }
+          observed = cvNow
           n = next
         } else won = n
       }
@@ -1005,73 +1040,6 @@ object VersionedTable {
     published
   }
 
-  /** The resolved data-dir NAME of a version — [[Bucketing]] maps
-    * manifest-ref prefixes back to their origin versions with it. */
-  private[graft] def dataDirNameOf(
-      spark: SparkSession, root: String, v: Long): String =
-    dataDirName(spark, root, v)
-
-  /** Small-text read (commit markers, manifests); "" on any failure. */
-  private def readTextFile(
-      f: org.apache.hadoop.fs.FileSystem, p: Path): String =
-    try {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    } catch { case _: Exception => "" }
-
-  /** Resolve a PUBLISHED version number to its data directory NAME. The
-    * commit marker's content names the dir: the winner-takes-N publish
-    * can land a claim-named dir (e.g. `v00000008`) under a lower number
-    * (e.g. 7) when earlier claims were burned by aborted commits. Empty
-    * content — every pre-upgrade marker, and unreadable ones — falls
-    * back to the identity name `v<padded>`, so old tables read exactly
-    * as before. Markers are immutable once published, so resolutions
-    * memoize (uncached while the marker is absent: an unpublished
-    * number must not pin a wrong name). */
-  /** Put with a wholesale-clear bound (the folded-memo discipline,
-    * applied to every per-version metadata memo): entries key on
-    * (root, version[, marker identity]) and a long-lived streaming/MV
-    * driver mints a NEW version per micro-batch commit, so an unbounded
-    * memo grows per version forever — slow driver-heap leak over weeks
-    * of uptime. Entries are tiny (Longs, Maps, a StructType), so the
-    * cap is generous; a clear is one cheap metadata re-read per warm
-    * key, never a correctness event (all memoized content is immutable
-    * per marker identity). */
-  private val MemoCap = 8192
-  private def memoPut[K, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V], k: K, v: V): Unit = {
-    if (m.size >= MemoCap) m.clear()
-    m.put(k, v)
-    ()
-  }
-
-  private val dirNames =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  private def dataDirName(
-      spark: SparkSession, root: String, v: Long): String = {
-    val key = (root, v)
-    val got = dirNames.get(key)
-    if (got != null) got
-    else {
-      val f = fs(spark, root)
-      val marker = new Path(commitDir(root), pad(v))
-      if (!f.exists(marker)) f"v$v%08d"
-      else {
-        // FIRST line only: line 2, when present, is the in-commit
-        // timestamp ([[commitTimeOf]]). MIXED-VERSION CAVEAT: a build
-        // from before the second line parses the whole content as the
-        // dir name and cannot read commits this build writes — the same
-        // deployment class as the checkpoint's v2 header; upgrade
-        // readers before writers share a table.
-        val name = readTextFile(f, marker).linesIterator
-          .map(_.trim).find(_.nonEmpty).getOrElse(f"v$v%08d")
-        memoPut(dirNames, key, name)
-        name
-      }
-    }
-  }
-
   /** IN-COMMIT TIMESTAMP of version `v` (Delta's inCommitTimestamps):
     * the epoch-millis the WRITER recorded as the marker's second line at
     * publish, clamped monotone at write (`max(now, prev + 1)`) so
@@ -1081,32 +1049,9 @@ object VersionedTable {
     * before, so old tables keep answering as they always did. The
     * mtime road is what in-commit stamps exist to replace: a
     * copied/restored table (or an object store that rewrites mtimes)
-    * would otherwise re-date every commit to the copy time. Memoized on
-    * the marker's identity (content is immutable once published). */
-  private val commitTimes =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
-  def commitTimeOf(spark: SparkSession, root: String, v: Long): Long = {
-    val key = (root, v, markerIdentity(spark, root, v))
-    val got = commitTimes.get(key)
-    if (got != null) got.longValue()
-    else {
-      val f = fs(spark, root)
-      val marker = new Path(commitDir(root), pad(v))
-      val status = f.getFileStatus(marker)
-      val recorded = readTextFile(f, marker).linesIterator
-        .map(_.trim).filter(_.nonEmpty).drop(1).nextOption()
-        .flatMap(_.toLongOption)
-      val t = recorded.getOrElse(status.getModificationTime)
-      memoPut(commitTimes, key, java.lang.Long.valueOf(t))
-      t
-    }
-  }
-
-  /** The data directory of published version `v` — ALWAYS this, never
-    * [[versionDir]], on a read path (versionDir names a CLAIM's dir and
-    * the two diverge once any commit aborts). */
-  private def dataDir(spark: SparkSession, root: String, v: Long): Path =
-    new Path(root, dataDirName(spark, root, v))
+    * would otherwise re-date every commit to the copy time. */
+  def commitTimeOf(spark: SparkSession, root: String, v: Long): Long =
+    snapshotAt(spark, root, v).commitTime
 
   /** Per-root publish monitors: the in-JVM half of the concurrency story
     * (see the (3c) note in [[commitWith]]). Keyed by the CANONICAL root
@@ -1125,9 +1070,7 @@ object VersionedTable {
 
   /** Read the latest committed snapshot. */
   def read(spark: SparkSession, root: String): DataFrame =
-    readVersion(spark, root,
-      currentVersion(spark, root).getOrElse(
-        throw new java.io.IOException(s"no committed version under $root")))
+    versionFrame(spark, latestOrFail(spark, root), synth = true)
 
   // ---- delta-manifest commit form -----------------------------------------
 
@@ -1157,21 +1100,32 @@ object VersionedTable {
   private[graft] val DeltaFloorKey = "spark.graft.manifest.deltaFloor"
   private[graft] val DeltaFloorDefault = 64
 
-  private def deltaManifestFile(spark: SparkSession, root: String, v: Long) =
-    new Path(new Path(dataDir(spark, root, v), "_manifest"), "delta.txt")
+  private def deltaManifestFile(s: Snapshot) =
+    new Path(new Path(s.dir, "_manifest"), "delta.txt")
 
-  /** The delta record of version `v`, None for full-form versions.
-    * Line 1: `<base>\t<depth>`; then one ref per line, `-` = removed
-    * vs base, `+` = added (this commit's own files + rebased-in refs). */
+  /** Small text sidecar read by direct open; None when it is absent. */
+  private def readTextIfExists(
+      f: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] =
+    try {
+      val in = f.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
   private[graft] def manifestDeltaOf(
-      spark: SparkSession, root: String, v: Long): Option[ManifestDelta] = {
-    val f = fs(spark, root)
-    val df = deltaManifestFile(spark, root, v)
-    if (!f.exists(df)) None
-    else {
-      val in = f.open(df)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
+      spark: SparkSession, root: String, v: Long): Option[ManifestDelta] =
+    manifestDeltaOf(spark, snapshotAt(spark, root, v))
+
+  /** The delta record of version `s`, None for full-form versions.
+    * Line 1: `<base>\t<depth>`; then one ref per line, `-` = removed
+    * vs base, `+` = added (this commit's own files + rebased-in refs).
+    * Read per operation, never cached: vacuum's materialization turns a
+    * delta-form version into a full form in place and may then drop the
+    * base this record points at. */
+  private def manifestDeltaOf(
+      spark: SparkSession, s: Snapshot): Option[ManifestDelta] = {
+    val df = deltaManifestFile(s)
+    readTextIfExists(fs(spark, s.root), df).map { text =>
       val lines = text.split('\n').toSeq.filter(_.nonEmpty)
       // validate shape up front: a truncated/empty sidecar (crash
       // between create and write) must name ITSELF, not surface as a
@@ -1191,9 +1145,9 @@ object VersionedTable {
             s"corrupt delta-manifest sidecar $df — body line without " +
               s"'+'/'-' prefix: $bad")
         }
-      Some(ManifestDelta(head(0).toLong, head(1).toInt,
+      ManifestDelta(head(0).toLong, head(1).toInt,
         lines.tail.collect { case l if l.startsWith("-") => l.drop(1) }.toSet,
-        lines.tail.collect { case l if l.startsWith("+") => l.drop(1) }))
+        lines.tail.collect { case l if l.startsWith("+") => l.drop(1) })
     }
   }
 
@@ -1206,14 +1160,6 @@ object VersionedTable {
     finally out.close()
   }
 
-  /** Folded manifests are immutable once published — memoized per
-    * (root, version, marker identity) so the hot path (current-version
-    * reads under a streaming writer) folds once per version per JVM.
-    * Bounded: cleared wholesale past a cap (folds rebuild in ≤ interval
-    * small reads — a cheap miss, never a correctness event). */
-  private val foldedManifestMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Seq[String]]()
-
   /** A MANIFEST snapshot's data-file list (root-relative paths, possibly
     * reaching into EARLIER version dirs — the copy-on-write form), or
     * None for a plain directory snapshot. The manifest is a driver-sized
@@ -1222,101 +1168,61 @@ object VersionedTable {
     * nearest full form (≤ fold-interval small reads), then apply each
     * level's removes/adds forward — so every consumer of this accessor
     * (scans, vacuum, clones, history) is delta-blind. */
-  def manifestOf(spark: SparkSession, root: String, v: Long): Option[Seq[String]] = {
-    val f = fs(spark, root)
-    val mf = new Path(new Path(dataDir(spark, root, v), "_manifest"), "manifest.txt")
-    // ORDER MATTERS for crash safety: delta.txt is authoritative while
-    // both exist. Normal commits publish exactly one form; the only
-    // both-present state is a [[materializeManifest]] interrupted between
-    // writing manifest.txt and deleting delta.txt — there the chain is
-    // still intact (vacuum materializes BEFORE dropping bases), so the
-    // fold serves the exact content, while a half-written manifest.txt
-    // could silently serve a sliver. The write itself is also
-    // temp-then-rename, so this is defense in depth.
-    if (!f.exists(deltaManifestFile(spark, root, v)) && f.exists(mf)) {
-      // full form memoizes too (content is immutable per marker
-      // identity): warm reads skip the O(refs) file read, and the whole-
-      // kept commit fast path can recognize the CURRENT snapshot's ref
-      // list BY INSTANCE ([[commitCowInternal]]'s keptIsWhole)
-      val key = (root, v, markerIdentity(spark, root, v))
-      val got = foldedManifestMemo.get(key)
-      if (got != null) Some(got)
-      else {
-        val in = f.open(mf)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                   finally in.close()
-        val refs = text.split('\n').toSeq.filter(_.nonEmpty)
-        if (foldedManifestMemo.size >= 128) foldedManifestMemo.clear()
-        foldedManifestMemo.put(key, refs)
-        Some(refs)
-      }
-    } else manifestDeltaOf(spark, root, v).map { d0 =>
-      val key = (root, v, markerIdentity(spark, root, v))
-      val got = foldedManifestMemo.get(key)
-      if (got != null) got
-      else {
-        // walk back to the nearest full form OR memoized fold, then
-        // fold forward — memoizing EVERY level on the way, so a
-        // newest-first sweep (history, vacuum) pays the chain walk once
-        // rather than once per version
-        var chain = List((v, d0))
-        var baseRefs: Seq[String] = null
-        while (baseRefs == null) {
-          val b = chain.head._2.base
-          val memod = foldedManifestMemo.get(
-            (root, b, markerIdentity(spark, root, b)))
-          if (memod != null) baseRefs = memod
-          else manifestDeltaOf(spark, root, b) match {
-            case Some(d) => chain = (b, d) :: chain
-            case None => baseRefs = dataFileRefs(spark, root, b)
-          }
-        }
-        if (foldedManifestMemo.size + chain.size > 128)
-          foldedManifestMemo.clear()
-        chain.foldLeft(baseRefs) { case (refs, (lv, d)) =>
-          val folded = refs.filterNot(d.removed) ++ d.added
-          foldedManifestMemo.put(
-            (root, lv, markerIdentity(spark, root, lv)), folded)
-          folded
-        }
+  def manifestOf(spark: SparkSession, root: String, v: Long): Option[Seq[String]] =
+    manifestOf(spark, snapshotAt(spark, root, v))
+
+  /** [[manifestOf]] of a resolved snapshot, held in its `refs` slot: the
+    * folded list is the same before and after vacuum materializes the
+    * version, and the whole-kept commit fast path recognizes the CURRENT
+    * snapshot's ref list BY INSTANCE ([[commitCowInternal]]'s keptIsWhole). */
+  private def manifestOf(spark: SparkSession, s: Snapshot): Option[Seq[String]] =
+    s.memo("refs") {
+      // ORDER MATTERS for crash safety: delta.txt is authoritative while
+      // both exist. Normal commits publish exactly one form; the only
+      // both-present state is a [[materializeManifest]] interrupted between
+      // writing manifest.txt and deleting delta.txt — there the chain is
+      // still intact (vacuum materializes BEFORE dropping bases), so the
+      // fold serves the exact content, while a half-written manifest.txt
+      // could silently serve a sliver. The write itself is also
+      // temp-then-rename, so this is defense in depth.
+      manifestDeltaOf(spark, s) match {
+        case Some(d) =>
+          // the base folds (and fills its own slot) first, so a
+          // newest-first sweep (history, vacuum) pays the chain walk once
+          // rather than once per version
+          val base = snapshotAt(spark, s.root, d.base)
+          Some(dataFileRefs(spark, base).filterNot(d.removed) ++ d.added)
+        case None =>
+          readTextIfExists(fs(spark, s.root),
+              new Path(new Path(s.dir, "_manifest"), "manifest.txt"))
+            .map(_.split('\n').toSeq.filter(_.nonEmpty))
       }
     }
-  }
 
-  /** Folded stats are immutable once published — memoized like
-    * [[foldedManifestMemo]] (delta-form versions only; full forms stay
-    * one direct load as before), bounded by a wholesale clear. Without
-    * the memo a table at delta depth d pays O(d²) sidecar loads per
-    * scan (each level re-folds its base). */
-  private val foldedStatsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long),
-    Map[String, Map[String, (String, Option[String], Option[String], Long, Long)]]]()
-
-  /** Version `v`'s per-file column stats, delta-aware: full-form
+  /** Version `s`'s per-file column stats, delta-aware: full-form
     * versions read their own `_stats` table; delta-form versions fold
     * the base's stats under their own adds', restricted to the folded
     * ref set. A file the fold cannot cover stays ABSENT — every
     * consumer already treats a missing entry conservatively (pruning
-    * keeps the file, aggregates return None). */
+    * keeps the file, aggregates return None). Held in the snapshot's
+    * `stats` slot: without it a table at delta depth d pays O(d²)
+    * sidecar loads per scan (each level re-folds its base). */
   private[graft] def statsOf(
       spark: SparkSession, root: String, v: Long)
       : Map[String, Map[String, (String, Option[String], Option[String], Long, Long)]] =
-    manifestDeltaOf(spark, root, v) match {
-      case None =>
-        TableStats.load(spark, new Path(dataDir(spark, root, v), "_stats"))
-      case Some(d) =>
-        val key = (root, v, markerIdentity(spark, root, v))
-        val got = foldedStatsMemo.get(key)
-        if (got != null) got
-        else {
-          val own = TableStats.load(spark, new Path(dataDir(spark, root, v), "_stats"))
-          val refs = manifestOf(spark, root, v).getOrElse(Nil).toSet
-          val folded = (statsOf(spark, root, d.base) ++ own)
+    statsOf(spark, snapshotAt(spark, root, v))
+
+  private def statsOf(spark: SparkSession, s: Snapshot)
+      : Map[String, Map[String, (String, Option[String], Option[String], Long, Long)]] =
+    s.memo("stats") {
+      val own = TableStats.load(spark, new Path(s.dir, "_stats"))
+      manifestDeltaOf(spark, s) match {
+        case None => own
+        case Some(d) =>
+          val refs = manifestOf(spark, s).getOrElse(Nil).toSet
+          (statsOf(spark, snapshotAt(spark, s.root, d.base)) ++ own)
             .filter { case (k, _) => refs(k) }
-          if (foldedStatsMemo.size > 64) foldedStatsMemo.clear()
-          foldedStatsMemo.put(key, folded)
-          folded
-        }
+      }
     }
 
   /** Rewrite a DELTA-form version as its own FULL form — folded
@@ -1342,7 +1248,7 @@ object VersionedTable {
       f: org.apache.hadoop.fs.FileSystem, dir: Path): Unit = {
     val marker = new Path(new Path(new Path(dir, "_dvdelta"),
       DvBitmaps.DirName), DvBitmaps.DoneMarker)
-    if (f.exists(marker)) f.delete(marker, false)
+    f.delete(marker, false)
     f.delete(new Path(dir, "_dvdelta"), true)
   }
 
@@ -1354,7 +1260,7 @@ object VersionedTable {
   private def ensureSchemaPart(
       spark: SparkSession, f: org.apache.hadoop.fs.FileSystem, dir: Path,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    val hasPart = f.exists(dir) && f.listStatus(dir).exists { st =>
+    val hasPart = listOrEmpty(f, dir).exists { st =>
       val n = st.getPath.getName
       n.startsWith("part-") && n.endsWith(".parquet")
     }
@@ -1365,13 +1271,12 @@ object VersionedTable {
         .write.mode(SaveMode.Overwrite).parquet(dir.toString)
   }
 
-  private def materializeManifest(
-      spark: SparkSession, root: String, v: Long): Unit = {
-    val f = fs(spark, root)
-    val dir = dataDir(spark, root, v)
-    val refs = manifestOf(spark, root, v).getOrElse(return)
-    val stats = statsOf(spark, root, v)
-    val sizes = recordedSizes(spark, root, v)
+  private def materializeManifest(spark: SparkSession, s: Snapshot): Unit = {
+    val f = fs(spark, s.root)
+    val dir = s.dir
+    val refs = manifestOf(spark, s).getOrElse(return)
+    val stats = statsOf(spark, s)
+    val sizes = recordedSizes(spark, s)
     // DV chain first, while the manifest chain is still intact (the DV
     // fold walks the same base pointers): write the folded mask as this
     // version's own full `_dv`, temp-then-rename so a crash can never
@@ -1381,20 +1286,20 @@ object VersionedTable {
     // fold requires a mask-carrying base — dropping the sidecar here
     // would sever them (the chain invariant the commit path maintains
     // via its baseHasDv gate).
-    dvChainInfo(spark, root, v) match {
+    dvChainInfo(spark, s) match {
       // barrier == v implies levels.isEmpty (the walk exits on its
       // first iteration) — only genuinely chained versions materialize
-      case Some(chain) if chain.barrier != v =>
-        val folded = dvOf(spark, root, v).get
+      case Some(chain) if chain.barrier.version != s.version =>
+        val folded = dvOfChain(spark, chain)
         val tmp = new Path(dir, "_dvtmp")
-        if (f.exists(tmp)) f.delete(tmp, true)
+        f.delete(tmp, true)
         folded.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
         // an EMPTY fold can plan to zero partitions and leave a
         // schemaless dir — but the comment above requires a zero-row,
         // SCHEMA-CARRYING sidecar
         ensureSchemaPart(spark, f, tmp, folded.schema)
         val dvDir = new Path(dir, "_dv")
-        if (f.exists(dvDir)) f.delete(dvDir, true)
+        f.delete(dvDir, true)
         if (!f.rename(tmp, dvDir))
           throw new java.io.IOException(s"rename $tmp -> $dvDir failed")
         // re-derive the scan-integrated index above the floor, as the
@@ -1428,32 +1333,23 @@ object VersionedTable {
     try out.write(refs.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     val fin = new Path(mdir, "manifest.txt")
-    if (f.exists(fin)) f.delete(fin, false)
+    f.delete(fin, false)
     if (!f.rename(tmp, fin))
       throw new java.io.IOException(s"rename $tmp -> $fin failed")
-    f.delete(deltaManifestFile(spark, root, v), false)
+    f.delete(deltaManifestFile(s), false)
   }
 
-  /** Version `v`'s commit-recorded file sizes, delta-aware (the chain's
+  /** Version `s`'s commit-recorded file sizes, delta-aware (the chain's
     * union, later levels winning). Lookup-keyed by ref — entries for
     * since-removed files along the chain are harmless and bounded by
-    * the fold interval. */
-  /** Recorded (sidecar) sizes of version `v`'s data files for callers
-    * that must NOT fall back to a distributed stat (the SQL merge's
-    * join-persist gate): pure driver metadata reads; a ref without a
-    * recorded size is simply absent and the caller treats absence as
-    * "unknown — assume big". */
-  private[graft] def recordedFileSizes(
-      spark: SparkSession, root: String, v: Long): Map[String, Long] =
-    recordedSizes(spark, root, v)
-
-  private def recordedSizes(
-      spark: SparkSession, root: String, v: Long): Map[String, Long] =
-    manifestDeltaOf(spark, root, v) match {
-      case None => FileSizes.load(fs(spark, root), dataDir(spark, root, v))
-      case Some(d) =>
-        recordedSizes(spark, root, d.base) ++
-          FileSizes.load(fs(spark, root), dataDir(spark, root, v))
+    * the fold interval. A ref without a recorded size is simply absent. */
+  private def recordedSizes(spark: SparkSession, s: Snapshot): Map[String, Long] =
+    s.memo("sizes") {
+      val own = FileSizes.load(fs(spark, s.root), s.dir)
+      manifestDeltaOf(spark, s) match {
+        case None => own
+        case Some(d) => recordedSizes(spark, snapshotAt(spark, s.root, d.base)) ++ own
+      }
     }
 
   /** Version `v`'s data files as root-relative paths — the manifest when
@@ -1463,10 +1359,13 @@ object VersionedTable {
     * as `keptFiles`. */
   def dataFileRefs(
       spark: SparkSession, root: String, v: Long): Seq[String] =
-    manifestOf(spark, root, v).getOrElse {
-      dataFileRels(fs(spark, root), dataDir(spark, root, v))
-        .map { case (_, rel) => dataDirName(spark, root, v) + "/" + rel }
-    }
+    dataFileRefs(spark, snapshotAt(spark, root, v))
+
+  private[graft] def dataFileRefs(spark: SparkSession, s: Snapshot): Seq[String] =
+    manifestOf(spark, s).getOrElse(s.memo("dirRefs") {
+      dataFileRels(fs(spark, s.root), s.dir)
+        .map { case (_, rel) => s.dirName + "/" + rel }
+    })
 
   /** The schema RECORDED for version `v` at commit time, or None for
     * snapshots committed before schema tracking — callers fall back to
@@ -1474,41 +1373,24 @@ object VersionedTable {
     * a schema on its next commit). */
   def tableSchema(
       spark: SparkSession, root: String, v: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    // memoized on the marker identity like the sidecar properties —
-    // schema.json is immutable once the version publishes, every read
-    // road resolves it, and StructType is immutable so sharing is safe
-    val key = (root, v, markerIdentity(spark, root, v))
-    val got = schemaMemo.get(key)
-    if (got != null) got
-    else {
-      val read: Option[org.apache.spark.sql.types.StructType] = {
-        // grouped vintages carry the schema JSON in the one metadata
-        // object (already memoized); only pre-grouping versions pay the
-        // separate schema.json read
-        val text: Option[String] =
-          groupedMetaOf(spark, root, v).get(GroupedSchemaKey).orElse {
-            val f = fs(spark, root)
-            val p = new Path(new Path(dataDir(spark, root, v), "_schema"),
-              "schema.json")
-            // direct open (absent → the existing catch-all None): the
-            // exists() probe was a second round trip per schema read
-            try {
-              val in = f.open(p)
-              try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-              finally in.close()
-            } catch { case _: Exception => None }
-          }
-        try text.map(org.apache.spark.sql.types.DataType.fromJson(_)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        catch { case _: Exception => None }
-      }
-      memoPut(schemaMemo, key, read)
-      read
+      : Option[org.apache.spark.sql.types.StructType] =
+    tableSchema(spark, snapshotAt(spark, root, v))
+
+  private def tableSchema(
+      spark: SparkSession, s: Snapshot): Option[org.apache.spark.sql.types.StructType] =
+    s.memo("schema") {
+      // grouped vintages carry the schema JSON in the one metadata
+      // object; only pre-grouping versions pay the separate schema.json
+      // read (direct open — absent reads as None)
+      val text: Option[String] =
+        groupedMetaOf(spark, s).get(GroupedSchemaKey).orElse(
+          try readTextIfExists(fs(spark, s.root),
+            new Path(new Path(s.dir, "_schema"), "schema.json"))
+          catch { case _: Exception => None })
+      try text.map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      catch { case _: Exception => None }
     }
-  }
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Option[org.apache.spark.sql.types.StructType]]()
 
   // ---- protocol: table features (reader/writer gate) ----------------------
 
@@ -1540,67 +1422,42 @@ object VersionedTable {
         s"does not support: ${missing.toSeq.sorted.mkString(", ")} — " +
         "upgrade the library to read/write this table")
 
-  private def protocolPath(spark: SparkSession, root: String, v: Long): Path =
-    new Path(new Path(dataDir(spark, root, v), "_protocol"),
-      "features.properties")
-
   /** (readerFeatures, writerFeatures) RECORDED for version `v`; empty
     * sets for pre-upgrade versions (absent file) — old tables keep
     * reading exactly as before. */
   def protocolOf(
-      spark: SparkSession, root: String, v: Long): (Set[String], Set[String]) = {
-    val props = readVersionProps(spark, root, v, protocolPath(spark, root, v))
+      spark: SparkSession, root: String, v: Long): (Set[String], Set[String]) =
+    protocolOf(spark, snapshotAt(spark, root, v))
+
+  /** Read on every call: only a PASSED gate is held in the snapshot
+    * ([[assertReadable]]), so a refusal is re-probed — an operator fixing
+    * the record in place is seen at once. */
+  private def protocolOf(spark: SparkSession, s: Snapshot): (Set[String], Set[String]) = {
+    val props = readProps(spark,
+      new Path(new Path(s.dir, "_protocol"), "features.properties"))
     def split(k: String) = props.get(k)
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
     (split("reader"), split("writer"))
   }
 
-  /** Memo of versions proved readable/writable — the protocol record is
-    * immutable once published, so each (root, version) pays the probe
-    * once per JVM. Failures are NOT memoized (an operator fixing the
-    * table in place during tests must be re-probed). The key carries the
-    * COMMIT MARKER's modification time so that a table deleted and
-    * recreated at the same root (common in tests/dev) cannot ride a
-    * stale OK from the previous incarnation: the recreated version's
-    * marker is a new file with a new mtime, so it pays a fresh probe.
-    * Cost of the identity check: one `getFileStatus` per assert — still
-    * far below the properties-file read the memo avoids. */
-  private val protocolOk =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long, Long, String)]()
-
-  /** The commit marker's mtime — the version's IDENTITY for per-JVM
-    * memos (same root + same number + recreated table ⇒ different
-    * mtime). -1 when the marker is unreadable (never memo-matches). */
-  private[graft] def markerIdentity(
-      spark: SparkSession, root: String, v: Long): Long =
-    try fs(spark, root)
-      .getFileStatus(new Path(commitDir(root), pad(v))).getModificationTime
-    catch { case _: Exception => -1L }
-
-  private[sources] def assertReadable(
-      spark: SparkSession, root: String, v: Long): Unit = {
-    val key = (root, v, markerIdentity(spark, root, v), "r")
-    if (!protocolOk.contains(key)) {
-      val missing = protocolOf(spark, root, v)._1 -- SupportedReaderFeatures
-      if (missing.nonEmpty) throw ProtocolException(root, v, missing, "reader")
-      if (protocolOk.size >= MemoCap) protocolOk.clear()
-      protocolOk.add(key)
+  private def assertReadable(spark: SparkSession, s: Snapshot): Unit =
+    s.memo("readable") {
+      val missing = protocolOf(spark, s)._1 -- SupportedReaderFeatures
+      if (missing.nonEmpty)
+        throw ProtocolException(s.root, s.version, missing, "reader")
+      true
     }
-  }
 
-  private def assertWritable(
-      spark: SparkSession, root: String, v: Long): Unit = {
-    val key = (root, v, markerIdentity(spark, root, v), "w")
-    if (!protocolOk.contains(key)) {
-      val (r, w) = protocolOf(spark, root, v)
+  private def assertWritable(spark: SparkSession, s: Snapshot): Unit =
+    s.memo("writable") {
+      val (r, w) = protocolOf(spark, s)
       // a writer must also READ the current state to commit against it
       val missing = (r -- SupportedReaderFeatures) ++ (w -- SupportedWriterFeatures)
-      if (missing.nonEmpty) throw ProtocolException(root, v, missing, "writer")
-      if (protocolOk.size >= MemoCap) protocolOk.clear()
-      protocolOk.add(key)
+      if (missing.nonEmpty)
+        throw ProtocolException(s.root, s.version, missing, "writer")
+      true
     }
-  }
 
   // ---- column mapping (metadata-only rename/drop) -------------------------
 
@@ -1611,7 +1468,7 @@ object VersionedTable {
   // The five driver-sized per-version records — schema, column mapping,
   // CHECK constraints, table properties, commit info — land in ONE
   // `_meta/commit.properties` object per commit (one PUT instead of up
-  // to five; one GET warms every record's memo on read). Sections are
+  // to five; one GET fills every record's snapshot slot). Sections are
   // key-prefixed; a record's old "absent file" semantics become "no
   // keys with my prefix". The grouped form always carries the schema,
   // so an EMPTY grouped map ⇔ the file is absent ⇔ a pre-grouping
@@ -1627,59 +1484,70 @@ object VersionedTable {
   private val GroupedTxnPrefix = "t."
   private val GroupedExtraSchemaPrefix = "x."
 
-  /** The schema extra `name` was staged with at version `v` — recorded
+  /** The schema extra `name` was staged with at version `s` — recorded
     * in the grouped `_meta` object by [[commitWith]]. None for versions
     * written before the record existed, or when the extra was written
     * outside a commit. */
   private def extraSchemaOf(
-      spark: SparkSession, root: String, v: Long,
+      spark: SparkSession, s: Snapshot,
       name: String): Option[org.apache.spark.sql.types.StructType] =
-    groupedMetaOf(spark, root, v).get(GroupedExtraSchemaPrefix + name)
+    groupedMetaOf(spark, s).get(GroupedExtraSchemaPrefix + name)
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Transaction stamps recorded with version `v` — app_id → high-water
     * batch_id. Grouped vintages read them from the one _meta object
-    * (driver-side, memoized, NO Spark job); pre-grouping vintages fall
-    * back to the `txn` parquet extra. */
+    * (driver-side, NO Spark job); pre-grouping vintages fall back to the
+    * `txn` parquet extra. */
   def txnStampsOf(
-      spark: SparkSession, root: String, v: Long): Map[String, Long] = {
-    val g = groupedMetaOf(spark, root, v)
+      spark: SparkSession, root: String, v: Long): Map[String, Long] =
+    txnStampsOf(spark, snapshotAt(spark, root, v))
+
+  private def txnStampsOf(spark: SparkSession, s: Snapshot): Map[String, Long] = {
+    val g = groupedMetaOf(spark, s)
     if (g.nonEmpty)
-      groupedSection(g, GroupedTxnPrefix).map { case (k, s) => (k, s.toLong) }
-    else readExtra(spark, root, v, "txn") match {
+      groupedSection(g, GroupedTxnPrefix).map { case (k, t) => (k, t.toLong) }
+    else readExtra(spark, s, "txn") match {
       case Some(df) => df.collect()
         .map(r => (r.getAs[String]("app_id"), r.getAs[Long]("batch_id")))
         .groupBy(_._1).map { case (k, rs) => (k, rs.map(_._2).max) }
       case None => Map.empty
     }
   }
-  /** Cheap boolean face of [[txnStampsOf]]: "is version `v` stamped?"
+  /** Cheap boolean face of [[txnStampsOf]]: "is version `s` stamped?"
     * without materializing the stamps. Grouped vintages answer from the
-    * memoized _meta object; pre-grouping vintages answer with ONE
-    * `exists` stat on the `_txn` extra dir instead of a Spark parquet
-    * read — DESCRIBE HISTORY / vacuum over a long legacy log would
-    * otherwise pay O(versions) job launches for a yes/no. (Grouped
-    * commits never write a `_txn` parquet — extras drops "txn" before
-    * staging — so the two probes cannot disagree.) */
-  def hasTxnStamps(spark: SparkSession, root: String, v: Long): Boolean = {
-    val g = groupedMetaOf(spark, root, v)
+    * _meta object; pre-grouping vintages answer from the `_txn` extra's
+    * listing instead of a Spark parquet read — DESCRIBE HISTORY / vacuum
+    * over a long legacy log would otherwise pay O(versions) job launches
+    * for a yes/no. (Grouped commits never write a `_txn` parquet — extras
+    * drops "txn" before staging — so the two probes cannot disagree.) */
+  private def hasTxnStamps(spark: SparkSession, s: Snapshot): Boolean = {
+    val g = groupedMetaOf(spark, s)
     if (g.nonEmpty) g.keys.exists(_.startsWith(GroupedTxnPrefix))
-    else fs(spark, root).exists(new Path(dataDir(spark, root, v), "_txn"))
+    else sidecarOf(spark, s, "txn").isDefined
   }
   private def groupedMetaFile(versionDir: Path): Path =
     new Path(new Path(versionDir, "_meta"), "commit.properties")
-  private def groupedMetaOf(
-      spark: SparkSession, root: String, v: Long): Map[String, String] =
-    readVersionProps(spark, root, v,
-      groupedMetaFile(dataDir(spark, root, v)))
+  private def groupedMetaOf(spark: SparkSession, s: Snapshot): Map[String, String] =
+    s.memo("meta") { readProps(spark, groupedMetaFile(s.dir)) }
+  /** One per-file metadata sidecar of a pre-grouping vintage (`rel`
+    * under the version dir), held in the snapshot like the grouped object. */
+  private def legacyProps(spark: SparkSession, s: Snapshot, rel: String): Map[String, String] =
+    s.memo("props:" + rel) { readProps(spark, new Path(s.dir, rel)) }
+  /** The `prefix` section of the grouped object, or — for a pre-grouping
+    * vintage (empty grouped map) — the per-file sidecar `legacyRel`. */
+  private def metaSection(
+      spark: SparkSession, s: Snapshot, prefix: String,
+      legacyRel: String): Map[String, String] = {
+    val g = groupedMetaOf(spark, s)
+    if (g.nonEmpty) groupedSection(g, prefix) else legacyProps(spark, s, legacyRel)
+  }
   private def groupedSection(
       g: Map[String, String], prefix: String): Map[String, String] =
     g.collect { case (k, v) if k.startsWith(prefix) =>
       (k.substring(prefix.length), v) }
 
-  private def mappingPath(spark: SparkSession, root: String, v: Long): Path =
-    new Path(new Path(dataDir(spark, root, v), "_schema"), "mapping.properties")
+  private val MappingRel = "_schema/mapping.properties"
 
   /** LOGICAL→PHYSICAL column mapping recorded for version `v` (Delta
     * column mapping, name mode): physical names are birth names frozen
@@ -1688,25 +1556,19 @@ object VersionedTable {
     * size. Identity entries are omitted; an absent file means the
     * identity mapping (every table before its first rename). */
   def columnMapping(
-      spark: SparkSession, root: String, v: Long): Map[String, String] = {
-    val g = groupedMetaOf(spark, root, v)
-    (if (g.nonEmpty) groupedSection(g, GroupedMapPrefix)
-     else readVersionProps(spark, root, v, mappingPath(spark, root, v))) -
-      RetiredKey
-  }
+      spark: SparkSession, root: String, v: Long): Map[String, String] =
+    columnMapping(spark, snapshotAt(spark, root, v))
+
+  private def columnMapping(spark: SparkSession, s: Snapshot): Map[String, String] =
+    metaSection(spark, s, GroupedMapPrefix, MappingRel) - RetiredKey
 
   /** Physical names RETIRED by a DROP COLUMN (or freed by a rename and
     * then shadowed): a later evolveSchema add with the same logical name
     * must mint a FRESH physical name, or old files' stale values would
     * resurrect through by-name parquet resolution. */
-  private def retiredPhysicals(
-      spark: SparkSession, root: String, v: Long): Set[String] = {
-    val g = groupedMetaOf(spark, root, v)
-    (if (g.nonEmpty) g.get(GroupedMapPrefix + RetiredKey)
-     else readVersionProps(spark, root, v, mappingPath(spark, root, v))
-       .get(RetiredKey))
+  private def retiredPhysicals(spark: SparkSession, s: Snapshot): Set[String] =
+    metaSection(spark, s, GroupedMapPrefix, MappingRel).get(RetiredKey)
       .map(_.split(',').filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-  }
 
   private def physicalName(mapping: Map[String, String], c: String): String =
     mapping.getOrElse(c, c)
@@ -1731,29 +1593,28 @@ object VersionedTable {
       df: DataFrame, mapping: Map[String, String]): DataFrame =
     if (mapping.isEmpty) df else df.withColumnsRenamed(mapping)
 
-  /** Version `v`'s effective schema: recorded when available, else
+  /** Version `s`'s effective schema: recorded when available, else
     * inferred from the snapshot's parquet footers. */
   private def schemaOf(
-      spark: SparkSession, root: String, v: Long)
-      : org.apache.spark.sql.types.StructType =
-    tableSchema(spark, root, v).getOrElse(readVersion(spark, root, v).schema)
+      spark: SparkSession, s: Snapshot): org.apache.spark.sql.types.StructType =
+    tableSchema(spark, s).getOrElse(versionFrame(spark, s, synth = true).schema)
 
-  /** A parquet reader pinned to version `v`'s recorded schema when one
+  /** A parquet reader pinned to version `s`'s recorded schema when one
     * exists (by-name column resolution: a file missing an evolved-in
     * column yields nulls for it — exactly the Delta read-time backfill),
     * else plain inference. */
   private def versionReader(
-      spark: SparkSession, root: String, v: Long): org.apache.spark.sql.DataFrameReader =
+      spark: SparkSession, s: Snapshot): org.apache.spark.sql.DataFrameReader =
     // recursiveFileLookup: dir reads of a PARTITIONED snapshot must find
     // the `p__<col>=<val>/` leaves WITHOUT Hive partition inference (the
     // dir columns are write-layout duplicates; the data files carry every
     // real column) — and leaf-file reads never wanted inference anyway
-    tableSchema(spark, root, v) match {
-      case Some(s) =>
+    tableSchema(spark, s) match {
+      case Some(sch) =>
         // files carry PHYSICAL (birth) names; the logical rename is a
         // Project applied after the scan (toLogical at each read site)
         spark.read.option("recursiveFileLookup", "true")
-          .schema(physicalSchema(s, columnMapping(spark, root, v)))
+          .schema(physicalSchema(sch, columnMapping(spark, s)))
       case None => spark.read.option("recursiveFileLookup", "true")
     }
 
@@ -1780,27 +1641,34 @@ object VersionedTable {
     * chain, one fold interval, one vacuum materialization), so the
     * no-replay bound and the crash-recovery story are shared. Derived
     * by existence probes + one delta-record read per level — O(depth),
-    * never memoized: vacuum's materialization changes a version's form
-    * in place, and a stale cached chain would fold into a dropped base. */
+    * walked per operation and never held in a [[Snapshot]]: vacuum's
+    * materialization changes a version's form in place, and a stale
+    * cached chain would fold into a dropped base. */
   private[graft] final case class DvChain(
-      barrier: Long, levels: Seq[Long], removedTails: Set[String])
+      barrier: Snapshot, levels: Seq[Snapshot], removedTails: Set[String])
 
-  private[graft] def dvChainInfo(
-      spark: SparkSession, root: String, v: Long): Option[DvChain] = {
-    val f = fs(spark, root)
-    var levels = List.empty[Long] // prepending while walking newest→oldest
+  private def dvChainInfo(spark: SparkSession, s: Snapshot): Option[DvChain] = {
+    var walked: Option[DvChain] = null
+    val masked = s.memo("masked") { walked = dvChainWalk(spark, s); walked.isDefined }
+    if (!masked) None
+    else if (walked != null) walked
+    else dvChainWalk(spark, s)
+  }
+
+  private def dvChainWalk(spark: SparkSession, s: Snapshot): Option[DvChain] = {
+    val f = fs(spark, s.root)
+    var levels = List.empty[Snapshot] // prepending while walking newest→oldest
     var removed = Set.empty[String]
-    var cur = v
+    var cur = s
     while (true) {
-      val dir = dataDir(spark, root, cur)
-      if (f.exists(new Path(dir, "_dv")))
+      if (f.exists(new Path(cur.dir, "_dv")))
         return Some(DvChain(cur, levels, removed))
-      val own = f.exists(new Path(dir, "_dvdelta"))
-      manifestDeltaOf(spark, root, cur) match {
+      val own = f.exists(new Path(cur.dir, "_dvdelta"))
+      manifestDeltaOf(spark, cur) match {
         case Some(d) =>
           if (own) levels = cur :: levels
           removed = removed ++ d.removed.map(refTail)
-          cur = d.base
+          cur = snapshotAt(spark, s.root, d.base)
         case None =>
           // invariant: every chain bottoms out in a full `_dv` (the
           // FIRST mask on a table is written full-form even under the
@@ -1812,8 +1680,8 @@ object VersionedTable {
           // HANGING on a maskless bottom is real corruption and fails
           // loudly.
           if (levels.nonEmpty) throw new java.io.IOException(
-            s"dv chain of $root v$v reaches v$cur which carries no " +
-              "mask — the sidecar chain is corrupt")
+            s"dv chain of ${s.root} v${s.version} reaches v${cur.version} " +
+              "which carries no mask — the sidecar chain is corrupt")
           return None
       }
     }
@@ -1825,15 +1693,19 @@ object VersionedTable {
     * MERGE-ON-READ) or folded along the delta chain. Defined AS the
     * chain resolution ([[dvChainInfo]]) so the answer can never
     * disagree with what [[dvOf]] serves — e.g. an orphan `_dvdelta`
-    * leftover counts as mask-free on both. Metadata-scale: existence
-    * probes + one delta-record read per level, bounded by the fold
-    * interval. */
+    * leftover counts as mask-free on both. */
   def hasDeletionVectors(spark: SparkSession, root: String, v: Long): Boolean =
-    dvChainInfo(spark, root, v).isDefined
+    hasDeletionVectors(spark, snapshotAt(spark, root, v))
+
+  /** Whether a version carries a mask at all stays the same for one
+    * marker identity (materialization keeps it), so it is held in the
+    * snapshot; the chain itself ([[dvChainInfo]]) is walked per call. */
+  private[graft] def hasDeletionVectors(spark: SparkSession, s: Snapshot): Boolean =
+    s.memo("masked") { dvChainWalk(spark, s).isDefined }
 
   /** Version `v`'s COMPLETE deletion-vector mask as a (file, pos) frame,
     * delta-aware: barrier-only versions read their own `_dv`; chained
-    * versions fold as ONE multi-path scan over the chain's sidecar dirs
+    * versions fold as ONE multi-path scan over the chain's sidecar files
     * plus one filter on the union of removed tails — the plan stays
     * O(1) in chain depth (a per-level union would grow it by a scan
     * node per commit, and the growth is a per-COMMIT cost on masked
@@ -1848,24 +1720,26 @@ object VersionedTable {
     * no distinct: consumers get set semantics for free. None when the
     * version carries no mask at all. */
   def dvOf(spark: SparkSession, root: String, v: Long): Option[DataFrame] =
-    dvChainInfo(spark, root, v).map(dvOfChain(spark, root, v, _))
+    dvOf(spark, snapshotAt(spark, root, v))
+
+  private def dvOf(spark: SparkSession, s: Snapshot): Option[DataFrame] =
+    dvChainInfo(spark, s).map(dvOfChain(spark, _))
 
   /** [[dvOf]] against an ALREADY-RESOLVED chain — the masked-read path
-    * resolves [[dvChainInfo]] once and threads it here, to [[dvBytesOf]]
-    * and to the bitmap-dir lookup, instead of paying the O(depth)
-    * existence-probe + delta-record walk three or four times per read
-    * (on an object store each walk is driver-latency RPCs, and a masked
-    * read sits on the per-commit hot path of every MOR writer). */
-  private def dvOfChain(
-      spark: SparkSession, root: String, v: Long, chain: DvChain): DataFrame = {
+    * resolves [[dvChainInfo]] once and threads it here, to
+    * [[dvBytesOfChain]] and to the bitmap-dir lookup, instead of paying
+    * the O(depth) existence-probe + delta-record walk three or four times
+    * per read (on an object store each walk is driver-latency RPCs, and a
+    * masked read sits on the per-commit hot path of every MOR writer).
+    * Reads the levels' part files from their sidecar listings, never the
+    * `_`-prefixed dirs themselves, which Spark would report as ignored. */
+  private def dvOfChain(spark: SparkSession, chain: DvChain): DataFrame = {
     import org.apache.spark.sql.functions.{col, not}
-    val dirs =
-      new Path(dataDir(spark, root, chain.barrier), "_dv").toString +:
-        chain.levels.map(l =>
-          new Path(dataDir(spark, root, l), "_dvdelta").toString)
+    val files = (sidecarOf(spark, chain.barrier, "dv") +:
+      chain.levels.map(sidecarOf(spark, _, "dvdelta"))).flatMap(_.toSeq.flatMap(_.files))
     // every mask writer lands exactly (file, pos): reading under that
     // fixed schema skips Spark's footer-inference job on every masked read
-    val df = spark.read.schema(DvSchema).parquet(dirs: _*)
+    val df = spark.read.schema(DvSchema).parquet(files: _*)
     if (chain.removedTails.isEmpty) df
     else df.where(not(col("file").isInCollection(chain.removedTails)))
   }
@@ -1884,40 +1758,40 @@ object VersionedTable {
     * counted anyway — a conservative OVER-estimate that can only push a
     * borderline mask off the broadcast road, never a too-large one onto
     * it. */
-  private[graft] def dvBytesOf(
-      spark: SparkSession, root: String, v: Long): Long =
-    dvChainInfo(spark, root, v) match {
-      case None => 0L
-      case Some(chain) => dvBytesOfChain(spark, root, chain)
-    }
+  private def dvBytesOf(spark: SparkSession, s: Snapshot): Long =
+    dvChainInfo(spark, s).map(dvBytesOfChain(spark, _)).getOrElse(0L)
 
-  private def dvBytesOfChain(
-      spark: SparkSession, root: String, chain: DvChain): Long =
-    extraBytes(spark, root, chain.barrier, "dv") +
-      chain.levels.map(l => extraBytes(spark, root, l, "dvdelta")).sum
+  private def dvBytesOfChain(spark: SparkSession, chain: DvChain): Long =
+    extraBytes(spark, chain.barrier, "dv") +
+      chain.levels.map(extraBytes(spark, _, "dvdelta")).sum
 
   /** The bitmap dirs a chain-aware scan-integrated probe must consult
-    * for version `v` — the barrier's `_dv/_bitmaps` plus every
-    * own-deletions level's `_dvdelta/_bitmaps`, base-first. None when
-    * ANY contributing level lacks a complete derived index (`_DONE`):
-    * a partial probe would resurrect that level's deletions, so the
-    * read falls back to the distributed-join road — correct at any
-    * size, and bounded in time by the fold interval. */
+    * — the barrier's `_dv/_bitmaps` plus every own-deletions level's
+    * `_dvdelta/_bitmaps`, base-first. None when ANY contributing level
+    * lacks a complete derived index (`_DONE`): a partial probe would
+    * resurrect that level's deletions, so the read falls back to the
+    * distributed-join road — correct at any size, and bounded in time by
+    * the fold interval. */
   private def dvChainBitmapDirs(
-      spark: SparkSession, root: String, chain: DvChain): Option[Seq[String]] = {
-    val all = dvBitmapsDir(spark, root, chain.barrier, "_dv") +:
-      chain.levels.map(l => dvBitmapsDir(spark, root, l, "_dvdelta"))
+      spark: SparkSession, chain: DvChain): Option[Seq[String]] = {
+    val all = dvBitmapsDir(spark, chain.barrier, "_dv") +:
+      chain.levels.map(dvBitmapsDir(spark, _, "_dvdelta"))
     if (all.forall(_.isDefined)) Some(all.flatten) else None
   }
 
-  /** Whether version `v` carries a change feed ("changes" extra) — O(1)
-    * existence probe, the per-version building block of
-    * [[earliestFeedStart]] and the streaming source's memoized scan. */
+  /** Whether version `v` carries a change feed ("changes" extra) — the
+    * per-version building block of [[earliestFeedStart]] and the
+    * streaming source's memoized scan. */
   def hasChangeFeed(spark: SparkSession, root: String, v: Long): Boolean =
-    fs(spark, root).exists(new Path(dataDir(spark, root, v), "_changes")) ||
-      // virtual feeds ([[syntheticChanges]]) — recorded in commit info,
-      // no sidecar dir exists
-      commitInfoOf(spark, root, v).contains(ChangesFormKey)
+    hasChangeFeed(spark, snapshotAt(spark, root, v))
+
+  private[graft] def hasChangeFeed(spark: SparkSession, s: Snapshot): Boolean =
+    s.memo("feed") {
+      // virtual feeds ([[syntheticChanges]]) are recorded in commit info
+      // and have no sidecar dir
+      commitInfoOf(spark, s).contains(ChangesFormKey) ||
+        sidecarOf(spark, s, "changes").isDefined
+    }
 
   /** Ref of the file each row was read from — the join key between
     * scanned rows and the deletion-vector/manifest file naming. Files in
@@ -1999,13 +1873,12 @@ object VersionedTable {
     * cast through the recorded column type; convert validated every
     * original dir value against it, so the ANSI cast cannot throw on
     * referenced files. On any other table this is the identity. */
-  private def synthHiveParts(
-      spark: SparkSession, root: String, v: Long, df: DataFrame): DataFrame = {
-    if (!propertiesOf(spark, root, v).get(HivePartitionedProp).contains("true")) df
+  private def synthHiveParts(spark: SparkSession, s: Snapshot, df: DataFrame): DataFrame = {
+    if (!propertiesOf(spark, s).get(HivePartitionedProp).contains("true")) df
     else {
-      val spec = partitionColumnsOf(spark, root, v)
-      val mapping = columnMapping(spark, root, v)
-      val types = tableSchema(spark, root, v)
+      val spec = partitionColumnsOf(spark, s)
+      val mapping = columnMapping(spark, s)
+      val types = tableSchema(spark, s)
         .map(_.map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
       import org.apache.spark.sql.functions._
       spec.foldLeft(df) { (d, c) =>
@@ -2029,7 +1902,10 @@ object VersionedTable {
     * Nil for unpartitioned tables. */
   def partitionColumnsOf(
       spark: SparkSession, root: String, v: Long): Seq[String] =
-    propertiesOf(spark, root, v).get(PartitionByProp)
+    partitionColumnsOf(spark, snapshotAt(spark, root, v))
+
+  private def partitionColumnsOf(spark: SparkSession, s: Snapshot): Seq[String] =
+    propertiesOf(spark, s).get(PartitionByProp)
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
 
   /** Inverse of the writer's Hive path-name escaping. Delegates to the
@@ -2211,11 +2087,11 @@ object VersionedTable {
     * alone; None = not answerable by metadata (row-level path takes
     * over). Empty Seq = provably nothing matches. */
   private def partitionDropPlan(
-      spark: SparkSession, root: String, cur: Long,
+      spark: SparkSession, root: String, cur: Snapshot,
       predicate: Column): Option[Seq[String]] = {
-    if (partitionColumnsOf(spark, root, cur).isEmpty) return None
-    val types = schemaOf(spark, root, cur).map(f => f.name -> f.dataType).toMap
-    val optimized = versionFrame(spark, root, cur, synth = false)
+    if (partitionColumnsOf(spark, cur).isEmpty) return None
+    val types = schemaOf(spark, cur).map(f => f.name -> f.dataType).toMap
+    val optimized = versionFrame(spark, cur, synth = false)
       .where(predicate).queryExecution.optimizedPlan
     val conjs0 = optimized.collect {
       case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
@@ -2239,7 +2115,7 @@ object VersionedTable {
     // provably equivalent, so whichever decides for a file is the truth;
     // substituting unconditionally used to demote the latter layouts to
     // a COW rewrite (original conjunct discarded → undecidable).
-    val gens = zoneSafeGens(spark, propertiesOf(spark, root, cur), types)
+    val gens = zoneSafeGens(spark, propertiesOf(spark, cur), types)
     val conjCands: Seq[Seq[org.apache.spark.sql.catalyst.expressions.Expression]] =
       if (gens.isEmpty) conjs0.map(Seq(_))
       else {
@@ -2251,9 +2127,9 @@ object VersionedTable {
           }
         }
       }
-    val reverse = columnMapping(spark, root, cur).map(_.swap)
-    val bareCols = partitionColumnsOf(spark, root, cur).toSet
-    val refs = dataFileRefs(spark, root, cur)
+    val reverse = columnMapping(spark, cur).map(_.swap)
+    val bareCols = partitionColumnsOf(spark, cur).toSet
+    val refs = dataFileRefs(spark, cur)
     val decisions = refs.map { r =>
       val tuple: Map[String, Option[(String, Any)]] =
         partRawValues(r, reverse, bareCols).flatMap { case (c, raw) =>
@@ -2278,17 +2154,17 @@ object VersionedTable {
     * requested, reads the dropped files once (feed bytes, not data
     * bytes). */
   private def commitPartitionDrop(
-      spark: SparkSession, root: String, cur: Long,
+      spark: SparkSession, root: String, cur: Snapshot,
       dropRefs: Seq[String], changeFeed: Boolean,
       preCommit: Long => Unit = _ => ()): Long = {
-    val schema = schemaOf(spark, root, cur)
+    val schema = schemaOf(spark, cur)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val kept = dataFileRefs(spark, root, cur).filterNot(dropRefs.toSet)
+    val kept = dataFileRefs(spark, cur).filterNot(dropRefs.toSet)
     val extras =
       if (!changeFeed) Map.empty[String, DataFrame]
       else Map("changes" ->
-        readFilesOf(spark, root, cur, dropRefs).withColumn("_change_type",
+        readFilesOf(spark, cur, dropRefs).withColumn("_change_type",
           org.apache.spark.sql.functions.lit("delete")))
     // caller's in-claim gate (txn idempotence, validation) runs on this
     // road too — the COW and MOR roads of the same deleteWhere honor it
@@ -2296,7 +2172,7 @@ object VersionedTable {
       preCommit = v => { preCommit(v); occValidate(spark, root, cur)(v) },
       recordSchema = Some(schema),
       recordInfo = Map("operation" -> "delete", "partitionDrop" -> "true") ++
-        Bucketing.carryStamp(spark, root, cur))
+        Bucketing.carryStamp(spark, cur))
   }
 
   /** PARTITION-SPEC EVOLUTION: re-lay the table out under a NEW
@@ -2313,11 +2189,11 @@ object VersionedTable {
       spark: SparkSession, root: String, newSpec: Seq[String],
       bloomCols: Seq[String] = Nil): Long =
     occRetry(spark, root) { cur =>
-      val df = readVersion(spark, root, cur)
+      val df = readVersion(spark, cur)
       val missing = newSpec.filterNot(df.columns.contains)
       require(missing.isEmpty,
         s"partition column(s) not in $root: ${missing.mkString(", ")}")
-      val props0 = propertiesOf(spark, root, cur)
+      val props0 = propertiesOf(spark, cur)
       val props = if (newSpec.isEmpty) props0 - PartitionByProp
                   else props0.updated(PartitionByProp, newSpec.mkString(","))
       commitWith(df, root, collectStats = true,
@@ -2344,27 +2220,27 @@ object VersionedTable {
       spark: SparkSession, root: String, newData: DataFrame,
       changeFeed: Boolean = true): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v0 = currentVersion(spark, root).getOrElse(throw new java.io.IOException(
+    val s0 = latest(spark, root).getOrElse(throw new java.io.IOException(
       s"dynamic partition overwrite needs an existing snapshot under $root"))
-    require(partitionColumnsOf(spark, root, v0).nonEmpty,
+    require(partitionColumnsOf(spark, s0).nonEmpty,
       s"$root has no partition spec ($PartitionByProp) — " +
         "dynamic partition overwrite is only defined on partitioned tables")
     // generated partition columns populate BEFORE the touched-tuple
     // collect below reads them (a raw hourly reload naming only `ts` is
     // the intended shape); zone pinned as on every population site
-    val props0 = propertiesOf(spark, root, v0)
+    val props0 = propertiesOf(spark, s0)
     val newData0 = GeneratedCols.populate(newData,
       GeneratedCols.of(props0),
       bornZone = props0.get(GeneratedCols.ZoneProp),
       sessionZone = spark.sessionState.conf.sessionLocalTimeZone)
     occRetry(spark, root) { cur =>
-      val spec = partitionColumnsOf(spark, root, cur)
+      val spec = partitionColumnsOf(spark, cur)
       val touched: Set[Seq[Option[(String, Any)]]] =
         newData0.select(spec.map(col): _*).distinct().collect()
           .map(r => spec.indices.map(i => canonRuntimeValue(r.get(i)))).toSet
-      val reverse = columnMapping(spark, root, cur).map(_.swap)
-      val types = schemaOf(spark, root, cur).map(f => f.name -> f.dataType).toMap
-      val refs = dataFileRefs(spark, root, cur)
+      val reverse = columnMapping(spark, cur).map(_.swap)
+      val types = schemaOf(spark, cur).map(f => f.name -> f.dataType).toMap
+      val refs = dataFileRefs(spark, cur)
       val tuples: Seq[(String, Option[Seq[Option[(String, Any)]]])] = refs.map { r =>
         val raw = partRawValues(r, reverse, spec.toSet)
         val t = spec.map { c =>
@@ -2392,7 +2268,7 @@ object VersionedTable {
           val inserts = newData0.withColumn("_change_type", lit("insert"))
           val feed =
             if (dropped.isEmpty) inserts
-            else readFilesOf(spark, root, cur, dropped)
+            else readFilesOf(spark, cur, dropped)
               .withColumn("_change_type", lit("delete")).unionByName(inserts)
           Map("changes" -> feed)
         }
@@ -2423,56 +2299,54 @@ object VersionedTable {
   private[graft] val DvBitmapFloorKey = "spark.graft.dv.bitmapFloorBytes"
   private val DvBitmapFloorDefault: Long = 1L << 20
 
-  /** On-disk bytes of version `v`'s `_name` sidecar (0 when absent) — an
-    * O(#sidecar-files) listing, no Spark job. The size gate for
-    * [[dvMaskSide]]. MEMOIZED per (root, version, name) — a version's
-    * sidecar is immutable once published, but every masked-read plan
-    * build consults this, and a DV-heavy workload would otherwise
-    * re-list the sidecar dir at each one. Keyed on the commit marker's
-    * mtime like the protocol-gate memo, so a recreated table at the
-    * same root pays a fresh listing instead of riding a stale size. */
-  private val extraBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String, Long), java.lang.Long]()
+  /** A version's `_name` sidecar as one listing found it: its data
+    * files (what a read of the sidecar passes Spark — never the
+    * `_`-prefixed dir itself, which Spark reports as ignored) and the
+    * bytes of its direct files. */
+  private final case class Sidecar(files: Seq[String], bytes: Long)
 
-  /** Count of REAL sidecar listings performed (memo misses) — a test
-    * probe for the memoization contract, not an operational metric. */
-  private[graft] val extraBytesListings =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Version `s`'s `_name` sidecar, None when absent — one O(#files)
+    * listing, no Spark job, held in the snapshot: a landed sidecar never
+    * changes, and every masked-read plan consults the mask's. An ABSENT
+    * sidecar is re-listed each time (vacuum's materialization lands a
+    * full `_dv` in a version that had none). */
+  private def sidecarOf(spark: SparkSession, s: Snapshot, name: String): Option[Sidecar] =
+    Option(s.memo("sidecar:" + name) {
+      val p = new Path(s.dir, s"_$name")
+      val children =
+        try fs(spark, s.root).listStatus(p)
+        catch { case _: java.io.FileNotFoundException => null }
+      if (children == null) null
+      else {
+        // FLAT-LAYOUT GUARD: sidecar parquet is written flat (no extra
+        // table writes with partitionBy), and derived subdirs (the
+        // `_dv/_bitmaps` index) must not inflate the size the broadcast
+        // gate / DESCRIBE DETAIL / dvFraction measure. A partitioned
+        // sidecar would measure 0 here and, for a DV mask, sneak a huge
+        // vector through the broadcast gate — so an unexpected subdir
+        // fails loudly.
+        val unexpected = children.iterator.filter(_.isDirectory)
+          .map(_.getPath.getName).filterNot(_ == DvBitmaps.DirName).toSeq
+        require(unexpected.isEmpty,
+          s"sidecar _$name under $p is not flat (subdirs: " +
+            s"${unexpected.mkString(",")}); its size would be undercounted")
+        val files = children.filter(_.isFile)
+        Sidecar(
+          files.map(_.getPath).filterNot { f =>
+            f.getName.startsWith("_") || f.getName.startsWith(".")
+          }.map(_.toString).toSeq,
+          files.map(_.getLen).sum)
+      }
+    })
 
+  /** On-disk bytes of version `v`'s `_name` sidecar (0 when absent) —
+    * the size gate for [[dvMaskSide]]. */
   private[graft] def extraBytes(
-      spark: SparkSession, root: String, v: Long, name: String): Long = {
-    val key = (root, v, name, markerIdentity(spark, root, v))
-    val got = extraBytesMemo.get(key)
-    if (got != null) got.longValue()
-    else {
-      extraBytesListings.incrementAndGet()
-      val p = new Path(dataDir(spark, root, v), s"_$name")
-      val f = fs(spark, root)
-      // DIRECT file children only: sidecar parquet is written flat, and
-      // derived subdirs (the `_dv/_bitmaps` index) must not inflate the
-      // size the broadcast gate / DESCRIBE DETAIL / dvFraction measure —
-      // a bitmap-carrying sidecar would otherwise read ~2x its mask
-      val bytes =
-        if (!f.exists(p)) 0L
-        else {
-          val children = f.listStatus(p)
-          // FLAT-LAYOUT GUARD: the direct-children sum is correct only
-          // while sidecar parquet is written flat (it is — no extra table
-          // writes with partitionBy). A future partitioned sidecar would
-          // measure 0 here and, for a DV mask, sneak a huge vector through
-          // the broadcast gate — so an unexpected subdir fails loudly. The
-          // derived `_bitmaps` index is the one known (and intended) subdir.
-          val unexpected = children.iterator.filter(_.isDirectory)
-            .map(_.getPath.getName).filterNot(_ == DvBitmaps.DirName).toSeq
-          require(unexpected.isEmpty,
-            s"sidecar _$name under $p is not flat (subdirs: " +
-              s"${unexpected.mkString(",")}); extraBytes would undercount it")
-          children.iterator.filter(_.isFile).map(_.getLen).sum
-        }
-      memoPut(extraBytesMemo, key, java.lang.Long.valueOf(bytes))
-      bytes
-    }
-  }
+      spark: SparkSession, root: String, v: Long, name: String): Long =
+    extraBytes(spark, snapshotAt(spark, root, v), name)
+
+  private def extraBytes(spark: SparkSession, s: Snapshot, name: String): Long =
+    sidecarOf(spark, s, name).map(_.bytes).getOrElse(0L)
 
   /** The deletion-vector mask as an anti-join build side, SIZE-GATED:
     * below [[DvBroadcastThresholdKey]] the mask is broadcast (one tiny
@@ -2494,34 +2368,22 @@ object VersionedTable {
     if (dvBytes <= threshold) broadcast(mask) else mask.hint("merge")
   }
 
-  /** Version `v`'s per-file bitmap dir URI under sidecar `name`
+  /** Version `s`'s per-file bitmap dir URI under sidecar `name`
     * (`_dv` for full-form masks, `_dvdelta` for chain levels), when it
     * carries a COMPLETE derived index ([[DvBitmaps]] `_DONE` marker
-    * present). Memoized beside [[extraBytes]] — same immutability
-    * argument, same marker-mtime identity (a vacuum materialization can
-    * leave a stale None for its version, which only costs the join-road
-    * fallback until the JVM re-probes). None for pre-bitmap versions,
-    * which keep the join road. */
-  private val dvBitmapsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, String), Option[String]]()
+    * present). Held in the snapshot beside its sidecar listing (a vacuum
+    * materialization can leave a stale None for its version, which only
+    * costs the join-road fallback until the snapshot is evicted). None
+    * for pre-bitmap versions, which keep the join road. */
   private def dvBitmapsDir(
-      spark: SparkSession, root: String, v: Long,
-      sidecar: String): Option[String] = {
-    val key = (root, v, markerIdentity(spark, root, v), sidecar)
-    val got = dvBitmapsMemo.get(key)
-    if (got != null) got
-    else {
-      val dir = new Path(new Path(dataDir(spark, root, v), sidecar),
-        DvBitmaps.DirName)
-      val f = fs(spark, root)
-      val res =
-        if (f.exists(new Path(dir, DvBitmaps.DoneMarker)))
-          Some(f.makeQualified(dir).toString)
-        else None
-      memoPut(dvBitmapsMemo, key, res)
-      res
+      spark: SparkSession, s: Snapshot, sidecar: String): Option[String] =
+    s.memo("bitmaps:" + sidecar) {
+      val dir = new Path(new Path(s.dir, sidecar), DvBitmaps.DirName)
+      val f = fs(spark, s.root)
+      if (f.exists(new Path(dir, DvBitmaps.DoneMarker)))
+        Some(f.makeQualified(dir).toString)
+      else None
     }
-  }
 
   /** Fold the deletion-vector mask out of `tagged` (a frame already
     * carrying `__dv_file`/`__dv_pos`), picking the road by mask size:
@@ -2541,19 +2403,18 @@ object VersionedTable {
     * between a large MOR delete and compaction pays per-task bitmap
     * probes instead of a full data-side exchange. */
   private def foldMask(
-      spark: SparkSession, root: String, v: Long,
-      tagged: DataFrame, dv: DataFrame, chain: DvChain): DataFrame = {
-    import org.apache.spark.sql.functions.{col, not}
-    val dvBytes = dvBytesOfChain(spark, root, chain)
+      spark: SparkSession, tagged: DataFrame, chain: DvChain): DataFrame = {
+    import org.apache.spark.sql.functions.not
+    val dvBytes = dvBytesOfChain(spark, chain)
     val threshold = spark.conf
       .get(DvBroadcastThresholdKey, DvBroadcastThresholdDefault.toString).toLong
-    lazy val joined = tagged.join(dvMaskSide(spark, dv, dvBytes),
+    lazy val joined = tagged.join(dvMaskSide(spark, dvOfChain(spark, chain), dvBytes),
       Seq("__dv_file", "__dv_pos"), "left_anti")
     if (dvBytes <= threshold) joined
-    else dvChainBitmapDirs(spark, root, chain) match {
+    else dvChainBitmapDirs(spark, chain) match {
       case Some(dirs) if dirs.nonEmpty =>
         tagged.where(not(org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.plans.DvMasked.forVersion(spark, root, v, dirs,
+          graft.plans.DvMasked.forVersion(spark, chain.barrier.identity, dirs,
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq("__dv_file")),
             org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(Seq("__dv_pos"))))))
       case _ => joined
@@ -2566,16 +2427,19 @@ object VersionedTable {
     * identity Delta's deletion vectors address). Road selection is
     * [[foldMask]]'s; [[compact]]/[[optimize]] fold the mask away
     * entirely either way. */
-  private def applyDv(
-      spark: SparkSession, root: String, v: Long,
-      df: DataFrame, chain: DvChain): DataFrame = {
+  private def applyDv(spark: SparkSession, df: DataFrame, chain: DvChain): DataFrame = {
     import org.apache.spark.sql.functions.col
     val cols = df.columns.toSeq
     val tagged = df.withColumn("__dv_file", fileRefCol)
       .withColumn("__dv_pos", col("_metadata.row_index"))
-    foldMask(spark, root, v, tagged, dvOfChain(spark, root, v, chain), chain)
-      .select(cols.map(col): _*)
+    foldMask(spark, tagged, chain).select(cols.map(col): _*)
   }
+
+  /** `df` (a scan of version `s`'s files) with the version's mask folded
+    * out and renamed to its logical schema — the tail of every read. */
+  private def maskedLogical(spark: SparkSession, s: Snapshot, df: DataFrame): DataFrame =
+    toLogical(dvChainInfo(spark, s).map(applyDv(spark, df, _)).getOrElse(df),
+      columnMapping(spark, s))
 
   /** TIMESTAMP-based time travel (Delta's `TIMESTAMP AS OF`): the
     * highest version whose commit time is at or before `ts` — resolved
@@ -2590,23 +2454,26 @@ object VersionedTable {
     * lie). */
   def versionAsOf(
       spark: SparkSession, root: String, ts: java.sql.Timestamp): Long = {
-    val committed = versions(spark, root)
+    val committed = snapshots(spark, root)
     var run = Long.MinValue
-    val at = committed.filter { v =>
-      run = math.max(run, commitTimeOf(spark, root, v))
+    val at = committed.filter { s =>
+      run = math.max(run, s.commitTime)
       run <= ts.getTime
     }
-    at.lastOption.getOrElse(throw new java.io.IOException(
+    at.lastOption.map(_.version).getOrElse(throw new java.io.IOException(
       s"no committed version of $root at or before $ts " +
         s"(earliest retained commit is " +
-        s"${committed.headOption.map(v => new java.sql.Timestamp(
-          commitTimeOf(spark, root, v))).getOrElse("none")})"))
+        s"${committed.headOption.map(s => new java.sql.Timestamp(s.commitTime))
+          .getOrElse("none")})"))
   }
 
   /** Time travel: read an exact committed version (deletion-vector rows
     * masked out — the read is always the table's logical content). */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
-    versionFrame(spark, root, v, synth = true)
+    versionFrame(spark, snapshotAt(spark, root, v), synth = true)
+
+  private[graft] def readVersion(spark: SparkSession, s: Snapshot): DataFrame =
+    versionFrame(spark, s, synth = true)
 
   /** [[readVersion]] with the Hive-convert partition synthesis
     * optionally SKIPPED (`synth = false`): the conjunct-extraction
@@ -2616,20 +2483,15 @@ object VersionedTable {
     * partition conjunct would reach the pruner coalesce-shaped and
     * undecidable. Execution reads always synthesize. */
   private def versionFrame(
-      spark: SparkSession, root: String, v: Long, synth: Boolean): DataFrame = {
-    require(isCommitted(spark, root, v), s"version $v is not committed under $root")
-    assertReadable(spark, root, v)
-    val reader = versionReader(spark, root, v)
-    val scan = manifestOf(spark, root, v) match {
+      spark: SparkSession, s: Snapshot, synth: Boolean): DataFrame = {
+    assertReadable(spark, s)
+    val reader = versionReader(spark, s)
+    val scan = manifestOf(spark, s) match {
       case Some(refs) =>
-        reader.parquet(refs.map(r => new Path(root, r).toString): _*)
-      case None => reader.parquet(dataDir(spark, root, v).toString)
+        reader.parquet(refs.map(r => new Path(s.root, r).toString): _*)
+      case None => reader.parquet(s.dir.toString)
     }
-    val base = if (synth) synthHiveParts(spark, root, v, scan) else scan
-    toLogical(
-      dvChainInfo(spark, root, v)
-        .map(applyDv(spark, root, v, base, _)).getOrElse(base),
-      columnMapping(spark, root, v))
+    maskedLogical(spark, s, if (synth) synthHiveParts(spark, s, scan) else scan)
   }
 
   /** [[readVersion]] with each row's root-relative file ref exposed as
@@ -2642,28 +2504,28 @@ object VersionedTable {
     * the table. */
   def readVersionWithFileRef(
       spark: SparkSession, root: String, v: Long, refCol: String,
-      onlyRefs: Option[Seq[String]] = None): DataFrame = {
-    require(isCommitted(spark, root, v), s"version $v is not committed under $root")
-    assertReadable(spark, root, v)
-    val reader = versionReader(spark, root, v)
+      onlyRefs: Option[Seq[String]] = None): DataFrame =
+    readVersionWithFileRef(spark, snapshotAt(spark, root, v), refCol, onlyRefs)
+
+  private[graft] def readVersionWithFileRef(
+      spark: SparkSession, s: Snapshot, refCol: String,
+      onlyRefs: Option[Seq[String]]): DataFrame = {
+    assertReadable(spark, s)
+    val reader = versionReader(spark, s)
     // `onlyRefs` bounds the scan to a candidate subset (e.g. the files
     // whose key stats admit a source key): detection then reads
     // O(candidates), not the table
-    val base = synthHiveParts(spark, root, v, onlyRefs match {
+    val base = synthHiveParts(spark, s, onlyRefs match {
       case Some(refs) =>
         require(refs.nonEmpty, "onlyRefs must be non-empty — skip the scan instead")
-        reader.parquet(refs.map(r => new Path(root, r).toString): _*)
-      case None => manifestOf(spark, root, v) match {
+        reader.parquet(refs.map(r => new Path(s.root, r).toString): _*)
+      case None => manifestOf(spark, s) match {
         case Some(refs) =>
-          reader.parquet(refs.map(r => new Path(root, r).toString): _*)
-        case None => reader.parquet(dataDir(spark, root, v).toString)
+          reader.parquet(refs.map(r => new Path(s.root, r).toString): _*)
+        case None => reader.parquet(s.dir.toString)
       }
     })
-    val withRef = base.withColumn(refCol, fileRefCol)
-    toLogical(
-      dvChainInfo(spark, root, v)
-        .map(applyDv(spark, root, v, withRef, _)).getOrElse(withRef),
-      columnMapping(spark, root, v))
+    maskedLogical(spark, s, base.withColumn(refCol, fileRefCol))
   }
 
   /** Read a SUBSET of version `v`'s files (root-relative refs, as listed
@@ -2672,14 +2534,14 @@ object VersionedTable {
     * Raw per-file reads would resurrect MOR-deleted rows; this is the
     * safe form. */
   def readFilesOf(
-      spark: SparkSession, root: String, v: Long, refs: Seq[String]): DataFrame = {
+      spark: SparkSession, root: String, v: Long, refs: Seq[String]): DataFrame =
+    readFilesOf(spark, snapshotAt(spark, root, v), refs)
+
+  private[graft] def readFilesOf(
+      spark: SparkSession, s: Snapshot, refs: Seq[String]): DataFrame = {
     require(refs.nonEmpty, "readFilesOf needs at least one file ref")
-    val sub = synthHiveParts(spark, root, v, versionReader(spark, root, v)
-      .parquet(refs.map(r => new Path(root, r).toString): _*))
-    toLogical(
-      dvChainInfo(spark, root, v)
-        .map(applyDv(spark, root, v, sub, _)).getOrElse(sub),
-      columnMapping(spark, root, v))
+    maskedLogical(spark, s, synthHiveParts(spark, s, versionReader(spark, s)
+      .parquet(refs.map(r => new Path(s.root, r).toString): _*)))
   }
 
   /** [[read]] with FILE-LEVEL DATA SKIPPING: files whose footer min/max
@@ -2690,29 +2552,24 @@ object VersionedTable {
     * predicates the pruner cannot reason about (pruning is only ever an
     * optimization, never a semantics change). */
   def readWhere(spark: SparkSession, root: String, predicate: Column): DataFrame =
-    readVersionWhere(spark, root,
-      currentVersion(spark, root).getOrElse(
-        throw new java.io.IOException(s"no committed version under $root")),
-      predicate)
+    readVersionWhere(spark, latestOrFail(spark, root), predicate)
 
   def readVersionWhere(
-      spark: SparkSession, root: String, v: Long, predicate: Column): DataFrame = {
-    val (kept, total) = prunedFiles(spark, root, v, predicate)
-    if (kept.size == total) readVersion(spark, root, v).where(predicate)
+      spark: SparkSession, root: String, v: Long, predicate: Column): DataFrame =
+    readVersionWhere(spark, snapshotAt(spark, root, v), predicate)
+
+  private def readVersionWhere(
+      spark: SparkSession, s: Snapshot, predicate: Column): DataFrame = {
+    val (kept, total) = prunedFiles(spark, s, predicate)
+    if (kept.size == total) readVersion(spark, s).where(predicate)
     else if (kept.isEmpty)
       // all files pruned: zero-row result with the snapshot schema (the
       // false filter folds to an empty LocalRelation — nothing is scanned)
-      readVersion(spark, root, v)
+      readVersion(spark, s)
         .where(org.apache.spark.sql.functions.lit(false)).where(predicate)
-    else {
-      val sub = synthHiveParts(spark, root, v,
-        versionReader(spark, root, v).parquet(kept: _*))
-      toLogical(
-        dvChainInfo(spark, root, v)
-        .map(applyDv(spark, root, v, sub, _)).getOrElse(sub),
-        columnMapping(spark, root, v))
-        .where(predicate)
-    }
+    else maskedLogical(spark, s,
+      synthHiveParts(spark, s, versionReader(spark, s).parquet(kept: _*)))
+      .where(predicate)
   }
 
   /** [[prunedFiles]] in ROOT-RELATIVE ref space: the manifest refs of
@@ -2720,14 +2577,13 @@ object VersionedTable {
     * row). The MERGE NOT-MATCHED-BY-SOURCE planner consumes this — its
     * touched/kept split lives in ref space, while prunedFiles returns
     * FileStatus path strings. */
-  def prunedFileRefs(
-      spark: SparkSession, root: String, v: Long,
-      predicate: Column): Seq[String] = {
-    val (may, _) = prunedFiles(spark, root, v, predicate)
-    val f = fs(spark, root)
-    val maySet = may.map(s => f.makeQualified(new Path(s)).toString).toSet
-    dataFileRefs(spark, root, v)
-      .filter(r => maySet(f.makeQualified(new Path(root, r)).toString))
+  private[graft] def prunedFileRefs(
+      spark: SparkSession, s: Snapshot, predicate: Column): Seq[String] = {
+    val (may, _) = prunedFiles(spark, s, predicate)
+    val f = fs(spark, s.root)
+    val maySet = may.map(p => f.makeQualified(new Path(p)).toString).toSet
+    dataFileRefs(spark, s)
+      .filter(r => maySet(f.makeQualified(new Path(s.root, r)).toString))
   }
 
   /** The file-pruning decision itself, exposed for specs and runtime
@@ -2735,32 +2591,35 @@ object VersionedTable {
     * version `v`'s footer stats. No stats → everything kept. */
   def prunedFiles(
       spark: SparkSession, root: String, v: Long,
-      predicate: Column): (Seq[String], Int) = {
-    require(isCommitted(spark, root, v), s"version $v is not committed under $root")
-    val dir = dataDir(spark, root, v)
+      predicate: Column): (Seq[String], Int) =
+    prunedFiles(spark, snapshotAt(spark, root, v), predicate)
+
+  private def prunedFiles(
+      spark: SparkSession, s: Snapshot, predicate: Column): (Seq[String], Int) = {
     // (absolute path, stats-lookup key): plain snapshots key stats by
     // DIR-RELATIVE path; manifest snapshots by root-relative path (bare
     // names collide across version dirs AND across partition subdirs —
     // Spark's partitioned writer reuses one part name per task)
-    val files: Seq[(Path, String)] = manifestOf(spark, root, v) match {
-      case Some(refs) => refs.map(r => (new Path(root, r), r))
-      case None => dataFileRels(fs(spark, root), dir)
-        .map { case (st, rel) => (st.getPath, rel) }
+    val files: Seq[(Path, String)] = manifestOf(spark, s) match {
+      case Some(refs) => refs.map(r => (new Path(s.root, r), r))
+      case None => dataFileRefs(spark, s).map(r =>
+        (fs(spark, s.root).makeQualified(new Path(s.root, r)),
+          r.stripPrefix(s.dirName + "/")))
     }
-    val stats = statsOf(spark, root, v)
+    val stats = statsOf(spark, s)
     // resolve the predicate against the snapshot schema through the
     // analyzer + optimizer: Column expressions are lazy ColumnNode
     // wrappers in Spark 4, and optimization also constant-folds literal
     // casts — the Filter conditions below are plain resolved conjuncts
     // (synth=false: the Hive-convert coalesce Project would otherwise
     // substitute into pushed-down partition conjuncts)
-    val optimized = versionFrame(spark, root, v, synth = false)
+    val optimized = versionFrame(spark, s, synth = false)
       .where(predicate).queryExecution.optimizedPlan
     val conjs0 = optimized.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.flatMap(TableStats.conjuncts)
     val partTypes: Map[String, org.apache.spark.sql.types.DataType] =
-      scala.util.Try(schemaOf(spark, root, v)).toOption
+      scala.util.Try(schemaOf(spark, s)).toOption
         .map(_.map(sf => sf.name -> sf.dataType).toMap).getOrElse(Map.empty)
     // GENERATED-COLUMN IMPLICATION ([[GeneratedCols.impliedFor]]): a
     // conjunct on a generator's BASE column derives sound partition-
@@ -2771,7 +2630,7 @@ object VersionedTable {
     // ([[zoneSafeGens]]): a mismatched session keeps every file the
     // base conjunct can't refute, which is conservative and correct.
     val genDefs = zoneSafeGens(spark,
-      scala.util.Try(propertiesOf(spark, root, v)).getOrElse(Map.empty),
+      scala.util.Try(propertiesOf(spark, s)).getOrElse(Map.empty),
       partTypes)
     val conjs =
       if (genDefs.isEmpty) conjs0
@@ -2786,8 +2645,8 @@ object VersionedTable {
     // skips non-matching partitions even when the stats table is absent
     // or uncovered, and keeps skipping across renames (segments resolve
     // physical → logical through the mapping).
-    val reverseMap = columnMapping(spark, root, v).map(_.swap)
-    val bareCols = partitionColumnsOf(spark, root, v).toSet
+    val reverseMap = columnMapping(spark, s).map(_.swap)
+    val bareCols = partitionColumnsOf(spark, s).toSet
     def synth(p: Path) = partSynthStats(p.toString, reverseMap, partTypes, bareCols)
     val anyPartitioned = bareCols.nonEmpty ||
       files.exists(_._1.toString.contains("/" + PartDirPrefix))
@@ -2868,20 +2727,16 @@ object VersionedTable {
       root: String,
       cols: Seq[String],
       version: Option[Long] = None): Option[(Long, Seq[ColStat])] = {
-    val v = version.orElse(currentVersion(spark, root)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    require(isCommitted(spark, root, v), s"version $v is not committed under $root")
+    val s = version.map(snapshotAt(spark, root, _))
+      .getOrElse(latestOrFail(spark, root))
     // deletion vectors mask rows the footer stats still count — stats
     // cannot answer until a compaction folds the masks in
-    if (hasDeletionVectors(spark, root, v)) return None
-    val dir = dataDir(spark, root, v)
-    val fileKeys: Seq[String] = manifestOf(spark, root, v) match {
-      case Some(refs) => refs
-      case None => dataFileRels(fs(spark, root), dir).map(_._2)
-    }
-    val stats = statsOf(spark, root, v)
+    if (hasDeletionVectors(spark, s)) return None
+    val fileKeys: Seq[String] = manifestOf(spark, s)
+      .getOrElse(dataFileRefs(spark, s).map(_.stripPrefix(s.dirName + "/")))
+    val stats = statsOf(spark, s)
     // stats are keyed by PHYSICAL column names; requests speak logical
-    val mapping = columnMapping(spark, root, v)
+    val mapping = columnMapping(spark, s)
     // every data file must be covered, else row counts are unknowable
     val perFile = fileKeys.map(k => stats.get(k).filter(_.nonEmpty))
     if (fileKeys.nonEmpty && perFile.exists(_.isEmpty)) None
@@ -2922,16 +2777,18 @@ object VersionedTable {
     * column: partial range knowledge cannot prove a file untouched. */
   def fileKeyRanges(
       spark: SparkSession, root: String, v: Long, column: String)
+      : Option[Seq[(String, Option[(String, Any, Any)])]] =
+    fileKeyRanges(spark, snapshotAt(spark, root, v), column)
+
+  private[graft] def fileKeyRanges(
+      spark: SparkSession, s: Snapshot, column: String)
       : Option[Seq[(String, Option[(String, Any, Any)])]] = {
-    require(isCommitted(spark, root, v), s"version $v is not committed under $root")
-    val dir = dataDir(spark, root, v)
-    val entries: Seq[(String, String)] = manifestOf(spark, root, v) match {
+    val entries: Seq[(String, String)] = manifestOf(spark, s) match {
       case Some(refs) => refs.map(r => (r, r))
-      case None => dataFileRels(fs(spark, root), dir)
-        .map { case (_, rel) => (dataDirName(spark, root, v) + "/" + rel, rel) }
+      case None => dataFileRefs(spark, s).map(r => (r, r.stripPrefix(s.dirName + "/")))
     }
-    val stats = statsOf(spark, root, v)
-    val physCol = physicalName(columnMapping(spark, root, v), column)
+    val stats = statsOf(spark, s)
+    val physCol = physicalName(columnMapping(spark, s), column)
     val out = entries.map { case (rel, sk) =>
       stats.get(sk).flatMap(_.get(physCol)) match {
         case Some((kind, Some(mn), Some(mx), nulls, _)) if nulls >= 0 =>
@@ -2976,7 +2833,7 @@ object VersionedTable {
       recordInfo: Map[String, String] = Map.empty,
       recordProperties: Option[Map[String, String]] = None): Long = {
     val spark = newData.sparkSession
-    val cur = currentVersion(spark, root).getOrElse(
+    val cur = latest(spark, root).getOrElse(
       throw new java.io.IOException(
         s"copy-on-write commit needs an existing snapshot under $root"))
     // GENERATED COLUMNS populate BEFORE the schema gate: an append of a
@@ -2984,8 +2841,8 @@ object VersionedTable {
     // intended shape, not a schema drift. Idempotent — a frame already
     // carrying the column passes through. strict=false: a missing BASE
     // falls through to the schema gate, whose error names the drift.
-    val curProps0 = propertiesOf(spark, root, cur)
-    val curSchema = schemaOf(spark, root, cur)
+    val curProps0 = propertiesOf(spark, cur)
+    val curSchema = schemaOf(spark, cur)
     val newDataG = GeneratedCols.populate(newData,
       GeneratedCols.of(curProps0), strict = false,
       bornZone = curProps0.get(GeneratedCols.ZoneProp),
@@ -3000,7 +2857,7 @@ object VersionedTable {
       GeneratedCols.exprsOf(curProps0),
       curSchema.map(sf => sf.name -> sf.dataType).toMap)
     val (newData0, idAdvProps, idCheck, idRelease) =
-      identityAllocate(spark, root, newDataE, curProps0, Some(cur))
+      identityAllocate(spark, root, newDataE, curProps0, Some(cur.version))
     val propsWithAdvance =
       if (idAdvProps.isEmpty) recordProperties
       else Some(recordProperties.getOrElse(curProps0) ++ idAdvProps)
@@ -3010,7 +2867,7 @@ object VersionedTable {
     val curMap = curSchema.map(sf => sf.name -> sf.dataType).toMap
     val newMap = newData0.schema.map(sf => sf.name -> sf.dataType).toMap
     if (curMap != newMap)
-      throw new SchemaMismatchException(root, cur, curSchema, newData0.schema)
+      throw new SchemaMismatchException(root, cur.version, curSchema, newData0.schema)
     // record the CURRENT schema (canonical order + evolve's nullability
     // marks), not newData's incidental one
     // release per call: commitCow runs once per OCC attempt inside its
@@ -3047,7 +2904,7 @@ object VersionedTable {
     })
 
   private def commitCowInternal(
-      newData: DataFrame, root: String, cur: Long, keptFiles: Seq[String],
+      newData: DataFrame, root: String, cur: Snapshot, keptFiles: Seq[String],
       extras: Map[String, DataFrame],
       bloomCols: Seq[String],
       preCommit: Long => Unit,
@@ -3066,23 +2923,23 @@ object VersionedTable {
     // every snapshot-derived commit CARRIES the mapping unless the caller
     // (rename/drop/evolve) hands in an updated one
     val mappingToRecord = recordMapping.getOrElse(
-      (columnMapping(spark, root, cur), retiredPhysicals(spark, root, cur)))
+      (columnMapping(spark, cur), retiredPhysicals(spark, cur)))
     // WHOLE-KEPT FAST PATH: callers that carry the entire current
     // snapshot (appends, MOR deletes — the per-commit hot paths) pass
-    // the exact Seq instance [[manifestOf]]'s memo serves, so "kept ⊆
+    // the exact Seq instance the snapshot's refs slot serves, so "kept ⊆
     // current refs" holds BY IDENTITY and every O(refs) driver pass
     // below (the keyed map, the membership validation, the removed-set
     // arithmetic) is skipped — the delta-form commit then does O(own)
     // driver work however many refs the table carries. Still validated
     // inside the publish claim: preCommit re-checks the pinned version,
     // exactly as the identity basis is.
-    val keptIsWhole = manifestOf(spark, root, cur).exists(_ eq keptFiles)
+    val keptIsWhole = manifestOf(spark, cur).exists(_ eq keptFiles)
     // stats of the CURRENT snapshot, keyed as stored (name or relpath);
     // lazy — the fast path and the delta form never build it
-    lazy val curKeyed: Map[String, String] = manifestOf(spark, root, cur)
+    lazy val curKeyed: Map[String, String] = manifestOf(spark, cur)
       .map(_.map(r => r -> r).toMap)
-      .getOrElse(dataFileRels(f, dataDir(spark, root, cur))
-        .map { case (_, rel) => (dataDirName(spark, root, cur) + "/" + rel) -> rel }.toMap)
+      .getOrElse(dataFileRels(f, cur.dir)
+        .map { case (_, rel) => (cur.dirName + "/" + rel) -> rel }.toMap)
     if (!keptIsWhole) {
       val badKept = keptFiles.filterNot(curKeyed.contains)
       if (badKept.nonEmpty)
@@ -3097,7 +2954,7 @@ object VersionedTable {
     }
     // lazy: the delta form never carries kept stats, so it must not pay
     // the O(files) folded-stats read the full form's carry needs
-    lazy val curStats = statsOf(spark, root, cur)
+    lazy val curStats = statsOf(spark, cur)
     // DELTA-FORM DECISION, made before commitWith so the protocol gate
     // records the reader feature with the version: write adds/removes
     // only when (a) no widening re-key is in flight (carried stat VALUES
@@ -3111,10 +2968,10 @@ object VersionedTable {
     val deltaFloor = spark.conf
       .get(DeltaFloorKey, DeltaFloorDefault.toString).toInt
     val deltaDepth =
-      manifestDeltaOf(spark, root, cur).map(_.depth + 1).getOrElse(1)
+      manifestDeltaOf(spark, cur).map(_.depth + 1).getOrElse(1)
     val deltaForm = carriedStatsMap.isEmpty && deltaInterval > 0 &&
       keptFiles.size >= deltaFloor &&
-      manifestOf(spark, root, cur).isDefined &&
+      manifestOf(spark, cur).isDefined &&
       deltaDepth < deltaInterval
     // DELETION-VECTOR CARRY: kept files keep their masks (their rows were
     // not rewritten), rewritten files drop theirs (the rewrite read
@@ -3133,7 +2990,7 @@ object VersionedTable {
     // the chain-aware [[dvOf]], so the interval-th commit CONSOLIDATES
     // the chain into its own complete `_dv` (the DV fold, riding the
     // manifest fold's cadence).
-    val baseChain = dvChainInfo(spark, root, cur)
+    val baseChain = dvChainInfo(spark, cur)
     val baseHasDv = baseChain.isDefined
     val extrasWithDv: Map[String, DataFrame] =
       if (!baseHasDv) extras
@@ -3149,7 +3006,7 @@ object VersionedTable {
         // always tail-keyed ([[fileRefCol]]), while a shallow clone's
         // manifest refs are absolute — tails are unique per snapshot
         // (UUID part names), so the normalization is lossless.
-        val carried = dvOfChain(spark, root, cur, baseChain.get)
+        val carried = dvOfChain(spark, baseChain.get)
           .where(col("file").isInCollection(keptFiles.map(refTail)))
         val merged = extras.get("dv").map(_.unionByName(carried).distinct())
           .getOrElse(carried)
@@ -3250,7 +3107,7 @@ object VersionedTable {
           if (extraRefs.nonEmpty)
             try {
               val rbSizes = fileSizes(spark, root,
-                rebase.map(_.through).getOrElse(cur))
+                rebase.map(_.through).getOrElse(cur.version))
               FileSizes.append(fh, dir, extraRefs.map(r => r -> rbSizes(r)))
             } catch {
               case e: Exception =>
@@ -3262,7 +3119,7 @@ object VersionedTable {
           val removed =
             if (keptIsWhole && removedRefs.isEmpty) Set.empty[String]
             else curKeyed.keySet -- keptEff
-          writeManifestDelta(fh, dir, ManifestDelta(cur, deltaDepth,
+          writeManifestDelta(fh, dir, ManifestDelta(cur.version, deltaDepth,
             removed = removed,
             added = own.map { case (_, rel) => f"v$v%08d/" + rel } ++ extraRefs))
         } else {
@@ -3283,7 +3140,7 @@ object VersionedTable {
         // Rebased-in refs read their sizes from the tolerated version
         // (appends only add, so its sidecar covers the kept refs too).
         try {
-          val sizeV = rebase.map(_.through).getOrElse(cur)
+          val sizeV = rebase.map(_.through).getOrElse(cur.version)
           val curSizes = fileSizes(spark, root, sizeV)
           FileSizes.append(fh, dir,
             (keptEff ++ extraRefs).map(r => r -> curSizes(r)))
@@ -3350,7 +3207,7 @@ object VersionedTable {
         // result row-for-row.
         partitionDropPlan(spark, root, cur, predicate) match {
           case Some(dropRefs) =>
-            if (dropRefs.isEmpty) cur // provably nothing matches: no-op
+            if (dropRefs.isEmpty) cur.version // provably nothing matches: no-op
             else commitPartitionDrop(spark, root, cur, dropRefs, changeFeed,
               preCommit)
           case None =>
@@ -3361,7 +3218,7 @@ object VersionedTable {
       }
     else occRetry(spark, root) { cur =>
       morVisibleTagged(spark, root, cur, predicate) match {
-        case None => cur // provably no row matches: no-op, no commit
+        case None => cur.version // provably no row matches: no-op, no commit
         case Some(visible) =>
           // the matched slice feeds the dv sidecar, the change feed AND
           // the masked-file interest set — pin it once; the distinct-file
@@ -3374,12 +3231,12 @@ object VersionedTable {
               col("__dv_pos").as("pos"))
             val tails = newDel.select("file").distinct()
               .collect().map(_.getString(0)).toSet // metadata-scale: ≤ #files
-            if (tails.isEmpty) cur // admitted but nothing matched
+            if (tails.isEmpty) cur.version // admitted but nothing matched
             else {
               val empty = spark.createDataFrame(
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                schemaOf(spark, root, cur))
-              val tableCols = schemaOf(spark, root, cur).fieldNames.toSeq
+                schemaOf(spark, cur))
+              val tableCols = schemaOf(spark, cur).fieldNames.toSeq
               val extras = Map("dv" -> newDel) ++
                 (if (!changeFeed) Map.empty[String, DataFrame]
                  else Map("changes" ->
@@ -3389,17 +3246,17 @@ object VersionedTable {
               // must not have rewritten them (its rewrite read the masks of
               // ITS pinned version — these fresh deletions would be lost)
               val maskedRefs = () =>
-                dataFileRefs(spark, root, cur).filter(r => tails(refTail(r))).toSet
-              val rb = new AppendRebase(spark, root, cur,
+                dataFileRefs(spark, cur).filter(r => tails(refTail(r))).toSet
+              val rb = new AppendRebase(spark, root, cur.version,
                 allowDml = true, interest = maskedRefs,
                 readPredicate = Some(predicate))
-              commitCowInternal(empty, root, cur, dataFileRefs(spark, root, cur),
+              commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
                 extras = extras, bloomCols = Nil,
                 preCommit = v => { preCommit(v); rb.validate(v) },
-                recordSchema = Some(schemaOf(spark, root, cur)),
+                recordSchema = Some(schemaOf(spark, cur)),
                 rebase = Some(rb),
                 recordInfo = Map("operation" -> "delete", "mor" -> "true") ++
-                  Bucketing.carryStamp(spark, root, cur))
+                  Bucketing.carryStamp(spark, cur))
             }
           } finally hit.unpersist()
       }
@@ -3414,22 +3271,18 @@ object VersionedTable {
     * neither re-match nor re-enter a vector or change feed. None when
     * pruning proves no file can match (the caller's no-op shortcut). */
   private def morVisibleTagged(
-      spark: SparkSession, root: String, cur: Long,
+      spark: SparkSession, root: String, cur: Snapshot,
       predicate: Column): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
-    val (mayMatch, _) = prunedFiles(spark, root, cur, predicate)
+    val (mayMatch, _) = prunedFiles(spark, cur, predicate)
     if (mayMatch.isEmpty) None
     else {
-      val raw = synthHiveParts(spark, root, cur,
-          versionReader(spark, root, cur).parquet(mayMatch: _*))
+      val raw = synthHiveParts(spark, cur,
+          versionReader(spark, cur).parquet(mayMatch: _*))
         .withColumn("__dv_file", fileRefCol)
         .withColumn("__dv_pos", col("_metadata.row_index"))
-      val folded = dvChainInfo(spark, root, cur) match {
-        case Some(chain) =>
-          foldMask(spark, root, cur, raw, dvOfChain(spark, root, cur, chain), chain)
-        case None => raw
-      }
-      Some(toLogical(folded, columnMapping(spark, root, cur)))
+      val folded = dvChainInfo(spark, cur).map(foldMask(spark, raw, _)).getOrElse(raw)
+      Some(toLogical(folded, columnMapping(spark, cur)))
     }
   }
 
@@ -3438,8 +3291,8 @@ object VersionedTable {
     * slice a MERGE-ON-READ writer (the SQL MERGE's DV form) needs to mask
     * matched rows where they sit instead of rewriting their files. */
   private[graft] def readFilesTagged(
-      spark: SparkSession, root: String, v: Long, refs: Seq[String]): DataFrame =
-    foldMaskOnce(spark, root, v, readFilesRawTagged(spark, root, v, refs))
+      spark: SparkSession, s: Snapshot, refs: Seq[String]): DataFrame =
+    foldMaskOnce(spark, s, readFilesRawTagged(spark, s, refs))
 
   /** The UNMASKED half of [[readFilesTagged]]: the slice read with its
     * physical tags but existing masks NOT yet folded. Exists for the
@@ -3451,8 +3304,8 @@ object VersionedTable {
     * mask roads preserve (a broadcast anti-join keeps the streamed
     * side's partitioning; the bitmap road is a filter). */
   private[sources] def readFilesRawTagged(
-      spark: SparkSession, root: String, v: Long, refs: Seq[String]): DataFrame =
-    readFilesRaw(spark, root, v, refs, tagFile = true, tagPos = true)
+      spark: SparkSession, s: Snapshot, refs: Seq[String]): DataFrame =
+    readFilesRaw(spark, s, refs, tagFile = true, tagPos = true)
 
   /** [[readFilesRawTagged]] with the tags OPTIONAL: the per-row file-ref
     * string and row index are codegen'd per row, so an UNMASKED slice
@@ -3461,28 +3314,23 @@ object VersionedTable {
     * barrier, so a downstream projection can't prune them after the
     * fact. */
   private[sources] def readFilesRaw(
-      spark: SparkSession, root: String, v: Long, refs: Seq[String],
+      spark: SparkSession, s: Snapshot, refs: Seq[String],
       tagFile: Boolean, tagPos: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(refs.nonEmpty, "readFilesRaw needs at least one file ref")
-    val base = synthHiveParts(spark, root, v, versionReader(spark, root, v)
-      .parquet(refs.map(r => new Path(root, r).toString): _*))
+    val base = synthHiveParts(spark, s, versionReader(spark, s)
+      .parquet(refs.map(r => new Path(s.root, r).toString): _*))
     val f = if (tagFile) base.withColumn("__dv_file", fileRefCol) else base
     val p = if (tagPos) f.withColumn("__dv_pos", col("_metadata.row_index")) else f
-    toLogical(p, columnMapping(spark, root, v))
+    toLogical(p, columnMapping(spark, s))
   }
 
   /** Fold version `v`'s mask out of a `__dv_file`/`__dv_pos`-tagged
     * frame, resolving the chain ONCE; identity when the version carries
     * no mask. The tag columns stay on the output. */
   private[sources] def foldMaskOnce(
-      spark: SparkSession, root: String, v: Long,
-      tagged: DataFrame): DataFrame =
-    dvChainInfo(spark, root, v) match {
-      case Some(chain) =>
-        foldMask(spark, root, v, tagged, dvOfChain(spark, root, v, chain), chain)
-      case None => tagged
-    }
+      spark: SparkSession, s: Snapshot, tagged: DataFrame): DataFrame =
+    dvChainInfo(spark, s).map(foldMask(spark, tagged, _)).getOrElse(tagged)
 
   /** Row-level UPDATE, copy-on-write (Delta/Iceberg `UPDATE ... SET` on
     * this format): rows where `predicate` is TRUE get each `set` column
@@ -3516,8 +3364,7 @@ object VersionedTable {
     // (the caller CAN set both explicitly; then the enforcement scan
     // validates the pair). Computed from the new base EXPRESSION, so
     // one projection serves both.
-    val updProps = currentVersion(spark, root)
-      .map(cv => propertiesOf(spark, root, cv)).getOrElse(Map.empty)
+    val updProps = latest(spark, root).map(propertiesOf(spark, _)).getOrElse(Map.empty)
     val setG = GeneratedCols.of(updProps)
       .foldLeft(set) { case (s0, (c, g)) =>
         if (s0.keys.exists(_.equalsIgnoreCase(c))) s0
@@ -3578,11 +3425,11 @@ object VersionedTable {
     else occRetry(spark, root) { cur =>
       // the unknown-column contract holds regardless of matches: a typo'd
       // SET must throw, not silently no-op through the pruning shortcut
-      val schema = schemaOf(spark, root, cur)
+      val schema = schemaOf(spark, cur)
       val bad = set.keySet -- schema.fieldNames.toSet
       require(bad.isEmpty, s"unknown columns in SET: ${bad.mkString(", ")}")
       morVisibleTagged(spark, root, cur, predicate) match {
-        case None => cur // provably no row matches: no-op, no commit
+        case None => cur.version // provably no row matches: no-op, no commit
         case Some(visible) =>
           // pin the matched slice once (dv sidecar, feed pre/post images,
           // the appended post rows and the interest set all read it); the
@@ -3595,7 +3442,7 @@ object VersionedTable {
               col("__dv_pos").as("pos"))
             val tails = newDel.select("file").distinct()
               .collect().map(_.getString(0)).toSet // metadata-scale: ≤ #files
-            if (tails.isEmpty) cur // admitted but nothing matched
+            if (tails.isEmpty) cur.version // admitted but nothing matched
             else {
               val tableCols = schema.fieldNames.toSeq
               // mask the old copies where they sit, append the updated
@@ -3611,11 +3458,11 @@ object VersionedTable {
                        .withColumn("_change_type", lit("update_postimage")))))
               // as the MOR delete: the masked files are the interest set
               val maskedRefs = () =>
-                dataFileRefs(spark, root, cur).filter(r => tails(refTail(r))).toSet
-              val rb = new AppendRebase(spark, root, cur,
+                dataFileRefs(spark, cur).filter(r => tails(refTail(r))).toSet
+              val rb = new AppendRebase(spark, root, cur.version,
                 allowDml = true, interest = maskedRefs,
                 readPredicate = Some(predicate))
-              commitCowInternal(post, root, cur, dataFileRefs(spark, root, cur),
+              commitCowInternal(post, root, cur, dataFileRefs(spark, cur),
                 extras = extras, bloomCols = Nil,
                 preCommit = v => { preCommit(v); rb.validate(v) },
                 recordSchema = Some(schema),
@@ -3630,11 +3477,11 @@ object VersionedTable {
   /** `preCommit` validation that rejects the commit when the table
     * advanced past the pinned version `cur` — the lost-update guard every
     * path that computes against a snapshot must run inside its claim. */
-  private def occValidate(spark: SparkSession, root: String, cur: Long): Long => Unit =
+  private def occValidate(spark: SparkSession, root: String, cur: Snapshot): Long => Unit =
     _ => {
       val now = currentVersion(spark, root)
-      if (now != Some(cur))
-        throw new Sinks.ConcurrentWriteException(root, Some(cur), now)
+      if (now != Some(cur.version))
+        throw new Sinks.ConcurrentWriteException(root, Some(cur.version), now)
     }
 
   /** Write-isolation level for snapshot-deriving commits (Delta's
@@ -3664,12 +3511,11 @@ object VersionedTable {
     * don't stamp (or pre-upgrade vintages): conflict resolution treats
     * those as opaque and falls back to a full recompute. */
   def commitInfoOf(
-      spark: SparkSession, root: String, v: Long): Map[String, String] = {
-    val g = groupedMetaOf(spark, root, v)
-    if (g.nonEmpty) groupedSection(g, GroupedInfoPrefix)
-    else readVersionProps(spark, root, v, new Path(new Path(
-      dataDir(spark, root, v), "_commitinfo"), "info.properties"))
-  }
+      spark: SparkSession, root: String, v: Long): Map[String, String] =
+    commitInfoOf(spark, snapshotAt(spark, root, v))
+
+  private[graft] def commitInfoOf(spark: SparkSession, s: Snapshot): Map[String, String] =
+    metaSection(spark, s, GroupedInfoPrefix, "_commitinfo/info.properties")
 
   /** Winner operations a losing DML may compose with by manifest
     * arithmetic: file-local COW rewrites (their whole effect is "these
@@ -3697,11 +3543,13 @@ object VersionedTable {
     * operations change none of them. */
   private def rebasePlanSince(
       spark: SparkSession, root: String,
-      base: Long, now: Long,
+      base: Snapshot, now: Snapshot,
       allowDml: Boolean,
       interest: () => Set[String],
       readPredicate: Option[Column]): Option[(Seq[String], Set[String])] = {
-    val infos = (base + 1 to now).map(w => commitInfoOf(spark, root, w))
+    val infos = (base.version + 1 to now.version)
+      .map(w => if (w == now.version) now else snapshotAt(spark, root, w))
+      .map(commitInfoOf(spark, _))
     def blind(i: Map[String, String]) = i.get("blindAppend").contains("true")
     val allTolerable = infos.forall { i =>
       blind(i) || (allowDml &&
@@ -3710,15 +3558,15 @@ object VersionedTable {
     }
     if (!allTolerable) None
     else {
-      val baseRefs = dataFileRefs(spark, root, base).toSet
-      val nowRefs = dataFileRefs(spark, root, now)
+      val baseRefs = dataFileRefs(spark, base).toSet
+      val nowRefs = dataFileRefs(spark, now)
       val metaUnchanged =
-        schemaOf(spark, root, base).map(f => (f.name, f.dataType)) ==
-          schemaOf(spark, root, now).map(f => (f.name, f.dataType)) &&
-        constraintsOf(spark, root, base) == constraintsOf(spark, root, now) &&
-        propertiesOf(spark, root, base) == propertiesOf(spark, root, now) &&
-        columnMapping(spark, root, base) == columnMapping(spark, root, now) &&
-        retiredPhysicals(spark, root, base) == retiredPhysicals(spark, root, now)
+        schemaOf(spark, base).map(f => (f.name, f.dataType)) ==
+          schemaOf(spark, now).map(f => (f.name, f.dataType)) &&
+        constraintsOf(spark, base) == constraintsOf(spark, now) &&
+        propertiesOf(spark, base) == propertiesOf(spark, now) &&
+        columnMapping(spark, base) == columnMapping(spark, now) &&
+        retiredPhysicals(spark, base) == retiredPhysicals(spark, now)
       if (!metaUnchanged) None
       else {
         val added = nowRefs.filterNot(baseRefs)
@@ -3735,7 +3583,7 @@ object VersionedTable {
             case Some(p) =>
               // do the winner's fresh files provably refute the loser's
               // read predicate? (stats + blooms of the `now` snapshot)
-              val (mayMatch, _) = prunedFiles(spark, root, now, p)
+              val (mayMatch, _) = prunedFiles(spark, now, p)
               val f = fs(spark, root)
               val mayQ = mayMatch
                 .map(s => f.makeQualified(new Path(s)).toString).toSet
@@ -3786,23 +3634,24 @@ object VersionedTable {
     def removedRefs: Set[String] = removed
     def validate(v: Long): Unit = synchronized {
       calls += 1
-      val now = currentVersion(spark, root)
-      if (now != Some(throughV)) {
+      val now = latest(spark, root)
+      if (now.map(_.version) != Some(throughV)) {
         val tolerated =
           if (calls > 1 || !writeSerializable(spark)) None
-          else now.filter(_ > throughV).flatMap(n =>
-            rebasePlanSince(spark, root, throughV, n,
+          else now.filter(_.version > throughV).flatMap(n =>
+            rebasePlanSince(spark, root, snapshotAt(spark, root, throughV), n,
               allowDml, interest, readPredicate))
         tolerated match {
           case Some((added, rem)) =>
             // the winner may be a newer build: re-run the protocol gate
             // against the state this commit now claims to derive from
-            now.foreach(assertWritable(spark, root, _))
+            now.foreach(assertWritable(spark, _))
             extra = ((extra ++ added).toSet -- rem).toSeq
             removed = removed ++ rem
-            throughV = now.get
+            throughV = now.get.version
           case None =>
-            throw new Sinks.ConcurrentWriteException(root, Some(throughV), now)
+            throw new Sinks.ConcurrentWriteException(root, Some(throughV),
+              now.map(_.version))
         }
       }
     }
@@ -3819,14 +3668,13 @@ object VersionedTable {
     * straight races; the jitter de-synchronizes the burst instead.
     * Persistent contention past the bound surfaces the conflict rather
     * than spinning forever. */
-  private def occRetry(spark: SparkSession, root: String)(body: Long => Long): Long = {
+  private def occRetry(spark: SparkSession, root: String)(body: Snapshot => Long): Long = {
     val maxAttempts = 20
     var attempt = 0
     var out: Option[Long] = None
     while (out.isEmpty) {
       attempt += 1
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new java.io.IOException(s"no committed version under $root"))
+      val cur = latestOrFail(spark, root)
       try out = Some(body(cur))
       catch {
         case _: Sinks.ConcurrentWriteException if attempt < maxAttempts =>
@@ -3857,37 +3705,33 @@ object VersionedTable {
     * [[deleteWhere]] can choose per-attempt between this and the
     * metadata-only partition drop inside ONE occRetry loop. */
   private def cowRewriteAt(
-      spark: SparkSession, root: String, cur: Long, predicate: Column,
+      spark: SparkSession, root: String, cur: Snapshot, predicate: Column,
       op: String, hook: Long => Unit)(
       rewrite: DataFrame => DataFrame,
       feed: DataFrame => Option[DataFrame]): Long = {
-      val (mayMatch, _) = prunedFiles(spark, root, cur, predicate)
-      if (mayMatch.isEmpty) cur // provably no row matches: no-op, no commit
+      val (mayMatch, _) = prunedFiles(spark, cur, predicate)
+      if (mayMatch.isEmpty) cur.version // provably no row matches: no-op, no commit
       else {
         // compare scheme-qualified: prunedFiles returns FileStatus paths
         // (file:/...), dataFileRefs are root-relative
         val f = fs(spark, root)
         val mayMatchSet = mayMatch.map(s => f.makeQualified(new Path(s)).toString).toSet
-        val allRefs = dataFileRefs(spark, root, cur)
+        val allRefs = dataFileRefs(spark, cur)
         val keptRefs = allRefs
           .filterNot(r => mayMatchSet(f.makeQualified(new Path(root, r)).toString))
         val touchedRefs = allRefs.toSet -- keptRefs
         // the touched slice reads THROUGH the deletion vectors (a rewrite
         // of a masked file must not resurrect its masked rows); kept
         // files' masks carry forward via commitCow's dv carry
-        val sliceRaw = synthHiveParts(spark, root, cur,
-          versionReader(spark, root, cur).parquet(mayMatch: _*))
-        val slice = toLogical(
-          dvChainInfo(spark, root, cur)
-            .map(applyDv(spark, root, cur, sliceRaw, _)).getOrElse(sliceRaw),
-          columnMapping(spark, root, cur))
+        val slice = maskedLogical(spark, cur, synthHiveParts(spark, cur,
+          versionReader(spark, cur).parquet(mayMatch: _*)))
         // claim-time rebase: a blind append landing during the rewrite
         // merges into the manifest instead of forcing a recompute
         // (write-serializable — the DML serializes BEFORE the append, so
         // appended rows are not subject to the predicate), and a DML
         // winner whose rewrite is provably disjoint (files AND predicate)
         // composes by manifest arithmetic
-        val rb = new AppendRebase(spark, root, cur,
+        val rb = new AppendRebase(spark, root, cur.version,
           allowDml = true, interest = () => touchedRefs,
           readPredicate = Some(predicate))
         val extras = feed(slice)
@@ -3935,25 +3779,24 @@ object VersionedTable {
   /** The virtual feed of version `v`, or None when the version records
     * no `changesForm` (its feed, if any, is the `_changes` sidecar). */
   private[graft] def syntheticChanges(
-      spark: SparkSession, root: String, v: Long): Option[DataFrame] = {
+      spark: SparkSession, s: Snapshot): Option[DataFrame] = {
     def emptyOf(sch: org.apache.spark.sql.types.StructType): DataFrame =
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(sch.fields.toSeq :+
           org.apache.spark.sql.types.StructField("_change_type",
             org.apache.spark.sql.types.StringType)))
-    commitInfoOf(spark, root, v).get(ChangesFormKey).map {
-      case "none" => emptyOf(schemaOf(spark, root, v))
+    commitInfoOf(spark, s).get(ChangesFormKey).map {
+      case "none" => emptyOf(schemaOf(spark, s))
       case "insertAll" =>
         // the version's OWN files (its dir, never the manifest): exactly
         // the appended/seeded batch. Physical names in the files, logical
         // out — the same mapping rule every snapshot read applies.
-        val files = dataFiles(fs(spark, root), dataDir(spark, root, v))
-          .map(_.getPath.toString)
-        val sch = schemaOf(spark, root, v)
+        val files = ownFiles(spark, s).map(_._1)
+        val sch = schemaOf(spark, s)
         if (files.isEmpty) emptyOf(sch)
         else {
-          val mapping = columnMapping(spark, root, v)
+          val mapping = columnMapping(spark, s)
           toLogical(
             spark.read.schema(physicalSchema(sch, mapping))
               .parquet(files: _*), mapping)
@@ -3961,7 +3804,7 @@ object VersionedTable {
               org.apache.spark.sql.functions.lit("insert"))
         }
       case other => throw new java.io.IOException(
-        s"version $v under $root records unknown changesForm '$other'")
+        s"version ${s.version} under ${s.root} records unknown changesForm '$other'")
     }
   }
 
@@ -3971,13 +3814,20 @@ object VersionedTable {
     * read). Virtual "none" admits free, correctly. */
   private[graft] def feedBytesOf(
       spark: SparkSession, root: String, v: Long): Long = {
-    val b = extraBytes(spark, root, v, "changes")
+    val s = snapshotAt(spark, root, v)
+    val b = extraBytes(spark, s, "changes")
     if (b > 0L) b
-    else if (commitInfoOf(spark, root, v).get(ChangesFormKey)
-        .contains("insertAll"))
-      dataFiles(fs(spark, root), dataDir(spark, root, v)).map(_.getLen).sum
+    else if (commitInfoOf(spark, s).get(ChangesFormKey).contains("insertAll"))
+      ownFiles(spark, s).map(_._2).sum
     else b
   }
+
+  /** The data files in version `s`'s own dir (path, bytes) — the
+    * batch a virtual insertAll feed serves. */
+  private def ownFiles(spark: SparkSession, s: Snapshot): Seq[(String, Long)] =
+    s.memo("ownFiles") {
+      dataFiles(fs(spark, s.root), s.dir).map(st => (st.getPath.toString, st.getLen))
+    }
 
   /** APPEND commit: publish a new snapshot = the current snapshot
     * carried entirely BY REFERENCE + `newData` written fresh — the
@@ -4002,16 +3852,15 @@ object VersionedTable {
       preCommit: Long => Unit = _ => (),
       changeFeed: Boolean = false): Long = {
     val spark = newData.sparkSession
-    if (currentVersion(spark, root).isEmpty)
+    val base = latest(spark, root).getOrElse(
       throw new java.io.IOException(
-        s"append needs an existing snapshot under $root — use commit() first")
+        s"append needs an existing snapshot under $root — use commit() first"))
     // GENERATED COLUMNS populate before the FEED is built: the insert
     // feed must carry what the table stores — a raw-frame feed would
     // serve null for the generated column to every CDC consumer while
     // the table holds real values. (commitCow's own populate then
     // no-ops on the already-carrying frame.)
-    val appendProps = currentVersion(spark, root)
-      .map(cv => propertiesOf(spark, root, cv)).getOrElse(Map.empty)
+    val appendProps = propertiesOf(spark, base)
     val newData1 = GeneratedCols.populate(newData,
       GeneratedCols.of(appendProps), strict = false,
       bornZone = appendProps.get(GeneratedCols.ZoneProp),
@@ -4033,14 +3882,14 @@ object VersionedTable {
       // the table stores. commitCow's own populate then no-ops on the
       // already-carrying frame; the advance + basis check thread through
       // explicitly because this road built them, not commitCow.
-      val curProps = propertiesOf(spark, root, cur)
+      val curProps = propertiesOf(spark, cur)
       val appendExprs = GeneratedCols.exprsOf(curProps)
       val newDataE =
         if (appendExprs.isEmpty) newData1
         else GeneratedCols.populateExprs(newData1, appendExprs,
-          schemaOf(spark, root, cur).map(sf => sf.name -> sf.dataType).toMap)
+          schemaOf(spark, cur).map(sf => sf.name -> sf.dataType).toMap)
       val (newData2, idAdvProps, idCheck, idRelease) =
-        identityAllocate(spark, root, newDataE, curProps, Some(cur))
+        identityAllocate(spark, root, newDataE, curProps, Some(cur.version))
       val propsWithAdvance =
         if (idAdvProps.isEmpty) None
         else Some(curProps ++ idAdvProps)
@@ -4066,7 +3915,7 @@ object VersionedTable {
       // must recompute its masks against the new snapshot) rather than
       // silently publishing masks nothing resolves.
       if (dvTails.nonEmpty) {
-        val present = dataFileRefs(spark, root, cur).map(refTail).toSet
+        val present = dataFileRefs(spark, cur).map(refTail).toSet
         val dangling = dvTails -- present
         if (dangling.nonEmpty) throw new java.io.IOException(
           s"dv extra masks file(s) not in $root's current manifest " +
@@ -4082,14 +3931,14 @@ object VersionedTable {
       // to a ref gone from the manifest — the intended deletions would
       // silently survive in the rewritten file).
       val rb =
-        if (dvTails.isEmpty) new AppendRebase(spark, root, cur, allowDml = true)
-        else new AppendRebase(spark, root, cur, allowDml = true,
+        if (dvTails.isEmpty) new AppendRebase(spark, root, cur.version, allowDml = true)
+        else new AppendRebase(spark, root, cur.version, allowDml = true,
           interest = () =>
-            dataFileRefs(spark, root, cur).filter(r => dvTails(refTail(r))).toSet)
+            dataFileRefs(spark, cur).filter(r => dvTails(refTail(r))).toSet)
       // release per attempt (finally: a lost race re-enters this
       // closure and re-allocates against fresh properties — the
       // superseded attempt's pinned blocks must not outlive it)
-      try commitCow(newData2, root, dataFileRefs(spark, root, cur), withFeed,
+      try commitCow(newData2, root, dataFileRefs(spark, cur), withFeed,
         bloomCols,
         preCommit = v => { idCheck(v); preCommit(v); rb.validate(v) },
         rebase = Some(rb), recordInfo = info,
@@ -4133,7 +3982,7 @@ object VersionedTable {
       added: org.apache.spark.sql.types.StructType): Long = {
     require(added.nonEmpty, "ADD COLUMNS needs at least one column")
     occRetry(spark, root) { cur =>
-      val curSchema = schemaOf(spark, root, cur)
+      val curSchema = schemaOf(spark, cur)
       val dup = added.filter(f => curSchema.exists(_.name.equalsIgnoreCase(f.name)))
       require(dup.isEmpty,
         s"column(s) already exist: ${dup.map(_.name).mkString(", ")}")
@@ -4196,7 +4045,7 @@ object VersionedTable {
       spark: SparkSession, root: String, name: String,
       to: org.apache.spark.sql.types.DataType): Long =
     occRetry(spark, root) { cur =>
-      val curSchema = schemaOf(spark, root, cur)
+      val curSchema = schemaOf(spark, cur)
       val field = curSchema.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(
           s"no column $name in $root (columns: ${curSchema.fieldNames.mkString(", ")})"))
@@ -4206,7 +4055,7 @@ object VersionedTable {
           "int->double, float->double, date->timestamp_ntz, " +
           "decimal growth that keeps integral digits (p-s) non-shrinking; " +
           "anything else is a full-rewrite commit()")
-      require(!partitionColumnsOf(spark, root, cur).contains(name),
+      require(!partitionColumnsOf(spark, cur).contains(name),
         s"$name is a partition column — repartition via a full commit()")
       val newSchema = org.apache.spark.sql.types.StructType(
         curSchema.map(x => if (x.name == name) x.copy(dataType = to) else x))
@@ -4216,7 +4065,7 @@ object VersionedTable {
       // bounds for the widened column, so post-evolution literals (micros)
       // compare against post-evolution stats (micros) — prune-correct
       // across vintages with zero data bytes touched
-      val phys = physicalName(columnMapping(spark, root, cur), name)
+      val phys = physicalName(columnMapping(spark, cur), name)
       val statsMap: Option[(String, String, Option[String], Option[String]) =>
           (String, Option[String], Option[String])] =
         (field.dataType, to) match {
@@ -4230,26 +4079,26 @@ object VersionedTable {
                   .map(d => ((d + 1) * MicrosPerDay - 1).toString)))
           case _ => None
         }
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, root, cur),
+      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, cur),
         recordSchema = Some(newSchema),
         // sticky feature flag: narrow-typed files now live under a wider
         // schema — the protocol gate requires widening-capable readers
         recordProperties = Some(Bucketing.dropSpecIfKey(
-          propertiesOf(spark, root, cur), name)
+          propertiesOf(spark, cur), name)
           .updated(WidenedTypesProp, "true")),
         carriedStatsMap = statsMap,
         recordInfo = Map("operation" -> "widen-column",
           ChangesFormKey -> "none") ++
           Bucketing.stampOf(Bucketing.dropSpecIfKey(
-            propertiesOf(spark, root, cur), name)))
+            propertiesOf(spark, cur), name)))
     }
 
   private def evolveSchemaAt(
-      spark: SparkSession, root: String, cur: Long,
+      spark: SparkSession, root: String, cur: Snapshot,
       newSchema: org.apache.spark.sql.types.StructType): Long = {
-      val curSchema = schemaOf(spark, root, cur)
+      val curSchema = schemaOf(spark, cur)
       val newByName = newSchema.map(f => f.name -> f).toMap
       val dropped = curSchema.filterNot(f => newByName.contains(f.name))
       require(dropped.isEmpty,
@@ -4269,8 +4118,8 @@ object VersionedTable {
       // (freed by a rename) must mint a FRESH physical name — by-name
       // parquet resolution would otherwise resurrect old files' stale
       // values under the new column
-      val mapping = columnMapping(spark, root, cur)
-      val retired = retiredPhysicals(spark, root, cur)
+      val mapping = columnMapping(spark, cur)
+      val retired = retiredPhysicals(spark, cur)
       val usedPhys = curSchema.map(f => physicalName(mapping, f.name)).toSet ++ retired
       val minted = added.collect {
         case f if usedPhys(f.name) =>
@@ -4278,14 +4127,14 @@ object VersionedTable {
       }.toMap
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, root, cur),
+      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, cur),
         recordSchema = Some(newSchema),
         recordMapping = Some((mapping ++ minted, retired)),
         recordInfo = Map("operation" -> "evolve-schema",
           ChangesFormKey -> "none") ++
-          Bucketing.carryStamp(spark, root, cur))
+          Bucketing.carryStamp(spark, cur))
     }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE ... SHALLOW CLONE`): publish
@@ -4312,38 +4161,36 @@ object VersionedTable {
       version: Option[Long] = None): Long = {
     require(currentVersion(spark, destRoot).isEmpty,
       s"shallow clone target $destRoot already holds a versioned table")
-    val v = version.orElse(currentVersion(spark, srcRoot)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $srcRoot"))
-    require(isCommitted(spark, srcRoot, v),
-      s"version $v is not committed under $srcRoot")
+    val src = version.map(snapshotAt(spark, srcRoot, _))
+      .getOrElse(latestOrFail(spark, srcRoot))
     val srcFs = fs(spark, srcRoot)
     // fs-qualified absolute refs: resolvable from any root (Path(parent,
     // child) returns an absolute child unchanged at every read site)
-    val srcRefs = dataFileRefs(spark, srcRoot, v)
+    val srcRefs = dataFileRefs(spark, src)
     val refs = srcRefs.map(r =>
       srcFs.makeQualified(new Path(srcRoot, r)).toString)
-    val schema = schemaOf(spark, srcRoot, v)
+    val schema = schemaOf(spark, src)
     // the clone's own version dir holds only metadata; data rides by ref
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // chain-aware: a source mid-chain clones its FOLDED mask — the
     // clone's sidecar must be self-contained (its reader never walks
     // the source's delta chain)
-    val extras = dvOf(spark, srcRoot, v)
+    val extras = dvOf(spark, src)
       .map(d => Map("dv" -> d)).getOrElse(Map.empty) ++
       // the COPY INTO ledger rides along: re-running the source's ingest
       // against the clone must not double-load the same landing files.
       // Folded to a complete "copyfull" BARRIER — the clone's ledger walk
       // must never reach back into the source's log
-      copyLedger(spark, srcRoot, v)
+      copyLedger(spark, srcRoot, src.version)
         .map(l => "copyfull" -> l.localCheckpoint(eager = true)).toMap
       // clones re-emit no history: virtual zero-row feed (recordInfo)
     // stats re-key: source rows are keyed bare-name (dir snapshot) or
     // ref (manifest snapshot); the clone keys them by its absolute refs
-    val srcKeyOf: Map[String, String] = manifestOf(spark, srcRoot, v)
+    val srcKeyOf: Map[String, String] = manifestOf(spark, src)
       .map(_.map(r => r -> r).toMap)
       .getOrElse(srcRefs.map(r => r -> r.split('/').last).toMap)
-    val srcStats = statsOf(spark, srcRoot, v)
+    val srcStats = statsOf(spark, src)
     commitWith(empty, destRoot, collectStats = false, extras = extras,
       recordInfo = Map("operation" -> "clone", ChangesFormKey -> "none"),
       // re-assert emptiness inside the claim: two racing cloners must not
@@ -4364,7 +4211,7 @@ object VersionedTable {
         // sizes carry re-keyed to the clone's absolute refs (derived
         // optimization — a failure must not block the clone)
         try {
-          val srcSizes = fileSizes(spark, srcRoot, v)
+          val srcSizes = fileSizes(spark, src)
           FileSizes.append(fh, dir,
             srcRefs.zip(refs).map { case (r, abs) => abs -> srcSizes(r) })
         } catch {
@@ -4377,10 +4224,10 @@ object VersionedTable {
         finally out.close()
       },
       recordSchema = Some(schema),
-      recordConstraints = Some(constraintsOf(spark, srcRoot, v)),
-      recordProperties = Some(propertiesOf(spark, srcRoot, v)),
-      recordMapping = Some((columnMapping(spark, srcRoot, v),
-        retiredPhysicals(spark, srcRoot, v))))
+      recordConstraints = Some(constraintsOf(spark, src)),
+      recordProperties = Some(propertiesOf(spark, src)),
+      recordMapping = Some((columnMapping(spark, src),
+        retiredPhysicals(spark, src))))
   }
 
   /** DEEP CLONE (Delta's `CREATE TABLE ... DEEP CLONE`): an INDEPENDENT
@@ -4414,49 +4261,47 @@ object VersionedTable {
       version: Option[Long] = None): Long = {
     require(currentVersion(spark, destRoot).isEmpty,
       s"deep clone target $destRoot already holds a versioned table")
-    val v = version.orElse(currentVersion(spark, srcRoot)).getOrElse(
-      throw new java.io.IOException(s"no committed version under $srcRoot"))
-    require(isCommitted(spark, srcRoot, v),
-      s"version $v is not committed under $srcRoot")
-    assertReadable(spark, srcRoot, v)
-    val schema = schemaOf(spark, srcRoot, v)
+    val src = version.map(snapshotAt(spark, srcRoot, _))
+      .getOrElse(latestOrFail(spark, srcRoot))
+    assertReadable(spark, src)
+    val schema = schemaOf(spark, src)
     val emptyGuard: Long => Unit =
       _ => currentVersion(spark, destRoot).foreach(dv =>
         throw new IllegalStateException(
           s"concurrent CREATE: $destRoot gained v$dv while this clone ran"))
     // the COPY INTO ledger rides along (as in shallowClone): re-running
     // the source's ingest against the clone must not double-load
-    val ledgerExtra = copyLedger(spark, srcRoot, v)
+    val ledgerExtra = copyLedger(spark, srcRoot, src.version)
       .map(l => "copyfull" -> l.localCheckpoint(eager = true)).toMap
-    if (partitionColumnsOf(spark, srcRoot, v).nonEmpty) {
+    if (partitionColumnsOf(spark, src).nonEmpty) {
       // partitioned snapshot: rewrite road — one clean write (the
       // recorded PartitionByProp, carried via recordProperties, shapes
       // the layout exactly as any commit against the spec; masks fold
       // in the same readVersion pass)
-      return commitWith(readVersion(spark, srcRoot, v), destRoot,
+      return commitWith(readVersion(spark, src), destRoot,
         collectStats = true,
         extras = ledgerExtra,
         finalizeVersion = (_, _, _) => (),
         preCommit = emptyGuard,
         recordSchema = Some(schema),
-        recordConstraints = Some(constraintsOf(spark, srcRoot, v)),
-        recordProperties = Some(propertiesOf(spark, srcRoot, v)),
+        recordConstraints = Some(constraintsOf(spark, src)),
+        recordProperties = Some(propertiesOf(spark, src)),
         recordInfo = Map("operation" -> "deep-clone",
           ChangesFormKey -> "none"))
     }
     val srcFs = fs(spark, srcRoot)
-    val srcRefs = dataFileRefs(spark, srcRoot, v)
+    val srcRefs = dataFileRefs(spark, src)
     // one unique flat name per source ref: tails are unique within a
     // snapshot but can collide ACROSS manifest vintages' dirs, so the
     // name hashes the full ref; the part- prefix keeps the plain
     // dir-snapshot listing ([[dataFiles]]) finding them
     val newRel = srcRefs.map(r => r -> ("part-" + DvBitmaps.sha1hex(r) + ".parquet")).toMap
-    val srcKeyOf: Map[String, String] = manifestOf(spark, srcRoot, v)
+    val srcKeyOf: Map[String, String] = manifestOf(spark, src)
       .map(_.map(r => r -> r).toMap)
       .getOrElse(srcRefs.map(r => r -> r.split('/').last).toMap)
-    val srcStats = statsOf(spark, srcRoot, v)
+    val srcStats = statsOf(spark, src)
     val srcSizes =
-      try fileSizes(spark, srcRoot, v)
+      try fileSizes(spark, src)
       catch { case _: Exception => Map.empty[String, Long] }
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -4465,7 +4310,7 @@ object VersionedTable {
     // bitmap derivation there — the staged keys would be the SOURCE
     // tails); the real mask lands RE-KEYED in finalizeVersion below,
     // where the clone's version dir name is known
-    val dvSrc = dvOf(spark, srcRoot, v) // folded: self-contained copy
+    val dvSrc = dvOf(spark, src) // folded: self-contained copy
     commitWith(empty, destRoot, collectStats = false,
       extras = ledgerExtra ++
         dvSrc.map(d => "dv" -> d.limit(0)).toMap,
@@ -4537,10 +4382,10 @@ object VersionedTable {
         }
       },
       recordSchema = Some(schema),
-      recordConstraints = Some(constraintsOf(spark, srcRoot, v)),
-      recordProperties = Some(propertiesOf(spark, srcRoot, v)),
-      recordMapping = Some((columnMapping(spark, srcRoot, v),
-        retiredPhysicals(spark, srcRoot, v))))
+      recordConstraints = Some(constraintsOf(spark, src)),
+      recordProperties = Some(propertiesOf(spark, src)),
+      recordMapping = Some((columnMapping(spark, src),
+        retiredPhysicals(spark, src))))
   }
 
   /** Driver budget (number of `listStatus` calls) for [[convertToGraft]]'s
@@ -4752,9 +4597,9 @@ object VersionedTable {
     * conservative guard rename/drop use to refuse breaking a recorded
     * CHECK silently. */
   private def constraintsMentioning(
-      spark: SparkSession, root: String, v: Long, column: String): Seq[String] = {
+      spark: SparkSession, s: Snapshot, column: String): Seq[String] = {
     val re = ("(?i)\\b" + java.util.regex.Pattern.quote(column) + "\\b").r
-    constraintsOf(spark, root, v).collect {
+    constraintsOf(spark, s).collect {
       case (n, e) if re.findFirstIn(e).isDefined => n
     }.toSeq
   }
@@ -4772,18 +4617,18 @@ object VersionedTable {
   def renameColumn(
       spark: SparkSession, root: String, from: String, to: String): Long =
     occRetry(spark, root) { cur =>
-      val schema = schemaOf(spark, root, cur)
+      val schema = schemaOf(spark, cur)
       require(schema.fieldNames.contains(from),
         s"no column $from in $root (columns: ${schema.fieldNames.mkString(", ")})")
       require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
         s"column $to already exists in $root")
       require(!to.startsWith("__"),
         s"column names starting with __ are reserved (got $to)")
-      val broken = constraintsMentioning(spark, root, cur, from)
+      val broken = constraintsMentioning(spark, cur, from)
       require(broken.isEmpty,
         s"CHECK constraint(s) ${broken.mkString(", ")} reference $from — " +
           "drop them before the rename and re-add against the new name")
-      val mapping = columnMapping(spark, root, cur)
+      val mapping = columnMapping(spark, cur)
       val phys = physicalName(mapping, from)
       val newMapping = (mapping - from) ++
         (if (to == phys) Map.empty[String, String] else Map(to -> phys))
@@ -4794,7 +4639,7 @@ object VersionedTable {
       // the partition property speaks LOGICAL names: follow the rename
       // (dir segments keep the frozen physical name and resolve through
       // the mapping, so pruning and drops keep working)
-      val curProps = propertiesOf(spark, root, cur)
+      val curProps = propertiesOf(spark, cur)
       val partRenamed = curProps.get(PartitionByProp) match {
         case Some(specStr) if specStr.split(',').contains(from) =>
           curProps.updated(PartitionByProp,
@@ -4825,12 +4670,12 @@ object VersionedTable {
       val specAdjusted = Bucketing.dropSpecIfKey(gensRenamed, from)
       val renamedProps =
         if (specAdjusted == curProps) None else Some(specAdjusted)
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, root, cur),
+      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, cur),
         recordSchema = Some(newSchema),
         recordProperties = renamedProps,
-        recordMapping = Some((newMapping, retiredPhysicals(spark, root, cur))),
+        recordMapping = Some((newMapping, retiredPhysicals(spark, cur))),
         recordInfo = Map("operation" -> "rename-column",
           ChangesFormKey -> "none") ++
           Bucketing.stampOf(specAdjusted))
@@ -4846,14 +4691,14 @@ object VersionedTable {
     * column or one a CHECK constraint references. */
   def dropColumn(spark: SparkSession, root: String, name: String): Long =
     occRetry(spark, root) { cur =>
-      require(!partitionColumnsOf(spark, root, cur).contains(name),
+      require(!partitionColumnsOf(spark, cur).contains(name),
         s"$name is a partition column of $root — the layout depends on it; " +
           "repartition via a full rewrite before dropping")
       // generated-column references: dropping the GENERATED column or a
       // generator's BASE would leave an unsatisfiable immutable
       // definition — every later commit would fail resolving it (and the
       // definitions cannot be unset), so refuse up front
-      GeneratedCols.of(propertiesOf(spark, root, cur)).foreach { case (c, g) =>
+      GeneratedCols.of(propertiesOf(spark, cur)).foreach { case (c, g) =>
         require(!c.equalsIgnoreCase(name),
           s"$name is a generated column of $root ($c = ${g.text}); its " +
             "definition is fixed at birth — repartition via a full rewrite")
@@ -4861,32 +4706,32 @@ object VersionedTable {
           s"$name is the base of generated column $c = ${g.text} — " +
             "dropping it would leave the generator unsatisfiable")
       }
-      val schema = schemaOf(spark, root, cur)
+      val schema = schemaOf(spark, cur)
       require(schema.fieldNames.contains(name),
         s"no column $name in $root (columns: ${schema.fieldNames.mkString(", ")})")
       require(schema.size > 1, s"cannot drop the last column of $root")
-      val broken = constraintsMentioning(spark, root, cur, name)
+      val broken = constraintsMentioning(spark, cur, name)
       require(broken.isEmpty,
         s"CHECK constraint(s) ${broken.mkString(", ")} reference $name — " +
           "drop them before dropping the column")
-      val mapping = columnMapping(spark, root, cur)
+      val mapping = columnMapping(spark, cur)
       val phys = physicalName(mapping, name)
       val newSchema = org.apache.spark.sql.types.StructType(
         schema.filterNot(_.name == name))
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, root, cur),
+      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, cur),
         recordSchema = Some(newSchema),
         recordProperties = Some(Bucketing.dropSpecIfKey(
-          propertiesOf(spark, root, cur), name)),
+          propertiesOf(spark, cur), name)),
         recordMapping = Some((mapping - name,
-          retiredPhysicals(spark, root, cur) + phys)),
+          retiredPhysicals(spark, cur) + phys)),
         recordInfo = Map("operation" -> "drop-column",
           ChangesFormKey -> "none") ++
           Bucketing.stampOf(Bucketing.dropSpecIfKey(
-            propertiesOf(spark, root, cur), name)))
+            propertiesOf(spark, cur), name)))
     }
 
   /** `SHOW PARTITIONS`: the current snapshot's live partition tuples —
@@ -4899,17 +4744,16 @@ object VersionedTable {
     * manifest operation; zero data I/O. */
   def partitions(
       spark: SparkSession, root: String): Seq[(String, Int, Long)] = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val spec = partitionColumnsOf(spark, root, v)
+    val snap = latestOrFail(spark, root)
+    val spec = partitionColumnsOf(spark, snap)
     require(spec.nonEmpty,
       s"SHOW PARTITIONS is only defined on partitioned tables — " +
         s"$root records no $PartitionByProp")
-    val reverse = columnMapping(spark, root, v).map(_.swap)
+    val reverse = columnMapping(spark, snap).map(_.swap)
     val sizes =
-      try fileSizes(spark, root, v)
+      try fileSizes(spark, snap)
       catch { case _: Exception => Map.empty[String, Long] }
-    dataFileRefs(spark, root, v)
+    dataFileRefs(spark, snap)
       .map { r =>
         val raw = partRawValues(r, reverse, spec.toSet)
         val rendered = spec.map { c =>
@@ -4931,20 +4775,20 @@ object VersionedTable {
     * Delta shape): metadata-only, no data read. Row layout matches
     * [[org.apache.spark.sql.graft.GraftDetailCommand]]. */
   def detail(spark: SparkSession, root: String): org.apache.spark.sql.Row = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val refs = dataFileRefs(spark, root, v)
+    val snap = latestOrFail(spark, root)
+    val v = snap.version
+    val refs = dataFileRefs(spark, snap)
     val ledger = copyLedger(spark, root, v).map(_.count()).getOrElse(0L)
     org.apache.spark.sql.Row(
-      root, v, refs.size, snapshotBytes(spark, root, v),
-      schemaOf(spark, root, v).size,
-      columnMapping(spark, root, v).size,
-      constraintsOf(spark, root, v).size,
-      propertiesOf(spark, root, v).size,
-      hasDeletionVectors(spark, root, v),
+      root, v, refs.size, snapshotBytes(spark, snap),
+      schemaOf(spark, snap).size,
+      columnMapping(spark, snap).size,
+      constraintsOf(spark, snap).size,
+      propertiesOf(spark, snap).size,
+      hasDeletionVectors(spark, snap),
       ledger,
       versions(spark, root).size,
-      protocolOf(spark, root, v)._1.toSeq.sorted.mkString(","),
+      protocolOf(spark, snap)._1.toSeq.sorted.mkString(","),
       // metadata-only, per this function's contract: the ANN drift probe
       // reads data (sampled brute-force recall) so DESCRIBE DETAIL skips
       // it — MAINTAIN [DRY RUN] is the face that measures everything
@@ -5023,28 +4867,28 @@ object VersionedTable {
       overlapFloor: Double = 2.0,
       keepVersions: Int = 96,
       measureAnnDrift: Boolean = true): MaintenanceReport = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val refs = dataFileRefs(spark, root, v)
+    val snap = latestOrFail(spark, root)
+    val v = snap.version
+    val refs = dataFileRefs(spark, snap)
     // commit-recorded sizes (AddFile shape) — NOT a per-file stat walk;
     // legacy vintages resolve via one distributed job ([[fileSizes]])
-    val sizeOf = fileSizes(spark, root, v)
+    val sizeOf = fileSizes(spark, snap)
     // a ref with no resolvable size (cross-store legacy clone, dead
     // source) counts as unsized rather than failing the report
     val sizes = refs.flatMap(sizeOf.get)
     val tableBytes = sizes.sum
-    val dvBytes = dvBytesOf(spark, root, v)
+    val dvBytes = dvBytesOf(spark, snap)
     val dvFraction =
       if (tableBytes == 0L) (if (dvBytes > 0) 1.0 else 0.0)
       else dvBytes.toDouble / tableBytes
     val small = sizes.count(_ < targetFileBytes / 2)
     val smallFraction = if (refs.isEmpty) 0.0 else small.toDouble / refs.size
-    val clusteredBy = propertiesOf(spark, root, v).get(ClusteredByProp)
+    val clusteredBy = propertiesOf(spark, snap).get(ClusteredByProp)
       .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
     val overlap = clusteredBy.headOption.map { lead =>
-      val phys = physicalName(columnMapping(spark, root, v), lead)
+      val phys = physicalName(columnMapping(spark, snap), lead)
       rangeOverlapMetric(
-        statsOf(spark, root, v),
+        statsOf(spark, snap),
         phys)
     }.getOrElse(0.0)
     val ledgerDepth = copyLedgerDepth(spark, root, v)
@@ -5072,7 +4916,7 @@ object VersionedTable {
     // MATERIALIZED VIEWS and this report can never drift; it degrades a
     // vanished source or corrupted property to 0, the tick's rule.
     val mvBehind =
-      if (!propertiesOf(spark, root, v).contains(AggReplica.MvSourceProp)) 0L
+      if (!propertiesOf(spark, snap).contains(AggReplica.MvSourceProp)) 0L
       else try AggReplica.versionsBehind(spark, root)
       catch { case _: Exception => 0L }
     if (mvBehind > 0) recs += s"refresh_view:$mvBehind"
@@ -5214,20 +5058,17 @@ object VersionedTable {
     * and user annotations, carried by every commit path like the schema
     * and constraints. Empty for versions before any [[setProperties]]. */
   def propertiesOf(
-      spark: SparkSession, root: String, v: Long): Map[String, String] = {
-    val g = groupedMetaOf(spark, root, v)
-    if (g.nonEmpty) groupedSection(g, GroupedPropPrefix)
-    else readVersionProps(spark, root, v,
-      new Path(new Path(dataDir(spark, root, v), "_properties"),
-        "table.properties"))
-  }
+      spark: SparkSession, root: String, v: Long): Map[String, String] =
+    propertiesOf(spark, snapshotAt(spark, root, v))
+
+  private[graft] def propertiesOf(spark: SparkSession, s: Snapshot): Map[String, String] =
+    metaSection(spark, s, GroupedPropPrefix, "_properties/table.properties")
 
   /** Convenience: a boolean property of the CURRENT version (false when
     * unset, the table is empty, or the value isn't `true`). */
   def boolProperty(spark: SparkSession, root: String, key: String): Boolean =
-    currentVersion(spark, root)
-      .exists(v => propertiesOf(spark, root, v).get(key).exists(_.trim
-        .equalsIgnoreCase("true")))
+    latest(spark, root)
+      .exists(propertiesOf(spark, _).get(key).exists(_.trim.equalsIgnoreCase("true")))
 
   /** SET table properties (merge semantics, as `ALTER TABLE ... SET
     * TBLPROPERTIES`): a metadata-only commit carrying every data file by
@@ -5239,21 +5080,21 @@ object VersionedTable {
       // the partition spec shapes the physical layout of every committed
       // file — flipping it via a metadata-only property write would leave
       // files that disagree with it; the spec is set at table birth only
-      val curSpec = propertiesOf(spark, root, cur).get(PartitionByProp)
+      val curSpec = propertiesOf(spark, cur).get(PartitionByProp)
       require(!props.contains(PartitionByProp) ||
         props.get(PartitionByProp) == curSpec,
         s"$PartitionByProp is fixed at table birth (commit(partitionBy=...)); " +
           "it cannot be changed through setProperties")
       // load-bearing for reads of a converted table's original files
       // (partition values synthesize from paths only while it's set)
-      val curHive = propertiesOf(spark, root, cur).get(HivePartitionedProp)
+      val curHive = propertiesOf(spark, cur).get(HivePartitionedProp)
       require(!props.contains(HivePartitionedProp) ||
         props.get(HivePartitionedProp) == curHive,
         s"$HivePartitionedProp is set by CONVERT TO GRAFT only; " +
           "it cannot be changed through setProperties")
       // a generator governs committed data (population + layout): a
       // post-birth change would disagree with every existing file
-      val curProps = propertiesOf(spark, root, cur)
+      val curProps = propertiesOf(spark, cur)
       props.keys.filter(_.startsWith(GeneratedCols.Prefix)).foreach { k =>
         require(curProps.get(k).contains(props(k)),
           s"$k is fixed at table birth (commit(recordProperties=...)); " +
@@ -5284,7 +5125,7 @@ object VersionedTable {
         s"${GeneratedCols.IdentityHighPrefix}* advances only through " +
           "identity-allocating commits; it cannot be set directly")
       metadataOnlyCommit(spark, root, cur,
-        recordProperties = Some(propertiesOf(spark, root, cur) ++ props),
+        recordProperties = Some(propertiesOf(spark, cur) ++ props),
         op = "set-properties")
     }
   }
@@ -5315,7 +5156,7 @@ object VersionedTable {
         "cannot be unset")
     occRetry(spark, root) { cur =>
       metadataOnlyCommit(spark, root, cur,
-        recordProperties = Some(propertiesOf(spark, root, cur) -- keys),
+        recordProperties = Some(propertiesOf(spark, cur) -- keys),
         op = "unset-properties")
     }
   }
@@ -5324,49 +5165,26 @@ object VersionedTable {
     * (and structurally [[addConstraint]]/[[evolveSchema]]): zero fresh
     * rows, every file by reference, one recorded-metadata change. */
   private def metadataOnlyCommit(
-      spark: SparkSession, root: String, cur: Long,
+      spark: SparkSession, root: String, cur: Snapshot,
       recordProperties: Option[Map[String, String]] = None,
       recordConstraints: Option[Map[String, String]] = None,
       op: String = "metadata"): Long = {
-    val schema = schemaOf(spark, root, cur)
+    val schema = schemaOf(spark, cur)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    commitCowInternal(empty, root, cur, dataFileRefs(spark, root, cur),
+    commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
       Map.empty, Nil, // metadata-only: virtual zero-row feed
       preCommit = occValidate(spark, root, cur),
       recordSchema = Some(schema),
       recordConstraints = recordConstraints,
       recordProperties = recordProperties,
       recordInfo = Map("operation" -> op, ChangesFormKey -> "none") ++
-        Bucketing.carryStamp(spark, root, cur))
+        Bucketing.carryStamp(spark, cur))
   }
 
   /** java-Properties file read shared by constraints and table
     * properties — Properties handles escaping, so arbitrary expression
     * strings round-trip. */
-  /** Version-pinned sidecar properties, MEMOIZED on the marker identity
-    * (the [[commitTimeOf]] key discipline: sidecars are immutable once
-    * the version publishes — they rode the staging rename BEFORE the
-    * marker landed — and a table recreated at the same root mid-JVM
-    * changes the identity, so the memo re-reads). The commit path reads
-    * the same properties/constraints/mapping several times per commit;
-    * un-memoized, each read is an exists + open + parse — 2–3 round
-    * trips per call on an object store, one stat per hit here. */
-  private val versionPropsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, String), Map[String, String]]()
-  private def readVersionProps(
-      spark: SparkSession, root: String, v: Long, p: Path)
-      : Map[String, String] = {
-    val key = (root, v, markerIdentity(spark, root, v), p.toString)
-    val got = versionPropsMemo.get(key)
-    if (got != null) got
-    else {
-      val m = readProps(spark, p)
-      memoPut(versionPropsMemo, key, m)
-      m
-    }
-  }
-
   private def readProps(spark: SparkSession, p: Path): Map[String, String] = {
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // open directly and treat absent as empty: the exists() probe this
@@ -5400,13 +5218,11 @@ object VersionedTable {
     * `c IS NOT NULL`). Empty for versions committed before any
     * [[addConstraint]]. */
   def constraintsOf(
-      spark: SparkSession, root: String, v: Long): Map[String, String] = {
-    val g = groupedMetaOf(spark, root, v)
-    if (g.nonEmpty) groupedSection(g, GroupedCheckPrefix)
-    else readVersionProps(spark, root, v,
-      new Path(new Path(dataDir(spark, root, v), "_constraints"),
-        "constraints.properties"))
-  }
+      spark: SparkSession, root: String, v: Long): Map[String, String] =
+    constraintsOf(spark, snapshotAt(spark, root, v))
+
+  private def constraintsOf(spark: SparkSession, s: Snapshot): Map[String, String] =
+    metaSection(spark, s, GroupedCheckPrefix, "_constraints/constraints.properties")
 
   /** Thrown when a staged write violates an active CHECK constraint, or
     * [[addConstraint]] finds existing rows the new constraint rejects.
@@ -5451,10 +5267,10 @@ object VersionedTable {
     require(name.nonEmpty && name.forall(ch => ch.isLetterOrDigit || ch == '_'),
       s"constraint name must be alphanumeric/underscore: $name")
     occRetry(spark, root) { cur =>
-      val existing = constraintsOf(spark, root, cur)
+      val existing = constraintsOf(spark, cur)
       require(!existing.contains(name),
         s"constraint $name already exists on $root (drop it first)")
-      enforceConstraints(spark, readVersion(spark, root, cur),
+      enforceConstraints(spark, readVersion(spark, cur),
         Map(name -> checkExpr), root)
       metadataOnlyCommit(spark, root, cur,
         recordConstraints = Some(existing + (name -> checkExpr)),
@@ -5467,7 +5283,7 @@ object VersionedTable {
   def dropConstraint(
       spark: SparkSession, root: String, name: String): Long =
     occRetry(spark, root) { cur =>
-      val existing = constraintsOf(spark, root, cur)
+      val existing = constraintsOf(spark, cur)
       require(existing.contains(name),
         s"no constraint named $name on $root (have: " +
           s"${existing.keys.toSeq.sorted.mkString(", ")})")
@@ -5487,15 +5303,23 @@ object VersionedTable {
     * its footer-inference job. Versions committed before the record
     * existed read with inference, as before. */
   def readExtra(
-      spark: SparkSession, root: String, v: Long, name: String): Option[DataFrame] = {
-    require(isCommitted(spark, root, v), s"version $v is not committed under $root")
-    val p = new Path(dataDir(spark, root, v), s"_$name")
-    if (!fs(spark, root).exists(p)) None
-    else Some(extraSchemaOf(spark, root, v, name) match {
-      case Some(sch) => spark.read.schema(sch).parquet(p.toString)
-      case None => spark.read.parquet(p.toString)
-    })
-  }
+      spark: SparkSession, root: String, v: Long, name: String): Option[DataFrame] =
+    readExtra(spark, snapshotAt(spark, root, v), name)
+
+  /** [[readExtra]] of a resolved snapshot: reads the sidecar's part
+    * files from its listing ([[sidecarOf]]), never the `_`-prefixed dir
+    * itself — Spark would log that it ignored the dir as a root path. */
+  private[graft] def readExtra(
+      spark: SparkSession, s: Snapshot, name: String): Option[DataFrame] =
+    sidecarOf(spark, s, name).map { sc =>
+      // a sidecar without part files (a pre-schema-part vintage) can
+      // only be read as a dir
+      val paths = if (sc.files.nonEmpty) sc.files else Seq(new Path(s.dir, s"_$name").toString)
+      extraSchemaOf(spark, s, name) match {
+        case Some(sch) => spark.read.schema(sch).parquet(paths: _*)
+        case None => spark.read.parquet(paths: _*)
+      }
+    }
 
   // ---- COPY INTO loaded-file ledger (incremental) -------------------------
 
@@ -5517,15 +5341,15 @@ object VersionedTable {
     // intersect the memo with the LIVE listing: vacuumed versions keep
     // their cached classification but must not be read (their barriers
     // are covered by a surviving fold — the vacuum guard's invariant)
-    val live = versions(spark, root)
+    val live = snapshots(spark, root)
     val scan = ledgerClassify(spark, root, live)
-    val liveLe = live.filter(_ <= v).toSet
-    val barrier = (scan.barriers & liveLe).maxOption
+    val liveLe = live.filter(_.version <= v).map(s => s.version -> s).toMap
+    val barrier = (scan.barriers & liveLe.keySet).maxOption
     val floor = barrier.getOrElse(0L)
-    val deltas = (scan.deltas & liveLe).filter(_ > floor).toSeq.sorted
+    val deltas = (scan.deltas & liveLe.keySet).filter(_ > floor).toSeq.sorted
     val frames =
-      barrier.flatMap(b => readExtra(spark, root, b, "copyfull")).toSeq ++
-        deltas.flatMap(d => readExtra(spark, root, d, "copyfiles"))
+      barrier.flatMap(b => readExtra(spark, liveLe(b), "copyfull")).toSeq ++
+        deltas.flatMap(d => readExtra(spark, liveLe(d), "copyfiles"))
     if (frames.isEmpty) None
     else Some(frames.reduce(_.unionByName(_)).select("file").distinct())
   }
@@ -5534,9 +5358,9 @@ object VersionedTable {
     * barrier (or the log's start) — the fold trigger's input. */
   private[graft] def copyLedgerDepth(
       spark: SparkSession, root: String, v: Long): Int = {
-    val live = versions(spark, root)
+    val live = snapshots(spark, root)
     val scan = ledgerClassify(spark, root, live)
-    val liveLe = live.filter(_ <= v).toSet
+    val liveLe = live.map(_.version).filter(_ <= v).toSet
     (scan.barriers & liveLe).maxOption match {
       case Some(b) => liveLe.count(_ > b) + 1
       case None => liveLe.size
@@ -5557,21 +5381,20 @@ object VersionedTable {
   private val ledgerScans =
     new java.util.concurrent.ConcurrentHashMap[String, LedgerScan]()
   private def ledgerClassify(
-      spark: SparkSession, root: String, listed: Seq[Long]): LedgerScan = {
+      spark: SparkSession, root: String, listed: Seq[Snapshot]): LedgerScan = {
     val prev = Option(ledgerScans.get(root))
       .getOrElse(LedgerScan(Set.empty, Set.empty, Set.empty))
-    val unprobed = listed.filterNot(prev.probed)
+    val unprobed = listed.filterNot(s => prev.probed(s.version))
     if (unprobed.isEmpty) prev
     else {
       val f = fs(spark, root)
       var barriers = prev.barriers
       var deltas = prev.deltas
-      unprobed.foreach { v =>
-        val dir = dataDir(spark, root, v)
-        if (f.exists(new Path(dir, "_copyfull"))) barriers += v
-        else if (f.exists(new Path(dir, "_copyfiles"))) deltas += v
+      unprobed.foreach { s =>
+        if (f.exists(new Path(s.dir, "_copyfull"))) barriers += s.version
+        else if (f.exists(new Path(s.dir, "_copyfiles"))) deltas += s.version
       }
-      val next = LedgerScan(prev.probed ++ unprobed, barriers, deltas)
+      val next = LedgerScan(prev.probed ++ unprobed.map(_.version), barriers, deltas)
       ledgerScans.put(root, next)
       next
     }
@@ -5586,13 +5409,13 @@ object VersionedTable {
     * when the table has no ledger. */
   def foldCopyLedger(spark: SparkSession, root: String): Long =
     occRetry(spark, root) { cur =>
-      copyLedger(spark, root, cur) match {
-        case None => cur
+      copyLedger(spark, root, cur.version) match {
+        case None => cur.version
         case Some(folded) =>
-          val schema = schemaOf(spark, root, cur)
+          val schema = schemaOf(spark, cur)
           val empty = spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          commitCowInternal(empty, root, cur, dataFileRefs(spark, root, cur),
+          commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
             // materialize BEFORE committing: the fold reads extras of
             // versions a concurrent vacuum could be dropping mid-write
             Map("copyfull" -> folded.localCheckpoint(eager = true)),
@@ -5621,8 +5444,8 @@ object VersionedTable {
     import org.apache.spark.sql.functions.col
     val ckpt = readCheckpoint(spark, root)
     val from = ckpt.map(_.version).getOrElse(0L)
-    versions(spark, root).filter(_ > from).sorted.reverse.iterator
-      .flatMap(v => txnStampsOf(spark, root, v).get(appId))
+    snapshots(spark, root, _ > from).reverseIterator
+      .flatMap(txnStampsOf(spark, _).get(appId))
       .nextOption()
       .orElse(ckpt.flatMap(_.txns.get(appId)))
   }
@@ -5641,14 +5464,14 @@ object VersionedTable {
     * rows in range): nothing reads the snapshots themselves. */
   def readChanges(
       spark: SparkSession, root: String, fromV: Long, toV: Long): DataFrame = {
-    val vs = versions(spark, root).filter(v => v >= fromV && v <= toV)
+    val vs = snapshots(spark, root, v => v >= fromV && v <= toV)
     require(vs.nonEmpty, s"no committed versions in [$fromV, $toV] under $root")
     // DATA-LOSS GUARD: a version in range that vacuum dropped (tombstoned
     // AND no longer committed) means this consumer's feed is incomplete —
     // raise instead of silently skipping it. Claim-number gaps (versions
     // never published) are NOT in the ledger and pass through as always.
     val lost = vacuumedVersions(spark, root)
-      .filter(v => v >= fromV && v <= toV) -- vs
+      .filter(v => v >= fromV && v <= toV) -- vs.map(_.version)
     if (lost.nonEmpty)
       throw new java.io.IOException(
         s"change feed [$fromV, $toV] under $root lost version(s) " +
@@ -5656,17 +5479,18 @@ object VersionedTable {
           "retention (olderThanMs/keepLast) to cover the slowest consumer, " +
           s"or restart the consumer from earliestFeedStart = " +
           s"${earliestFeedStart(spark, root)}")
-    val frames = vs.map { v =>
+    val frames = vs.map { s =>
       // PROTOCOL GATE on the feed too: a version requiring an unknown
       // future feature must not serve its change feed either (a future
-      // feature could alter the feed's encoding). Cheap — the probe is
-      // memoized per JVM, so the tail pays one file read per version ever.
-      assertReadable(spark, root, v)
-      val df = readExtra(spark, root, v, "changes")
-        .orElse(syntheticChanges(spark, root, v))
+      // feature could alter the feed's encoding). Cheap — a passed gate
+      // is held in the snapshot, so the tail pays one file read per
+      // version ever.
+      assertReadable(spark, s)
+      val df = readExtra(spark, s, "changes")
+        .orElse(syntheticChanges(spark, s))
         .getOrElse(throw new java.io.IOException(
-          s"version $v under $root has no change feed — feed range is incomplete"))
-      df.withColumn("_commit_version", org.apache.spark.sql.functions.lit(v))
+          s"version ${s.version} under $root has no change feed — feed range is incomplete"))
+      df.withColumn("_commit_version", org.apache.spark.sql.functions.lit(s.version))
     }
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -5730,32 +5554,31 @@ object VersionedTable {
     * deletion vectors / a txn stamp, and the recorded schema width.
     * O(retained versions) driver work, newest first. */
   def history(spark: SparkSession, root: String): DataFrame = {
-    // ONE checkpoint read covers every checkpointed version's bytes —
-    // the per-version snapshotBytes road (which also consults the
-    // checkpoint) would re-read the file once per history row
-    val ckptBytes = readCheckpoint(spark, root).map(_.bytes)
-      .getOrElse(Map.empty[Long, Long])
-    val rows = versions(spark, root).sorted.reverse.map { v =>
-      val refs = dataFileRefs(spark, root, v)
-      val ownPrefix = dataDirName(spark, root, v) + "/"
+    // at most ONE checkpoint read covers every checkpointed version's
+    // bytes not yet held in its snapshot — the per-version road would
+    // re-read the file once per history row
+    lazy val ckptBytes = readCheckpoint(spark, root).map(_.bytes)
+    val rows = snapshots(spark, root).reverse.map { s =>
+      val refs = dataFileRefs(spark, s)
+      val ownPrefix = s.dirName + "/"
       val fresh = refs.count(_.startsWith(ownPrefix))
       // the commitinfo operation stamp (Delta's commitInfo.operation);
       // "" for pre-stamp vintages and unstamped paths
-      val info = commitInfoOf(spark, root, v)
-      (v,
-        new java.sql.Timestamp(commitTimeOf(spark, root, v)),
+      val info = commitInfoOf(spark, s)
+      (s.version,
+        new java.sql.Timestamp(s.commitTime),
         info.getOrElse("operation", ""),
         refs.size,
-        ckptBytes.getOrElse(v, snapshotBytes(spark, root, v, Some(ckptBytes))),
+        snapshotBytes(spark, s, ckptBytes),
         fresh, refs.size - fresh,
         // the same answer readChanges serves: sidecar OR virtual feed
-        hasChangeFeed(spark, root, v),
+        hasChangeFeed(spark, s),
         // chain-aware: a delta-form version's mask may live in its own
         // `_dvdelta` or ride the chain with no sidecar at all — the
         // introspection face must agree with what dvOf/readVersion serve
-        hasDeletionVectors(spark, root, v),
-        hasTxnStamps(spark, root, v),
-        tableSchema(spark, root, v).map(_.size).getOrElse(-1))
+        hasDeletionVectors(spark, s),
+        hasTxnStamps(spark, s),
+        tableSchema(spark, s).map(_.size).getOrElse(-1))
     }
     import spark.implicits._
     rows.toDF("version", "committed_at", "operation", "files", "bytes",
@@ -5810,38 +5633,35 @@ object VersionedTable {
   def restore(spark: SparkSession, root: String, toVersion: Long,
       changeFeed: Boolean = true): Long =
     occRetry(spark, root) { cur =>
-      require(isCommitted(spark, root, toVersion),
-        s"version $toVersion is not committed under $root")
-      if (toVersion == cur) cur
+      val tgt = snapshotAt(spark, root, toVersion)
+      if (toVersion == cur.version) cur.version
       else {
         val f = fs(spark, root)
-        val tgtRefs = dataFileRefs(spark, root, toVersion)
+        val tgtRefs = dataFileRefs(spark, tgt)
         val missing = tgtRefs.filterNot(r => f.exists(new Path(root, r)))
         if (missing.nonEmpty) throw new java.io.IOException(
           s"cannot restore $root to v$toVersion: ${missing.size} of its " +
             s"data files were vacuumed (e.g. ${missing.take(3).mkString(", ")})")
-        val schema = schemaOf(spark, root, toVersion)
+        val schema = schemaOf(spark, tgt)
         val empty = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         val extras =
           // folded: the restore commit re-records the target's complete
           // mask as its own full-form sidecar, whatever form the target
           // stored it in (its chain may be vacuumed away later)
-          dvOf(spark, root, toVersion).map("dv" -> _).toMap ++
+          dvOf(spark, tgt).map("dv" -> _).toMap ++
             (if (!changeFeed) Map.empty[String, DataFrame]
              else Map("changes" ->
-               restoreFeed(spark, root, cur, toVersion, schema)))
+               restoreFeed(spark, root, cur, tgt, schema)))
         // the target's stats carry forward re-keyed, exactly as
         // commitCowInternal carries a kept file's rows
-        val tgtKeyed: Map[String, String] = manifestOf(spark, root, toVersion)
+        val tgtKeyed: Map[String, String] = manifestOf(spark, tgt)
           .map(_.map(r => r -> r).toMap)
-          .getOrElse(dataFileRels(f, dataDir(spark, root, toVersion))
-            .map { case (_, rel) => (dataDirName(spark, root, toVersion) + "/" + rel) -> rel }
-            .toMap)
-        val tgtStats = statsOf(spark, root, toVersion)
+          .getOrElse(tgtRefs.map(r => r -> r.stripPrefix(tgt.dirName + "/")).toMap)
+        val tgtStats = statsOf(spark, tgt)
         commitWith(empty, root, collectStats = false, extras = extras,
           recordInfo = Map("operation" -> "restore") ++
-            Bucketing.carryStamp(spark, root, cur),
+            Bucketing.carryStamp(spark, cur),
           finalizeVersion = (fh, dir, v) => {
             val rows = tgtRefs.flatMap { r =>
               tgtStats.getOrElse(tgtKeyed(r), Map.empty).toSeq
@@ -5854,7 +5674,7 @@ object VersionedTable {
             // the restored snapshot's sizes are the target's, re-carried
             // (derived optimization — never blocks the restore)
             try {
-              val tgtSizes = fileSizes(spark, root, toVersion)
+              val tgtSizes = fileSizes(spark, tgt)
               FileSizes.append(fh, dir, tgtRefs.map(r => r -> tgtSizes(r)))
             } catch {
               case e: Exception =>
@@ -5871,23 +5691,23 @@ object VersionedTable {
           // target's constraints and properties are re-recorded (a
           // current-version CHECK referencing a column the restored
           // schema lacks would otherwise fail every subsequent write)
-          recordConstraints = Some(constraintsOf(spark, root, toVersion)),
-          recordProperties = Some(propertiesOf(spark, root, toVersion)),
+          recordConstraints = Some(constraintsOf(spark, tgt)),
+          recordProperties = Some(propertiesOf(spark, tgt)),
           // the restored snapshot reads under ITS mapping; retired names
           // union so a post-restore add can't collide with either era
-          recordMapping = Some((columnMapping(spark, root, toVersion),
-            retiredPhysicals(spark, root, toVersion) ++
-              retiredPhysicals(spark, root, cur))))
+          recordMapping = Some((columnMapping(spark, tgt),
+            retiredPhysicals(spark, tgt) ++
+              retiredPhysicals(spark, cur))))
       }
     }
 
   /** The file-granular change feed of [[restore]] — see its doc. */
   private def restoreFeed(
-      spark: SparkSession, root: String, cur: Long, tgt: Long,
+      spark: SparkSession, root: String, cur: Snapshot, tgt: Snapshot,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val curRefs = dataFileRefs(spark, root, cur)
-    val tgtRefs = dataFileRefs(spark, root, tgt)
+    val curRefs = dataFileRefs(spark, cur)
+    val tgtRefs = dataFileRefs(spark, tgt)
     val curSet = curRefs.toSet; val tgtSet = tgtRefs.toSet
     val shared = curRefs.filter(tgtSet)
     // one feed schema — the restored (target) one — even across a
@@ -5897,18 +5717,18 @@ object VersionedTable {
       df.select(schema.map(sf =>
         if (df.columns.contains(sf.name)) col(sf.name).cast(sf.dataType).as(sf.name)
         else lit(null).cast(sf.dataType).as(sf.name)): _*)
-    def dvFrameOf(v: Long): DataFrame = VersionedTable.dvOf(spark, root, v)
+    def dvFrameOf(v: Snapshot): DataFrame = dvOf(spark, v)
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], DvSchema))
     val curDv = dvFrameOf(cur); val tgtDv = dvFrameOf(tgt)
     var parts = List.empty[DataFrame]
     val tgtOnly = tgtRefs.filterNot(curSet)
     if (tgtOnly.nonEmpty)
-      parts ::= project(readFilesOf(spark, root, tgt, tgtOnly))
+      parts ::= project(readFilesOf(spark, tgt, tgtOnly))
         .withColumn("_change_type", lit("insert"))
     val curOnly = curRefs.filterNot(tgtSet)
     if (curOnly.nonEmpty)
-      parts ::= project(readFilesOf(spark, root, cur, curOnly))
+      parts ::= project(readFilesOf(spark, cur, curOnly))
         .withColumn("_change_type", lit("delete"))
     if (shared.nonEmpty) {
       // mask diffs on shared files: rows masked now but not at the target
@@ -5923,19 +5743,19 @@ object VersionedTable {
       // join itself is size-gated like every DV fold ([[dvMaskSide]]) —
       // the diffs are subsets of the cumulative vectors, so their upper
       // bound is the larger sidecar's bytes
-      val dvSize = math.max(dvBytesOf(spark, root, cur),
-        dvBytesOf(spark, root, tgt))
+      val dvSize = math.max(dvBytesOf(spark, cur),
+        dvBytesOf(spark, tgt))
       def rowsAt(positions: DataFrame, ct: String): Option[DataFrame] = {
         val files = positions.select("file").distinct()
           .collect().map(_.getString(0)).toSeq
         if (files.isEmpty) None
         else {
-          val raw = toLogical(synthHiveParts(spark, root, tgt,
-            versionReader(spark, root, tgt)
+          val raw = toLogical(synthHiveParts(spark, tgt,
+            versionReader(spark, tgt)
               .parquet(files.map(r => new Path(root, r).toString): _*))
             .withColumn("__dv_file", fileRefCol)
             .withColumn("__dv_pos", col("_metadata.row_index")),
-            columnMapping(spark, root, tgt))
+            columnMapping(spark, tgt))
           Some(project(raw.join(dvMaskSide(spark, positions, dvSize),
             Seq("__dv_file", "__dv_pos"), "inner"))
             .withColumn("_change_type", lit(ct)))
@@ -5965,36 +5785,32 @@ object VersionedTable {
     * the driver NEVER walks O(files) metadata serially — the walk this
     * replaces was ~800k RPCs per maintenance tick at 100 TB / 128 MiB. */
   private[graft] def fileSizes(
-      spark: SparkSession, root: String, v: Long): Map[String, Long] = {
-    val refs = dataFileRefs(spark, root, v)
-    val recorded = recordedSizes(spark, root, v)
+      spark: SparkSession, root: String, v: Long): Map[String, Long] =
+    fileSizes(spark, snapshotAt(spark, root, v))
+
+  private[graft] def fileSizes(spark: SparkSession, s: Snapshot): Map[String, Long] = {
+    val refs = dataFileRefs(spark, s)
+    val recorded = recordedSizes(spark, s)
     val missing = refs.filterNot(recorded.contains)
     if (missing.isEmpty) refs.map(r => r -> recorded(r)).toMap
     else {
       // a ref statRefs couldn't resolve (cross-store clone whose source
       // is unreachable) degrades to unsized — one dead legacy ref must
       // not fail the whole maintenance tick
-      val resolved = FileSizes.statRefs(spark, root, missing)
+      val resolved = FileSizes.statRefs(spark, s.root, missing)
       refs.flatMap(r => recorded.get(r).orElse(resolved.get(r)).map(r -> _)).toMap
     }
   }
 
-  /** Total data bytes of version `v`, manifest-aware (a COW snapshot's
-    * bytes live partly in earlier version dirs). MEMOIZED like
-    * [[extraBytesMemo]] (one Long per version, keyed on the commit
-    * marker's mtime): a published snapshot's bytes are immutable, and
-    * `DESCRIBE HISTORY` on a PRE-UPGRADE table (no recorded `_sizes` for
-    * old versions — they never heal) would otherwise re-run the
-    * distributed stat fallback for every version on every call. */
-  private val snapshotBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
-
-  private def snapshotBytes(spark: SparkSession, root: String, v: Long,
-      ckptBytes: Option[Map[Long, Long]] = None): Long = {
-    val key = (root, v, markerIdentity(spark, root, v))
-    val got = snapshotBytesMemo.get(key)
-    if (got != null) got.longValue()
-    else {
+  /** Total data bytes of version `s`, manifest-aware (a COW snapshot's
+    * bytes live partly in earlier version dirs). Held in the snapshot:
+    * a published snapshot's bytes are immutable, and `DESCRIBE HISTORY`
+    * on a PRE-UPGRADE table (no recorded `_sizes` for old versions —
+    * they never heal) would otherwise re-run the distributed stat
+    * fallback for every version on every call. */
+  private def snapshotBytes(spark: SparkSession, s: Snapshot,
+      ckptBytes: => Option[Map[Long, Long]] = None): Long =
+    s.memo("bytes") {
       // CHECKPOINT-FIRST (the txn-mark pattern): a covered version's
       // bytes come from the one checkpoint file — a cold DESCRIBE
       // HISTORY over a deep log reads the checkpoint + the short tail,
@@ -6003,14 +5819,11 @@ object VersionedTable {
       // holding the parsed checkpoint passes it via `ckptBytes` so a
       // per-version loop (history's tail) doesn't re-read the file —
       // megabytes at 100k commits — once per miss.
-      val bytes = ckptBytes
-        .orElse(readCheckpoint(spark, root).map(_.bytes))
-        .flatMap(_.get(v))
-        .getOrElse(fileSizes(spark, root, v).values.sum)
-      memoPut(snapshotBytesMemo, key, java.lang.Long.valueOf(bytes))
-      bytes
+      ckptBytes
+        .orElse(readCheckpoint(spark, s.root).map(_.bytes))
+        .flatMap(_.get(s.version))
+        .getOrElse(fileSizes(spark, s).values.sum)
     }
-  }
 
   /** [[snapshotBytes]]' strict twin for the CHECKPOINT WRITER: the total
     * only when EVERY ref of `v` resolved to a size (recorded or freshly
@@ -6028,16 +5841,16 @@ object VersionedTable {
     * and a ref's size is immutable, so the arithmetic is exact; any
     * unsizable piece falls back to the full road. */
   private def completeSnapshotBytes(
-      spark: SparkSession, root: String, v: Long,
+      spark: SparkSession, s: Snapshot,
       knownBase: Long => Option[Long] = _ => None): Option[Long] =
     try {
       val incremental: Option[Long] =
-        manifestDeltaOf(spark, root, v).flatMap { d =>
+        manifestDeltaOf(spark, s).flatMap { d =>
           knownBase(d.base).flatMap { baseBytes =>
-            val own = FileSizes.load(fs(spark, root), dataDir(spark, root, v))
+            val own = FileSizes.load(fs(spark, s.root), s.dir)
             // appends never touch baseSizes (their adds are their own
             // files); only a ref-removing rewrite pays the base fold
-            lazy val baseSizes = recordedSizes(spark, root, d.base)
+            lazy val baseSizes = recordedSizes(spark, snapshotAt(spark, s.root, d.base))
             def sizeOf(r: String): Option[Long] =
               own.get(r).orElse(baseSizes.get(r))
             val addedSz = d.added.map(sizeOf)
@@ -6048,8 +5861,8 @@ object VersionedTable {
           }
         }
       incremental.orElse {
-        val refs = dataFileRefs(spark, root, v)
-        val sizes = fileSizes(spark, root, v)
+        val refs = dataFileRefs(spark, s)
+        val sizes = fileSizes(spark, s)
         if (refs.forall(sizes.contains)) Some(sizes.values.sum) else None
       }
     } catch { case _: Exception => None }
@@ -6067,15 +5880,15 @@ object VersionedTable {
     * under the OLD physical names cannot coexist in one commit, so
     * there the append conflict stays a (correct) recompute. */
   private def commitLayoutRewrite(
-      spark: SparkSession, root: String, v: Long,
+      spark: SparkSession, root: String, v: Snapshot,
       reshaped: DataFrame, feedSrc: DataFrame,
       bloomCols: Seq[String],
       preCommit: Long => Unit,
       op: String,
       recordProperties: Option[Map[String, String]] = None,
       extraInfo: Map[String, String] = Map.empty): Long = {
-    val mapped = columnMapping(spark, root, v).nonEmpty ||
-      retiredPhysicals(spark, root, v).nonEmpty
+    val mapped = columnMapping(spark, v).nonEmpty ||
+      retiredPhysicals(spark, v).nonEmpty
     if (mapped)
       commit(reshaped, root,
         extras = Map.empty, // layout-only: virtual zero-row feed
@@ -6085,12 +5898,12 @@ object VersionedTable {
         recordInfo = Map("operation" -> op,
           ChangesFormKey -> "none") ++ extraInfo)
     else {
-      val rb = new AppendRebase(spark, root, v)
+      val rb = new AppendRebase(spark, root, v.version)
       commitCowInternal(reshaped, root, v, Nil,
         extras = Map.empty, // layout-only: virtual zero-row feed
         bloomCols = bloomCols,
         preCommit = w => { preCommit(w); rb.validate(w) },
-        recordSchema = Some(schemaOf(spark, root, v)),
+        recordSchema = Some(schemaOf(spark, v)),
         recordProperties = recordProperties,
         rebase = Some(rb),
         recordInfo = Map("operation" -> op,
@@ -6112,12 +5925,12 @@ object VersionedTable {
     // manifest-union ([[commitLayoutRewrite]]); anything else re-reads
     // the new current and redoes the rewrite.
     occRetry(spark, root) { v =>
-      val bytes = snapshotBytes(spark, root, v)
+      val bytes = snapshotBytes(spark, v)
       val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val df = readVersion(spark, root, v)
+      val df = readVersion(spark, v)
       // a partitioned table clusters by its spec so the partitionBy
       // write emits few files per task instead of (tasks x tuples)
-      val pspec = partitionColumnsOf(spark, root, v)
+      val pspec = partitionColumnsOf(spark, v)
         .map(org.apache.spark.sql.functions.col)
       // a BUCKETIZED table compacts WITHIN its layout: the steady MOR
       // merge stream accumulates one small file per touched bucket per
@@ -6127,7 +5940,7 @@ object VersionedTable {
       // so compaction keeps the road. The file count is the layout's
       // bucket count by construction (resizing is a re-bucketize — a
       // workload decision, not maintenance).
-      val spec = Bucketing.specOf(propertiesOf(spark, root, v))
+      val spec = Bucketing.specOf(propertiesOf(spark, v))
       val (reshaped, stamp) = spec match {
         case Some((key, n)) if pspec.isEmpty =>
           Bucketing.relayout(df, key, n)
@@ -6161,12 +5974,12 @@ object VersionedTable {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     // same OCC-rebase discipline as [[compact]]
     occRetry(spark, root) { v =>
-      val bytes = snapshotBytes(spark, root, v)
+      val bytes = snapshotBytes(spark, v)
       val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val df = readVersion(spark, root, v)
+      val df = readVersion(spark, v)
       // partition columns lead the clustering so the partitionBy write
       // stays tuple-contiguous (few files per task)
-      val pspec = partitionColumnsOf(spark, root, v)
+      val pspec = partitionColumnsOf(spark, v)
       val cols = (pspec ++ sortCols.filterNot(pspec.contains))
         .map(org.apache.spark.sql.functions.col)
       commitLayoutRewrite(spark, root, v,
@@ -6177,7 +5990,7 @@ object VersionedTable {
         // decay — and DROP any bucket spec: the user chose the range
         // layout, and a stale spec would put a purity probe (always
         // declining after this rewrite) on every later merge
-        recordProperties = Some(propertiesOf(spark, root, v)
+        recordProperties = Some(propertiesOf(spark, v)
           .updated(ClusteredByProp, sortCols.mkString(","))
           - Bucketing.BucketByProp))
     }
@@ -6203,20 +6016,20 @@ object VersionedTable {
       bloomCols: Seq[String] = Nil): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     occRetry(spark, root) { v =>
-      val (mayMatch, _) = prunedFiles(spark, root, v, predicate)
-      if (mayMatch.isEmpty) v // nothing admitted: no-op, no commit
+      val (mayMatch, _) = prunedFiles(spark, v, predicate)
+      if (mayMatch.isEmpty) v.version // nothing admitted: no-op, no commit
       else {
         val f = fs(spark, root)
         val mayMatchSet = mayMatch.toSet
-        val all = dataFileRefs(spark, root, v)
+        val all = dataFileRefs(spark, v)
         val kept = all.filterNot(r =>
           mayMatchSet(f.makeQualified(new Path(root, r)).toString))
         val touched = all.filterNot(kept.toSet)
-        val sizeOf = fileSizes(spark, root, v)
+        val sizeOf = fileSizes(spark, v)
         val bytes = touched.flatMap(sizeOf.get).sum
         val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val slice = readFilesOf(spark, root, v, touched)
-        val pspec = partitionColumnsOf(spark, root, v)
+        val slice = readFilesOf(spark, v, touched)
+        val pspec = partitionColumnsOf(spark, v)
         val cols = (pspec ++ sortCols.filterNot(pspec.contains))
           .map(org.apache.spark.sql.functions.col)
         // the plain-compaction form on a BUCKETIZED table re-packs the
@@ -6227,7 +6040,7 @@ object VersionedTable {
         // choosing a range layout for the slice; it stays unstamped and
         // the road declines, correctly.
         val spec =
-          if (sortCols.isEmpty) Bucketing.specOf(propertiesOf(spark, root, v))
+          if (sortCols.isEmpty) Bucketing.specOf(propertiesOf(spark, v))
           else None
         val (clustered, stamp) = spec match {
           case Some((key, n)) if pspec.isEmpty =>
@@ -6240,7 +6053,7 @@ object VersionedTable {
         }
         // blind appends landing during the slice rewrite merge in by
         // manifest-union, exactly as the DML COW paths
-        val rb = new AppendRebase(spark, root, v)
+        val rb = new AppendRebase(spark, root, v.version)
         commitCow(clustered, root, kept,
           extras = Map.empty, // layout-only: virtual zero-row feed
           bloomCols = bloomCols,
@@ -6280,7 +6093,7 @@ object VersionedTable {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     // same OCC-rebase discipline as [[compact]]
     occRetry(spark, root) { v =>
-    val df = readVersion(spark, root, v)
+    val df = readVersion(spark, v)
     // equi-depth uses 8 bits: 256 balanced buckets per dimension is far
     // finer than any realistic file count, and keeps the one-pass
     // quantile sketch small; linear keeps the wider spaces (cheap, and
@@ -6308,7 +6121,7 @@ object VersionedTable {
         // table-wide min/max per column: metadata when stats cover the
         // snapshot, else one aggregation pass
         val ranges: Map[String, (Double, Double)] =
-          statsAggregate(spark, root, cols, Some(v)) match {
+          statsAggregate(spark, root, cols, Some(v.version)) match {
             case Some((_, cs)) if cs.forall(c => c.min != null && c.max != null) =>
               cs.map(c => c.column -> (toD(c.min), toD(c.max))).toMap
             case _ =>
@@ -6334,10 +6147,10 @@ object VersionedTable {
           i * cols.size + d))
       }
     }
-    val bytes = snapshotBytes(spark, root, v)
+    val bytes = snapshotBytes(spark, v)
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     // partition columns lead the z-clustering (tuple-contiguous tasks)
-    val pspecZ = partitionColumnsOf(spark, root, v).map(col)
+    val pspecZ = partitionColumnsOf(spark, v).map(col)
     commitLayoutRewrite(spark, root, v,
       df.withColumn("__z", z)
         .repartitionByRange(nFiles, (pspecZ :+ col("__z")): _*)
@@ -6348,7 +6161,7 @@ object VersionedTable {
       // drift measure uses the LEAD column only — still a usable decay
       // signal (fresh z-layout: bounded overlap; append churn: it grows)
       // — and drop any bucket spec, as optimize() does
-      recordProperties = Some(propertiesOf(spark, root, v)
+      recordProperties = Some(propertiesOf(spark, v)
         .updated(ClusteredByProp, cols.mkString(","))
         - Bucketing.BucketByProp))
     }
@@ -6393,7 +6206,9 @@ object VersionedTable {
       dryRun: Boolean = false): Seq[Long] = {
     require(keepLast >= 1, "keepLast must be >= 1")
     val f = fs(spark, root)
-    val all = versions(spark, root)
+    val live = snapshots(spark, root)
+    val all = live.map(_.version)
+    val snap = live.map(s => s.version -> s).toMap
     val candidates = all.dropRight(keepLast)
     // retention window: age = the commit's IN-COMMIT timestamp
     // ([[commitTimeOf]]; marker mtime for pre-upgrade vintages) — a
@@ -6402,12 +6217,12 @@ object VersionedTable {
     val aged = olderThanMs match {
       case Some(ms) =>
         val cutoff = System.currentTimeMillis() - ms
-        candidates.filter(v => commitTimeOf(spark, root, v) <= cutoff)
+        candidates.filter(v => snap(v).commitTime <= cutoff)
       case None => candidates
     }
     // txn-stamp coverage: advance the checkpoint over the whole log, then
     // keep any stamped version the (re-read) checkpoint still doesn't cover
-    def stamped(v: Long) = hasTxnStamps(spark, root, v)
+    def stamped(v: Long) = hasTxnStamps(spark, snap(v))
     val drop =
       if (!aged.exists(stamped)) aged
       else {
@@ -6426,13 +6241,13 @@ object VersionedTable {
     // newest version, survives keepLast >= 1, and covers everything
     // below it — then recompute the drop set once.
     def hasLedger(v: Long) =
-      f.exists(new Path(dataDir(spark, root, v), "_copyfiles")) ||
-        f.exists(new Path(dataDir(spark, root, v), "_copyfull"))
+      f.exists(new Path(snap(v).dir, "_copyfiles")) ||
+        f.exists(new Path(snap(v).dir, "_copyfull"))
     val ledgerDrops = drop.filter(hasLedger)
     if (ledgerDrops.nonEmpty) {
       val survivors = all.filterNot(drop.toSet)
       val covered = survivors.exists(s => s > ledgerDrops.max &&
-        f.exists(new Path(dataDir(spark, root, s), "_copyfull")))
+        f.exists(new Path(snap(s).dir, "_copyfull")))
       if (!covered) {
         foldCopyLedger(spark, root)
         return vacuum(spark, root, keepLast, olderThanMs, dryRun)
@@ -6443,7 +6258,7 @@ object VersionedTable {
     // EVERY retained manifest protect their files
     val dropSet = drop.toSet
     val referenced: Set[String] =
-      all.filterNot(dropSet).flatMap(v => dataFileRefs(spark, root, v)).toSet
+      all.filterNot(dropSet).flatMap(v => dataFileRefs(spark, snap(v))).toSet
     // ORIGINAL (CONVERTed-in-place) files live OUTSIDE version dirs,
     // directly under the table root — once a compaction/rewrite absorbs
     // them, only dropped versions reference them, and the per-version-dir
@@ -6466,7 +6281,7 @@ object VersionedTable {
       }
     }
     val origDropped: Set[String] =
-      drop.flatMap(v => dataFileRefs(spark, root, v)).flatMap(originalRel).toSet
+      drop.flatMap(v => dataFileRefs(spark, snap(v))).flatMap(originalRel).toSet
     val origRetained: Set[String] = referenced.flatMap(originalRel)
     // DELTA-CHAIN SEVERANCE: a retained delta-form version whose BASE is
     // about to drop would lose its fold backbone (the base dir's
@@ -6476,8 +6291,8 @@ object VersionedTable {
     // materializes before its retained dependents, so each check only
     // needs its immediate base. O(severed versions), each one fold.
     all.filterNot(dropSet).sorted.foreach { v =>
-      manifestDeltaOf(spark, root, v).foreach { d =>
-        if (dropSet(d.base)) materializeManifest(spark, root, v)
+      manifestDeltaOf(spark, snap(v)).foreach { d =>
+        if (dropSet(d.base)) materializeManifest(spark, snap(v))
       }
     }
     // tombstone FIRST (see recordVacuumed for why this order is the
@@ -6511,7 +6326,7 @@ object VersionedTable {
     drop.foreach { v =>
       // resolve the data dir BEFORE deleting the marker: the marker's
       // content is what maps a diverged version number to its dir
-      val dirName = dataDirName(spark, root, v)
+      val dirName = snap(v).dirName
       val dir = new Path(root, dirName)
       val prefix = dirName + "/"
       f.delete(new Path(commitDir(root), pad(v)), false)
@@ -6552,24 +6367,18 @@ object VersionedTable {
     // commit protocol — the rename into the version dir happens seconds
     // after the write, never an hour (a conservatively long bound so a
     // genuinely slow in-flight stage on a loaded cluster survives).
-    val stagingRoot = new Path(root, "_staging")
-    if (f.exists(stagingRoot)) {
-      val stale = System.currentTimeMillis() - 60L * 60 * 1000
-      f.listStatus(stagingRoot)
-        .filter(_.getModificationTime <= stale)
-        .foreach(s => f.delete(s.getPath, true))
-    }
+    val stale = System.currentTimeMillis() - 60L * 60 * 1000
+    listOrEmpty(f, new Path(root, "_staging"))
+      .filter(_.getModificationTime <= stale)
+      .foreach(s => f.delete(s.getPath, true))
     // ... and a writer that crashed between writing a marker temp and
     // renaming it leaves `.m*.tmp` garbage in the commit log (ignored by
     // listVersions; swept on the same staleness bound)
-    if (f.exists(commitDir(root))) {
-      val stale = System.currentTimeMillis() - 60L * 60 * 1000
-      f.listStatus(commitDir(root))
-        .filter(s => s.getPath.getName.startsWith(".m") &&
-          s.getPath.getName.endsWith(".tmp") &&
-          s.getModificationTime <= stale)
-        .foreach(s => f.delete(s.getPath, false))
-    }
+    listOrEmpty(f, commitDir(root))
+      .filter(s => s.getPath.getName.startsWith(".m") &&
+        s.getPath.getName.endsWith(".tmp") &&
+        s.getModificationTime <= stale)
+      .foreach(s => f.delete(s.getPath, false))
     drop
   }
 }

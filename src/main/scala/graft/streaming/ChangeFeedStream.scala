@@ -92,15 +92,15 @@ object ChangeFeedStream {
         StructField("_change_type", org.apache.spark.sql.types.StringType) :+
         StructField("_commit_version", LongType)), cur)
     } else {
-      val withFeed = vs.reverse.find(v =>
-        VersionedTable.hasChangeFeed(spark, root, v))
+      val withFeed = VersionedTable.snapshots(spark, root).reverse
+        .find(VersionedTable.hasChangeFeed(spark, _))
         .getOrElse(throw new IllegalArgumentException(
           s"no version under $root carries a change feed — " +
             "write the table with the versioned upsert paths"))
-      val feed = VersionedTable.readExtra(spark, root, withFeed, "changes")
-        .orElse(VersionedTable.syntheticChanges(spark, root, withFeed)).get
+      val feed = VersionedTable.readExtra(spark, withFeed, "changes")
+        .orElse(VersionedTable.syntheticChanges(spark, withFeed)).get
       (StructType(feed.schema.fields.toSeq :+
-        StructField("_commit_version", LongType)), withFeed)
+        StructField("_commit_version", LongType)), withFeed.version)
     }
   }
 }

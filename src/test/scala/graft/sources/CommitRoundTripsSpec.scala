@@ -55,7 +55,9 @@ class CommitRoundTripsSpec extends SparkSpec {
     // and their matching reads). Counting is
     // TOP-LEVEL calls only (RawLocal's nested internal stats don't
     // exist on an object store — the store bills one round trip per
-    // API call).
+    // API call). Since exists() probes also count as stats (RawLocal
+    // answers them without getFileStatus): total=121 (stat 69) before
+    // one snapshot per version, total=68 (stat 16) after.
     val putClass = Seq("create", "rename", "mkdirs", "delete")
       .map(k => ops.getOrElse(k, 0L)).sum
     assert(putClass <= 60L,

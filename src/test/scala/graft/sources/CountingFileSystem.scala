@@ -26,15 +26,19 @@ object CountingFileSystem {
   }
   def enter(): Boolean = { val d = depth.get; depth.set(d + 1); d == 0 }
   def exit(): Unit = depth.set(depth.get - 1)
-  // the path of every counted open, for specs that count how often one
-  // table's data files are read
-  private val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def reset(): Unit = { ops.clear(); opened.clear() }
-  def openedPaths(): Seq[String] = {
+  // the path of every counted open, list and stat, for specs that count
+  // how often one table's files are read or probed
+  private val paths =
+    new ConcurrentHashMap[String, java.util.concurrent.ConcurrentLinkedQueue[String]]()
+  def reset(): Unit = { ops.clear(); paths.clear() }
+  def pathsOf(op: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    opened.asScala.toSeq
+    Option(paths.get(op)).map(_.asScala.toSeq).getOrElse(Nil)
   }
-  def recordOpen(p: String): Unit = opened.add(p)
+  def openedPaths(): Seq[String] = pathsOf("open")
+  def recordPath(op: String, p: String): Unit =
+    paths.computeIfAbsent(op,
+      _ => new java.util.concurrent.ConcurrentLinkedQueue[String]()).add(p)
   def add(op: String): Unit =
     ops.computeIfAbsent(op, _ => new LongAdder).increment()
   def snapshot(): Map[String, Long] = {
@@ -49,10 +53,10 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "cnt"
   override def getUri: java.net.URI = java.net.URI.create("cnt:///")
 
-  private def counted[A](op: String, opened: Option[Path] = None)(body: => A): A = {
+  private def counted[A](op: String, path: Option[Path] = None)(body: => A): A = {
     val top = enter()
     try {
-      if (top) { add(op); opened.foreach(p => CountingFileSystem.recordOpen(p.toString)) }
+      if (top) { add(op); path.foreach(p => CountingFileSystem.recordPath(op, p.toString)) }
       body
     } finally exit()
   }
@@ -81,9 +85,13 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def delete(p: Path, recursive: Boolean): Boolean =
     counted("delete") { super.delete(p, recursive) }
   override def listStatus(p: Path): Array[FileStatus] =
-    counted("list") { super.listStatus(p) }
+    counted("list", Some(p)) { super.listStatus(p) }
   override def getFileStatus(p: Path): FileStatus =
-    counted("stat") { super.getFileStatus(p) }
+    counted("stat", Some(p)) { super.getFileStatus(p) }
+  // RawLocal answers exists() without getFileStatus; on a store it is
+  // the same one-request stat
+  override def exists(p: Path): Boolean =
+    counted("stat", Some(p)) { super.exists(p) }
   override def mkdirs(p: Path, permission: FsPermission): Boolean =
     counted("mkdirs") { super.mkdirs(p, permission) }
 }

@@ -26,7 +26,8 @@ class DmlChangeFeedSpec extends SparkSpec {
     // commit-info markers synthesized at read time) — the same fallback
     // chain readChanges applies
     VersionedTable.readExtra(spark, root, v, "changes")
-      .orElse(VersionedTable.syntheticChanges(spark, root, v)).get
+      .orElse(VersionedTable.syntheticChanges(spark,
+        VersionedTable.snapshotAt(spark, root, v))).get
       .select("id", "x", "_change_type").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
 

@@ -31,9 +31,8 @@ class DvAppendConflictSpec extends SparkSpec {
   /** (file, pos) mask rows for the visible rows matching `pred` at the
     * current version — what a dv-carrying caller computes. */
   private def maskFor(root: String, pred: org.apache.spark.sql.Column) = {
-    val v = VersionedTable.currentVersion(spark, root).get
-    VersionedTable.readFilesTagged(spark, root, v,
-        VersionedTable.dataFileRefs(spark, root, v))
+    val v = VersionedTable.latest(spark, root).get
+    VersionedTable.readFilesTagged(spark, v, VersionedTable.dataFileRefs(spark, v))
       .where(pred)
       .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
   }

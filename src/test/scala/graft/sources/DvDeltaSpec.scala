@@ -181,6 +181,35 @@ class DvDeltaSpec extends SparkSpec {
     }
   }
 
+  test("a vacuum from another process materializing the chain leaves " +
+    "this process's warm reads exact") {
+    // two spellings of one table: the symlinked one takes its own cached
+    // snapshots, the way a second driver process would
+    val base = java.nio.file.Files.createTempDirectory("graft_dvd_xp")
+    val real = base.resolve("real")
+    java.nio.file.Files.createDirectory(real)
+    val link = base.resolve("link")
+    java.nio.file.Files.createSymbolicLink(link, real)
+    val rootA = real.toString + "/t"
+    val rootB = link.toString + "/t"
+    seed(rootA)
+    withChain(interval = 10) {
+      (1 to 4).foreach(i => VersionedTable.deleteWhere(spark, rootA,
+        col("id") % 100 === i, mor = true)) // v2 full, v3-v5 delta levels
+      assert(VersionedTable.readVersion(spark, rootA, 4).count() == 291L)
+      assert(VersionedTable.readVersion(spark, rootA, 5).count() == 288L)
+      VersionedTable.vacuum(spark, rootB, keepLast = 2)
+      assert(hasSidecar(rootA, 4, "_dv") && !hasSidecar(rootA, 4, "_dvdelta"),
+        "the other spelling's vacuum must materialize v4")
+      assert(VersionedTable.readVersion(spark, rootA, 4).count() == 291L)
+      assert(VersionedTable.readVersion(spark, rootA, 5).count() == 288L)
+      assert(VersionedTable.read(spark, rootA).count() == 288L)
+      assert(VersionedTable.read(spark, rootA)
+        .where(col("id").isin(1L, 102L, 203L, 4L)).count() == 0L,
+        "no cached value may point into the dropped base dirs")
+    }
+  }
+
   test("concurrent MOR deleters under the chain: each loser retries onto " +
     "the winner's level, every deletion lands, the fold stays whole") {
     val root = freshRoot()

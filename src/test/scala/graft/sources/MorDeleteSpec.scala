@@ -298,14 +298,21 @@ class MorDeleteSpec extends SparkSpec {
   }
 
   test("sidecar size probe memoizes: one listing per version per JVM") {
-    val root = freshRoot()
+    // through the counting `cnt://` scheme: the listings of the `_dv`
+    // sidecar dir itself are the probe (Spark reads the mask's files)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cnt.impl", classOf[CountingFileSystem].getName)
+    val root = "cnt://" + freshRoot()
     seed(root)
     VersionedTable.deleteWhere(spark, root, col("id") === 5L, mor = true)
+    def dvListings(): Int =
+      CountingFileSystem.pathsOf("list").count(_.endsWith("/_dv"))
+    CountingFileSystem.reset()
     VersionedTable.read(spark, root).count() // first masked read: lists
-    val after1 = VersionedTable.extraBytesListings.get()
+    val after1 = dvListings()
     VersionedTable.read(spark, root).count() // second: memo hit
     VersionedTable.read(spark, root).count()
-    assert(VersionedTable.extraBytesListings.get() == after1,
+    assert(dvListings() == after1,
       "repeat masked reads of one version must not re-list the sidecar")
   }
 }

@@ -1,0 +1,125 @@
+package graft.sources
+
+import org.apache.spark.sql.functions._
+import graft.SparkSpec
+
+/** Metadata ROUND TRIPS per read, measured ([[CountingFileSystem]]) —
+  * the read-side twin of [[CommitRoundTripsSpec]]. A version resolves
+  * ONCE into a [[Snapshot]] from the `_commits` listing, and everything
+  * derived from it is held against the marker's identity, so a warm
+  * repeat of a read on an unchanged table stats no commit marker and
+  * probes no manifest sidecar. The ceilings pin the cost class; each
+  * counted op is one request on an object store.
+  *
+  * Counts on the table below (stat/list/open; `exists` counts as a
+  * stat, as on a store), before one snapshot per version → after:
+  *   - warm second DESCRIBE HISTORY: 73/2/1 (34 marker stats, 19
+  *     manifest probes) → 0/1/0;
+  *   - warm point lookup on the latest version: 40/9/3 (16 marker
+  *     stats, 7 manifest probes) → 11/9/2;
+  *   - warm `readChanges` over the last three versions: 29/7/3 (15
+  *     marker stats) → 9/7/4;
+  *   - one MV refresh: 147/38/21 → 35/33/28.
+  * The ceilings sit about 1.5x above the after-counts. */
+class ReadRoundTripsSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def freshRoot(tag: String): String =
+    "cnt://" + java.nio.file.Files.createTempDirectory(tag).toString + "/t"
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cnt.impl", classOf[CountingFileSystem].getName)
+  }
+
+  /** A 6-version table: a seed with its feed, five appends with theirs. */
+  private def sixVersions(tag: String): String = {
+    val root = freshRoot(tag)
+    val seed = Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "grp", "v")
+    VersionedTable.commit(seed, root, extras = Map("changes" ->
+      seed.withColumn("_change_type", lit("insert"))))
+    for (i <- 3 to 7)
+      VersionedTable.commitAppend(
+        Seq((i.toLong, "a", 10L * i)).toDF("id", "grp", "v"), root,
+        changeFeed = true)
+    root
+  }
+
+  /** Runs `read` once warm, then counts a second run. */
+  private def counted(label: String)(read: => Unit): Map[String, Long] = {
+    read
+    CountingFileSystem.reset()
+    read
+    val ops = CountingFileSystem.snapshot()
+    info(s"$label: " + Seq("stat", "list", "open")
+      .map(k => s"$k=${ops.getOrElse(k, 0L)}").mkString(" "))
+    ops
+  }
+
+  private def markerStats(): Seq[String] =
+    CountingFileSystem.pathsOf("stat").filter(_.matches(".*/_commits/\\d+$"))
+
+  private def manifestProbes(): Seq[String] =
+    Seq("stat", "list", "open").flatMap(CountingFileSystem.pathsOf)
+      .filter(_.contains("/_manifest"))
+
+  private def assertSnapshotted(label: String): Unit = {
+    assert(markerStats().isEmpty,
+      s"$label stats commit markers: ${markerStats().mkString(", ")}")
+    assert(manifestProbes().isEmpty,
+      s"$label probes manifests: ${manifestProbes().mkString(", ")}")
+  }
+
+  test("a warm DESCRIBE HISTORY stats no commit marker and probes no manifest") {
+    val root = sixVersions("graft_rr_hist")
+    val ops = counted("history") {
+      assert(VersionedTable.history(spark, root).collect().length == 6)
+    }
+    assertSnapshotted("history")
+    assert(ops.getOrElse("stat", 0L) <= 4L)
+    assert(ops.getOrElse("list", 0L) <= 2L)
+    assert(ops.getOrElse("open", 0L) <= 2L)
+  }
+
+  test("a warm point lookup on the latest version stats no commit marker " +
+    "and probes no manifest") {
+    val root = sixVersions("graft_rr_point")
+    val ops = counted("point lookup") {
+      assert(VersionedTable.readWhere(spark, root, col("id") === 5L)
+        .collect().map(_.getLong(0)).toSeq == Seq(5L))
+    }
+    assertSnapshotted("point lookup")
+    assert(ops.getOrElse("stat", 0L) <= 18L)
+    assert(ops.getOrElse("list", 0L) <= 14L)
+    assert(ops.getOrElse("open", 0L) <= 4L)
+  }
+
+  test("a warm readChanges over the last three versions stats no commit " +
+    "marker and probes no manifest") {
+    val root = sixVersions("graft_rr_feed")
+    val ops = counted("readChanges") {
+      assert(VersionedTable.readChanges(spark, root, 4L, 6L).count() == 3L)
+    }
+    assertSnapshotted("readChanges")
+    assert(ops.getOrElse("stat", 0L) <= 14L)
+    assert(ops.getOrElse("list", 0L) <= 11L)
+    assert(ops.getOrElse("open", 0L) <= 6L)
+  }
+
+  test("one MV refresh stays within its metadata budget") {
+    val src = sixVersions("graft_rr_mv")
+    val mv = src.stripSuffix("/t") + "/mv"
+    AggReplica.createView(spark, mv, src, Seq("grp"), "v")
+    VersionedTable.commitAppend(
+      Seq((8L, "b", 80L)).toDF("id", "grp", "v"), src, changeFeed = true)
+    CountingFileSystem.reset()
+    AggReplica.refreshView(spark, mv)
+    val ops = CountingFileSystem.snapshot()
+    info("refresh: " + Seq("stat", "list", "open")
+      .map(k => s"$k=${ops.getOrElse(k, 0L)}").mkString(" "))
+    assert(ops.getOrElse("stat", 0L) <= 56L)
+    assert(ops.getOrElse("list", 0L) <= 50L)
+    assert(ops.getOrElse("open", 0L) <= 42L)
+  }
+}

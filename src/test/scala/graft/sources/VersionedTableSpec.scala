@@ -101,4 +101,26 @@ class VersionedTableSpec extends SparkSpec {
       VersionedTable.readVersion(spark, root, 1)
     }
   }
+
+  test("a table recreated at the same root never resolves the old table's " +
+    "version dirs") {
+    val root = freshRoot()
+    val f = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
+    // a held claim on number 2: the next commit stages under v00000003
+    // and publishes as version 2
+    f.create(new org.apache.hadoop.fs.Path(s"$root/_claims/00000002"), false).close()
+    VersionedTable.commit(Seq((2L, "b")).toDF("id", "x"), root)
+    assert(VersionedTable.readVersion(spark, root, 2)
+      .collect().map(_.getLong(0)).toSeq == Seq(2L))
+    // the same root, a new table: its version 2 lives in v00000002
+    f.delete(new org.apache.hadoop.fs.Path(root), true)
+    (1 to 3).foreach(i =>
+      VersionedTable.commit(Seq((10L + i, "n")).toDF("id", "x"), root))
+    assert(VersionedTable.readVersion(spark, root, 2)
+      .collect().map(_.getLong(0)).toSeq == Seq(12L))
+    assert(VersionedTable.read(spark, root)
+      .collect().map(_.getLong(0)).toSeq == Seq(13L))
+  }
 }
