@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ColumnBridge, CommandBridge, GraftCommand}
 
-import graft.sources.{Sinks, VersionedTable}
+import graft.sources.VersionedTable
 
 /** The SQL DML face of the versioned table format — the piece that makes
   * a SQL-first user whole: reads already had table functions
@@ -926,7 +926,7 @@ object GraftSql {
       "PARTITION clauses are not supported on versioned-table INSERT — " +
         "the format clusters with OPTIMIZE ... SORT BY / ZORDER BY instead")
     val src = CommandBridge.dataFrame(spark, i.query)
-    VersionedTable.currentVersion(spark, root) match {
+    VersionedTable.latest(spark, root) match {
       case None =>
         // first write CREATES the table (the CTAS road). Only OVERWRITE
         // may: a plain INSERT INTO against a missing root is far more
@@ -939,43 +939,39 @@ object GraftSql {
         VersionedTable.commit(src, root,
           recordInfo = VersionedTable.InsertFeedInfo, // virtual feed
           preCommit = stillEmptyGuard(spark, root))
-      case Some(v0) =>
-        if (i.overwrite) {
-          // OCC: the delete-pre-image feed is computed FROM the pinned
-          // base, so a concurrent commit landing between the pin and the
-          // publish would vanish from the table with no delete image —
-          // a CDC consumer would keep its rows forever. Re-validate
-          // inside the claim and rebuild the feed on conflict, exactly
-          // like every other snapshot-derived writer.
-          val maxAttempts = 20
-          var attempt = 0
-          var out: Option[Long] = None
-          while (out.isEmpty) {
-            attempt += 1
-            val base = VersionedTable.currentVersion(spark, root).getOrElse(v0)
-            val target = VersionedTable.tableSchema(spark, root, base)
-              .getOrElse(VersionedTable.readVersion(spark, root, base).schema)
-            val aligned = alignToSchema(src, target, i.userSpecifiedCols,
-              i.byName, root, autoPopulatedCols(spark, root, base))
-            // POPULATE BEFORE THE FEED (the append road's rule): the
-            // insert feed must carry what the table stores — generated
-            // partition values, stored expression values, allocated
-            // identity ids — never the nulls of the raw aligned frame.
-            // commit()'s own populate then no-ops on the carrying frame;
-            // the identity advance + in-claim basis check thread through
-            // explicitly because this road built the feed.
-            val baseProps = VersionedTable.propertiesOf(spark, root, base)
-            val alignedG = graft.sources.GeneratedCols.populate(aligned,
-              graft.sources.GeneratedCols.of(baseProps), strict = false,
-              bornZone = baseProps.get(graft.sources.GeneratedCols.ZoneProp),
-              sessionZone = spark.sessionState.conf.sessionLocalTimeZone)
-            val alignedE = graft.sources.GeneratedCols.populateExprs(alignedG,
-              graft.sources.GeneratedCols.exprsOf(baseProps),
-              target.map(f => f.name -> f.dataType).toMap)
-            val (populated, idAdvProps, idCheck, idRelease) =
-              VersionedTable.identityAllocate(spark, root, alignedE,
-                baseProps, Some(base))
-            val feed = VersionedTable.readVersion(spark, root, base)
+      case Some(_) if i.overwrite =>
+        // OCC: the delete-pre-image feed is computed FROM the pinned
+        // base, so a concurrent commit landing between the pin and the
+        // publish would vanish from the table with no delete image —
+        // a CDC consumer would keep its rows forever. Re-validate
+        // inside the claim and rebuild the feed on conflict, exactly
+        // like every other snapshot-derived writer.
+        VersionedTable.occRetry(spark, root) { base =>
+          val target = VersionedTable.schemaOf(spark, base)
+          val baseProps = VersionedTable.propertiesOf(spark, base)
+          val aligned = alignToSchema(src, target, i.userSpecifiedCols,
+            i.byName, root, autoPopulatedCols(baseProps))
+          // POPULATE BEFORE THE FEED (the append road's rule): the
+          // insert feed must carry what the table stores — generated
+          // partition values, stored expression values, allocated
+          // identity ids — never the nulls of the raw aligned frame.
+          // commit()'s own populate then no-ops on the carrying frame;
+          // the identity advance + in-claim basis check thread through
+          // explicitly because this road built the feed.
+          val alignedG = graft.sources.GeneratedCols.populate(aligned,
+            graft.sources.GeneratedCols.of(baseProps), strict = false,
+            bornZone = baseProps.get(graft.sources.GeneratedCols.ZoneProp),
+            sessionZone = spark.sessionState.conf.sessionLocalTimeZone)
+          val alignedE = graft.sources.GeneratedCols.populateExprs(alignedG,
+            graft.sources.GeneratedCols.exprsOf(baseProps),
+            target.map(f => f.name -> f.dataType).toMap)
+          val (populated, idAdvProps, idCheck, idRelease) =
+            VersionedTable.identityAllocate(spark, root, alignedE,
+              baseProps, Some(base.version))
+          // per attempt: a lost race re-allocates against fresh state,
+          // the superseded pin's blocks must not outlive the attempt
+          try {
+            val feed = VersionedTable.readVersion(spark, base)
               .withColumn("_change_type", lit("delete"))
               .unionByName(populated.withColumn("_change_type", lit("insert")),
                 allowMissingColumns = true)
@@ -984,33 +980,22 @@ object GraftSql {
             // nullability stays the written frame's (re-asserting the
             // recorded non-null flags over data storeCast lets through
             // null-as-null would record a lie)
-            try out = Some(VersionedTable.commit(populated, root,
+            VersionedTable.commit(populated, root,
               extras = Map("changes" -> feed),
               recordProperties =
                 if (idAdvProps.isEmpty) None else Some(baseProps ++ idAdvProps),
               preCommit = w => {
-                val now = VersionedTable.currentVersion(spark, root)
-                if (now != Some(base))
-                  throw new Sinks.ConcurrentWriteException(root, Some(base), now)
+                VersionedTable.occValidate(spark, root, Some(base))(w)
                 idCheck(w)
-              }))
-            catch {
-              case _: Sinks.ConcurrentWriteException if attempt < maxAttempts =>
-                Sinks.backoff(attempt)
-            }
-            // per attempt: a lost race re-allocates against fresh state,
-            // the superseded pin's blocks must not outlive the attempt
-            finally idRelease()
-          }
-          out.get
-        } else {
-          val target = VersionedTable.tableSchema(spark, root, v0)
-            .getOrElse(VersionedTable.readVersion(spark, root, v0).schema)
-          VersionedTable.commitAppend(
-            alignToSchema(src, target, i.userSpecifiedCols, i.byName, root,
-              autoPopulatedCols(spark, root, v0)),
-            root, changeFeed = true)
+              })
+          } finally idRelease()
         }
+      case Some(s0) =>
+        VersionedTable.commitAppend(
+          alignToSchema(src, VersionedTable.schemaOf(spark, s0),
+            i.userSpecifiedCols, i.byName, root,
+            autoPopulatedCols(VersionedTable.propertiesOf(spark, s0))),
+          root, changeFeed = true)
     }
   }
 
@@ -1104,15 +1089,12 @@ object GraftSql {
   /** Columns the commit roads POPULATE when absent — partition
     * generators, stored expression generators, identity columns —
     * lowercased; [[alignToSchema]] leaves them out rather than
-    * null-filling. */
-  private def autoPopulatedCols(
-      spark: SparkSession, root: String, v: Long): Set[String] = {
-    val props = VersionedTable.propertiesOf(spark, root, v)
+    * null-filling. `props`: the table properties recording them. */
+  private def autoPopulatedCols(props: Map[String, String]): Set[String] =
     (graft.sources.GeneratedCols.of(props).keySet ++
       graft.sources.GeneratedCols.exprsOf(props).keySet ++
       graft.sources.GeneratedCols.identitiesOf(props).keySet)
       .map(_.toLowerCase)
-  }
 
   /** Store assignment with ANSI-like malformed-value semantics: a value
     * the target type cannot represent FAILS the insert at runtime instead
@@ -1421,16 +1403,11 @@ object GraftSql {
     val hconf = spark.sparkContext.hadoopConfiguration
     val src = new org.apache.hadoop.fs.Path(srcDir)
     val fs = src.getFileSystem(hconf)
-    val maxAttempts = 20
-    var attempt = 0
-    var out: Option[Long] = None
-    while (out.isEmpty) {
-      attempt += 1
-      val base = VersionedTable.currentVersion(spark, root).getOrElse(
-        throw new java.io.IOException(
-          s"COPY INTO needs an existing versioned table under $root — " +
-            "CREATE TABLE '<root>' AS ... first (its schema is the contract " +
-            "the copied files are checked against)"))
+    VersionedTable.occRetry(spark, root, absent = r =>
+      throw new java.io.IOException(
+        s"COPY INTO needs an existing versioned table under $r — " +
+          "CREATE TABLE '<root>' AS ... first (its schema is the contract " +
+          "the copied files are checked against)")) { base =>
       val glob = pattern.map(p => new org.apache.hadoop.fs.Path(src, p))
         .getOrElse(new org.apache.hadoop.fs.Path(src, "*"))
       // globStatus returns null (not empty) for a wildcard-free PATTERN
@@ -1445,7 +1422,9 @@ object GraftSql {
       // probed with a DISTRIBUTED anti-join against it — the driver never
       // materializes the ledger (a daily landing zone accumulates
       // millions of files; only the O(new files) survivors come back).
-      val ledger = VersionedTable.copyLedger(spark, root, base)
+      // A conflict recomputes the ledger against the new current, so a
+      // racing COPY can't double-load a file.
+      val ledger = VersionedTable.copyLedger(spark, root, base.version)
       import spark.implicits._
       val fresh: Seq[String] = ledger match {
         case None => candidates.sorted
@@ -1455,10 +1434,9 @@ object GraftSql {
           candidates.toDF("file").join(l, Seq("file"), "left_anti")
             .collect().map(_.getString(0)).toSeq.sorted
       }
-      if (fresh.isEmpty) out = Some(0L)
+      if (fresh.isEmpty) 0L
       else {
-        val schema = VersionedTable.tableSchema(spark, root, base)
-          .getOrElse(VersionedTable.readVersion(spark, root, base).schema)
+        val schema = VersionedTable.schemaOf(spark, base)
         val reader = fmtOpts.foldLeft(spark.read) { case (r, (k, v)) =>
           r.option(k, v) }
         val raw = fmt match {
@@ -1477,30 +1455,18 @@ object GraftSql {
           .map(_.toInt).getOrElse(64)
         val freshDf = fresh.toDF("file")
         val ledgerExtra: (String, DataFrame) =
-          if (VersionedTable.copyLedgerDepth(spark, root, base) + 1 < foldEvery)
+          if (VersionedTable.copyLedgerDepth(spark, root, base.version) + 1 < foldEvery)
             "copyfiles" -> freshDf
           else "copyfull" -> ledger.map(_.unionByName(freshDf).distinct())
             .getOrElse(freshDf).localCheckpoint(eager = true)
-        try {
-          VersionedTable.commitCow(aligned, root,
-            VersionedTable.dataFileRefs(spark, root, base),
-            recordInfo = VersionedTable.InsertFeedInfo, // virtual feed
-            extras = Map(ledgerExtra),
-            preCommit = _ => {
-              val now = VersionedTable.currentVersion(spark, root)
-              if (now != Some(base))
-                throw new Sinks.ConcurrentWriteException(root, Some(base), now)
-            })
-          out = Some(fresh.size.toLong)
-        } catch {
-          case _: Sinks.ConcurrentWriteException if attempt < maxAttempts =>
-            // another writer published: recompute the ledger against the
-            // new current so a racing COPY can't double-load a file
-            Sinks.backoff(attempt)
-        }
+        VersionedTable.commitCow(aligned, root,
+          VersionedTable.dataFileRefs(spark, base),
+          recordInfo = VersionedTable.InsertFeedInfo, // virtual feed
+          extras = Map(ledgerExtra),
+          preCommit = VersionedTable.occValidate(spark, root, Some(base)))
+        fresh.size.toLong
       }
     }
-    out.get
   }
 
   // ---- MERGE ---------------------------------------------------------------
@@ -1852,14 +1818,8 @@ object GraftSql {
         VersionedTable.evolveSchema(spark, root,
           org.apache.spark.sql.types.StructType(tSchema0.fields.toSeq ++ added))
     }
-    val maxAttempts = 20
-    var attempt = 0
-    var out: Option[Long] = None
-    while (out.isEmpty) {
-      attempt += 1
-      // the target snapshot this attempt derives from, resolved once
-      val snap = VersionedTable.latest(spark, root).getOrElse(
-        throw new java.io.IOException(s"no committed version under $root"))
+    // `snap`: the target snapshot this attempt derives from, resolved once
+    VersionedTable.occRetry(spark, root) { snap =>
       val base = snap.version
       val readDf = VersionedTable.readVersion(spark, snap)
       val tSchema = readDf.schema
@@ -2338,13 +2298,13 @@ object GraftSql {
           .unionByName(inserts.withColumn("_change_type", lit("insert"))))
 
       val occCheck: Long => Unit = w => {
-        val now = VersionedTable.currentVersion(spark, root)
-        if (now != Some(base))
-          throw new Sinks.ConcurrentWriteException(root, Some(base), now)
+        VersionedTable.occValidate(spark, root, Some(snap))(w)
         idCheck(w)
         extraPreCommit(w)
       }
-      try out = Some(
+      // per attempt: a lost race re-allocates against fresh properties,
+      // the superseded pin's blocks must not outlive the attempt
+      try {
         if (morMode) {
           // mask every matched row an action affected (delete or update)
           // at its physical position; append updated images + inserts;
@@ -2432,17 +2392,9 @@ object GraftSql {
             // INSERT null-fills unassigned columns by design)
             extras = Map("changes" -> feed) ++ extraTables, preCommit = occCheck,
             recordProperties = advProps)
-        })
-      catch {
-        case _: Sinks.ConcurrentWriteException if attempt < maxAttempts =>
-          // jittered backoff, as every OCC retry loop
-          Sinks.backoff(attempt)
-      }
-      // per attempt: a lost race re-allocates against fresh properties,
-      // the superseded pin's blocks must not outlive the attempt
-      finally idRelease()
+        }
+      } finally idRelease()
     }
-    out.get
   }
 }
 

@@ -138,39 +138,24 @@ object Bucketing {
   def bucketize(
       spark: SparkSession, root: String, keys: Seq[String], n: Int): Long = {
     require(n > 0, "numBuckets must be positive")
-    val maxAttempts = 20
-    var attempt = 0
-    var out: Option[Long] = None
-    while (out.isEmpty) {
-      attempt += 1
-      val cur = VersionedTable.currentVersion(spark, root).getOrElse(
-        throw new java.io.IOException(s"no committed version under $root"))
-      val props = VersionedTable.propertiesOf(spark, root, cur)
+    VersionedTable.occRetry(spark, root) { cur =>
+      val props = VersionedTable.propertiesOf(spark, cur)
       require(!props.contains(VersionedTable.PartitionByProp),
         s"$root is partition-spec'd — bucketize is for unpartitioned merge targets")
-      val df = VersionedTable.readVersion(spark, root, cur)
+      val df = VersionedTable.readVersion(spark, cur)
       keys.foreach(k => require(df.columns.exists(_.equalsIgnoreCase(k)),
         s"no column $k in $root"))
       require(keys.forall(k => !k.contains(",")),
         "bucket key column names containing ',' cannot be recorded in " +
           "the comma-joined spec — rename the column")
-      try out = Some(VersionedTable.commit(
+      VersionedTable.commit(
         df.repartition(n, keys.map(col): _*), root,
         recordProperties = Some(
           props.updated(BucketByProp, specString(keys, n))),
         recordInfo = Map("operation" -> "bucketize",
           BucketedInfoKey -> specString(keys, n)),
-        preCommit = _ => {
-          val now = VersionedTable.currentVersion(spark, root)
-          if (now != Some(cur))
-            throw new Sinks.ConcurrentWriteException(root, Some(cur), now)
-        }))
-      catch {
-        case _: Sinks.ConcurrentWriteException if attempt < maxAttempts =>
-          Sinks.backoff(attempt)
-      }
+        preCommit = VersionedTable.occValidate(spark, root, Some(cur)))
     }
-    out.get
   }
 
   /** Bucket id parsed from a ref's part index — the Spark writer names
@@ -405,14 +390,6 @@ object Bucketing {
     * staging key, schema evolution in flight, any impure file). Returns
     * (merged frame — target side exchange-free, kept refs, optional
     * change feed, the spec string the commit must stamp). */
-  private[graft] def mergeFrames(
-      spark: SparkSession, root: String, cur: Long, staging: DataFrame,
-      key: String, runTs: org.apache.spark.sql.Column,
-      statusCol: String, doneValue: String, changeFeed: Boolean)
-      : Option[(DataFrame, Seq[String], Option[DataFrame], String)] =
-    mergeFrames(spark, VersionedTable.snapshotAt(spark, root, cur), staging,
-      key, runTs, statusCol, doneValue, changeFeed)
-
   private[graft] def mergeFrames(
       spark: SparkSession, cur: Snapshot, staging: DataFrame,
       key: String, runTs: org.apache.spark.sql.Column,

@@ -98,29 +98,59 @@ object Sinks {
     truncateLoad(merged.localCheckpoint(eager = true), targetPath)
   }
 
+  /** Thrown by an in-claim re-validation ([[VersionedTable.occValidate]],
+    * [[VersionedTable.AppendRebase]], the identity basis check, the COW
+    * kept-refs check) when another writer published a snapshot between
+    * a writer's read of its pinned version and its commit claim —
+    * publishing would silently drop the other writer's rows (lost
+    * update). [[VersionedTable.occRetry]] catches it and recomputes the
+    * whole write against the new current version. */
+  final class ConcurrentWriteException(root: String, base: Option[Long], now: Option[Long])
+    extends RuntimeException(
+      s"concurrent write to $root: merged against version $base but current is $now")
+
+  /** Jittered exponential backoff between the attempts of
+    * [[VersionedTable.occRetry]] (the Delta commit-retry shape), so an
+    * N-writer burst de-synchronizes instead of re-colliding in lockstep. */
+  private[graft] def backoff(attempt: Int): Unit =
+    Thread.sleep(scala.util.Random.nextLong(
+      math.min(100L << math.min(attempt, 4), 1600L)))
+
   /** [[upsertByKey]] on a [[VersionedTable]] target — the form that holds
     * at 100 TB: the merge result lands as a NEW immutable snapshot and the
     * table flips to it with a metadata-only publish, so there is no
     * absent-target window, a reader mid-query keeps its resolved version,
     * and every previous table state stays time-travelable until vacuum.
     * This is the run-over-run shape of the reference's hourly DAG
-    * (extract → merge → load) with the load made transactional. */
-  /** Thrown by [[upsertByKeyVersioned]]'s pre-publish re-validation when
-    * another writer published a snapshot between this merge's target read
-    * and its commit claim — publishing the merge would silently drop the
-    * other writer's rows (lost update). The upsert catches it and retries
-    * the whole merge against the new current version. */
-  final class ConcurrentWriteException(root: String, base: Option[Long], now: Option[Long])
-    extends RuntimeException(
-      s"concurrent write to $root: merged against version $base but current is $now")
-
-  /** Jittered exponential backoff between OCC retries (the Delta
-    * commit-retry shape) — shared by every conflict loop so an N-writer
-    * burst de-synchronizes instead of re-colliding in lockstep. */
-  private[graft] def backoff(attempt: Int): Unit =
-    Thread.sleep(scala.util.Random.nextLong(
-      math.min(100L << math.min(attempt, 4), 1600L)))
-
+    * (extract → merge → load) with the load made transactional.
+    *
+    * OPTIMISTIC CONCURRENCY ([[VersionedTable.occRetry]]): the target
+    * read is pinned to the snapshot the attempt resolved (none on the
+    * birth commit), the commit re-validates inside its claim (after the
+    * claim, before publish) that no other writer published meanwhile,
+    * and a conflict re-runs the whole merge. The publish itself is
+    * WINNER-TAKES-VERSION-N (VersionedTable.commitWith step 4): every
+    * writer contends for marker number currentVersion+1 with one
+    * rename-no-overwrite, so the check-then-act window between
+    * re-validation and publish is decided by the filesystem, not by
+    * timing. GUARANTEES BY STORE, stated plainly:
+    *   - rename-no-overwrite filesystems (HDFS semantics, ABFS,
+    *     GCS-connector rename): cross-process lost updates are
+    *     IMPOSSIBLE — the loser's marker rename fails, it re-runs the
+    *     validation, raises the conflict, and the merge rebases. This is
+    *     Delta's atomic log-write guarantee on this format.
+    *   - LocalFileSystem (dev/test): Hadoop's rename OVERWRITES and its
+    *     create-exclusive is check-then-act, so the claim and the marker
+    *     publish drop to java.nio's atomic syscalls (O_CREAT|O_EXCL for
+    *     claims, link(2) for markers — both fail with EEXIST, never
+    *     overwrite): cross-process lost updates are impossible here
+    *     too. Same-JVM writers additionally serialize on the per-root
+    *     publish monitor (OccStressSpec races it for real;
+    *     CrossProcessPublishSpec races monitor-disjoint writers through
+    *     the filesystem protocol alone).
+    *   - object stores WITHOUT atomic rename-no-overwrite (raw S3): need
+    *     an external arbiter (the DynamoDB-style LogStore Delta uses
+    *     there); out of scope for this format. */
   def upsertByKeyVersioned(
       spark: SparkSession,
       tableRoot: String,
@@ -132,75 +162,50 @@ object Sinks {
       changeFeed: Boolean = true,
       extraTables: Map[String, DataFrame] = Map.empty,
       preCommit: Long => Unit = _ => ()): Long = {
-    // OPTIMISTIC CONCURRENCY: pin the target read to the version it
-    // resolved, re-validate inside the commit (after the claim, before
-    // publish) that no other writer published meanwhile, and retry the
-    // whole merge on conflict. The publish itself is WINNER-TAKES-
-    // VERSION-N (VersionedTable.commitWith step 4): every writer
-    // contends for marker number currentVersion+1 with one
-    // rename-no-overwrite, so the old check-then-act window between
-    // re-validation and publish is decided by the filesystem, not by
-    // timing. GUARANTEES BY STORE, stated plainly:
-    //   - rename-no-overwrite filesystems (HDFS semantics, ABFS,
-    //     GCS-connector rename): cross-process lost updates are
-    //     IMPOSSIBLE — the loser's marker rename fails, it re-runs this
-    //     validation, raises the conflict, and the merge rebases. This
-    //     is Delta's atomic log-write guarantee on this format.
-    //   - LocalFileSystem (dev/test): Hadoop's rename OVERWRITES and its
-    //     create-exclusive is check-then-act, so the claim and the
-    //     marker publish drop to java.nio's atomic syscalls
-    //     (O_CREAT|O_EXCL for claims, link(2) for markers — both fail
-    //     with EEXIST, never overwrite): cross-process lost updates are
-    //     impossible here too. Same-JVM writers additionally serialize
-    //     on the per-root publish monitor (OccStressSpec races it for
-    //     real; CrossProcessPublishSpec races monitor-disjoint writers
-    //     through the filesystem protocol alone).
-    //   - object stores WITHOUT atomic rename-no-overwrite (raw S3):
-    //     need an external arbiter (the DynamoDB-style LogStore Delta
-    //     uses there); out of scope for this format.
-    val maxAttempts = 20
-    var attempt = 0
-    var committed: Option[Long] = None
-    while (committed.isEmpty) {
-      attempt += 1
-      val base = VersionedTable.currentVersion(spark, tableRoot)
-      val target = base match {
-        case Some(bv) => VersionedTable.readVersion(spark, tableRoot, bv)
-        case None => graft.operators.IncrementalMerge.emptyTarget(staging, key, statusCol)
-      }
-      // mergeEvolving = merge + on_schema_change='sync_all_columns'
-      // (retail_transactions.sql:6): an hourly run whose staging added or
-      // dropped a column still lands, and the new snapshot IS the evolved
-      // schema — no DDL step, the previous schema stays time-travelable
-      val merged = graft.operators.IncrementalMerge
-        .mergeEvolving(target, staging, key, runTs, statusCol, doneValue)
-      // the run's CHANGE DATA FEED rides the same commit: O(delta) rows,
-      // published atomically with the snapshot they describe, readable via
-      // VersionedTable.readChanges for incremental downstream consumers
-      val extras = extraTables ++
-        (if (!changeFeed) Map.empty[String, DataFrame]
-         else Map("changes" -> graft.operators.IncrementalMerge
-           .changeFeed(target, staging, key, runTs, statusCol, doneValue)))
-      // no checkpoint needed: the commit writes to a fresh version dir, so
-      // the plan can read the current snapshot while writing the next one;
-      // a bloom on the merge key keeps readWhere point lookups prunable
-      // even before the table is clustered
-      try committed = Some(VersionedTable.commit(merged, tableRoot, extras = extras,
-        bloomCols = Seq(key),
-        recordInfo = Map("operation" -> "merge"),
-        preCommit = v => {
-          preCommit(v) // caller's validation first (e.g. the txn gate)
-          val now = VersionedTable.currentVersion(spark, tableRoot)
-          if (now != base) throw new ConcurrentWriteException(tableRoot, base, now)
-        }))
-      catch {
-        case e: ConcurrentWriteException if attempt < maxAttempts =>
-          // re-read the new current snapshot and re-merge; jittered
-          // backoff de-synchronizes an N-writer retry burst
-          backoff(attempt)
-      }
+    def attempt(base: Option[Snapshot]): Long = fullMerge(spark, tableRoot,
+      base, staging, key, runTs, statusCol, doneValue, changeFeed,
+      extraTables, preCommit)
+    VersionedTable.occRetry(spark, tableRoot, absent = _ => attempt(None))(
+      cur => attempt(Some(cur)))
+  }
+
+  /** One attempt of the full-rewrite upsert against the pinned `base`
+    * (None: the birth commit) — the body [[upsertByKeyVersioned]] and
+    * [[upsertByKeyVersionedCow]]'s fallback both run inside their one
+    * [[VersionedTable.occRetry]] loop. */
+  private def fullMerge(
+      spark: SparkSession, tableRoot: String, base: Option[Snapshot],
+      staging: DataFrame, key: String, runTs: org.apache.spark.sql.Column,
+      statusCol: String, doneValue: String, changeFeed: Boolean,
+      extraTables: Map[String, DataFrame], preCommit: Long => Unit): Long = {
+    val target = base match {
+      case Some(s) => VersionedTable.readVersion(spark, s)
+      case None => graft.operators.IncrementalMerge.emptyTarget(staging, key, statusCol)
     }
-    committed.get
+    // mergeEvolving = merge + on_schema_change='sync_all_columns'
+    // (retail_transactions.sql:6): an hourly run whose staging added or
+    // dropped a column still lands, and the new snapshot IS the evolved
+    // schema — no DDL step, the previous schema stays time-travelable
+    val merged = graft.operators.IncrementalMerge
+      .mergeEvolving(target, staging, key, runTs, statusCol, doneValue)
+    // the run's CHANGE DATA FEED rides the same commit: O(delta) rows,
+    // published atomically with the snapshot they describe, readable via
+    // VersionedTable.readChanges for incremental downstream consumers
+    val extras = extraTables ++
+      (if (!changeFeed) Map.empty[String, DataFrame]
+       else Map("changes" -> graft.operators.IncrementalMerge
+         .changeFeed(target, staging, key, runTs, statusCol, doneValue)))
+    // no checkpoint needed: the commit writes to a fresh version dir, so
+    // the plan can read the current snapshot while writing the next one;
+    // a bloom on the merge key keeps readWhere point lookups prunable
+    // even before the table is clustered
+    VersionedTable.commit(merged, tableRoot, extras = extras,
+      bloomCols = Seq(key),
+      recordInfo = Map("operation" -> "merge"),
+      preCommit = v => {
+        preCommit(v) // caller's validation first (e.g. the txn gate)
+        VersionedTable.occValidate(spark, tableRoot, base)(v)
+      })
   }
 
   /** [[upsertByKeyVersioned]] with FILE-GRANULAR COPY-ON-WRITE — the form
@@ -221,11 +226,14 @@ object Sinks {
     * SMALL — on a write-order table every file may admit every key and
     * COW degrades to the full rewrite, correctly.
     *
-    * Falls back to the full-rewrite path (same results, same feed) when
-    * the table doesn't exist yet, any file lacks usable key stats, or the
-    * staging schema evolves the target (COW requires the merged schema to
-    * equal the current one — mixed-schema manifests would poison every
-    * later read). Returns the committed version. */
+    * Falls back to the full-rewrite attempt (same results, same feed)
+    * when the table doesn't exist yet, any file lacks usable key stats,
+    * or the staging schema evolves the target (COW requires the merged
+    * schema to equal the current one — mixed-schema manifests would
+    * poison every later read). The fallback is a body of the same
+    * [[VersionedTable.occRetry]] loop, so persistent conflict surfaces
+    * after that loop's bound, never a nested one. Returns the committed
+    * version. */
   def upsertByKeyVersionedCow(
       spark: SparkSession,
       tableRoot: String,
@@ -236,119 +244,103 @@ object Sinks {
       doneValue: String,
       changeFeed: Boolean = true,
       preCommit: Long => Unit = _ => ()): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val full = () => upsertByKeyVersioned(
-      spark, tableRoot, staging, key, runTs, statusCol, doneValue, changeFeed,
-      preCommit = preCommit)
-    // same optimistic concurrency as the full-rewrite path: the touched
-    // set, merge, and carried references are all computed against `cur`,
-    // so a writer publishing meanwhile would have its fresh rows silently
-    // dropped from the new manifest — re-validate inside the claim and
-    // redo the whole touched-set computation on conflict
-    val maxAttempts = 20
-    var attempt = 0
-    var committed: Option[Long] = None
-    while (committed.isEmpty) {
-      attempt += 1
-      try committed = Some(VersionedTable.currentVersion(spark, tableRoot) match {
-      case None => full()
-      case Some(cur) =>
-        // RECORDED BUCKET LAYOUT first ([[Bucketing]]): on a bucketized
-        // target the touched slice reads bucket-aligned with its
-        // HashPartitioning claimed, so the merge's full-outer join
-        // shuffles ONLY the staging delta — the target-side exchange is
-        // gone on every repeated run. Falls through (None) to the
-        // key-range road whenever any guard fails.
-        Bucketing.mergeFrames(spark, tableRoot, cur, staging, key, runTs,
-          statusCol, doneValue, changeFeed) match {
-        case Some((bMerged, bKept, bFeed, bSpec)) =>
-          val extras = bFeed.map(f => Map("changes" -> f))
-            .getOrElse(Map.empty[String, DataFrame])
-          val rb = new VersionedTable.AppendRebase(spark, tableRoot, cur)
-          VersionedTable.commitCow(bMerged, tableRoot, bKept, extras,
+    import org.apache.spark.sql.functions.{broadcast, col}
+    def full(base: Option[Snapshot]): Long = fullMerge(spark, tableRoot,
+      base, staging, key, runTs, statusCol, doneValue, changeFeed,
+      Map.empty, preCommit)
+    // the touched set, merge, and carried references are all computed
+    // against `cur`, so a writer publishing meanwhile would have its
+    // fresh rows silently dropped from the new manifest — re-validate
+    // inside the claim and redo the whole touched-set computation on
+    // conflict
+    VersionedTable.occRetry(spark, tableRoot, absent = _ => full(None)) { cur =>
+      // RECORDED BUCKET LAYOUT first ([[Bucketing]]): on a bucketized
+      // target the touched slice reads bucket-aligned with its
+      // HashPartitioning claimed, so the merge's full-outer join
+      // shuffles ONLY the staging delta — the target-side exchange is
+      // gone on every repeated run. Falls through (None) to the
+      // key-range road whenever any guard fails.
+      Bucketing.mergeFrames(spark, cur, staging, key, runTs,
+        statusCol, doneValue, changeFeed) match {
+      case Some((bMerged, bKept, bFeed, bSpec)) =>
+        val extras = bFeed.map(f => Map("changes" -> f))
+          .getOrElse(Map.empty[String, DataFrame])
+        val rb = new VersionedTable.AppendRebase(spark, tableRoot, cur.version)
+        VersionedTable.commitCow(bMerged, tableRoot, bKept, extras,
+          bloomCols = Seq(key),
+          preCommit = v => { preCommit(v); rb.validate(v) },
+          rebase = Some(rb),
+          recordInfo = Map("operation" -> "merge",
+            // the stamp names the SPEC this commit's files were laid
+            // out under — purity is spec-relative (see Bucketing)
+            Bucketing.BucketedInfoKey -> bSpec))
+      case None =>
+      val target = VersionedTable.readVersion(spark, cur)
+      val mergedSchema = graft.operators.IncrementalMerge
+        .mergeEvolving(target.limit(0), staging.limit(0), key, runTs,
+          statusCol, doneValue).schema
+      val sameSchema =
+        mergedSchema.map(f => (f.name, f.dataType)) ==
+          target.schema.map(f => (f.name, f.dataType))
+      VersionedTable.fileKeyRanges(spark, cur, key) match {
+        case Some(ranges) if sameSchema =>
+          // which files admit at least one staging key: distinct keys
+          // against the broadcast file-boundary table (file count is
+          // metadata-scale), then collect file names only
+          val boundaries = ranges.collect { case (rel, Some((_, mn, mx))) =>
+            (rel, mn, mx)
+          }
+          val touched: Set[String] =
+            if (boundaries.isEmpty) Set.empty
+            else {
+              val b = spark.createDataFrame(boundaries.map { case (rel, mn, mx) =>
+                (rel, mn.toString, mx.toString)
+              }).toDF("__file", "__mn", "__mx")
+              val kind = ranges.collectFirst {
+                case (_, Some((k, _, _))) => k }.getOrElse("string")
+              val t = kind match {
+                case "long" => "bigint"
+                case "double" => "double"
+                case _ => "string"
+              }
+              staging.select(col(key).as("__k")).na.drop().distinct()
+                .join(broadcast(b),
+                  col("__k") >= col("__mn").cast(t) &&
+                  col("__k") <= col("__mx").cast(t))
+                .select("__file").distinct()
+                .collect().map(_.getString(0)).toSet
+            }
+          val kept = ranges.map(_._1).filterNot(touched)
+          // the slice reads THROUGH the deletion-vector masks
+          // (readFilesOf): a MOR-deleted row neither matches a staging
+          // key nor re-enters the rewrite; kept files' masks carry
+          // forward in the commit, touched files' fold away with the
+          // rewrite
+          val slice =
+            if (touched.isEmpty) target.limit(0)
+            else VersionedTable.readFilesOf(spark, cur, touched.toSeq.sorted)
+          val merged = graft.operators.IncrementalMerge
+            .mergeEvolving(slice, staging, key, runTs, statusCol, doneValue)
+            .select(target.columns.map(col): _*)
+          val extras =
+            if (!changeFeed) Map.empty[String, DataFrame]
+            else Map("changes" -> graft.operators.IncrementalMerge
+              .changeFeed(slice, staging, key, runTs, statusCol, doneValue))
+          // claim-time rebase ([[VersionedTable.AppendRebase]]): a blind
+          // append landing during the merge joins the manifest by union
+          // instead of forcing the whole touched-set recompute — the
+          // hourly-append-during-hourly-merge collision costs two
+          // driver-side manifest reads, not a re-merge
+          val rb = new VersionedTable.AppendRebase(spark, tableRoot, cur.version)
+          VersionedTable.commitCow(merged, tableRoot, kept, extras,
             bloomCols = Seq(key),
             preCommit = v => { preCommit(v); rb.validate(v) },
             rebase = Some(rb),
-            recordInfo = Map("operation" -> "merge",
-              // the stamp names the SPEC this commit's files were laid
-              // out under — purity is spec-relative (see Bucketing)
-              Bucketing.BucketedInfoKey -> bSpec))
-        case None =>
-        val target = VersionedTable.readVersion(spark, tableRoot, cur)
-        val mergedSchema = graft.operators.IncrementalMerge
-          .mergeEvolving(target.limit(0), staging.limit(0), key, runTs,
-            statusCol, doneValue).schema
-        val sameSchema =
-          mergedSchema.map(f => (f.name, f.dataType)) ==
-            target.schema.map(f => (f.name, f.dataType))
-        VersionedTable.fileKeyRanges(spark, tableRoot, cur, key) match {
-          case Some(ranges) if sameSchema =>
-            // which files admit at least one staging key: distinct keys
-            // against the broadcast file-boundary table (file count is
-            // metadata-scale), then collect file names only
-            val boundaries = ranges.collect { case (rel, Some((_, mn, mx))) =>
-              (rel, mn, mx)
-            }
-            val touched: Set[String] =
-              if (boundaries.isEmpty) Set.empty
-              else {
-                val b = spark.createDataFrame(boundaries.map { case (rel, mn, mx) =>
-                  (rel, mn.toString, mx.toString)
-                }).toDF("__file", "__mn", "__mx")
-                val kind = ranges.collectFirst {
-                  case (_, Some((k, _, _))) => k }.getOrElse("string")
-                val t = kind match {
-                  case "long" => "bigint"
-                  case "double" => "double"
-                  case _ => "string"
-                }
-                staging.select(col(key).as("__k")).na.drop().distinct()
-                  .join(broadcast(b),
-                    col("__k") >= col("__mn").cast(t) &&
-                    col("__k") <= col("__mx").cast(t))
-                  .select("__file").distinct()
-                  .collect().map(_.getString(0)).toSet
-              }
-            val kept = ranges.map(_._1).filterNot(touched)
-            // the slice reads THROUGH the deletion-vector masks
-            // (readFilesOf): a MOR-deleted row neither matches a staging
-            // key nor re-enters the rewrite; kept files' masks carry
-            // forward in the commit, touched files' fold away with the
-            // rewrite
-            val slice =
-              if (touched.isEmpty) target.limit(0)
-              else VersionedTable.readFilesOf(
-                spark, tableRoot, cur, touched.toSeq.sorted)
-            val merged = graft.operators.IncrementalMerge
-              .mergeEvolving(slice, staging, key, runTs, statusCol, doneValue)
-              .select(target.columns.map(col): _*)
-            val extras =
-              if (!changeFeed) Map.empty[String, DataFrame]
-              else Map("changes" -> graft.operators.IncrementalMerge
-                .changeFeed(slice, staging, key, runTs, statusCol, doneValue))
-            // claim-time rebase ([[VersionedTable.AppendRebase]]): a blind
-            // append landing during the merge joins the manifest by union
-            // instead of forcing the whole touched-set recompute — the
-            // hourly-append-during-hourly-merge collision costs two
-            // driver-side manifest reads, not a re-merge
-            val rb = new VersionedTable.AppendRebase(spark, tableRoot, cur)
-            VersionedTable.commitCow(merged, tableRoot, kept, extras,
-              bloomCols = Seq(key),
-              preCommit = v => { preCommit(v); rb.validate(v) },
-              rebase = Some(rb),
-              recordInfo = Map("operation" -> "merge"))
-          case _ => full()
-        }
-        }
-      })
-      catch {
-        case e: ConcurrentWriteException if attempt < maxAttempts =>
-          // another writer published since `cur` — recompute and retry,
-          // jittered so a retry burst doesn't re-collide in lockstep
-          backoff(attempt)
+            recordInfo = Map("operation" -> "merge"))
+        case _ => full(Some(cur))
+      }
       }
     }
-    committed.get
   }
 
   /** Distributed CSV sink — a directory of part files, the scale form

@@ -1595,7 +1595,7 @@ object VersionedTable {
 
   /** Version `s`'s effective schema: recorded when available, else
     * inferred from the snapshot's parquet footers. */
-  private def schemaOf(
+  private[graft] def schemaOf(
       spark: SparkSession, s: Snapshot): org.apache.spark.sql.types.StructType =
     tableSchema(spark, s).getOrElse(versionFrame(spark, s, synth = true).schema)
 
@@ -2169,7 +2169,7 @@ object VersionedTable {
     // caller's in-claim gate (txn idempotence, validation) runs on this
     // road too — the COW and MOR roads of the same deleteWhere honor it
     commitCowInternal(empty, root, cur, kept, extras, Nil,
-      preCommit = v => { preCommit(v); occValidate(spark, root, cur)(v) },
+      preCommit = v => { preCommit(v); occValidate(spark, root, Some(cur))(v) },
       recordSchema = Some(schema),
       recordInfo = Map("operation" -> "delete", "partitionDrop" -> "true") ++
         Bucketing.carryStamp(spark, cur))
@@ -2199,7 +2199,7 @@ object VersionedTable {
       commitWith(df, root, collectStats = true,
         extras = Map.empty, // layout-only: virtual zero-row feed
         (_, _, _) => (), bloomCols,
-        preCommit = occValidate(spark, root, cur),
+        preCommit = occValidate(spark, root, Some(cur)),
         recordProperties = Some(props),
         partitionBy = newSpec,
         recordInfo = Map("operation" -> "repartition",
@@ -2273,7 +2273,7 @@ object VersionedTable {
           Map("changes" -> feed)
         }
       commitCow(newData0, root, kept, extras = extras,
-        preCommit = occValidate(spark, root, cur))
+        preCommit = occValidate(spark, root, Some(cur)))
     }
   }
 
@@ -2528,15 +2528,11 @@ object VersionedTable {
     maskedLogical(spark, s, base.withColumn(refCol, fileRefCol))
   }
 
-  /** Read a SUBSET of version `v`'s files (root-relative refs, as listed
+  /** Read a SUBSET of snapshot `s`'s files (root-relative refs, as listed
     * by [[dataFileRefs]]) through the version's recorded schema and
     * deletion-vector masks — the touched-slice read of a COW rewrite.
     * Raw per-file reads would resurrect MOR-deleted rows; this is the
     * safe form. */
-  def readFilesOf(
-      spark: SparkSession, root: String, v: Long, refs: Seq[String]): DataFrame =
-    readFilesOf(spark, snapshotAt(spark, root, v), refs)
-
   private[graft] def readFilesOf(
       spark: SparkSession, s: Snapshot, refs: Seq[String]): DataFrame = {
     require(refs.nonEmpty, "readFilesOf needs at least one file ref")
@@ -3140,8 +3136,9 @@ object VersionedTable {
         // Rebased-in refs read their sizes from the tolerated version
         // (appends only add, so its sidecar covers the kept refs too).
         try {
-          val sizeV = rebase.map(_.through).getOrElse(cur.version)
-          val curSizes = fileSizes(spark, root, sizeV)
+          val sizeS = rebase.map(_.through).filter(_ != cur.version)
+            .map(snapshotAt(spark, root, _)).getOrElse(cur)
+          val curSizes = fileSizes(spark, sizeS)
           FileSizes.append(fh, dir,
             (keptEff ++ extraRefs).map(r => r -> curSizes(r)))
         } catch {
@@ -3474,14 +3471,17 @@ object VersionedTable {
     }
   }
 
-  /** `preCommit` validation that rejects the commit when the table
-    * advanced past the pinned version `cur` — the lost-update guard every
-    * path that computes against a snapshot must run inside its claim. */
-  private def occValidate(spark: SparkSession, root: String, cur: Snapshot): Long => Unit =
+  /** `preCommit` validation that rejects the commit when the table moved
+    * off the state [[occRetry]] pinned (`None`: the table had no version
+    * yet) — the lost-update guard every path that computes against a
+    * snapshot must run inside its claim, and the one "has the table
+    * moved?" check. */
+  private[graft] def occValidate(
+      spark: SparkSession, root: String, pinned: Option[Snapshot]): Long => Unit =
     _ => {
+      val base = pinned.map(_.version)
       val now = currentVersion(spark, root)
-      if (now != Some(cur.version))
-        throw new Sinks.ConcurrentWriteException(root, Some(cur.version), now)
+      if (now != base) throw new Sinks.ConcurrentWriteException(root, base, now)
     }
 
   /** Write-isolation level for snapshot-deriving commits (Delta's
@@ -3657,25 +3657,31 @@ object VersionedTable {
     }
   }
 
-  /** The optimistic-concurrency loop shared by every writer that derives
-    * its commit from the current snapshot (COW row rewrites, appends,
-    * maintenance): pin the version, run `body` against it (whose commit
-    * must re-validate via [[occValidate]] inside the claim), and on
-    * conflict REBASE — re-read the new current and recompute. Bounded
+  /** The optimistic-concurrency loop of every writer that derives its
+    * commit from the current snapshot (COW row rewrites, appends,
+    * maintenance, the upserts, bucketize, SQL MERGE / INSERT OVERWRITE /
+    * COPY INTO): pin the latest snapshot, run `body` against it (whose
+    * commit must re-validate via [[occValidate]] or [[AppendRebase]]
+    * inside the claim), and on conflict REBASE — re-pin the new current
+    * and recompute. `absent` is the attempt against a root with no
+    * version yet (default: the unborn-table error, not retried). Bounded
     * attempts with JITTERED BACKOFF (the Delta commit-retry shape): under
     * an N-writer burst every loser re-stages simultaneously and exactly
     * one wins per round, so without backoff a writer can lose ⌈N⌉
     * straight races; the jitter de-synchronizes the burst instead.
     * Persistent contention past the bound surfaces the conflict rather
     * than spinning forever. */
-  private def occRetry(spark: SparkSession, root: String)(body: Snapshot => Long): Long = {
+  private[graft] def occRetry(
+      spark: SparkSession, root: String,
+      absent: String => Long = r =>
+        throw new java.io.IOException(s"no committed version under $r"))(
+      body: Snapshot => Long): Long = {
     val maxAttempts = 20
     var attempt = 0
     var out: Option[Long] = None
     while (out.isEmpty) {
       attempt += 1
-      val cur = latestOrFail(spark, root)
-      try out = Some(body(cur))
+      try out = Some(latest(spark, root).fold(absent(root))(body))
       catch {
         case _: Sinks.ConcurrentWriteException if attempt < maxAttempts =>
           Sinks.backoff(attempt)
@@ -4081,7 +4087,7 @@ object VersionedTable {
         }
       commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
-        Nil, preCommit = occValidate(spark, root, cur),
+        Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
         // sticky feature flag: narrow-typed files now live under a wider
         // schema — the protocol gate requires widening-capable readers
@@ -4129,7 +4135,7 @@ object VersionedTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
       commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
-        Nil, preCommit = occValidate(spark, root, cur),
+        Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
         recordMapping = Some((mapping ++ minted, retired)),
         recordInfo = Map("operation" -> "evolve-schema",
@@ -4672,7 +4678,7 @@ object VersionedTable {
         if (specAdjusted == curProps) None else Some(specAdjusted)
       commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
-        Nil, preCommit = occValidate(spark, root, cur),
+        Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
         recordProperties = renamedProps,
         recordMapping = Some((newMapping, retiredPhysicals(spark, cur))),
@@ -4722,7 +4728,7 @@ object VersionedTable {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
       commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
-        Nil, preCommit = occValidate(spark, root, cur),
+        Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
         recordProperties = Some(Bucketing.dropSpecIfKey(
           propertiesOf(spark, cur), name)),
@@ -5174,7 +5180,7 @@ object VersionedTable {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
       Map.empty, Nil, // metadata-only: virtual zero-row feed
-      preCommit = occValidate(spark, root, cur),
+      preCommit = occValidate(spark, root, Some(cur)),
       recordSchema = Some(schema),
       recordConstraints = recordConstraints,
       recordProperties = recordProperties,
@@ -5419,7 +5425,7 @@ object VersionedTable {
             // materialize BEFORE committing: the fold reads extras of
             // versions a concurrent vacuum could be dropping mid-write
             Map("copyfull" -> folded.localCheckpoint(eager = true)),
-            Nil, preCommit = occValidate(spark, root, cur),
+            Nil, preCommit = occValidate(spark, root, Some(cur)),
             recordSchema = Some(schema),
             recordInfo = Map("operation" -> "fold-copy-ledger",
               ChangesFormKey -> "none"))
@@ -5685,7 +5691,7 @@ object VersionedTable {
             try out.write(tgtRefs.mkString("", "\n", "\n").getBytes("UTF-8"))
             finally out.close()
           },
-          preCommit = occValidate(spark, root, cur),
+          preCommit = occValidate(spark, root, Some(cur)),
           recordSchema = Some(schema),
           // RESTORE rolls back table METADATA with the data: the
           // target's constraints and properties are re-recorded (a
@@ -5893,7 +5899,7 @@ object VersionedTable {
       commit(reshaped, root,
         extras = Map.empty, // layout-only: virtual zero-row feed
         bloomCols = bloomCols,
-        preCommit = w => { preCommit(w); occValidate(spark, root, v)(w) },
+        preCommit = w => { preCommit(w); occValidate(spark, root, Some(v))(w) },
         recordProperties = recordProperties,
         recordInfo = Map("operation" -> op,
           ChangesFormKey -> "none") ++ extraInfo)

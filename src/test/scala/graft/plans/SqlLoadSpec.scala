@@ -275,4 +275,59 @@ class SqlLoadSpec extends SparkSpec {
     assert(VersionedTable.read(spark, src).count() == 10)
     assert(VersionedTable.readVersion(spark, src, 1L).count() == 10)
   }
+
+  test("INSERT OVERWRITE racing INSERT INTO: the table is the overwrite's " +
+    "rows plus the appends serialized after it, and the feed has no gap") {
+    val root = freshRoot(); seed(root)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def writer(name: String)(body: => Unit) = new Thread(() =>
+      try body catch { case t: Throwable => errors.add(t) }, name)
+    val appenders = (0 until 2).map(w => writer(s"appender-$w") {
+      (0 until 4).foreach { b =>
+        val id = 100 + 10 * w + b
+        GraftSql.execute(spark, s"INSERT INTO `$root` VALUES ($id, 'a$id', $id)")
+      }
+    })
+    val overwriter = writer("overwriter") {
+      (0 until 2).foreach { k =>
+        val id = 1000 + k
+        GraftSql.execute(spark,
+          s"INSERT OVERWRITE `$root` VALUES ($id, 'o$id', 0), (${id + 10}, 'o$id', 0)")
+      }
+    }
+    val all = appenders :+ overwriter
+    all.foreach(_.start()); all.foreach(_.join(300000))
+    assert(errors.isEmpty, s"writer threads failed: ${errors.peek()}")
+
+    val vs = VersionedTable.versions(spark, root)
+    val feed = VersionedTable.readChanges(spark, root, vs(1), vs.last)
+      .select("id", "_change_type", "_commit_version").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    val overwrites = feed.filter(_._2 == "delete").map(_._3).distinct.sorted
+    assert(overwrites.length == 2, s"overwrite versions: ${overwrites.toSeq}")
+    val lastOverwrite = overwrites.last
+    val expected = feed.filter { case (_, ct, v) =>
+      ct == "insert" && v >= lastOverwrite }.map(_._1).toSet
+    val got = VersionedTable.read(spark, root).select("id").collect()
+      .map(_.getLong(0))
+    assert(got.length == got.distinct.length, s"duplicate rows: ${got.toSeq}")
+    assert(got.toSet == expected)
+    assert(got.toSet.contains(1001L) && got.toSet.contains(1011L))
+    // every row an overwrite removed has its delete image at that version
+    overwrites.foreach { w =>
+      val before = VersionedTable.readVersion(spark, root, vs(vs.indexOf(w) - 1))
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(feed.filter(c => c._2 == "delete" && c._3 == w).map(_._1).toSet == before,
+        s"version $w's delete images differ from the rows it removed")
+    }
+    // replaying the seed plus the whole feed rebuilds the final table
+    val replayed = feed.sortBy(_._3).foldLeft((1L to 10L).toSet) {
+      case (live, (id, "insert", v)) =>
+        assert(!live(id), s"v$v inserts live id $id"); live + id
+      case (live, (id, "delete", v)) =>
+        assert(live(id), s"v$v deletes absent id $id"); live - id
+      case (_, c) => fail(s"unexpected change $c")
+    }
+    assert(replayed == got.toSet)
+  }
 }

@@ -40,8 +40,9 @@ class BucketingSpec extends SparkSpec {
     val root = freshRoot(); seed(root, 8)
     val cur = VersionedTable.currentVersion(spark, root).get
     val d = delta(Seq(3L, 7L, 20L, 391L), "DONE", ts1)
-    val (merged, kept, _, _) = Bucketing.mergeFrames(spark, root, cur, d,
-      "id", ts1, "last_status", "DONE", changeFeed = false).get
+    val (merged, kept, _, _) = Bucketing.mergeFrames(spark,
+      VersionedTable.snapshotAt(spark, root, cur), d, "id", ts1,
+      "last_status", "DONE", changeFeed = false).get
     // disable AQE broadcast demotion noise: read the compiled plan
     val p = merged.queryExecution.executedPlan.toString
     val exchanges = p.split("Exchange hashpartitioning").length - 1
@@ -100,7 +101,7 @@ class BucketingSpec extends SparkSpec {
       root)
     val cur = VersionedTable.currentVersion(spark, root).get
     assert(Bucketing.pureBuckets(spark, root, cur, Seq("id"), 8).isEmpty)
-    assert(Bucketing.mergeFrames(spark, root, cur,
+    assert(Bucketing.mergeFrames(spark, VersionedTable.snapshotAt(spark, root, cur),
       delta(Seq(3L), "DONE", ts1), "id", ts1, "last_status", "DONE",
       changeFeed = false).isEmpty)
     // the public upsert still lands correctly via the fallback
@@ -119,7 +120,8 @@ class BucketingSpec extends SparkSpec {
     val cur = VersionedTable.currentVersion(spark, root).get
     val intDelta = delta(Seq(3L), "DONE", ts1)
       .withColumn("id", col("id").cast("int"))
-    assert(Bucketing.mergeFrames(spark, root, cur, intDelta, "id", ts1,
+    assert(Bucketing.mergeFrames(spark,
+      VersionedTable.snapshotAt(spark, root, cur), intDelta, "id", ts1,
       "last_status", "DONE", changeFeed = false).isEmpty,
       "INT staging key against a BIGINT-bucketized target must fall back")
   }
@@ -135,7 +137,8 @@ class BucketingSpec extends SparkSpec {
       Map(Bucketing.BucketByProp -> "id,16"))
     val cur = VersionedTable.currentVersion(spark, root).get
     assert(Bucketing.pureBuckets(spark, root, cur, Seq("id"), 16).isEmpty)
-    assert(Bucketing.mergeFrames(spark, root, cur, delta(Seq(3L), "DONE", ts1),
+    assert(Bucketing.mergeFrames(spark,
+      VersionedTable.snapshotAt(spark, root, cur), delta(Seq(3L), "DONE", ts1),
       "id", ts1, "last_status", "DONE", changeFeed = false).isEmpty)
     // the public upsert still lands correctly via the fallback
     Sinks.upsertByKeyVersionedCow(spark, root, delta(Seq(3L), "DONE", ts1),
@@ -621,7 +624,7 @@ class BucketingSpec extends SparkSpec {
     try {
       assert(Bucketing.pureBucketsBounded(spark, root, cur0, Seq("id"), 8).isEmpty,
         "a bucket over the ceiling must decline the claimed road")
-      assert(Bucketing.mergeFrames(spark, root, cur0,
+      assert(Bucketing.mergeFrames(spark, VersionedTable.snapshotAt(spark, root, cur0),
         delta(Seq(3L), "DONE", ts1), "id", ts1, "last_status", "DONE",
         changeFeed = false).isEmpty, "mergeFrames must fall back")
       // the public upsert lands correctly via the key-range fallback —
@@ -773,5 +776,34 @@ class BucketingSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Bucketing.bucketize(spark, root, "id", 8)
     }
+  }
+
+  test("bucketize racing appends: every appended row survives") {
+    val root = freshRoot()
+    Sinks.upsertByKeyVersioned(spark, root, base(200), "id", ts0,
+      "last_status", "DONE")
+    val template = VersionedTable.read(spark, root).where($"id" < 5L)
+      .localCheckpoint(eager = true)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val bucketized = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val appender = new Thread(() =>
+      try (1 to 6).foreach { b =>
+        VersionedTable.commitAppend(
+          template.withColumn("id", $"id" + lit(1000L * b)), root)
+      } catch { case t: Throwable => errors.add(t) }, "appender")
+    val bucketizer = new Thread(() =>
+      try bucketized.set(Bucketing.bucketize(spark, root, "id", 8))
+      catch { case t: Throwable => errors.add(t) }, "bucketizer")
+    Seq(appender, bucketizer).foreach(_.start())
+    Seq(appender, bucketizer).foreach(_.join(300000))
+    assert(errors.isEmpty, s"writer threads failed: ${errors.peek()}")
+
+    val ids = VersionedTable.read(spark, root).select("id").collect()
+      .map(_.getLong(0))
+    val appended = (1 to 6).flatMap(b => (0L until 5L).map(_ + 1000L * b))
+    assert(ids.length == 200 + appended.size, "a row was lost or duplicated")
+    assert(ids.toSet == ((0L until 200L) ++ appended).toSet)
+    assert(Bucketing.specOf(VersionedTable.propertiesOf(
+      spark, root, bucketized.get)) == Some((Seq("id"), 8)))
   }
 }

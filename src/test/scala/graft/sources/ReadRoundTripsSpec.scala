@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.plans.GraftSql
 
 /** Metadata ROUND TRIPS per read, measured ([[CountingFileSystem]]) —
   * the read-side twin of [[CommitRoundTripsSpec]]. A version resolves
@@ -20,7 +21,14 @@ import graft.SparkSpec
   *   - warm `readChanges` over the last three versions: 29/7/3 (15
   *     marker stats) → 9/7/4;
   *   - one MV refresh: 147/38/21 → 35/33/28.
-  * The ceilings sit about 1.5x above the after-counts. */
+  * The ceilings sit about 1.5x above the after-counts.
+  *
+  * Writers pin one snapshot per attempt ([[VersionedTable.occRetry]])
+  * and read through it. Stats of the pinned base version's commit
+  * marker, through `(spark, root, v)` faces → through the pinned
+  * snapshot: a key-range COW upsert 5 → 0, a SQL COPY INTO 3 → 0 (one
+  * of each parent count was the COW commit's own size carry, which now
+  * reads the snapshot it was handed). */
 class ReadRoundTripsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -121,5 +129,53 @@ class ReadRoundTripsSpec extends SparkSpec {
     assert(ops.getOrElse("stat", 0L) <= 56L)
     assert(ops.getOrElse("list", 0L) <= 50L)
     assert(ops.getOrElse("open", 0L) <= 42L)
+  }
+
+  /** Counted stats of version `v`'s own commit marker. */
+  private def markerStatsOf(v: Long): Seq[String] =
+    markerStats().filter(_.endsWith(f"/_commits/$v%08d"))
+
+  test("a key-range COW upsert stats its pinned base version's commit " +
+    "marker at most once") {
+    val ts = lit("2024-06-01 00:00:00").cast("timestamp")
+    def staging(ids: Seq[Long], status: String) =
+      ids.map(i => (i, status, s"p$i")).toDF("id", "last_status", "payload")
+        .withColumn("created_at", ts)
+    val mart = freshRoot("graft_rr_cow")
+    Sinks.upsertByKeyVersioned(spark, mart, staging(1L to 4L, "OPEN"),
+      "id", ts, "last_status", "DONE")
+    for (i <- 5 to 9)
+      Sinks.upsertByKeyVersionedCow(spark, mart, staging(Seq(10L * i), "OPEN"),
+        "id", ts, "last_status", "DONE")
+    assert(VersionedTable.versions(spark, mart).size == 6)
+    VersionedTable.read(spark, mart).collect()
+    val martBase = VersionedTable.currentVersion(spark, mart).get
+    CountingFileSystem.reset()
+    Sinks.upsertByKeyVersionedCow(spark, mart, staging(Seq(2L), "DONE"),
+      "id", ts, "last_status", "DONE")
+    val cowStats = markerStatsOf(martBase)
+    info(s"COW upsert: base marker stats=${cowStats.size}")
+    // the key-range road: every untouched file rides by reference
+    assert(VersionedTable.history(spark, mart)
+      .where(col("version") === martBase + 1).head.getAs[Int]("kept_refs") > 0)
+    assert(cowStats.size <= 1, cowStats.mkString(", "))
+  }
+
+  test("a SQL COPY INTO stats its pinned base version's commit marker at " +
+    "most once") {
+    val root = sixVersions("graft_rr_copy")
+    val landing = java.nio.file.Files.createTempDirectory("graft_rr_land").toString
+    Seq((20L, "c", 200L)).toDF("id", "grp", "v").coalesce(1)
+      .write.parquet(landing + "/batch")
+    VersionedTable.read(spark, root).collect()
+    val base = VersionedTable.currentVersion(spark, root).get
+    CountingFileSystem.reset()
+    assert(GraftSql.execute(spark,
+      s"COPY INTO '$root' FROM '$landing/batch' FILEFORMAT = PARQUET")
+      .collect().head.getLong(2) == 1L)
+    val copyStats = markerStatsOf(base)
+    info(s"COPY INTO: base marker stats=${copyStats.size}")
+    assert(copyStats.size <= 1, copyStats.mkString(", "))
+    assert(VersionedTable.read(spark, root).count() == 8L)
   }
 }

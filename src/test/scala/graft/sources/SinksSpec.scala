@@ -122,4 +122,27 @@ class SinksSpec extends SparkSpec {
     // claims cost dir names, never version numbers.
     assert(VersionedTable.versions(spark, root) == Seq(1L, 2L, 3L))
   }
+
+  test("a COW upsert's full-rewrite fallback is a body of the one retry " +
+    "loop: persistent conflict surfaces after 20 attempts, not 20 × 20") {
+    val root = Files.createTempDirectory("graft_sink_budget").resolve("t").toString
+    val t0 = lit("2024-06-01 00:00:00").cast("timestamp")
+    val staging = Seq((1L, "OPEN", "2024-05-30 10:00:00"))
+      .toDF("id", "last_status", "c")
+      .withColumn("created_at", col("c").cast("timestamp")).drop("c")
+    // an absent root takes the full-rewrite fallback; every claim
+    // conflicts. A nested loop would retry past the bound — call 26
+    // stops it at once instead of sleeping through its backoffs.
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    intercept[Sinks.ConcurrentWriteException] {
+      Sinks.upsertByKeyVersionedCow(spark, root, staging, "id", t0,
+        "last_status", "DONE", preCommit = _ => {
+          if (calls.incrementAndGet() == 26)
+            throw new IllegalStateException("retried past the 20-attempt bound")
+          throw new Sinks.ConcurrentWriteException(root, None, None)
+        })
+    }
+    assert(calls.get == 20)
+    assert(VersionedTable.currentVersion(spark, root).isEmpty)
+  }
 }
