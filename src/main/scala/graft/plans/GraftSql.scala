@@ -1575,7 +1575,8 @@ object GraftSql {
     // correct (detection scans a few extra files, result unchanged).
     // Stage 2 — the exact distinct-keys × boundaries broadcast join, a
     // full extra execution — runs only when the hull still leaves
-    // enough files for exactness to pay (conf'd floor; a 100 TB table's
+    // enough files for exactness to pay
+    // ([[VersionedTable.MergeStatsPruneMinFiles]]; a 100 TB table's
     // thousands of files keep it).
     // string ordering must match the exact stage's SQL comparison
     // (UTF8String = unsigned UTF-8 bytes) — Java compareTo diverges on
@@ -1605,9 +1606,7 @@ object GraftSql {
       }
     }
     val hull = hulls.flatten.reduce(_ intersect _)
-    val exactFloor = spark.conf
-      .get("spark.graft.merge.statsPruneMinFiles", "16").toInt
-    if (hull.size < exactFloor) return Some(hull)
+    if (hull.size < VersionedTable.MergeStatsPruneMinFiles) return Some(hull)
     val sets = ks.map { k =>
       val b = spark.createDataFrame(
         k.bounds.filter(x => hull(x._1))).toDF("__file", "__mn", "__mx")
@@ -1864,7 +1863,7 @@ object GraftSql {
         else if (m.notMatchedBySourceActions.exists(_.condition.isEmpty)) None
         else scala.util.Try {
           // strip the target alias so the per-action condition resolves
-          // against the bare snapshot frame inside prunedFiles (NMBS
+          // against the planning relation inside prunedFiles (NMBS
           // conditions reference the target only, per the SQL rule the
           // analyzer enforces later); evaluated PER ACTION because the
           // stats pruner decides conjuncts — an OR across actions would
@@ -1876,8 +1875,8 @@ object GraftSql {
               UnresolvedAttribute(a.nameParts.tail)
           }
           m.notMatchedBySourceActions.flatMap { act =>
-            VersionedTable.prunedFileRefs(spark, snap,
-              ColumnBridge.column(deQualified(act.condition.get)))
+            VersionedTable.prunedFiles(spark, snap,
+              ColumnBridge.column(deQualified(act.condition.get)))._1
           }.toSet
         }.toOption
       // the detection join ALSO answers the SQL cardinality rule (does
@@ -1986,14 +1985,14 @@ object GraftSql {
                 spark, snap, bkeys, n, byBucketOf(fb, touched),
                 readDf.schema)
             case None =>
-              VersionedTable.readFilesTagged(spark, snap, touched)
+              VersionedTable.scan(spark, snap, Some(touched), tagFile = true, tagPos = true)
           }
           else bucketRoad match {
             case Some((fb, bkeys, n)) =>
               graft.sources.Bucketing.bucketAlignedSlice(
                 spark, snap, bkeys, n, byBucketOf(fb, touched),
                 readDf.schema)
-            case None => VersionedTable.readFilesOf(spark, snap, touched)
+            case None => VersionedTable.scan(spark, snap, Some(touched))
           }
         case None => readDf
       }

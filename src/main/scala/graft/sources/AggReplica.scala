@@ -113,13 +113,15 @@ object AggReplica {
   /** Where the extremum-retraction recompute reads flagged groups from:
     * a plain table at a pinned version (single-source views), or the
     * star join at EVERY source's pinned version (join-backed extrema
-    * views — the joined bag at the state the batch's counts reach). */
+    * views — the joined bag at the state the batch's counts reach).
+    * A table's snapshot resolves on first use: a batch that retracts no
+    * extremum never touches its source. */
   private[graft] sealed trait RecomputeSource
-  private[graft] final case class TableAt(root: String, v: Long)
-    extends RecomputeSource
+  private[graft] final class TableAt(at: => Snapshot) extends RecomputeSource {
+    lazy val snap: Snapshot = at
+  }
   private[graft] final case class StarAt(
-      factRoot: String, factV: Long,
-      dims: Seq[(String, Long, Seq[(String, String)])],
+      fact: Snapshot, dims: Seq[(Snapshot, Seq[(String, String)])],
       keys: Seq[(Int, String)]) extends RecomputeSource
 
   /** Apply one feed batch (must carry `_change_type`) to the aggregate
@@ -146,7 +148,8 @@ object AggReplica {
       batch,
       txns = txn.toSeq, expectedPriors = txn.toSeq.map(_ => expectedPrior),
       extrema = extrema,
-      source = source.map { case (r, v) => TableAt(r, v) })
+      source = source.map { case (r, v) =>
+        new TableAt(VersionedTable.snapshotAt(spark, r, v)) })
 
   /** Multi-stamp, multi-measure form of [[applyAggBatch]] — a
     * join-backed view folds SEVERAL feeds (fact + every star dim) in
@@ -280,11 +283,11 @@ object AggReplica {
       .groupBy(keyCols.map(col): _*)
       .agg(baseAggs.head, (baseAggs.tail ++ extAggs): _*)
       .where(keep)
-    val viewCur = VersionedTable.currentVersion(spark, dstRoot)
+    val viewCur = VersionedTable.latest(spark, dstRoot)
     val deltas =
       (if (!extrema) aggregated
        else flagExtrema(aggregated, keyCols,
-         viewCur.map(VersionedTable.readVersion(spark, dstRoot, _))))
+         viewCur.map(VersionedTable.readVersion(spark, _))))
       // the deltas feed every group-sized probe (NULL-key, the bootstrap
       // negative check, the flagged count, the flagged-key collect) and
       // the merge itself — without pinning, each would re-run the whole
@@ -542,11 +545,11 @@ object AggReplica {
           col(k).isin(keyRows.map(_.get(i)).distinct.toSeq: _*)
         }.reduceOption(_ && _)
       val snap = source match {
-        case TableAt(srcRoot, srcV) =>
+        case t: TableAt =>
           if (usable)
-            VersionedTable.readVersionWhere(spark, srcRoot, srcV,
+            VersionedTable.readVersionWhere(spark, t.snap,
               inPred(keyCols.zipWithIndex).get)
-          else VersionedTable.readVersion(spark, srcRoot, srcV)
+          else VersionedTable.readVersion(spark, t.snap)
         case s: StarAt =>
           // star extrema views are row-level (minCol == maxCol)
           starRecompute(spark, s, ex.minCol,
@@ -592,25 +595,23 @@ object AggReplica {
     val factCols = s.keys.zipWithIndex.collect {
       case ((0, c), pos) => (c, pos) }
     val factPred = inPred.flatMap(f => f(factCols))
-    val dimFrames = s.dims.zipWithIndex.map { case ((root, v, pairs), i) =>
+    val dimFrames = s.dims.zipWithIndex.map { case ((dim, pairs), i) =>
       val dimCols = s.keys.zipWithIndex.collect {
         case ((side, c), pos) if side == i + 1 => (c, pos) }
       val dPred = inPred.flatMap(f => f(dimCols))
       val d = dPred match {
-        case Some(p) => VersionedTable.readVersionWhere(spark, root, v, p)
-        case None => VersionedTable.readVersion(spark, root, v)
+        case Some(p) => VersionedTable.readVersionWhere(spark, dim, p)
+        case None => VersionedTable.readVersion(spark, dim)
       }
       (d, pairs, dPred.isDefined)
     }
     val fact = factPred match {
-      case Some(p) =>
-        VersionedTable.readVersionWhere(spark, s.factRoot, s.factV, p)
+      case Some(p) => VersionedTable.readVersionWhere(spark, s.fact, p)
       case None =>
         dimFrames.collectFirst { case (d, pairs, true) => (d, pairs) } match {
           case Some((d, pairs)) =>
-            factAtRestricted(spark, s.factRoot, s.factV, d,
-              pairs.map(_._1), pairs.map(_._2))
-          case None => VersionedTable.readVersion(spark, s.factRoot, s.factV)
+            factAtRestricted(spark, s.fact, d, pairs.map(_._1), pairs.map(_._2))
+          case None => VersionedTable.readVersion(spark, s.fact)
         }
     }
     starProject(fact, dimFrames.map { case (d, pairs, _) => (d, pairs) },
@@ -703,9 +704,9 @@ object AggReplica {
     require(keyCols.nonEmpty, "createView needs at least one group column")
     require(VersionedTable.currentVersion(spark, dstRoot).isEmpty,
       s"$dstRoot already exists — DROP it or pick another root")
-    val srcCur = VersionedTable.currentVersion(spark, srcRoot).getOrElse(
-      throw new java.io.IOException(s"no committed version under $srcRoot"))
-    val snap = VersionedTable.readVersion(spark, srcRoot, srcCur)
+    val srcAt = VersionedTable.latestOrFail(spark, srcRoot)
+    val srcCur = srcAt.version
+    val snap = VersionedTable.readVersion(spark, srcAt)
     def canon(c: String): String =
       snap.columns.find(_.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -773,7 +774,7 @@ object AggReplica {
       s"$dstRoot is not a materialized view (no $MvSourceProp property)"))
     val result =
       if (props.contains(MvDimProp))
-        refreshJoinView(spark, dstRoot, cur, src, props)
+        refreshJoinView(spark, dstRoot, view, src, props)
       else {
         val keys = props(MvKeysProp).split(',').toSeq
         val measures = decodeMeasures(props(MvValueProp))
@@ -787,15 +788,16 @@ object AggReplica {
         val applied = VersionedTable.lastTxn(spark, dstRoot, MvAppId).getOrElse(
           throw new java.io.IOException(
             s"materialized view $dstRoot lost its refresh high-water stamp"))
-        val srcCur = VersionedTable.currentVersion(spark, src).getOrElse(
+        val srcSnap = VersionedTable.latest(spark, src).getOrElse(
           throw new java.io.IOException(s"materialized view source $src is gone"))
+        val srcCur = srcSnap.version
         if (srcCur <= applied) cur
         else {
           val batch = VersionedTable.readChanges(spark, src, applied + 1, srcCur)
           applyAggMulti(spark, dstRoot, keys, measures, batch,
             txns = Seq((MvAppId, srcCur)), expectedPriors = Seq(Some(applied)),
             extrema = extrema,
-            source = if (extrema) Some(TableAt(src, srcCur)) else None,
+            source = if (extrema) Some(new TableAt(srcSnap)) else None,
             extremaCols = exCols)
           VersionedTable.currentVersion(spark, dstRoot).getOrElse(cur)
         }
@@ -880,9 +882,9 @@ object AggReplica {
     require(keyCols.nonEmpty, "createMultiView needs at least one group column")
     require(VersionedTable.currentVersion(spark, dstRoot).isEmpty,
       s"$dstRoot already exists — DROP it or pick another root")
-    val srcCur = VersionedTable.currentVersion(spark, srcRoot).getOrElse(
-      throw new java.io.IOException(s"no committed version under $srcRoot"))
-    val snap = VersionedTable.readVersion(spark, srcRoot, srcCur)
+    val srcAt = VersionedTable.latestOrFail(spark, srcRoot)
+    val srcCur = srcAt.version
+    val snap = VersionedTable.readVersion(spark, srcAt)
     def canon(c: String): String =
       snap.columns.find(_.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -923,9 +925,9 @@ object AggReplica {
     require(keyCols.nonEmpty, "createExtremaChildView needs a group column")
     require(VersionedTable.currentVersion(spark, dstRoot).isEmpty,
       s"$dstRoot already exists — DROP it or pick another root")
-    val parentCur = VersionedTable.currentVersion(spark, parentRoot).getOrElse(
-      throw new java.io.IOException(s"no committed version under $parentRoot"))
-    val snap = VersionedTable.readVersion(spark, parentRoot, parentCur)
+    val parentAt = VersionedTable.latestOrFail(spark, parentRoot)
+    val parentCur = parentAt.version
+    val snap = VersionedTable.readVersion(spark, parentAt)
     val needed = keyCols ++ measures.map(_._1) ++
       Seq("n_vals", "value_min", "value_max")
     val absent = needed.filterNot(snap.columns.contains)
@@ -1012,9 +1014,7 @@ object AggReplica {
     * Schema: k1…kn, n_rows, value_sum — exactly what
     * `GROUP BY ROLLUP (k1, …, kn)` computes from the source. */
   def readRollup(spark: SparkSession, root: String): DataFrame = {
-    val cur = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val props = VersionedTable.propertiesOf(spark, root, cur)
+    val props = VersionedTable.propertiesOf(spark, VersionedTable.latestOrFail(spark, root))
     val keys = props.getOrElse(MvRollupProp,
       throw new IllegalArgumentException(
         s"$root is not a rollup view (no $MvRollupProp property)"))
@@ -1039,9 +1039,9 @@ object AggReplica {
       val r = cursor.get
       levels += ((r, VersionedTable.read(spark, r), keys.dropRight(depth),
         "rows_sum"))
-      val cv = VersionedTable.currentVersion(spark, r).getOrElse(
-        throw new java.io.IOException(s"rollup level $r is gone"))
-      cursor = VersionedTable.propertiesOf(spark, r, cv).get(MvChildProp)
+      cursor = VersionedTable.propertiesOf(spark, VersionedTable.latest(spark, r)
+        .getOrElse(throw new java.io.IOException(s"rollup level $r is gone")))
+        .get(MvChildProp)
       depth += 1
     }
     val (_, coarsest, _, coarseN) = levels.last
@@ -1135,9 +1135,7 @@ object AggReplica {
     * grand-total row aggregated at read from the finest. Schema:
     * k1…kn, n_rows, value_sum. */
   def readCube(spark: SparkSession, root: String): DataFrame = {
-    val cur = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val props = VersionedTable.propertiesOf(spark, root, cur)
+    val props = VersionedTable.propertiesOf(spark, VersionedTable.latestOrFail(spark, root))
     val keys = props.getOrElse(MvCubeProp,
       throw new IllegalArgumentException(
         s"$root is not a cube view (no $MvCubeProp property)"))
@@ -1153,9 +1151,8 @@ object AggReplica {
         (Seq(col(nCol).as("n_rows"), col("value_sum")) ++ exCols(df)): _*)
     val childFrames = props.get(MvChildProp).toSeq.flatMap(_.split(','))
       .filter(_.nonEmpty).map { child =>
-        val cv = VersionedTable.currentVersion(spark, child).getOrElse(
-          throw new java.io.IOException(s"cube level $child is gone"))
-        val have = VersionedTable.propertiesOf(spark, child, cv)(MvKeysProp)
+        val have = VersionedTable.propertiesOf(spark, VersionedTable.latest(spark, child)
+          .getOrElse(throw new java.io.IOException(s"cube level $child is gone")))(MvKeysProp)
           .split(',').toSeq
         pad(VersionedTable.read(spark, child), have, "rows_sum")
       }
@@ -1183,9 +1180,7 @@ object AggReplica {
     * a vanished source or corrupted property measures 0 (the
     * maintenance tick's degrade-don't-fail rule). */
   def versionsBehind(spark: SparkSession, root: String): Long = {
-    val cur = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val props = VersionedTable.propertiesOf(spark, root, cur)
+    val props = VersionedTable.propertiesOf(spark, VersionedTable.latestOrFail(spark, root))
     def lag(srcProp: String, appId: String): Long =
       props.get(srcProp).flatMap { src =>
         for {
@@ -1209,9 +1204,7 @@ object AggReplica {
     * half-created or half-dropped chain is always droppable through
     * this verb. Returns the number of roots removed. */
   def dropView(spark: SparkSession, root: String): Long = {
-    val cur = VersionedTable.currentVersion(spark, root).getOrElse(
-      throw new java.io.IOException(s"no committed version under $root"))
-    val props = VersionedTable.propertiesOf(spark, root, cur)
+    val props = VersionedTable.propertiesOf(spark, VersionedTable.latestOrFail(spark, root))
     require(props.contains(MvSourceProp),
       s"$root is not a materialized view (no $MvSourceProp property) — " +
         "DROP MATERIALIZED VIEW refuses to delete a base table")
@@ -1243,8 +1236,8 @@ object AggReplica {
     if (!f.exists(p)) Nil
     else f.listStatus(p).toSeq.filter(_.isDirectory)
       .map(_.getPath.toString).sorted.flatMap { root =>
-        try VersionedTable.currentVersion(spark, root).flatMap { cv =>
-          VersionedTable.propertiesOf(spark, root, cv).get(MvSourceProp)
+        try VersionedTable.latest(spark, root).flatMap { cv =>
+          VersionedTable.propertiesOf(spark, cv).get(MvSourceProp)
             .map(src => (root, src, versionsBehind(spark, root)))
         } catch { case _: Exception => None }
       }
@@ -1358,14 +1351,12 @@ object AggReplica {
     require(groupCols.nonEmpty, "createStarView needs at least one group column")
     require(VersionedTable.currentVersion(spark, dstRoot).isEmpty,
       s"$dstRoot already exists — DROP it or pick another root")
-    def curOf(root: String): Long =
-      VersionedTable.currentVersion(spark, root).getOrElse(
-        throw new java.io.IOException(s"no committed version under $root"))
-    val factCur = curOf(factRoot)
-    val dimCurs = dims.map(d => curOf(d._1))
-    val fSnap = VersionedTable.readVersion(spark, factRoot, factCur)
-    val dSnaps = dims.zip(dimCurs).map { case ((root, _), v) =>
-      VersionedTable.readVersion(spark, root, v) }
+    val factAt = VersionedTable.latestOrFail(spark, factRoot)
+    val dimAts = dims.map(d => VersionedTable.latestOrFail(spark, d._1))
+    val factCur = factAt.version
+    val dimCurs = dimAts.map(_.version)
+    val fSnap = VersionedTable.readVersion(spark, factAt)
+    val dSnaps = dimAts.map(VersionedTable.readVersion(spark, _))
     def canon(cols: Array[String], root: String)(c: String): String =
       cols.find(_.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -1428,7 +1419,7 @@ object AggReplica {
     * feed, exactly-once under the (n+1)-stamp overlap guard, no-op
     * without a commit when no source moved. */
   private def refreshJoinView(
-      spark: SparkSession, dstRoot: String, cur: Long, factRoot: String,
+      spark: SparkSession, dstRoot: String, view: Snapshot, factRoot: String,
       props: Map[String, String]): Long = {
     val n = props.get(MvNDimsProp).map(s => s.toIntOption.getOrElse(
       throw new IllegalArgumentException(
@@ -1465,33 +1456,34 @@ object AggReplica {
           s"materialized view $dstRoot lost its $appId high-water stamp"))
     val appliedF = stamp(MvAppId)
     val appliedDs = (0 until n).map(i => stamp(dimAppId(i)))
-    def curOf(root: String): Long =
-      VersionedTable.currentVersion(spark, root).getOrElse(
+    def curOf(root: String): Snapshot =
+      VersionedTable.latest(spark, root).getOrElse(
         throw new java.io.IOException(s"materialized view source $root is gone"))
-    val factCur = curOf(factRoot)
-    val dimCurs = dimRoots.map(curOf)
+    val factAt = curOf(factRoot)
+    val dimAts = dimRoots.map(curOf)
+    val factCur = factAt.version
+    val dimCurs = dimAts.map(_.version)
     val moved = factCur > appliedF ||
       (0 until n).exists(i => dimCurs(i) > appliedDs(i))
-    if (!moved) cur
+    if (!moved) view.version
     else {
-      def dimAt(j: Int, v: Long): DataFrame =
-        VersionedTable.readVersion(spark, dimRoots(j), v)
       val terms = Seq.newBuilder[DataFrame]
       if (factCur > appliedF) {
         val dF = VersionedTable.readChanges(spark, factRoot, appliedF + 1, factCur)
         terms += starProject(dF,
-          (0 until n).map(j => (dimAt(j, dimCurs(j)), pairs(j))),
+          (0 until n).map(j => (VersionedTable.readVersion(spark, dimAts(j)), pairs(j))),
           keys, values, typeFrom = 0)
       }
       for (i <- 0 until n if dimCurs(i) > appliedDs(i)) {
         val dD = VersionedTable.readChanges(
           spark, dimRoots(i), appliedDs(i) + 1, dimCurs(i))
-        val fOld = factAtRestricted(spark, factRoot, appliedF, dD,
+        val fOld = factAtRestricted(spark,
+          VersionedTable.snapshotAt(spark, factRoot, appliedF), dD,
           pairs(i).map(_._1), pairs(i).map(_._2))
         val dimFrames = (0 until n).map { j =>
-          if (j < i) (dimAt(j, appliedDs(j)), pairs(j))
+          if (j < i) (VersionedTable.readVersion(spark, dimRoots(j), appliedDs(j)), pairs(j))
           else if (j == i) (dD, pairs(j))
-          else (dimAt(j, dimCurs(j)), pairs(j))
+          else (VersionedTable.readVersion(spark, dimAts(j)), pairs(j))
         }
         terms += starProject(fOld, dimFrames, keys, values, typeFrom = i + 1)
       }
@@ -1516,10 +1508,9 @@ object AggReplica {
         txns = txns, expectedPriors = priors, guards = guards,
         extrema = extrema,
         source = if (!extrema) None
-          else Some(StarAt(factRoot, factCur,
-            (0 until n).map(i => (dimRoots(i), dimCurs(i), pairs(i))),
+          else Some(StarAt(factAt, (0 until n).map(i => (dimAts(i), pairs(i))),
             keys)))
-      VersionedTable.currentVersion(spark, dstRoot).getOrElse(cur)
+      VersionedTable.currentVersion(spark, dstRoot).getOrElse(view.version)
     }
   }
 
@@ -1575,7 +1566,7 @@ object AggReplica {
     * equi-join, so they are dropped before collecting — the predicate
     * still covers every joinable fact row. */
   private def factAtRestricted(
-      spark: SparkSession, factRoot: String, v: Long, dD: DataFrame,
+      spark: SparkSession, fact: Snapshot, dD: DataFrame,
       fks: Seq[String], pks: Seq[String]): DataFrame = {
     val keyRows = dD
       .where(pks.map(col(_).isNotNull).reduce(_ && _))
@@ -1584,12 +1575,12 @@ object AggReplica {
     if (keyRows.isEmpty)
       // ΔD carried no joinable keys (all-NULL or empty feed): the term
       // is provably empty — prune the whole scan, not just its files
-      VersionedTable.readVersionWhere(spark, factRoot, v, lit(false))
+      VersionedTable.readVersionWhere(spark, fact, lit(false))
     else if (keyRows.length <= IsinLimit) {
       val pred = fks.zipWithIndex.map { case (fk, i) =>
         col(fk).isin(keyRows.map(_.get(i)).distinct.toSeq: _*)
       }.reduce(_ && _)
-      VersionedTable.readVersionWhere(spark, factRoot, v, pred)
-    } else VersionedTable.readVersion(spark, factRoot, v)
+      VersionedTable.readVersionWhere(spark, fact, pred)
+    } else VersionedTable.readVersion(spark, fact)
   }
 }

@@ -234,9 +234,9 @@ object Bucketing {
   /** The touched slice read BUCKET-ALIGNED: one partition per bucket in
     * bucket order (untouched/empty buckets contribute one empty
     * partition), with the layout's HashPartitioning claimed on top.
-    * Each bucket's files read through [[VersionedTable.readFilesOf]]
-    * (DV masks and column mapping fold map-side, so rows stay
-    * bucket-pure). */
+    * Each bucket's files read through an unmasked [[VersionedTable.scan]]
+    * (column mapping applies map-side, so rows stay bucket-pure); the
+    * mask folds once above the claim ([[alignedSlice]]). */
   private[graft] def bucketAlignedSlice(
       spark: SparkSession, v: Snapshot, keys: Seq[String], n: Int,
       filesByBucket: Map[Int, Seq[String]],
@@ -261,7 +261,7 @@ object Bucketing {
       .select((casts(schema) :+ col("__dv_file").as(refCol)): _*)
 
   /** [[bucketAlignedSlice]] in the MERGE-ON-READ tagged form: each
-    * bucket's files read through [[VersionedTable.readFilesTagged]]
+    * bucket's files read through a tagged [[VersionedTable.scan]]
     * (existing masks already folded, each visible row tagged
     * `__dv_file`/`__dv_pos`), the layout's HashPartitioning claimed on
     * the key. A masked target's MERGE then joins its touched slice with
@@ -334,7 +334,7 @@ object Bucketing {
       (if (tagFile) Seq(col("__dv_file")) else Nil) ++
       (if (tagPos) Seq(col("__dv_pos")) else Nil)
     def readBucketFiles(refs: Seq[String]) = VersionedTable
-      .readFilesRaw(spark, v, refs, tagFile, tagPos).select(cs: _*)
+      .scan(spark, v, Some(refs), tagFile, tagPos, masked = false).select(cs: _*)
     val onePlan: Option[org.apache.spark.sql.DataFrame] =
       if (filesByBucket.isEmpty) None
       else {

@@ -312,13 +312,13 @@ object Sinks {
             }
           val kept = ranges.map(_._1).filterNot(touched)
           // the slice reads THROUGH the deletion-vector masks
-          // (readFilesOf): a MOR-deleted row neither matches a staging
+          // (a masked scan): a MOR-deleted row neither matches a staging
           // key nor re-enters the rewrite; kept files' masks carry
           // forward in the commit, touched files' fold away with the
           // rewrite
           val slice =
             if (touched.isEmpty) target.limit(0)
-            else VersionedTable.readFilesOf(spark, cur, touched.toSeq.sorted)
+            else VersionedTable.scan(spark, cur, Some(touched.toSeq.sorted))
           val merged = graft.operators.IncrementalMerge
             .mergeEvolving(slice, staging, key, runTs, statusCol, doneValue)
             .select(target.columns.map(col): _*)

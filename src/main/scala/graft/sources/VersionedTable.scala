@@ -122,7 +122,7 @@ object VersionedTable {
   }
 
   /** The latest snapshot, or the error every read of an unborn table raises. */
-  private def latestOrFail(spark: SparkSession, root: String): Snapshot =
+  private[graft] def latestOrFail(spark: SparkSession, root: String): Snapshot =
     latest(spark, root).getOrElse(
       throw new java.io.IOException(s"no committed version under $root"))
 
@@ -1070,7 +1070,7 @@ object VersionedTable {
 
   /** Read the latest committed snapshot. */
   def read(spark: SparkSession, root: String): DataFrame =
-    versionFrame(spark, latestOrFail(spark, root), synth = true)
+    scan(spark, latestOrFail(spark, root))
 
   // ---- delta-manifest commit form -----------------------------------------
 
@@ -1376,7 +1376,7 @@ object VersionedTable {
       : Option[org.apache.spark.sql.types.StructType] =
     tableSchema(spark, snapshotAt(spark, root, v))
 
-  private def tableSchema(
+  private[graft] def tableSchema(
       spark: SparkSession, s: Snapshot): Option[org.apache.spark.sql.types.StructType] =
     s.memo("schema") {
       // grouped vintages carry the schema JSON in the one metadata
@@ -1559,7 +1559,7 @@ object VersionedTable {
       spark: SparkSession, root: String, v: Long): Map[String, String] =
     columnMapping(spark, snapshotAt(spark, root, v))
 
-  private def columnMapping(spark: SparkSession, s: Snapshot): Map[String, String] =
+  private[graft] def columnMapping(spark: SparkSession, s: Snapshot): Map[String, String] =
     metaSection(spark, s, GroupedMapPrefix, MappingRel) - RetiredKey
 
   /** Physical names RETIRED by a DROP COLUMN (or freed by a rename and
@@ -1597,7 +1597,7 @@ object VersionedTable {
     * inferred from the snapshot's parquet footers. */
   private[graft] def schemaOf(
       spark: SparkSession, s: Snapshot): org.apache.spark.sql.types.StructType =
-    tableSchema(spark, s).getOrElse(versionFrame(spark, s, synth = true).schema)
+    tableSchema(spark, s).getOrElse(scan(spark, s, masked = false).schema)
 
   /** A parquet reader pinned to version `s`'s recorded schema when one
     * exists (by-name column resolution: a file missing an evolved-in
@@ -1714,8 +1714,8 @@ object VersionedTable {
     * a tail removed ANYWHERE in the chain can key no live mask row at
     * `v` — and O(changed-along-chain), never an O(refs) membership
     * test. Levels are DISJOINT by construction — every MOR writer
-    * computes its new deletions from a masks-folded read
-    * ([[morVisibleTagged]]/[[readFilesTagged]]), so an already-masked
+    * computes its new deletions from a masks-folded tagged [[scan]]
+    * (or [[foldMaskOnce]] above a claimed slice), so an already-masked
     * row can never re-enter a later level — which is why the fold needs
     * no distinct: consumers get set semantics for free. None when the
     * version carries no mask at all. */
@@ -2091,8 +2091,7 @@ object VersionedTable {
       predicate: Column): Option[Seq[String]] = {
     if (partitionColumnsOf(spark, cur).isEmpty) return None
     val types = schemaOf(spark, cur).map(f => f.name -> f.dataType).toMap
-    val optimized = versionFrame(spark, cur, synth = false)
-      .where(predicate).queryExecution.optimizedPlan
+    val optimized = planFrame(spark, cur).where(predicate).queryExecution.optimizedPlan
     val conjs0 = optimized.collect {
       case fl: org.apache.spark.sql.catalyst.plans.logical.Filter => fl.condition
     }.flatMap(TableStats.conjuncts)
@@ -2164,7 +2163,7 @@ object VersionedTable {
     val extras =
       if (!changeFeed) Map.empty[String, DataFrame]
       else Map("changes" ->
-        readFilesOf(spark, cur, dropRefs).withColumn("_change_type",
+        scan(spark, cur, Some(dropRefs)).withColumn("_change_type",
           org.apache.spark.sql.functions.lit("delete")))
     // caller's in-claim gate (txn idempotence, validation) runs on this
     // road too — the COW and MOR roads of the same deleteWhere honor it
@@ -2268,7 +2267,7 @@ object VersionedTable {
           val inserts = newData0.withColumn("_change_type", lit("insert"))
           val feed =
             if (dropped.isEmpty) inserts
-            else readFilesOf(spark, cur, dropped)
+            else scan(spark, cur, Some(dropped))
               .withColumn("_change_type", lit("delete")).unionByName(inserts)
           Map("changes" -> feed)
         }
@@ -2421,26 +2420,6 @@ object VersionedTable {
     }
   }
 
-  /** Mask `dv`'s (file, pos) rows out of `df` (a scan of this snapshot's
-    * files): the merge-on-read fold on the row's physical identity
-    * (`_metadata` file + row index — stable for parquet, the same
-    * identity Delta's deletion vectors address). Road selection is
-    * [[foldMask]]'s; [[compact]]/[[optimize]] fold the mask away
-    * entirely either way. */
-  private def applyDv(spark: SparkSession, df: DataFrame, chain: DvChain): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val cols = df.columns.toSeq
-    val tagged = df.withColumn("__dv_file", fileRefCol)
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    foldMask(spark, tagged, chain).select(cols.map(col): _*)
-  }
-
-  /** `df` (a scan of version `s`'s files) with the version's mask folded
-    * out and renamed to its logical schema — the tail of every read. */
-  private def maskedLogical(spark: SparkSession, s: Snapshot, df: DataFrame): DataFrame =
-    toLogical(dvChainInfo(spark, s).map(applyDv(spark, df, _)).getOrElse(df),
-      columnMapping(spark, s))
-
   /** TIMESTAMP-based time travel (Delta's `TIMESTAMP AS OF`): the
     * highest version whose commit time is at or before `ts` — resolved
     * from the IN-COMMIT timestamps ([[commitTimeOf]]: marker line 2,
@@ -2470,28 +2449,89 @@ object VersionedTable {
   /** Time travel: read an exact committed version (deletion-vector rows
     * masked out — the read is always the table's logical content). */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
-    versionFrame(spark, snapshotAt(spark, root, v), synth = true)
+    scan(spark, snapshotAt(spark, root, v))
 
   private[graft] def readVersion(spark: SparkSession, s: Snapshot): DataFrame =
-    versionFrame(spark, s, synth = true)
+    scan(spark, s)
 
-  /** [[readVersion]] with the Hive-convert partition synthesis
-    * optionally SKIPPED (`synth = false`): the conjunct-extraction
-    * sites ([[prunedFiles]], [[partitionDropPlan]]) resolve predicates
-    * against this plain frame, because the optimizer pushes a filter
-    * through the synthesis Project by SUBSTITUTING the coalesce — a
-    * partition conjunct would reach the pruner coalesce-shaped and
-    * undecidable. Execution reads always synthesize. */
-  private def versionFrame(
-      spark: SparkSession, s: Snapshot, synth: Boolean): DataFrame = {
+  /** The one place a committed version's files become a frame — every
+    * read of table rows (time travel, pruned reads, COW slices, MOR
+    * tagged slices, virtual feeds, restore diffs) is this call. In
+    * order:
+    *
+    *  - the files: `refs` (root-relative, as [[dataFileRefs]] lists
+    *    them), else the manifest, else the version dir itself (one
+    *    listing, not one stat per file);
+    *  - the recorded physical schema ([[versionReader]]) and the
+    *    Hive-convert partition synthesis ([[synthHiveParts]]);
+    *  - each row's `__dv_file`/`__dv_pos` tags, built only when the
+    *    caller asks (they are codegen'd per row, and a caller's claimed
+    *    slice is an optimizer barrier no later projection prunes
+    *    through) or a mask must fold;
+    *  - when `masked`, the deletion-vector mask ([[foldMask]] picks the
+    *    road; the chain resolves once), the fold's own tags projected
+    *    away again;
+    *  - the logical rename ([[toLogical]]).
+    *
+    * No file to read (a manifest an all-drop partition delete emptied,
+    * an empty slice) gives an empty frame of the version's schema (plus
+    * the asked-for tags) and never a scan of no paths, which Spark logs
+    * as "All paths were ignored". */
+  private[graft] def scan(
+      spark: SparkSession, s: Snapshot, refs: Option[Seq[String]] = None,
+      tagFile: Boolean = false, tagPos: Boolean = false,
+      masked: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     assertReadable(spark, s)
-    val reader = versionReader(spark, s)
-    val scan = manifestOf(spark, s) match {
-      case Some(refs) =>
-        reader.parquet(refs.map(r => new Path(s.root, r).toString): _*)
-      case None => reader.parquet(s.dir.toString)
+    val paths = refs.orElse(manifestOf(spark, s)) match {
+      case Some(rs) => rs.map(r => new Path(s.root, r).toString)
+      case None => Seq(s.dir.toString)
     }
-    maskedLogical(spark, s, if (synth) synthHiveParts(spark, s, scan) else scan)
+    // an unrecorded schema infers from the version's files, which an
+    // empty manifest does not have: that read stays Spark's to refuse
+    val emptySchema =
+      if (paths.nonEmpty) None
+      else tableSchema(spark, s).orElse(refs.map(_ => schemaOf(spark, s)))
+    emptySchema match {
+      case Some(sch) =>
+        val tags = (if (tagFile) Seq(StructField("__dv_file", StringType)) else Nil) ++
+          (if (tagPos) Seq(StructField("__dv_pos", LongType)) else Nil)
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          StructType(sch.fields ++ tags))
+      case None =>
+        val chain = if (masked) dvChainInfo(spark, s) else None
+        val base = synthHiveParts(spark, s, versionReader(spark, s).parquet(paths: _*))
+        val withFile =
+          if (tagFile || chain.isDefined) base.withColumn("__dv_file", fileRefCol) else base
+        val tagged =
+          if (tagPos || chain.isDefined) withFile.withColumn("__dv_pos", col("_metadata.row_index"))
+          else withFile
+        val out = chain match {
+          case Some(c) =>
+            val keep = base.columns.toSeq ++
+              (if (tagFile) Seq("__dv_file") else Nil) ++ (if (tagPos) Seq("__dv_pos") else Nil)
+            foldMask(spark, tagged, c).select(keep.map(col): _*)
+          case None => tagged
+        }
+        toLogical(out, columnMapping(spark, s))
+    }
+  }
+
+  /** The relation a predicate resolves against to PLAN a read of version
+    * `s` ([[prunedFiles]], [[partitionDropPlan]]): the version's physical
+    * schema over no files at all, under the read's logical rename, so
+    * pushed-down conjuncts name the physical columns the stats are keyed
+    * by. Spark stats and lists nothing to build it. An empty RDD and not
+    * an empty LocalRelation, which the optimizer would fold away together
+    * with the Filter the pruner reads; every column nullable, as in a
+    * parquet relation, so no null test folds away either. */
+  private def planFrame(spark: SparkSession, s: Snapshot): DataFrame = {
+    assertReadable(spark, s)
+    val mapping = columnMapping(spark, s)
+    val phys = physicalSchema(schemaOf(spark, s), mapping)
+    toLogical(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(phys.map(_.copy(nullable = true)))), mapping)
   }
 
   /** [[readVersion]] with each row's root-relative file ref exposed as
@@ -2501,7 +2541,9 @@ object VersionedTable {
     * `refCol` values are the files a matched-row rewrite must touch.
     * DV-masked like every read; Catalyst prunes the scan to the join's
     * columns + the metadata ref, so detection reads a column slice, not
-    * the table. */
+    * the table. `onlyRefs` bounds the scan to a candidate subset (e.g.
+    * the files whose key stats admit a source key): detection then reads
+    * O(candidates), not the table. */
   def readVersionWithFileRef(
       spark: SparkSession, root: String, v: Long, refCol: String,
       onlyRefs: Option[Seq[String]] = None): DataFrame =
@@ -2509,36 +2551,8 @@ object VersionedTable {
 
   private[graft] def readVersionWithFileRef(
       spark: SparkSession, s: Snapshot, refCol: String,
-      onlyRefs: Option[Seq[String]]): DataFrame = {
-    assertReadable(spark, s)
-    val reader = versionReader(spark, s)
-    // `onlyRefs` bounds the scan to a candidate subset (e.g. the files
-    // whose key stats admit a source key): detection then reads
-    // O(candidates), not the table
-    val base = synthHiveParts(spark, s, onlyRefs match {
-      case Some(refs) =>
-        require(refs.nonEmpty, "onlyRefs must be non-empty — skip the scan instead")
-        reader.parquet(refs.map(r => new Path(s.root, r).toString): _*)
-      case None => manifestOf(spark, s) match {
-        case Some(refs) =>
-          reader.parquet(refs.map(r => new Path(s.root, r).toString): _*)
-        case None => reader.parquet(s.dir.toString)
-      }
-    })
-    maskedLogical(spark, s, base.withColumn(refCol, fileRefCol))
-  }
-
-  /** Read a SUBSET of snapshot `s`'s files (root-relative refs, as listed
-    * by [[dataFileRefs]]) through the version's recorded schema and
-    * deletion-vector masks — the touched-slice read of a COW rewrite.
-    * Raw per-file reads would resurrect MOR-deleted rows; this is the
-    * safe form. */
-  private[graft] def readFilesOf(
-      spark: SparkSession, s: Snapshot, refs: Seq[String]): DataFrame = {
-    require(refs.nonEmpty, "readFilesOf needs at least one file ref")
-    maskedLogical(spark, s, synthHiveParts(spark, s, versionReader(spark, s)
-      .parquet(refs.map(r => new Path(s.root, r).toString): _*)))
-  }
+      onlyRefs: Option[Seq[String]]): DataFrame =
+    scan(spark, s, onlyRefs, tagFile = true).withColumnRenamed("__dv_file", refCol)
 
   /** [[read]] with FILE-LEVEL DATA SKIPPING: files whose footer min/max
     * statistics prove they cannot contain a row satisfying `predicate`
@@ -2550,67 +2564,55 @@ object VersionedTable {
   def readWhere(spark: SparkSession, root: String, predicate: Column): DataFrame =
     readVersionWhere(spark, latestOrFail(spark, root), predicate)
 
-  def readVersionWhere(
-      spark: SparkSession, root: String, v: Long, predicate: Column): DataFrame =
-    readVersionWhere(spark, snapshotAt(spark, root, v), predicate)
-
-  private def readVersionWhere(
+  /** [[readWhere]] at a resolved snapshot. Every file kept reads the
+    * version whole (a plain dir stays one listing); none kept reads
+    * nothing. */
+  private[graft] def readVersionWhere(
       spark: SparkSession, s: Snapshot, predicate: Column): DataFrame = {
     val (kept, total) = prunedFiles(spark, s, predicate)
-    if (kept.size == total) readVersion(spark, s).where(predicate)
-    else if (kept.isEmpty)
-      // all files pruned: zero-row result with the snapshot schema (the
-      // false filter folds to an empty LocalRelation — nothing is scanned)
-      readVersion(spark, s)
-        .where(org.apache.spark.sql.functions.lit(false)).where(predicate)
-    else maskedLogical(spark, s,
-      synthHiveParts(spark, s, versionReader(spark, s).parquet(kept: _*)))
-      .where(predicate)
+    scan(spark, s, if (kept.size == total) None else Some(kept)).where(predicate)
   }
 
-  /** [[prunedFiles]] in ROOT-RELATIVE ref space: the manifest refs of
-    * version `v` whose stats ADMIT `predicate` (may contain a satisfying
-    * row). The MERGE NOT-MATCHED-BY-SOURCE planner consumes this — its
-    * touched/kept split lives in ref space, while prunedFiles returns
-    * FileStatus path strings. */
-  private[graft] def prunedFileRefs(
-      spark: SparkSession, s: Snapshot, predicate: Column): Seq[String] = {
-    val (may, _) = prunedFiles(spark, s, predicate)
-    val f = fs(spark, s.root)
-    val maySet = may.map(p => f.makeQualified(new Path(p)).toString).toSet
-    dataFileRefs(spark, s)
-      .filter(r => maySet(f.makeQualified(new Path(s.root, r)).toString))
-  }
+  /** Files [[prunedFiles]] may keep before its bloom probes run as a
+    * Spark job instead of a driver loop. */
+  private val BloomDriverBudget = 32
+
+  /** Hull files at or past which the SQL MERGE's candidate-file pass
+    * (GraftSql's `candidateRefs`) probes each source key against the
+    * per-file key ranges instead of taking the hull whole: below it the
+    * extra job costs more than the files it could drop. */
+  private[graft] val MergeStatsPruneMinFiles = 16
 
   /** The file-pruning decision itself, exposed for specs and runtime
     * metrics: (files kept, total data files) for `predicate` against
-    * version `v`'s footer stats. No stats → everything kept. */
+    * version `v`'s footer stats. No stats → everything kept. This public
+    * face returns the kept files as qualified paths; the internal
+    * snapshot form returns them as manifest refs (root-relative, as
+    * [[dataFileRefs]] lists them), the identity every writer's
+    * touched/kept split works in. */
   def prunedFiles(
       spark: SparkSession, root: String, v: Long,
-      predicate: Column): (Seq[String], Int) =
-    prunedFiles(spark, snapshotAt(spark, root, v), predicate)
+      predicate: Column): (Seq[String], Int) = {
+    val s = snapshotAt(spark, root, v)
+    val f = fs(spark, root)
+    val (kept, total) = prunedFiles(spark, s, predicate)
+    (kept.map(r => f.makeQualified(new Path(s.root, r)).toString), total)
+  }
 
-  private def prunedFiles(
+  private[graft] def prunedFiles(
       spark: SparkSession, s: Snapshot, predicate: Column): (Seq[String], Int) = {
-    // (absolute path, stats-lookup key): plain snapshots key stats by
-    // DIR-RELATIVE path; manifest snapshots by root-relative path (bare
-    // names collide across version dirs AND across partition subdirs —
-    // Spark's partitioned writer reuses one part name per task)
-    val files: Seq[(Path, String)] = manifestOf(spark, s) match {
-      case Some(refs) => refs.map(r => (new Path(s.root, r), r))
-      case None => dataFileRefs(spark, s).map(r =>
-        (fs(spark, s.root).makeQualified(new Path(s.root, r)),
-          r.stripPrefix(s.dirName + "/")))
-    }
+    val refs = dataFileRefs(spark, s)
+    // stats-lookup key: plain snapshots key stats by DIR-RELATIVE path;
+    // manifest snapshots by the ref itself (bare names collide across
+    // version dirs AND across partition subdirs — Spark's partitioned
+    // writer reuses one part name per task)
+    val keyPrefix = if (manifestOf(spark, s).isDefined) "" else s.dirName + "/"
     val stats = statsOf(spark, s)
     // resolve the predicate against the snapshot schema through the
     // analyzer + optimizer: Column expressions are lazy ColumnNode
     // wrappers in Spark 4, and optimization also constant-folds literal
     // casts — the Filter conditions below are plain resolved conjuncts
-    // (synth=false: the Hive-convert coalesce Project would otherwise
-    // substitute into pushed-down partition conjuncts)
-    val optimized = versionFrame(spark, s, synth = false)
-      .where(predicate).queryExecution.optimizedPlan
+    val optimized = planFrame(spark, s).where(predicate).queryExecution.optimizedPlan
     val conjs0 = optimized.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.flatMap(TableStats.conjuncts)
@@ -2643,13 +2645,13 @@ object VersionedTable {
     // physical → logical through the mapping).
     val reverseMap = columnMapping(spark, s).map(_.swap)
     val bareCols = partitionColumnsOf(spark, s).toSet
-    def synth(p: Path) = partSynthStats(p.toString, reverseMap, partTypes, bareCols)
     val anyPartitioned = bareCols.nonEmpty ||
-      files.exists(_._1.toString.contains("/" + PartDirPrefix))
+      refs.exists(_.contains("/" + PartDirPrefix))
     val statsKept =
-      if (stats.isEmpty && !anyPartitioned) files
-      else files.filter { case (p, key) =>
-        val fileStats = stats.getOrElse(key, Map.empty) ++ synth(p)
+      if (stats.isEmpty && !anyPartitioned) refs
+      else refs.filter { r =>
+        val fileStats = stats.getOrElse(r.stripPrefix(keyPrefix), Map.empty) ++
+          partSynthStats(r, reverseMap, partTypes, bareCols)
         conjs.forall(c => TableStats.mayMatch(c, fileStats))
       }
     // BLOOM refinement for equality/IN conjuncts: min/max cannot prune a
@@ -2664,37 +2666,34 @@ object VersionedTable {
     // eliminated on the write side.
     val probes = conjs.flatMap(TableStats.equalityProbes)
     val hconf = spark.sparkContext.hadoopConfiguration
-    def survives(conf: org.apache.hadoop.conf.Configuration, p: Path): Boolean =
+    val paths = statsKept.map(r => new Path(s.root, r).toString)
+    def survives(conf: org.apache.hadoop.conf.Configuration, p: String): Boolean =
       probes.forall { case (c, vs) =>
-        vs.exists(vv => TableStats.bloomMayContain(conf, p, c, vv))
+        vs.exists(vv => TableStats.bloomMayContain(conf, new Path(p), c, vv))
       }
-    val bloomDriverBudget = 32
-    val kept =
-      if (probes.isEmpty) statsKept
-      else if (statsKept.size <= bloomDriverBudget)
-        statsKept.filter { case (p, _) => survives(hconf, p) }
+    val keptPaths: String => Boolean =
+      if (probes.isEmpty) _ => true
+      else if (statsKept.size <= BloomDriverBudget) survives(hconf, _)
       else {
         import scala.jdk.CollectionConverters._
         val confEntries = hconf.iterator().asScala
           .map(e => (e.getKey, e.getValue)).toVector
-        val paths = statsKept.map(_._1.toString)
         val slices = math.min(paths.size,
           math.max(1, spark.sparkContext.defaultParallelism))
         val probesB = probes // stable local for the closure
-        val keptPaths = spark.sparkContext.parallelize(paths, slices)
+        spark.sparkContext.parallelize(paths, slices)
           .mapPartitions { it =>
             val conf = new org.apache.hadoop.conf.Configuration(false)
             confEntries.foreach { case (k, v2) => conf.set(k, v2) }
-            it.filter { s =>
+            it.filter { p =>
               probesB.forall { case (c, vs) =>
-                vs.exists(vv => TableStats.bloomMayContain(conf, new Path(s), c, vv))
+                vs.exists(vv => TableStats.bloomMayContain(conf, new Path(p), c, vv))
               }
             }
           }
           .collect().toSet
-        statsKept.filter { case (p, _) => keptPaths(p.toString) }
       }
-    (kept.map(_._1.toString), files.size)
+    (statsKept.zip(paths).collect { case (r, p) if keptPaths(p) => r }, refs.size)
   }
 
   /** One column's metadata-derived aggregate: `rows` (table-wide),
@@ -3214,9 +3213,14 @@ object VersionedTable {
         }
       }
     else occRetry(spark, root) { cur =>
-      morVisibleTagged(spark, root, cur, predicate) match {
-        case None => cur.version // provably no row matches: no-op, no commit
-        case Some(visible) =>
+      // every VISIBLE row (existing masks folded, so a masked row can
+      // neither re-match nor re-enter a vector or feed) of the files whose
+      // stats admit the predicate, tagged with the (file, pos) a new mask
+      // entry needs
+      prunedFiles(spark, cur, predicate)._1 match {
+        case Seq() => cur.version // provably no row matches: no-op, no commit
+        case may =>
+          val visible = scan(spark, cur, Some(may), tagFile = true, tagPos = true)
           // the matched slice feeds the dv sidecar, the change feed AND
           // the masked-file interest set — pin it once; the distinct-file
           // collect below IS the emptiness probe (one job where this
@@ -3258,68 +3262,6 @@ object VersionedTable {
           } finally hit.unpersist()
       }
     }
-  }
-
-  /** The MERGE-ON-READ DML primitive: every row of version `cur` that is
-    * VISIBLE (existing deletion-vector masks folded) in the files whose
-    * stats admit `predicate`, tagged with its physical location as
-    * (`__dv_file`, `__dv_pos`) — the coordinates a new mask entry needs.
-    * Rows a previous MOR commit masked are anti-joined out, so they can
-    * neither re-match nor re-enter a vector or change feed. None when
-    * pruning proves no file can match (the caller's no-op shortcut). */
-  private def morVisibleTagged(
-      spark: SparkSession, root: String, cur: Snapshot,
-      predicate: Column): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    val (mayMatch, _) = prunedFiles(spark, cur, predicate)
-    if (mayMatch.isEmpty) None
-    else {
-      val raw = synthHiveParts(spark, cur,
-          versionReader(spark, cur).parquet(mayMatch: _*))
-        .withColumn("__dv_file", fileRefCol)
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-      val folded = dvChainInfo(spark, cur).map(foldMask(spark, raw, _)).getOrElse(raw)
-      Some(toLogical(folded, columnMapping(spark, cur)))
-    }
-  }
-
-  /** [[readFilesOf]] with each VISIBLE row's physical location exposed as
-    * `__dv_file`/`__dv_pos` (existing masks already folded) — the tagged
-    * slice a MERGE-ON-READ writer (the SQL MERGE's DV form) needs to mask
-    * matched rows where they sit instead of rewriting their files. */
-  private[graft] def readFilesTagged(
-      spark: SparkSession, s: Snapshot, refs: Seq[String]): DataFrame =
-    foldMaskOnce(spark, s, readFilesRawTagged(spark, s, refs))
-
-  /** The UNMASKED half of [[readFilesTagged]]: the slice read with its
-    * physical tags but existing masks NOT yet folded. Exists for the
-    * bucket-aligned roads ([[Bucketing]]), which read one frame PER
-    * BUCKET — folding inside each bucket frame costs one chain
-    * resolution and one mask broadcast build per bucket (n per slice,
-    * measured ~2x wall on a masked 16-bucket merge); the aligned slice
-    * instead folds ONCE above the claimed concatenation, which both
-    * mask roads preserve (a broadcast anti-join keeps the streamed
-    * side's partitioning; the bitmap road is a filter). */
-  private[sources] def readFilesRawTagged(
-      spark: SparkSession, s: Snapshot, refs: Seq[String]): DataFrame =
-    readFilesRaw(spark, s, refs, tagFile = true, tagPos = true)
-
-  /** [[readFilesRawTagged]] with the tags OPTIONAL: the per-row file-ref
-    * string and row index are codegen'd per row, so an UNMASKED slice
-    * that doesn't need them (the common steady-state COW merge) should
-    * not pay them — and the claimed-slice construction is an optimizer
-    * barrier, so a downstream projection can't prune them after the
-    * fact. */
-  private[sources] def readFilesRaw(
-      spark: SparkSession, s: Snapshot, refs: Seq[String],
-      tagFile: Boolean, tagPos: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(refs.nonEmpty, "readFilesRaw needs at least one file ref")
-    val base = synthHiveParts(spark, s, versionReader(spark, s)
-      .parquet(refs.map(r => new Path(s.root, r).toString): _*))
-    val f = if (tagFile) base.withColumn("__dv_file", fileRefCol) else base
-    val p = if (tagPos) f.withColumn("__dv_pos", col("_metadata.row_index")) else f
-    toLogical(p, columnMapping(spark, s))
   }
 
   /** Fold version `v`'s mask out of a `__dv_file`/`__dv_pos`-tagged
@@ -3425,9 +3367,11 @@ object VersionedTable {
       val schema = schemaOf(spark, cur)
       val bad = set.keySet -- schema.fieldNames.toSet
       require(bad.isEmpty, s"unknown columns in SET: ${bad.mkString(", ")}")
-      morVisibleTagged(spark, root, cur, predicate) match {
-        case None => cur.version // provably no row matches: no-op, no commit
-        case Some(visible) =>
+      // the visible, tagged rows of the admitted files, as in deleteWhere
+      prunedFiles(spark, cur, predicate)._1 match {
+        case Seq() => cur.version // provably no row matches: no-op, no commit
+        case may =>
+          val visible = scan(spark, cur, Some(may), tagFile = true, tagPos = true)
           // pin the matched slice once (dv sidecar, feed pre/post images,
           // the appended post rows and the interest set all read it); the
           // distinct-file collect doubles as the emptiness probe — one
@@ -3583,12 +3527,7 @@ object VersionedTable {
             case Some(p) =>
               // do the winner's fresh files provably refute the loser's
               // read predicate? (stats + blooms of the `now` snapshot)
-              val (mayMatch, _) = prunedFiles(spark, now, p)
-              val f = fs(spark, root)
-              val mayQ = mayMatch
-                .map(s => f.makeQualified(new Path(s)).toString).toSet
-              !added.exists(r =>
-                mayQ(f.makeQualified(new Path(root, r)).toString))
+              !added.exists(prunedFiles(spark, now, p)._1.toSet)
           }
           if (predicateSafe) Some((added, removed)) else None
         }
@@ -3718,19 +3657,12 @@ object VersionedTable {
       val (mayMatch, _) = prunedFiles(spark, cur, predicate)
       if (mayMatch.isEmpty) cur.version // provably no row matches: no-op, no commit
       else {
-        // compare scheme-qualified: prunedFiles returns FileStatus paths
-        // (file:/...), dataFileRefs are root-relative
-        val f = fs(spark, root)
-        val mayMatchSet = mayMatch.map(s => f.makeQualified(new Path(s)).toString).toSet
-        val allRefs = dataFileRefs(spark, cur)
-        val keptRefs = allRefs
-          .filterNot(r => mayMatchSet(f.makeQualified(new Path(root, r)).toString))
-        val touchedRefs = allRefs.toSet -- keptRefs
+        val touchedRefs = mayMatch.toSet
+        val keptRefs = dataFileRefs(spark, cur).filterNot(touchedRefs)
         // the touched slice reads THROUGH the deletion vectors (a rewrite
         // of a masked file must not resurrect its masked rows); kept
         // files' masks carry forward via commitCow's dv carry
-        val slice = maskedLogical(spark, cur, synthHiveParts(spark, cur,
-          versionReader(spark, cur).parquet(mayMatch: _*)))
+        val slice = scan(spark, cur, Some(mayMatch))
         // claim-time rebase: a blind append landing during the rewrite
         // merges into the manifest instead of forcing a recompute
         // (write-serializable — the DML serializes BEFORE the append, so
@@ -3785,42 +3717,25 @@ object VersionedTable {
   /** The virtual feed of version `v`, or None when the version records
     * no `changesForm` (its feed, if any, is the `_changes` sidecar). */
   private[graft] def syntheticChanges(
-      spark: SparkSession, s: Snapshot): Option[DataFrame] = {
-    def emptyOf(sch: org.apache.spark.sql.types.StructType): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(sch.fields.toSeq :+
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType)))
-    commitInfoOf(spark, s).get(ChangesFormKey).map {
-      case "none" => emptyOf(schemaOf(spark, s))
-      case "insertAll" =>
-        // the version's OWN files (its dir, never the manifest): exactly
-        // the appended/seeded batch. Physical names in the files, logical
-        // out — the same mapping rule every snapshot read applies.
-        val files = ownFiles(spark, s).map(_._1)
-        val sch = schemaOf(spark, s)
-        if (files.isEmpty) emptyOf(sch)
-        else {
-          val mapping = columnMapping(spark, s)
-          toLogical(
-            spark.read.schema(physicalSchema(sch, mapping))
-              .parquet(files: _*), mapping)
-            .withColumn("_change_type",
-              org.apache.spark.sql.functions.lit("insert"))
-        }
-      case other => throw new java.io.IOException(
-        s"version ${s.version} under ${s.root} records unknown changesForm '$other'")
+      spark: SparkSession, s: Snapshot): Option[DataFrame] =
+    commitInfoOf(spark, s).get(ChangesFormKey).map { form =>
+      // the rows the version inserted, as it wrote them (unmasked): its
+      // OWN files (its dir, never the manifest), or none at all
+      val inserted = form match {
+        case "none" => Nil
+        case "insertAll" => ownFiles(spark, s).map(_._1)
+        case other => throw new java.io.IOException(
+          s"version ${s.version} under ${s.root} records unknown changesForm '$other'")
+      }
+      scan(spark, s, Some(inserted), masked = false)
+        .withColumn("_change_type", org.apache.spark.sql.functions.lit("insert"))
     }
-  }
 
   /** Feed bytes for admission control ([[graft.streaming.ChangeFeedStream]]'s
     * maxBytesPerBatch): the sidecar's bytes, or the version's own data
     * bytes for a virtual insertAll feed (that IS what the batch will
     * read). Virtual "none" admits free, correctly. */
-  private[graft] def feedBytesOf(
-      spark: SparkSession, root: String, v: Long): Long = {
-    val s = snapshotAt(spark, root, v)
+  private[graft] def feedBytesOf(spark: SparkSession, s: Snapshot): Long = {
     val b = extraBytes(spark, s, "changes")
     if (b > 0L) b
     else if (commitInfoOf(spark, s).get(ChangesFormKey).contains("insertAll"))
@@ -5730,11 +5645,11 @@ object VersionedTable {
     var parts = List.empty[DataFrame]
     val tgtOnly = tgtRefs.filterNot(curSet)
     if (tgtOnly.nonEmpty)
-      parts ::= project(readFilesOf(spark, tgt, tgtOnly))
+      parts ::= project(scan(spark, tgt, Some(tgtOnly)))
         .withColumn("_change_type", lit("insert"))
     val curOnly = curRefs.filterNot(tgtSet)
     if (curOnly.nonEmpty)
-      parts ::= project(readFilesOf(spark, cur, curOnly))
+      parts ::= project(scan(spark, cur, Some(curOnly)))
         .withColumn("_change_type", lit("delete"))
     if (shared.nonEmpty) {
       // mask diffs on shared files: rows masked now but not at the target
@@ -5756,12 +5671,8 @@ object VersionedTable {
           .collect().map(_.getString(0)).toSeq
         if (files.isEmpty) None
         else {
-          val raw = toLogical(synthHiveParts(spark, tgt,
-            versionReader(spark, tgt)
-              .parquet(files.map(r => new Path(root, r).toString): _*))
-            .withColumn("__dv_file", fileRefCol)
-            .withColumn("__dv_pos", col("_metadata.row_index")),
-            columnMapping(spark, tgt))
+          val raw = scan(spark, tgt, Some(files),
+            tagFile = true, tagPos = true, masked = false)
           Some(project(raw.join(dvMaskSide(spark, positions, dvSize),
             Seq("__dv_file", "__dv_pos"), "inner"))
             .withColumn("_change_type", lit(ct)))
@@ -6022,19 +5933,14 @@ object VersionedTable {
       bloomCols: Seq[String] = Nil): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     occRetry(spark, root) { v =>
-      val (mayMatch, _) = prunedFiles(spark, v, predicate)
-      if (mayMatch.isEmpty) v.version // nothing admitted: no-op, no commit
+      val (touched, _) = prunedFiles(spark, v, predicate)
+      if (touched.isEmpty) v.version // nothing admitted: no-op, no commit
       else {
-        val f = fs(spark, root)
-        val mayMatchSet = mayMatch.toSet
-        val all = dataFileRefs(spark, v)
-        val kept = all.filterNot(r =>
-          mayMatchSet(f.makeQualified(new Path(root, r)).toString))
-        val touched = all.filterNot(kept.toSet)
+        val kept = dataFileRefs(spark, v).filterNot(touched.toSet)
         val sizeOf = fileSizes(spark, v)
         val bytes = touched.flatMap(sizeOf.get).sum
         val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val slice = readFilesOf(spark, v, touched)
+        val slice = scan(spark, v, Some(touched))
         val pspec = partitionColumnsOf(spark, v)
         val cols = (pspec ++ sortCols.filterNot(pspec.contains))
           .map(org.apache.spark.sql.functions.col)

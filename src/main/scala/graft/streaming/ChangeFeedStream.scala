@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.VersionedTable
+import graft.sources.{Snapshot, VersionedTable}
 
 /** The change feed as a STRUCTURED STREAMING SOURCE — the Delta
   * streaming-source shape on this format: a versioned table written by
@@ -82,25 +82,25 @@ object ChangeFeedStream {
     * and gets mis-classified as pre-pin history. */
   private[streaming] def pinSchema(
       spark: SparkSession, root: String,
-      initialSnapshot: Boolean = false): (StructType, Long) = {
-    val vs = VersionedTable.versions(spark, root)
-    require(vs.nonEmpty, s"no committed version under $root")
+      initialSnapshot: Boolean = false): (StructType, Snapshot) = {
     if (initialSnapshot) {
-      val cur = vs.last
-      val cols = VersionedTable.readVersion(spark, root, cur).schema.fields.toSeq
+      val cur = VersionedTable.latest(spark, root).getOrElse(
+        throw new IllegalArgumentException(s"no committed version under $root"))
+      val cols = VersionedTable.readVersion(spark, cur).schema.fields.toSeq
       (StructType(cols :+
         StructField("_change_type", org.apache.spark.sql.types.StringType) :+
         StructField("_commit_version", LongType)), cur)
     } else {
-      val withFeed = VersionedTable.snapshots(spark, root).reverse
-        .find(VersionedTable.hasChangeFeed(spark, _))
+      val snaps = VersionedTable.snapshots(spark, root)
+      require(snaps.nonEmpty, s"no committed version under $root")
+      val withFeed = snaps.reverse.find(VersionedTable.hasChangeFeed(spark, _))
         .getOrElse(throw new IllegalArgumentException(
           s"no version under $root carries a change feed — " +
             "write the table with the versioned upsert paths"))
       val feed = VersionedTable.readExtra(spark, withFeed, "changes")
         .orElse(VersionedTable.syntheticChanges(spark, withFeed)).get
       (StructType(feed.schema.fields.toSeq :+
-        StructField("_commit_version", LongType)), withFeed.version)
+        StructField("_commit_version", LongType)), withFeed)
     }
   }
 }
@@ -140,7 +140,7 @@ class ChangeFeedSource(
   with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-  private val pinned: (StructType, Long) =
+  private val pinned: (StructType, Snapshot) =
     ChangeFeedStream.pinSchema(spark, root, initialSnapshot)
   override val schema: StructType = pinned._1
 
@@ -162,13 +162,13 @@ class ChangeFeedSource(
   //     already accounts for it (missing columns backfill null, since-
   //     dropped columns project away).
 
-  private val pinnedAt: Long = pinned._2
+  private val pinnedAt: Long = pinned._2.version
   private val metaCols = Set("_change_type", "_commit_version")
-  private lazy val pinnedMapping = VersionedTable.columnMapping(spark, root, pinnedAt)
+  private lazy val pinnedMapping = VersionedTable.columnMapping(spark, pinned._2)
   private lazy val pinnedTableCols: Seq[StructField] =
     schema.fields.toSeq.filterNot(f => metaCols(f.name))
 
-  /** batch-column → pinned-column renames for version `v` (empty =
+  /** batch-column → pinned-column renames for version `s` (empty =
     * serve as-is); throws on incompatible evolution. Memoized —
     * committed schemas are immutable. */
   // TrieMap, not mutable.Map: the source can be driven from more than
@@ -177,17 +177,18 @@ class ChangeFeedSource(
   // which is fine (committed schemas are immutable), but must never
   // corrupt the map
   private val alignMemo = scala.collection.concurrent.TrieMap.empty[Long, Map[String, String]]
-  private def alignmentFor(v: Long): Map[String, String] =
-    alignMemo.getOrElseUpdate(v, {
+  private def alignmentFor(s: Snapshot): Map[String, String] =
+    alignMemo.getOrElseUpdate(s.version, {
+      val v = s.version
       val vSchema: Seq[StructField] =
-        VersionedTable.tableSchema(spark, root, v).map(_.fields.toSeq)
-          .orElse(VersionedTable.readExtra(spark, root, v, "changes")
+        VersionedTable.tableSchema(spark, s).map(_.fields.toSeq)
+          .orElse(VersionedTable.readExtra(spark, s, "changes")
             .map(_.schema.fields.toSeq.filterNot(f => metaCols(f.name))))
           .getOrElse(Seq.empty)
       if (vSchema.isEmpty) Map.empty
       else {
         val strict = v > pinnedAt
-        val vMapping = VersionedTable.columnMapping(spark, root, v)
+        val vMapping = VersionedTable.columnMapping(spark, s)
         def phys(m: Map[String, String], c: String) = m.getOrElse(c, c)
         val vByPhys = vSchema.map(f => phys(vMapping, f.name) -> f).toMap
         def fail(detail: String): Nothing = throw new java.io.IOException(
@@ -275,9 +276,9 @@ class ChangeFeedSource(
       // (possible only for writers bypassing OCC validation) still gets
       // probed on the next poll instead of being skipped forever. The
       // set is driver-sized (the versions() listing already is).
-      val unprobed = VersionedTable.versions(spark, root).filterNot(probed)
-      firstFed = unprobed.find(v => VersionedTable.hasChangeFeed(spark, root, v))
-      probed ++= unprobed
+      val unprobed = VersionedTable.snapshots(spark, root, v => !probed(v))
+      firstFed = unprobed.find(VersionedTable.hasChangeFeed(spark, _)).map(_.version)
+      probed ++= unprobed.map(_.version)
     }
     val pastDropped = VersionedTable.vacuumedVersions(spark, root)
       .foldLeft(0L)(math.max) + 1L
@@ -295,29 +296,34 @@ class ChangeFeedSource(
     * feed-less version (pass-through commit) measures 0 and admits
     * free. */
   private val feedBytesMemo = scala.collection.mutable.Map.empty[Long, Long]
-  private def feedBytes(v: Long): Long =
-    feedBytesMemo.getOrElseUpdate(v,
-      VersionedTable.feedBytesOf(spark, root, v))
+  private def feedBytes(s: Snapshot): Long =
+    feedBytesMemo.getOrElseUpdate(s.version, VersionedTable.feedBytesOf(spark, s))
 
   /** Shared rate-limited poll: the next offset to offer given the
     * engine's last committed/offered position (None = fresh stream).
     * The internal `offered` cursor stays the floor — the engine must
     * never see an offset regress. */
   private def nextOffset(engineStart: Option[Long]): Option[Long] = {
-    val vs = VersionedTable.versions(spark, root)
-    vs.lastOption.map(h => availableNowCap.fold(h)(math.min(h, _))).flatMap { cur =>
-      val floor = (engineStart.toSeq ++ offered.toSeq).maxOption
-      if (initialSnapshot && floor.isEmpty) {
-        // snapshot mode, fresh stream: the first offered offset IS the
-        // snapshot boundary — one batch, the whole logical table at the
-        // current version (rate limiting applies to the feed tail only;
-        // the snapshot is indivisible)
-        offered = Some(cur); persistCursor(cur); Some(cur)
-      } else {
-        // fresh stream: begin past every vacuumed version, not at the
-        // earliest committed one (a vacuum holdback below a dropped version
-        // would otherwise raise the data-loss guard on the first batch)
-        val base = floor.getOrElse(feedStart() - 1)
+    def capped(head: Long) = availableNowCap.fold(head)(math.min(head, _))
+    val floor = (engineStart.toSeq ++ offered.toSeq).maxOption
+    if (initialSnapshot && floor.isEmpty)
+      // snapshot mode, fresh stream: the first offered offset IS the
+      // snapshot boundary — one batch, the whole logical table at the
+      // current version (rate limiting applies to the feed tail only;
+      // the snapshot is indivisible)
+      VersionedTable.versions(spark, root).lastOption.map { h =>
+        val cur = capped(h)
+        offered = Some(cur); persistCursor(cur); cur
+      }
+    else {
+      // fresh stream: begin past every vacuumed version, not at the
+      // earliest committed one (a vacuum holdback below a dropped version
+      // would otherwise raise the data-loss guard on the first batch)
+      val base = floor.getOrElse(feedStart() - 1)
+      // one listing; only the versions past `base` resolve
+      val past = VersionedTable.snapshots(spark, root, _ > base)
+      past.lastOption.fold(floor) { head =>
+        val cur = capped(head.version)
         val endByVersions =
           maxVersionsPerBatch.map(m => math.min(cur, base + m)).getOrElse(cur)
         // BYTES-BASED ADMISSION (Delta's maxBytesPerTrigger): versions
@@ -334,11 +340,12 @@ class ChangeFeedSource(
           else maxBytesPerBatch match {
             case None => endByVersions
             case Some(budget) =>
+              val at = past.map(s => s.version -> s).toMap
               var e = base + 1
-              var acc = feedBytes(e)
-              while (e < endByVersions && acc + feedBytes(e + 1) <= budget) {
+              var acc = feedBytes(at(e))
+              while (e < endByVersions && acc + feedBytes(at(e + 1)) <= budget) {
                 e += 1
-                acc += feedBytes(e)
+                acc += feedBytes(at(e))
               }
               e
           }
@@ -413,11 +420,11 @@ class ChangeFeedSource(
       org.apache.spark.sql.graft.StreamBridge.internalAsStreaming(snap)
     } else {
       val fromV = start.map(toV(_) + 1).getOrElse(feedStart())
-      val vs = VersionedTable.versions(spark, root)
-        .filter(x => x >= fromV && x <= toVersion)
+      val snaps = VersionedTable.snapshots(spark, root, x => x >= fromV && x <= toVersion)
+      val vs = snaps.map(_.version)
       // SCHEMA GATE per batch version (memoized): incompatible
       // mid-stream evolution throws here; renames serve via re-alias
-      val aligns = vs.map(v => v -> alignmentFor(v)).filter(_._2.nonEmpty).toMap
+      val aligns = snaps.map(s => s.version -> alignmentFor(s)).filter(_._2.nonEmpty).toMap
       val batch =
         if (aligns.isEmpty)
           VersionedTable.readChanges(spark, root, fromV, toVersion)

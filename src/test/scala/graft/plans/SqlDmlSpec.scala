@@ -139,6 +139,43 @@ class SqlDmlSpec extends SparkSpec {
     assert(mf.count(baseRefs.contains) == 3, s"expected 3 carried refs in: $mf")
   }
 
+  test("MERGE whose key hull keeps 16+ files (the exact candidate join) " +
+    "equals the same merge restated over a plain-parquet copy") {
+    val root = freshRoot()
+    // 24 range-clustered files over ids 1..480; the source's keys span
+    // every file's range, so the min/max hull keeps all 24 files
+    val base = (1L to 480L).map(i => (i, s"r$i", i * 10)).toDF("id", "x", "amount")
+    VersionedTable.commit(
+      base.repartitionByRange(24, col("id")).sortWithinPartitions("id"), root)
+    val baseRefs = VersionedTable.dataFileRefs(spark, root, 1L)
+    assert(baseRefs.size == 24)
+    val plainDir = java.nio.file.Files.createTempDirectory("graft_sqldml_plain").toString
+    base.write.parquet(plainDir + "/t")
+    val src = Seq((5L, "u5", 55L), (240L, "del", 0L), (470L, "u470", 4700L),
+      (1000L, "n", 1L)).toDF("id", "x", "amount")
+    src.createOrReplaceTempView("merge_wide_src")
+    val v = GraftSql.execute(spark,
+      s"""MERGE INTO `$root` t USING merge_wide_src s ON t.id = s.id
+         |WHEN MATCHED AND s.x = 'del' THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET x = s.x, amount = s.amount
+         |WHEN NOT MATCHED THEN INSERT (id, x, amount) VALUES (s.id, s.x, s.amount)
+         |""".stripMargin).collect().head.getLong(2)
+    // the same merge by plain Spark over the parquet copy
+    val t = spark.read.parquet(plainDir + "/t")
+    val j = t.as("t").join(src.as("s"), col("t.id") === col("s.id"), "full_outer")
+    val expected = j.where(col("s.x").isNull || col("s.x") =!= "del" || col("t.id").isNull)
+      .select(coalesce(col("s.id"), col("t.id")).as("id"),
+        coalesce(col("s.x"), col("t.x")).as("x"),
+        coalesce(col("s.amount"), col("t.amount")).as("amount"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "x", "amount").collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+        .sortBy(_._1).toSeq
+    assert(rows(VersionedTable.read(spark, root)) == rows(expected))
+    // only the three files holding a matched key are rewritten
+    val mf = VersionedTable.manifestOf(spark, root, v).get
+    assert(mf.count(baseRefs.contains) == 21, s"expected 21 carried refs in: $mf")
+  }
+
   test("MERGE with a non-equi ON skips stats pre-pruning; detection still prunes writes") {
     val root = freshRoot()
     VersionedTable.commit(
@@ -275,6 +312,13 @@ class SqlDmlSpec extends SparkSpec {
     assert(VersionedTable.readChanges(spark, root, v, v).count() == 0)
     // a predicate admitting nothing is a no-op (no new version)
     assert(VersionedTable.optimizeWhere(spark, root, col("id") > 10000) == v)
+    // again on the manifest-form version: the admitted file rewrites,
+    // the other three (two seed files and the first rewrite) carry
+    val v2 = VersionedTable.optimizeWhere(spark, root, col("id") >= 98, Seq("id"))
+    assert(v2 > v)
+    val mf2 = VersionedTable.manifestOf(spark, root, v2).get
+    assert(mf2.count(mf.contains) == 3, s"expected 3 carried refs in: $mf2")
+    assert(VersionedTable.read(spark, root).count() == 100)
     // ZORDER + WHERE refuses
     val e = intercept[IllegalArgumentException] {
       GraftSql.execute(spark, s"OPTIMIZE '$root' ZORDER BY (id, amount) WHERE id <= 3")

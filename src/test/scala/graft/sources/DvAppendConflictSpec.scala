@@ -32,7 +32,8 @@ class DvAppendConflictSpec extends SparkSpec {
     * current version — what a dv-carrying caller computes. */
   private def maskFor(root: String, pred: org.apache.spark.sql.Column) = {
     val v = VersionedTable.latest(spark, root).get
-    VersionedTable.readFilesTagged(spark, v, VersionedTable.dataFileRefs(spark, v))
+    VersionedTable.scan(spark, v, Some(VersionedTable.dataFileRefs(spark, v)),
+        tagFile = true, tagPos = true)
       .where(pred)
       .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
   }

@@ -23,6 +23,15 @@ import graft.plans.GraftSql
   *   - one MV refresh: 147/38/21 → 35/33/28.
   * The ceilings sit about 1.5x above the after-counts.
   *
+  * A pruned read plans against a relation with the version's schema
+  * and no files, where it used to resolve a listed frame of every data
+  * file first, so it stats and lists none of the files pruning drops.
+  * Listed frame → planning relation, on the same table:
+  *   - warm point lookup: 11/9/2 (7 data-file stats and 7 lists for the
+  *     plan alone, 6 of them on dropped files) → 4/2/2;
+  *   - one MV refresh: 34/33/28 → 34/33/28 (its feed fold reads no
+  *     pruned snapshot).
+  *
   * Writers pin one snapshot per attempt ([[VersionedTable.occRetry]])
   * and read through it. Stats of the pinned base version's commit
   * marker, through `(spark, root, v)` faces → through the pinned
@@ -98,9 +107,30 @@ class ReadRoundTripsSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSeq == Seq(5L))
     }
     assertSnapshotted("point lookup")
-    assert(ops.getOrElse("stat", 0L) <= 18L)
-    assert(ops.getOrElse("list", 0L) <= 14L)
-    assert(ops.getOrElse("open", 0L) <= 4L)
+    assert(ops.getOrElse("stat", 0L) <= 6L)
+    assert(ops.getOrElse("list", 0L) <= 3L)
+    assert(ops.getOrElse("open", 0L) <= 3L)
+  }
+
+  test("a warm point lookup stats and lists no data file that pruning " +
+    "dropped") {
+    val root = sixVersions("graft_rr_pruned")
+    val v = VersionedTable.currentVersion(spark, root).get
+    val (kept, total) = VersionedTable.prunedFiles(spark, root, v, col("id") === 5L)
+    val dropped = VersionedTable.dataFileRefs(spark, root, v)
+      .map(r => r.substring(r.lastIndexOf('/') + 1))
+      .filterNot(name => kept.exists(_.endsWith("/" + name)))
+    assert(kept.size == 1 && dropped.size == total - 1 && total == 7,
+      s"kept $kept of $total")
+    counted("point lookup, pruned files") {
+      assert(VersionedTable.readWhere(spark, root, col("id") === 5L).count() == 1L)
+    }
+    val touched = for {
+      op <- Seq("stat", "list")
+      p <- CountingFileSystem.pathsOf(op)
+      if dropped.exists(name => p.endsWith("/" + name))
+    } yield s"$op $p"
+    assert(touched.isEmpty, touched.mkString("\n"))
   }
 
   test("a warm readChanges over the last three versions stats no commit " +

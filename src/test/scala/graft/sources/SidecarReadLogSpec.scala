@@ -63,6 +63,24 @@ class SidecarReadLogSpec extends SparkSpec {
     assert(warns.isEmpty, warns.mkString("\n"))
   }
 
+  test("a table emptied by an all-drop partition delete reads empty and " +
+    "logs no ignored path") {
+    val root = freshRoot()
+    VersionedTable.commit(
+      (1L to 20L).map(i => (i, if (i % 2 == 0) "a" else "b")).toDF("id", "p"),
+      root, partitionBy = Seq("p"))
+    VersionedTable.deleteWhere(spark, root, col("p").isin("a", "b"))
+    val v = VersionedTable.currentVersion(spark, root).get
+    assert(VersionedTable.dataFileRefs(spark, root, v).isEmpty)
+    val warns = ignoredPathWarnings {
+      val df = VersionedTable.read(spark, root)
+      assert(df.columns.toSeq == Seq("id", "p"))
+      assert(df.count() == 0L)
+      assert(VersionedTable.readWhere(spark, root, col("id") === 3L).count() == 0L)
+    }
+    assert(warns.isEmpty, warns.mkString("\n"))
+  }
+
   test("a copy-ledger read logs no ignored sidecar path") {
     val root = freshRoot()
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root,
