@@ -139,7 +139,7 @@ object DvBitmaps {
     * ([[BitmapTooLargeException]]), or any store error — the half-built
     * dir is removed, no `_DONE` lands, reads keep the distributed-join
     * road, and the COMMIT proceeds (the same never-block-the-commit rule
-    * as [[TableStats.write]]). */
+    * as the stats and size records). */
   def write(spark: SparkSession, dvDir: Path): Boolean = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

@@ -14,20 +14,22 @@ import org.apache.spark.sql.SparkSession
   * file — at 100 TB / 128 MiB files that is ~800k serial metadata RPCs
   * on the driver per maintenance tick, which is exactly the walk Delta
   * avoids by recording `size` per AddFile at commit time. Here the
-  * commit writer already holds the `FileStatus` of every file it just
-  * wrote (the staging listing), so recording costs ZERO extra RPCs;
-  * manifest commits carry kept files' rows forward the same way the
-  * stats table does.
+  * commit lists its staged files once (the listing that also keys their
+  * footer stats), and that listing's `FileStatus` rows carry the lengths:
+  * no per-file stat. Manifest commits carry kept files' rows forward the
+  * same way the stats table does, through the one record writer
+  * (`VersionedTable.recordFiles`) that writes this table.
   *
   * LEGACY vintages (committed before this sidecar existed) resolve
   * missing entries through ONE distributed `getFileStatus` job
   * ([[statRefs]] — the [[TableStats]] distributed-footer pattern), so
   * the driver never loops over O(files) metadata I/O on any road.
   *
-  * Keys are whatever the matching reader looks files up by — the same
-  * convention as the stats table: root-relative refs (`vNNNNNNNN/rel`,
-  * or fs-qualified absolute for a shallow clone), exactly the strings
-  * [[VersionedTable.dataFileRefs]] returns. */
+  * Keys are root-relative refs (`vNNNNNNNN/rel`, or fs-qualified
+  * absolute for a shallow clone or CONVERT), exactly the strings
+  * [[VersionedTable.dataFileRefs]] returns — the key of every in-memory
+  * file record (only a plain version's stats table keeps dir-relative
+  * keys on disk). */
 object FileSizes {
 
   private val SizesDirName = "_sizes"
@@ -49,11 +51,6 @@ object FileSizes {
     finally out.close()
   }
 
-  /** Merge `rows` into `dir`'s existing size table (carried kept-file
-    * entries joining the commit's own-file entries); new rows win ties. */
-  def append(f: FileSystem, dir: Path, rows: Seq[(String, Long)]): Unit =
-    if (rows.nonEmpty) write(f, dir, (load(f, dir) ++ rows).toSeq)
-
   /** The recorded table, empty when absent (pre-upgrade vintages).
     *
     * DRIVER-MEMORY BUDGET: materializes one (ref, len) entry per data
@@ -62,19 +59,14 @@ object FileSizes {
     * snapshot AddFile list, and strictly smaller than the stats table
     * loaded beside it. Grows with FILE COUNT, never bytes; compaction
     * keeps it bounded. */
-  def load(f: FileSystem, dir: Path): Map[String, Long] = {
-    val file = sizesFile(dir)
-    if (!f.exists(file)) Map.empty
-    else {
-      val in = f.open(file)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
+  def load(f: FileSystem, dir: Path): Map[String, Long] =
+    // one direct open: an absent table (pre-upgrade vintage) reads empty
+    VersionedTable.readTextIfExists(f, sizesFile(dir)).map { text =>
       text.split('\n').filter(_.nonEmpty).toSeq.map { line =>
         val a = line.split('\t')
         java.net.URLDecoder.decode(a(0), "UTF-8") -> a(1).toLong
       }.toMap
-    }
-  }
+    }.getOrElse(Map.empty)
 
   /** Resolve refs' byte sizes from the filesystem — the fallback for
     * files no commit recorded. Driver-side below [[DriverStatBudget]];

@@ -11,14 +11,16 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * dir (line 1) and the in-commit timestamp (line 2).
   *
   * Everything else a reader needs — grouped metadata, schema, folded
-  * refs/stats/sizes, sidecar listings — is derived lazily by
-  * [[VersionedTable]] into this value's slots ([[memo]]). A slot may
+  * refs/stats/sizes, sidecar listings, the COPY-ledger kind — is
+  * derived lazily by [[VersionedTable]] into this value's slots
+  * ([[memo]]). A slot may
   * only hold content that stays the same for one marker identity: a
   * published version's sidecars are immutable, and vacuum's in-place
   * materialization rewrites a version's FORM (delta chain → full form)
   * but not its folded content. Structure that materialization changes —
   * the DV chain, a delta record's base pointer — is resolved per
-  * operation and never held here. A computation that throws fills no
+  * operation and never held here; only a delta record's ABSENCE, which
+  * no later write undoes, is. A computation that throws fills no
   * slot, so a refusal or an unreadable sidecar is re-probed next time. */
 final class Snapshot private (
     val root: String, val version: Long, val identity: Long,

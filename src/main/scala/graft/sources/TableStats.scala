@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * canonicalized to three comparable kinds — `long` (integers, dates as
   * epoch days, timestamps as UTC micros: exactly Catalyst's internal
   * representations, so literals compare without conversion), `double`,
-  * and `string` (UTF8 binary) — and stored as strings in a tiny parquet
+  * and `string` (UTF8 binary) — and stored as strings in a tiny tsv
   * table under `<version>/_stats`.
   *
   * PRUNING is conservative by construction: any conjunct shape, column
@@ -54,53 +54,20 @@ object TableStats {
     * read, and this is the latter). */
   private val DriverFooterBudget = 16
 
-  /** Read footers of every data file under `dir` and write the stats table
-    * to `dir/_stats/stats.tsv` — a driver-written text file, NOT a Spark
-    * write: Spark readers ignore "_"-prefixed paths entirely (which is
-    * exactly why the dir is invisible to snapshot scans), and the table is
-    * O(files × columns) rows, far below Spark-job size. Values are
-    * URL-encoded so labels containing tabs/newlines round-trip. Collection
-    * failures are non-fatal: stats are an optimization, a commit must
-    * never be blocked by them.
-    *
-    * FOOTER READS are distributed: beyond [[DriverFooterBudget]] files the
-    * footers are opened by a Spark job (one task per slice of files, the
-    * Hadoop conf re-materialized executor-side from its entries) and only
-    * the finished O(files × columns) stat rows return to the driver for
-    * the tsv write. Small commits stay driver-side — bounded by the
-    * budget, so the commit path's driver I/O is O(1), never O(files). */
-  def write(spark: SparkSession, f: FileSystem, dir: Path): Unit =
-    try {
-      // recurse into partition subdirs (`p__<col>=<val>/`); "_"/"."
-      // prefixed dirs are sidecars, never data. Keys are DIR-RELATIVE
-      // paths (equal to the bare name for flat layouts): Spark's
-      // partitioned writer reuses one part NAME across every partition
-      // dir of a task, so bare names collide on partitioned snapshots.
-      def walk(d: Path, rel: String): Seq[(Path, String)] =
-        f.listStatus(d).toSeq.flatMap { s =>
-          val n = s.getPath.getName
-          if (s.isDirectory && !n.startsWith("_") && !n.startsWith("."))
-            walk(s.getPath, rel + n + "/")
-          else if (n.startsWith("part-") && n.endsWith(".parquet"))
-            Seq((s.getPath, rel + n))
-          else Nil
-        }
-      val files = walk(dir, "")
-      val rows = collectRows(spark, f, files)
-      if (rows.nonEmpty) writeRows(f, dir, rows)
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[versioned-table] stats collection skipped: ${e.getMessage}")
-    }
+  /** One stat row: (fileKey, column, kind, min, max, nullCount, numRows);
+    * min/max None when the file has no refutable stats for the column. */
+  type Row = (String, String, String, Option[String], Option[String], Long, Long)
 
-  /** Collect stat rows for explicit (path, key) pairs — shared by the
-    * commit-side footer pass and CONVERT's external-file import (where
-    * the keys are the manifest refs the reader will look files up by).
-    * Driver-side under [[DriverFooterBudget]], one distributed footer
-    * job above it: the driver never loops over O(files) I/O. */
+  /** Stat rows for explicit (path, key) pairs from their parquet footers —
+    * the commit's staged files (keyed by dir-relative path) and CONVERT's
+    * external-file import (keyed by the manifest refs the reader will look
+    * files up by). Driver-side under [[DriverFooterBudget]], one
+    * distributed footer job above it (one task per slice of files, the
+    * Hadoop conf re-materialized executor-side from its entries; only the
+    * O(files × columns) rows return): the driver never loops over
+    * O(files) I/O. */
   private[sources] def collectRows(
-      spark: SparkSession, f: FileSystem, files: Seq[(Path, String)])
-      : Seq[(String, String, String, Option[String], Option[String], Long, Long)] =
+      spark: SparkSession, f: FileSystem, files: Seq[(Path, String)]): Seq[Row] =
     if (files.size <= DriverFooterBudget)
       files.flatMap { case (p, key) => fileRows(f.getConf, p, key) }
     else {
@@ -118,15 +85,15 @@ object TableStats {
         .collect().toSeq
     }
 
-  /** Write a stats table from precomputed rows (fileKey, column, kind,
-    * min, max, nullCount, numRows) — the path manifest commits use to
-    * carry kept files' stats forward without re-reading any footer. The
-    * fileKey is whatever the matching reader will look files up by
-    * (dir-relative path for plain snapshots, root-relative for
-    * manifests). */
-  def writeRows(
-      f: FileSystem, dir: Path,
-      rows: Seq[(String, String, String, Option[String], Option[String], Long, Long)]): Unit = {
+  /** Write `dir/_stats/stats.tsv` from rows — a driver-written text
+    * file, NOT a Spark write: Spark readers ignore "_"-prefixed paths
+    * (which is exactly why the dir is invisible to snapshot scans), and
+    * the table is O(files × columns) rows, far below Spark-job size.
+    * Values are URL-encoded so labels containing tabs/newlines
+    * round-trip. The fileKey is whatever the matching reader will look
+    * files up by (dir-relative path for plain snapshots, root-relative
+    * for manifests); [[VersionedTable]]'s record writer is the caller. */
+  def writeRows(f: FileSystem, dir: Path, rows: Seq[Row]): Unit = {
     val enc = (o: Option[String]) => o match {
       case Some(s) => "1:" + java.net.URLEncoder.encode(s, "UTF-8")
       case None => "0:"
@@ -143,8 +110,7 @@ object TableStats {
     * Takes a bare Configuration so the distributed collection path can
     * call it executor-side. */
   private def fileRows(
-      conf: org.apache.hadoop.conf.Configuration, p: Path, key: String)
-      : Seq[(String, String, String, Option[String], Option[String], Long, Long)] = {
+      conf: org.apache.hadoop.conf.Configuration, p: Path, key: String): Seq[Row] = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(p, conf))
     try {
@@ -325,16 +291,12 @@ object TableStats {
   def load(spark: SparkSession, statsDir: Path)
       : Map[String, Map[String, (String, Option[String], Option[String], Long, Long)]] = {
     val f = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val file = new Path(statsDir, "stats.tsv")
-    if (!f.exists(file)) Map.empty
-    else {
-      val in = f.open(file)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val dec = (s: String) =>
-        if (s.startsWith("1:"))
-          Some(java.net.URLDecoder.decode(s.drop(2), "UTF-8"))
-        else None
+    val dec = (s: String) =>
+      if (s.startsWith("1:"))
+        Some(java.net.URLDecoder.decode(s.drop(2), "UTF-8"))
+      else None
+    // one direct open: an absent table (pre-stats vintage) reads empty
+    VersionedTable.readTextIfExists(f, new Path(statsDir, "stats.tsv")).map { text =>
       text.split('\n').filter(_.nonEmpty).toSeq
         .map { line =>
           val a = line.split('\t')
@@ -344,7 +306,7 @@ object TableStats {
         .map { case (fn, rows) =>
           fn -> rows.map(r => r._2 -> ((r._3, r._4, r._5, r._6, r._7))).toMap
         }
-    }
+    }.getOrElse(Map.empty)
   }
 
   // ---- pruning (query side) ----

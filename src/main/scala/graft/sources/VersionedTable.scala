@@ -264,10 +264,14 @@ object VersionedTable {
     * gap heals. Best-effort and MONOTONE: a lower version never replaces
     * a higher one (concurrent writers race by version), the swap is a
     * write-tmp-then-rename, and any failure leaves the previous file —
-    * readers then scan the short suffix the checkpoint misses. */
+    * readers then scan the short suffix the checkpoint misses.
+    * `ownBytes` is version `v`'s complete byte total when its committer
+    * already knows it (its own file record), so the commit never reads
+    * back the sidecars it just wrote. */
   private def writeCheckpoint(
       spark: SparkSession, root: String, v: Long,
-      ownTxn: Option[Seq[(String, Long)]] = None): Unit =
+      ownTxn: Option[Seq[(String, Long)]] = None,
+      ownBytes: Option[Long] = None): Unit =
     try {
       val f = fs(spark, root)
       val prev = readCheckpoint(spark, root)
@@ -319,7 +323,8 @@ object VersionedTable {
         // the live fileSizes road, which heals when the store does.
         val bytes0 = gap
           .foldLeft(prev.map(_.bytes).getOrElse(Map.empty[Long, Long])) { (m, vv) =>
-            completeSnapshotBytes(spark, vv, knownBase = m.get) match {
+            ownBytes.filter(_ => vv.version == v)
+                .orElse(completeSnapshotBytes(spark, vv, knownBase = m.get)) match {
               case Some(b) => m.updated(vv.version, b)
               case None => m
             }
@@ -375,7 +380,7 @@ object VersionedTable {
       recordProperties: Option[Map[String, String]] = None,
       recordInfo: Map[String, String] = Map("operation" -> "write"),
       recordSchema: Option[org.apache.spark.sql.types.StructType] = None): Long =
-    commitWith(df, root, collectStats, extras, (_, _, _) => (), bloomCols,
+    commitWith(df, root, collectStats, extras, FileRecord.plain, bloomCols,
       preCommit, partitionBy = partitionBy,
       recordProperties = recordProperties,
       recordInfo = recordInfo,
@@ -414,16 +419,18 @@ object VersionedTable {
     (df1, advProps, check, release)
   }
 
-  /** [[commit]] with a pre-publish hook: `finalize(fs, versionDir, v)`
-    * runs after the staging dir is renamed into place but BEFORE the
-    * commit marker is created — snapshot metadata written here (e.g. a
-    * manifest) is guaranteed visible to every reader that can resolve the
-    * version. A crash inside the hook leaves an unpublished dir, exactly
-    * like any other pre-publish failure. */
+  /** [[commit]] with a pre-publish hook: `finalize(versionDir, own)`
+    * runs after the staging dir is renamed into place but BEFORE
+    * the commit marker is created, and names the version's file record
+    * — which refs it carries, with which stat rows and sizes — from the
+    * commit's `own` files; [[recordFiles]] writes that record, so it is
+    * visible to every reader that can resolve the version. A crash inside
+    * the hook leaves an unpublished dir, exactly like any other
+    * pre-publish failure. */
   private def commitWith(
       df: DataFrame, root: String, collectStats: Boolean,
       extras: Map[String, DataFrame],
-      finalizeVersion: (org.apache.hadoop.fs.FileSystem, Path, Long) => Unit,
+      finalizeVersion: (Path, Seq[OwnFile]) => FileRecord,
       bloomCols: Seq[String] = Nil,
       preCommit: Long => Unit = _ => (),
       recordSchema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -695,10 +702,26 @@ object VersionedTable {
           DvBitmaps.write(spark, new Path(staging, "_dvdelta"))
         }
     }
-    // (1b) footer-only stats pass → <staging>/_stats ("_" prefix: invisible
-    // to snapshot readers, renamed + vacuumed atomically with the version)
-    if (collectStats)
-      CommitProfiler.phase("stats_footers") { TableStats.write(spark, f, staging) }
+    // (1a) the ONE listing of the staged data files (partition subdirs
+    // included, `_` sidecars skipped): its lengths are the sizes this
+    // commit records (Delta's AddFile.size), its dir-relative paths key
+    // the footer stats, and it is the constraint pass's emptiness probe —
+    // the renamed version dir is never listed again
+    val staged = CommitProfiler.phase("file_sizes") { dataFileRels(f, staging) }
+    // (1b) footer-only stats of the staged files, keyed by dir-relative
+    // path until the version is known. Never blocks the commit: stats are
+    // an optimization, and an unrecorded file reads conservatively.
+    val stagedStats: Map[String, Seq[TableStats.Row]] =
+      if (!collectStats) Map.empty
+      else CommitProfiler.phase("stats_footers") {
+        try TableStats.collectRows(spark, f,
+            staged.map { case (st, rel) => (st.getPath, rel) }).groupBy(_._1)
+        catch {
+          case e: Exception =>
+            System.err.println(s"[versioned-table] stats collection skipped: ${e.getMessage}")
+            Map.empty
+        }
+      }
     // (1c) record the snapshot SCHEMA as commit metadata (the Delta
     // schema-in-the-log idea): readers apply it explicitly (by-name, so a
     // manifest spanning an evolution still reads as one frame) and the
@@ -786,7 +809,7 @@ object VersionedTable {
           df0.schema.find(_.name.equalsIgnoreCase(c)).get.dataType.sql + "))")
     }
     val checksToEnforce = constraintsToRecord ++ genChecks ++ exprChecks
-    if (checksToEnforce.nonEmpty && dataFiles(f, staging).nonEmpty)
+    if (checksToEnforce.nonEmpty && staged.nonEmpty)
       // staged files carry physical names; constraints speak logical —
       // read physical, rename back before evaluating
       try CommitProfiler.phase("constraint_enforce") { enforceConstraints(spark,
@@ -921,24 +944,22 @@ object VersionedTable {
     if (f.exists(dir)) f.delete(dir, true)
     if (!f.rename(staging, dir))
       throw new java.io.IOException(s"rename $staging -> $dir failed")
-    // (3a') record the commit's OWN files' byte sizes (Delta's
-    // AddFile.size): the listing below is the only metadata pass — its
-    // FileStatus rows already carry the lengths, so maintenance never
-    // again pays a per-file getFileStatus walk ([[fileSizes]]). Keyed
-    // root-relative, the strings [[dataFileRefs]] returns. NEVER blocks
-    // the commit (the TableStats rule): the sidecar is a derived
-    // optimization with a complete stat-fallback road in the reader.
-    try CommitProfiler.phase("file_sizes") { FileSizes.write(f, dir,
-      dataFileRels(f, dir).map { case (st, rel) =>
-        (f"v$v%08d/" + rel) -> st.getLen
-      }) }
-    catch {
-      case e: Exception =>
-        maintLog.warn(s"size-sidecar write skipped for $dir " +
-          "(reads fall back to a distributed stat)", e)
+    // (3a') the commit's OWN files as (ref, length, stat rows), all from
+    // the staging listing — keyed root-relative, the strings
+    // [[dataFileRefs]] returns
+    val dirName = f"v$v%08d"
+    val own = staged.map { case (st, rel) =>
+      val ref = dirName + "/" + rel
+      OwnFile(ref, st.getLen, stagedStats.getOrElse(rel, Nil).map(_.copy(_1 = ref)))
     }
-    // (3b) caller's pre-publish metadata (manifest, carried-forward stats)
-    CommitProfiler.phase("finalize_manifest") { finalizeVersion(f, dir, v) }
+    // (3b) the version's file record: the caller names the refs it
+    // carries (kept, rebased-in, cloned, restored, converted) with their
+    // rows and sizes, and the one writer lands manifest, stats and sizes
+    val record = CommitProfiler.phase("finalize_manifest") {
+      val r = finalizeVersion(dir, own)
+      recordFiles(f, dir, r)
+      r
+    }
     // (3c)+(4) publish — WINNER-TAKES-VERSION-N (the Delta commit-log
     // shape): the marker for number n = currentVersion+1 is created
     // ATOMICALLY-IF-ABSENT with content naming this commit's data dir
@@ -955,7 +976,6 @@ object VersionedTable {
     // (configure `graft.store.adapter.<scheme>=conditional-put` where
     // the store has it). Validations must be idempotent (they are
     // re-checks by construction).
-    val dirName = f"v$v%08d"
     val published = CommitProfiler.phase("publish_marker") {
       publishLock(f, root).synchronized {
       // CLAIM-NUMBER DISCIPLINE: the number contended for is always
@@ -1028,7 +1048,8 @@ object VersionedTable {
     CommitProfiler.phase("checkpoint") {
       // ALWAYS Some: Some(Nil) = known-unstamped (skip the metadata
       // re-read); None = unknown (writeCheckpoint reads the log)
-      writeCheckpoint(spark, root, published, ownTxn = Some(txnStamps))
+      writeCheckpoint(spark, root, published, ownTxn = Some(txnStamps),
+        ownBytes = record.bytes)
     }
     // free the identity pin's blocks (no-op when nothing allocated):
     // the staged write above was the pin's last consumer. Failure paths
@@ -1104,7 +1125,7 @@ object VersionedTable {
     new Path(new Path(s.dir, "_manifest"), "delta.txt")
 
   /** Small text sidecar read by direct open; None when it is absent. */
-  private def readTextIfExists(
+  private[sources] def readTextIfExists(
       f: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] =
     try {
       val in = f.open(p)
@@ -1119,10 +1140,22 @@ object VersionedTable {
   /** The delta record of version `s`, None for full-form versions.
     * Line 1: `<base>\t<depth>`; then one ref per line, `-` = removed
     * vs base, `+` = added (this commit's own files + rebased-in refs).
-    * Read per operation, never cached: vacuum's materialization turns a
-    * delta-form version into a full form in place and may then drop the
-    * base this record points at. */
+    * A present record is read per operation, never cached: vacuum's
+    * materialization turns a delta-form version into a full form in
+    * place and may then drop the base this record points at. Its ABSENCE
+    * is held in the snapshot: only a pre-publish finalizer writes the
+    * record, so a version found without one never gains it. */
   private def manifestDeltaOf(
+      spark: SparkSession, s: Snapshot): Option[ManifestDelta] = {
+    var read: Option[ManifestDelta] = None
+    s.memo("noDelta") {
+      read = readManifestDelta(spark, s)
+      if (read.isEmpty) java.lang.Boolean.TRUE else null
+    }
+    read
+  }
+
+  private def readManifestDelta(
       spark: SparkSession, s: Snapshot): Option[ManifestDelta] = {
     val df = deltaManifestFile(s)
     readTextIfExists(fs(spark, s.root), df).map { text =>
@@ -1151,13 +1184,121 @@ object VersionedTable {
     }
   }
 
-  private[graft] def writeManifestDelta(
-      f: org.apache.hadoop.fs.FileSystem, dir: Path, d: ManifestDelta): Unit = {
-    val out = f.create(new Path(new Path(dir, "_manifest"), "delta.txt"), true)
-    try out.write(
-      ((s"${d.base}\t${d.depth}" +: d.removed.toSeq.sorted.map("-" + _)) ++
-        d.added.map("+" + _)).mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+  /** A file this commit wrote: its root-relative ref, byte length and
+    * footer stat rows (none when stats were not collected or failed). */
+  private final case class OwnFile(ref: String, len: Long, stats: Seq[TableStats.Row])
+
+  /** How a version records its data-file list. */
+  private sealed trait RecordForm
+  /** The version dir's own files, no manifest; on disk its stats are
+    * keyed dir-relative (the original layout, which [[statsOf]] re-keys). */
+  private case object PlainForm extends RecordForm
+  /** `manifest.txt` naming every ref. `swap` rewrites a PUBLISHED
+    * version's record in place: the manifest goes temp-then-rename and a
+    * stale stats table is removed when the new one cannot be written. */
+  private final case class FullForm(swap: Boolean = false) extends RecordForm
+  /** `delta.txt` ([[ManifestDelta]]); the refs recorded are its adds. */
+  private final case class DeltaForm(d: ManifestDelta) extends RecordForm
+
+  /** A version's file record: the refs it lists, their stat rows and
+    * their byte sizes — every per-file key a root-relative ref. */
+  private final case class FileRecord(
+      form: RecordForm, refs: Seq[String], statRows: Seq[TableStats.Row],
+      sizes: Map[String, Long]) {
+    /** The version's total data bytes, when this record is its whole
+      * file list and sizes every ref. */
+    def bytes: Option[Long] = form match {
+      case _: DeltaForm => None
+      case _ if refs.forall(sizes.contains) => Some(refs.iterator.map(sizes).sum)
+      case _ => None
+    }
+  }
+
+  private object FileRecord {
+    /** A plain commit's record: exactly the files it wrote. */
+    def plain(dir: Path, own: Seq[OwnFile]): FileRecord =
+      FileRecord(PlainForm, own.map(_.ref), own.flatMap(_.stats),
+        own.map(o => o.ref -> o.len).toMap)
+  }
+
+  /** Stat rows of `refs` from a folded stats map, keyed `key(ref)`. */
+  private def statRows(
+      stats: Map[String, Map[String, (String, Option[String], Option[String], Long, Long)]],
+      refs: Seq[String], key: String => String = identity): Seq[TableStats.Row] =
+    refs.flatMap { r =>
+      stats.getOrElse(r, Map.empty).toSeq.map { case (c, (k, mn, mx, nu, nr)) =>
+        (key(r), c, k, mn, mx, nu, nr)
+      }
+    }
+
+  /** Sizes a record carries from another version: derived, so a failure
+    * to resolve them (e.g. the legacy-vintage stat fallback hitting a
+    * transient store error) warns and carries none rather than blocking
+    * the commit — readers fall back. */
+  private def sizesOr(dir: Path, sizes: => Map[String, Long]): Map[String, Long] =
+    try sizes
+    catch {
+      case e: Exception =>
+        maintLog.warn(s"size-sidecar carry skipped for $dir", e)
+        Map.empty
+    }
+
+  /** The ONE writer of a version's file record — `_stats/stats.tsv`,
+    * `_sizes/sizes.tsv` and the `_manifest` (`manifest.txt` or
+    * `delta.txt`), each written once. A stats table covers every ref the
+    * record lists or is not written: a partial one would silently
+    * disable pruning for just the uncovered files. Stats and sizes are
+    * derived optimizations with reader fallbacks, so their failure warns
+    * and never blocks the commit; a failed manifest write aborts it. */
+  private def recordFiles(
+      f: org.apache.hadoop.fs.FileSystem, dir: Path, rec: FileRecord): Unit = {
+    val statsDir = new Path(dir, "_stats")
+    val keyed = rec.statRows.iterator.map(_._1).toSet
+    try {
+      if (rec.refs.nonEmpty && rec.refs.forall(keyed))
+        TableStats.writeRows(f, dir, rec.form match {
+          case PlainForm =>
+            val prefix = dir.getName + "/"
+            rec.statRows.map(r => r.copy(_1 = r._1.stripPrefix(prefix)))
+          case _ => rec.statRows
+        })
+      else if (rec.form == FullForm(swap = true)) f.delete(statsDir, true)
+    } catch {
+      case e: Exception =>
+        maintLog.warn(s"stats write skipped for $dir", e)
+        try f.delete(statsDir, true) catch { case _: Exception => () }
+    }
+    try FileSizes.write(f, dir, rec.refs.flatMap(r => rec.sizes.get(r).map(r -> _)))
+    catch {
+      case e: Exception =>
+        maintLog.warn(s"size-sidecar write skipped for $dir " +
+          "(reads fall back to a distributed stat)", e)
+    }
+    val mdir = new Path(dir, "_manifest")
+    def writeLines(p: Path, lines: Seq[String]): Unit = {
+      val out = f.create(p, true)
+      try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
+    rec.form match {
+      case PlainForm => ()
+      case DeltaForm(d) =>
+        writeLines(new Path(mdir, "delta.txt"),
+          (s"${d.base}\t${d.depth}" +: d.removed.toSeq.sorted.map("-" + _)) ++
+            d.added.map("+" + _))
+      case FullForm(false) => writeLines(new Path(mdir, "manifest.txt"), rec.refs)
+      case FullForm(true) =>
+        // temp-then-rename: a crash mid-write must never leave a truncated
+        // manifest.txt in a published dir (and [[manifestOf]] additionally
+        // prefers delta.txt while both exist, so even a non-atomic rename
+        // window serves the folded chain, never a sliver)
+        val tmp = new Path(mdir, "manifest.txt.tmp")
+        val fin = new Path(mdir, "manifest.txt")
+        writeLines(tmp, rec.refs)
+        f.delete(fin, false)
+        if (!f.rename(tmp, fin))
+          throw new java.io.IOException(s"rename $tmp -> $fin failed")
+    }
   }
 
   /** A MANIFEST snapshot's data-file list (root-relative paths, possibly
@@ -1199,10 +1340,12 @@ object VersionedTable {
       }
     }
 
-  /** Version `s`'s per-file column stats, delta-aware: full-form
-    * versions read their own `_stats` table; delta-form versions fold
-    * the base's stats under their own adds', restricted to the folded
-    * ref set. A file the fold cannot cover stays ABSENT — every
+  /** Version `s`'s per-file column stats keyed by root-relative ref
+    * (the strings [[dataFileRefs]] returns), delta-aware: full-form
+    * versions read their own `_stats` table — a plain version's
+    * dir-relative keys re-keyed here, once — and delta-form versions
+    * fold the base's stats under their own adds', restricted to the
+    * folded ref set. A file the fold cannot cover stays ABSENT — every
     * consumer already treats a missing entry conservatively (pruning
     * keeps the file, aggregates return None). Held in the snapshot's
     * `stats` slot: without it a table at delta depth d pays O(d²)
@@ -1217,7 +1360,8 @@ object VersionedTable {
     s.memo("stats") {
       val own = TableStats.load(spark, new Path(s.dir, "_stats"))
       manifestDeltaOf(spark, s) match {
-        case None => own
+        case None if own.isEmpty || manifestOf(spark, s).isDefined => own
+        case None => own.map { case (k, m) => (s.dirName + "/" + k) -> m }
         case Some(d) =>
           val refs = manifestOf(spark, s).getOrElse(Nil).toSet
           (statsOf(spark, snapshotAt(spark, s.root, d.base)) ++ own)
@@ -1315,27 +1459,9 @@ object VersionedTable {
         // drop any leftover delta level — `_dv` is authoritative
         dropDvDelta(f, dir)
     }
-    // all-or-nothing, as every FULL stats table
-    if (refs.nonEmpty && refs.forall(stats.contains))
-      TableStats.writeRows(f, dir, refs.flatMap { r =>
-        stats(r).toSeq.map { case (c, (k, mn, mx, nu, nr)) =>
-          (r, c, k, mn, mx, nu, nr) }
-      })
-    else f.delete(new Path(dir, "_stats"), true)
-    FileSizes.write(f, dir, refs.flatMap(r => sizes.get(r).map(r -> _)))
-    // temp-then-rename: a crash mid-write must never leave a truncated
-    // manifest.txt in a published dir (and [[manifestOf]] additionally
-    // prefers delta.txt while both exist, so even a non-atomic rename
-    // window serves the folded chain, never a sliver)
-    val mdir = new Path(dir, "_manifest")
-    val tmp = new Path(mdir, "manifest.txt.tmp")
-    val out = f.create(tmp, true)
-    try out.write(refs.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    val fin = new Path(mdir, "manifest.txt")
-    f.delete(fin, false)
-    if (!f.rename(tmp, fin))
-      throw new java.io.IOException(s"rename $tmp -> $fin failed")
+    recordFiles(f, dir, FileRecord(FullForm(swap = true), refs,
+      statRows(stats, refs), sizes))
+    // the delta record goes LAST: until then readers fold the intact chain
     f.delete(deltaManifestFile(s), false)
   }
 
@@ -2197,7 +2323,7 @@ object VersionedTable {
                   else props0.updated(PartitionByProp, newSpec.mkString(","))
       commitWith(df, root, collectStats = true,
         extras = Map.empty, // layout-only: virtual zero-row feed
-        (_, _, _) => (), bloomCols,
+        FileRecord.plain, bloomCols,
         preCommit = occValidate(spark, root, Some(cur)),
         recordProperties = Some(props),
         partitionBy = newSpec,
@@ -2602,11 +2728,6 @@ object VersionedTable {
   private[graft] def prunedFiles(
       spark: SparkSession, s: Snapshot, predicate: Column): (Seq[String], Int) = {
     val refs = dataFileRefs(spark, s)
-    // stats-lookup key: plain snapshots key stats by DIR-RELATIVE path;
-    // manifest snapshots by the ref itself (bare names collide across
-    // version dirs AND across partition subdirs — Spark's partitioned
-    // writer reuses one part name per task)
-    val keyPrefix = if (manifestOf(spark, s).isDefined) "" else s.dirName + "/"
     val stats = statsOf(spark, s)
     // resolve the predicate against the snapshot schema through the
     // analyzer + optimizer: Column expressions are lazy ColumnNode
@@ -2650,7 +2771,7 @@ object VersionedTable {
     val statsKept =
       if (stats.isEmpty && !anyPartitioned) refs
       else refs.filter { r =>
-        val fileStats = stats.getOrElse(r.stripPrefix(keyPrefix), Map.empty) ++
+        val fileStats = stats.getOrElse(r, Map.empty) ++
           partSynthStats(r, reverseMap, partTypes, bareCols)
         conjs.forall(c => TableStats.mayMatch(c, fileStats))
       }
@@ -2727,8 +2848,7 @@ object VersionedTable {
     // deletion vectors mask rows the footer stats still count — stats
     // cannot answer until a compaction folds the masks in
     if (hasDeletionVectors(spark, s)) return None
-    val fileKeys: Seq[String] = manifestOf(spark, s)
-      .getOrElse(dataFileRefs(spark, s).map(_.stripPrefix(s.dirName + "/")))
+    val fileKeys = dataFileRefs(spark, s)
     val stats = statsOf(spark, s)
     // stats are keyed by PHYSICAL column names; requests speak logical
     val mapping = columnMapping(spark, s)
@@ -2778,19 +2898,15 @@ object VersionedTable {
   private[graft] def fileKeyRanges(
       spark: SparkSession, s: Snapshot, column: String)
       : Option[Seq[(String, Option[(String, Any, Any)])]] = {
-    val entries: Seq[(String, String)] = manifestOf(spark, s) match {
-      case Some(refs) => refs.map(r => (r, r))
-      case None => dataFileRefs(spark, s).map(r => (r, r.stripPrefix(s.dirName + "/")))
-    }
     val stats = statsOf(spark, s)
     val physCol = physicalName(columnMapping(spark, s), column)
-    val out = entries.map { case (rel, sk) =>
-      stats.get(sk).flatMap(_.get(physCol)) match {
+    val out = dataFileRefs(spark, s).map { r =>
+      stats.get(r).flatMap(_.get(physCol)) match {
         case Some((kind, Some(mn), Some(mx), nulls, _)) if nulls >= 0 =>
-          Some((rel, Some((kind,
+          Some((r, Some((kind,
             TableStats.parse(kind, mn), TableStats.parse(kind, mx)))))
         case Some((_, None, None, nulls, rows)) if nulls == rows =>
-          Some((rel, None))
+          Some((r, None))
         case _ => None
       }
     }
@@ -2929,14 +3045,11 @@ object VersionedTable {
     // inside the publish claim: preCommit re-checks the pinned version,
     // exactly as the identity basis is.
     val keptIsWhole = manifestOf(spark, cur).exists(_ eq keptFiles)
-    // stats of the CURRENT snapshot, keyed as stored (name or relpath);
-    // lazy — the fast path and the delta form never build it
-    lazy val curKeyed: Map[String, String] = manifestOf(spark, cur)
-      .map(_.map(r => r -> r).toMap)
-      .getOrElse(dataFileRels(f, cur.dir)
-        .map { case (_, rel) => (cur.dirName + "/" + rel) -> rel }.toMap)
+    // the CURRENT snapshot's refs as a set; lazy — the fast path never
+    // builds it
+    lazy val curRefs: Set[String] = dataFileRefs(spark, cur).toSet
     if (!keptIsWhole) {
-      val badKept = keptFiles.filterNot(curKeyed.contains)
+      val badKept = keptFiles.filterNot(curRefs)
       if (badKept.nonEmpty)
         // refs the current snapshot no longer holds: either the caller's
         // pinned version was REWRITTEN by a concurrent compact/COW (the
@@ -3023,7 +3136,7 @@ object VersionedTable {
       recordProperties = recordProperties,
       recordMapping = Some(mappingToRecord),
       recordInfo = recordInfo,
-      finalizeVersion = (fh, dir, v) => {
+      finalizeVersion = (dir, own) => {
         // refs TOLERATED in at claim time ([[AppendRebase]]): blind
         // appends (added) and disjoint DML winners (added + removed)
         // that published between this commit's pinned version and its
@@ -3040,115 +3153,52 @@ object VersionedTable {
         val keptEff =
           if (removedRefs.isEmpty) keptFiles
           else keptFiles.filterNot(removedRefs)
-        val own = dataFileRels(fh, dir)
-        // lazy: only the full form writes the whole ref list
-        lazy val refs = own.map { case (_, rel) => f"v$v%08d/" + rel } ++
-          keptEff ++ extraRefs
-        // merged stats: fresh files' rows (just collected, keyed by bare
-        // name) re-keyed to relpath + kept files' rows carried forward
-        val ownStats = TableStats.load(spark, new Path(dir, "_stats"))
-        // lazy: only the full form pays the O(files) kept-stats carry
-        lazy val rows =
-          own.flatMap { case (_, rel) =>
-            ownStats.getOrElse(rel, Map.empty).toSeq
-              .map { case (c, (k, mn, mx, nu, nr)) =>
-                (f"v$v%08d/" + rel, c, k, mn, mx, nu, nr)
-              }
-          } ++
-          keptEff.flatMap { r =>
-            curStats.getOrElse(curKeyed(r), Map.empty).toSeq
-              .map { case (c, (k, mn, mx, nu, nr)) =>
-                // metadata-evolution hook: a widening commit converts the
-                // carried rows' UNIT (e.g. date days → ntz micros) so the
-                // stats stay comparable with the new type's literals
-                val (k2, mn2, mx2) = carriedStatsMap
-                  .map(_(c, k, mn, mx)).getOrElse((k, mn, mx))
-                (r, c, k2, mn2, mx2, nu, nr)
-              }
+        // metadata-evolution hook: a widening commit converts carried
+        // rows' UNIT (e.g. date days → ntz micros) so the stats stay
+        // comparable with the new type's literals
+        def carry(rows: Seq[TableStats.Row]): Seq[TableStats.Row] =
+          carriedStatsMap.fold(rows)(m => rows.map { case (r, c, k, mn, mx, nu, nr) =>
+            val (k2, mn2, mx2) = m(c, k, mn, mx)
+            (r, c, k2, mn2, mx2, nu, nr)
+          })
+        // rebased-in refs carry THEIR committed stats and sizes, from the
+        // tolerated version (appends only add, so it covers kept refs too)
+        val rbRows =
+          if (extraRefs.isEmpty) Nil
+          else carry(statRows(rebase.map(rb => statsOf(spark, root, rb.through))
+            .getOrElse(Map.empty), extraRefs))
+        // carried sizes (kept files in the full form, rebased-in refs in
+        // both) come from the tolerated version when one rebased in
+        def carriedSizes(refs: Seq[String]): Map[String, Long] =
+          if (refs.isEmpty) Map.empty
+          else {
+            val sizes = sizesOr(dir, fileSizes(spark, rebase.map(_.through)
+              .filter(_ != cur.version).map(snapshotAt(spark, root, _)).getOrElse(cur)))
+            refs.flatMap(r => sizes.get(r).map(r -> _)).toMap
           }
-        // rebased-in refs carry THEIR committed stats (the tolerated
-        // append version's table is ref-keyed — appends always manifest)
-        val rbStats: Map[String, Map[String,
-            (String, Option[String], Option[String], Long, Long)]] =
-          if (extraRefs.isEmpty) Map.empty
-          else rebase.map(rb => statsOf(spark, root, rb.through))
-            .getOrElse(Map.empty)
-        val rbRows = extraRefs.flatMap { r =>
-          rbStats.getOrElse(r, Map.empty).toSeq
-            .map { case (c, (k, mn, mx, nu, nr)) =>
-              val (k2, mn2, mx2) = carriedStatsMap
-                .map(_(c, k, mn, mx)).getOrElse((k, mn, mx))
-              (r, c, k2, mn2, mx2, nu, nr)
-            }
-        }
+        val ownSizes = own.map(o => o.ref -> o.len).toMap
         if (deltaForm) {
-          // DELTA FORM: sidecars carry only this commit's ADDS — own
-          // files' stats re-keyed to refs (+ rebased-in rows), own sizes
-          // (already listed by commitWith) + the rebased-in refs' — and
+          // DELTA FORM: the record carries only this commit's ADDS — own
+          // files and rebased-in refs, with their rows and sizes — and
           // the manifest is the base pointer with removes/adds. The
-          // O(files) kept-carry above never runs; readers fold. A
-          // partially-covered adds set writes what it has: the folded
-          // view leaves the uncovered file ABSENT, which every consumer
-          // treats conservatively (pruning keeps it, aggregates decline).
-          val ownRows = own.flatMap { case (_, rel) =>
-            ownStats.getOrElse(rel, Map.empty).toSeq
-              .map { case (c, (k, mn, mx, nu, nr)) =>
-                (f"v$v%08d/" + rel, c, k, mn, mx, nu, nr)
-              }
-          }
-          if ((ownRows ++ rbRows).nonEmpty)
-            TableStats.writeRows(fh, dir, ownRows ++ rbRows)
-          else fh.delete(new Path(dir, "_stats"), true)
-          if (extraRefs.nonEmpty)
-            try {
-              val rbSizes = fileSizes(spark, root,
-                rebase.map(_.through).getOrElse(cur.version))
-              FileSizes.append(fh, dir, extraRefs.map(r => r -> rbSizes(r)))
-            } catch {
-              case e: Exception =>
-                maintLog.warn(s"size-sidecar carry skipped for $dir", e)
-            }
+          // O(files) kept-carry never runs; readers fold.
           // whole-kept + nothing-removed ⇒ removed = ∅ by identity; the
           // general form pays the O(refs) set arithmetic only when a
           // rewrite actually dropped refs
           val removed =
             if (keptIsWhole && removedRefs.isEmpty) Set.empty[String]
-            else curKeyed.keySet -- keptEff
-          writeManifestDelta(fh, dir, ManifestDelta(cur.version, deltaDepth,
-            removed = removed,
-            added = own.map { case (_, rel) => f"v$v%08d/" + rel } ++ extraRefs))
-        } else {
-        // a stats table must cover ALL files or claim none: a fresh file
-        // whose footer pass failed, or a kept file with no carried rows,
-        // would otherwise silently disable pruning only for itself
-        val covered = (own.map { case (_, rel) => ownStats.contains(rel) } ++
-          keptEff.map(r => curStats.contains(curKeyed(r))) ++
-          extraRefs.map(rbStats.contains)).forall(identity)
-        if (rows.nonEmpty && covered)
-          TableStats.writeRows(fh, dir, rows ++ rbRows)
-        else fh.delete(new Path(dir, "_stats"), true)
-        // kept files' byte sizes carry beside their stats (own files'
-        // rows were recorded by commitWith's listing already). Derived
-        // optimization: a failure here (e.g. the legacy-vintage stat
-        // fallback hitting a transient store error) must not abort a
-        // data commit that never needed sizes — readers fall back.
-        // Rebased-in refs read their sizes from the tolerated version
-        // (appends only add, so its sidecar covers the kept refs too).
-        try {
-          val sizeS = rebase.map(_.through).filter(_ != cur.version)
-            .map(snapshotAt(spark, root, _)).getOrElse(cur)
-          val curSizes = fileSizes(spark, sizeS)
-          FileSizes.append(fh, dir,
-            (keptEff ++ extraRefs).map(r => r -> curSizes(r)))
-        } catch {
-          case e: Exception =>
-            maintLog.warn(s"size-sidecar carry skipped for $dir", e)
-        }
-        val out = fh.create(
-          new Path(new Path(dir, "_manifest"), "manifest.txt"), true)
-        try out.write(refs.mkString("", "\n", "\n").getBytes("UTF-8"))
-        finally out.close()
-        }
+            else curRefs -- keptEff
+          val added = own.map(_.ref) ++ extraRefs
+          FileRecord(DeltaForm(ManifestDelta(cur.version, deltaDepth,
+              removed = removed, added = added)),
+            added, own.flatMap(_.stats) ++ rbRows,
+            ownSizes ++ carriedSizes(extraRefs))
+        } else
+          // FULL FORM: own files + kept files' rows carried forward from
+          // the current snapshot + the rebased-in refs'
+          FileRecord(FullForm(), own.map(_.ref) ++ keptEff ++ extraRefs,
+            own.flatMap(_.stats) ++ carry(statRows(curStats, keptEff)) ++ rbRows,
+            ownSizes ++ carriedSizes(keptEff ++ extraRefs))
       },
       extraReaderFeatures =
         (if (deltaForm) Set("delta-manifest") else Set.empty) ++
@@ -4106,12 +4156,7 @@ object VersionedTable {
       copyLedger(spark, srcRoot, src.version)
         .map(l => "copyfull" -> l.localCheckpoint(eager = true)).toMap
       // clones re-emit no history: virtual zero-row feed (recordInfo)
-    // stats re-key: source rows are keyed bare-name (dir snapshot) or
-    // ref (manifest snapshot); the clone keys them by its absolute refs
-    val srcKeyOf: Map[String, String] = manifestOf(spark, src)
-      .map(_.map(r => r -> r).toMap)
-      .getOrElse(srcRefs.map(r => r -> r.split('/').last).toMap)
-    val srcStats = statsOf(spark, src)
+    val absOf = srcRefs.zip(refs).toMap
     commitWith(empty, destRoot, collectStats = false, extras = extras,
       recordInfo = Map("operation" -> "clone", ChangesFormKey -> "none"),
       // re-assert emptiness inside the claim: two racing cloners must not
@@ -4119,31 +4164,10 @@ object VersionedTable {
       preCommit = _ => currentVersion(spark, destRoot).foreach(dv =>
         throw new IllegalStateException(
           s"concurrent CREATE: $destRoot gained v$dv while this clone ran")),
-      finalizeVersion = (fh, dir, _) => {
-        val rows = srcRefs.zip(refs).flatMap { case (r, abs) =>
-          srcStats.getOrElse(srcKeyOf(r), Map.empty).toSeq.map {
-            case (c, (k, mn, mx, nu, nr)) => (abs, c, k, mn, mx, nu, nr)
-          }
-        }
-        // all-or-none coverage, as every stats carry
-        val covered = srcRefs.forall(r => srcStats.contains(srcKeyOf(r)))
-        if (rows.nonEmpty && covered) TableStats.writeRows(fh, dir, rows)
-        else fh.delete(new Path(dir, "_stats"), true)
-        // sizes carry re-keyed to the clone's absolute refs (derived
-        // optimization — a failure must not block the clone)
-        try {
-          val srcSizes = fileSizes(spark, src)
-          FileSizes.append(fh, dir,
-            srcRefs.zip(refs).map { case (r, abs) => abs -> srcSizes(r) })
-        } catch {
-          case e: Exception =>
-            maintLog.warn(s"size-sidecar carry skipped for clone $dir", e)
-        }
-        val out = fh.create(
-          new Path(new Path(dir, "_manifest"), "manifest.txt"), true)
-        try out.write(refs.mkString("", "\n", "\n").getBytes("UTF-8"))
-        finally out.close()
-      },
+      // the source's stats and sizes re-keyed to the clone's absolute refs
+      finalizeVersion = (dir, _) =>
+        FileRecord(FullForm(), refs, statRows(statsOf(spark, src), srcRefs, absOf),
+          sizesOr(dir, fileSizes(spark, src)).map { case (r, len) => absOf(r) -> len }),
       recordSchema = Some(schema),
       recordConstraints = Some(constraintsOf(spark, src)),
       recordProperties = Some(propertiesOf(spark, src)),
@@ -4202,7 +4226,7 @@ object VersionedTable {
       return commitWith(readVersion(spark, src), destRoot,
         collectStats = true,
         extras = ledgerExtra,
-        finalizeVersion = (_, _, _) => (),
+        finalizeVersion = FileRecord.plain,
         preCommit = emptyGuard,
         recordSchema = Some(schema),
         recordConstraints = Some(constraintsOf(spark, src)),
@@ -4217,13 +4241,6 @@ object VersionedTable {
     // name hashes the full ref; the part- prefix keeps the plain
     // dir-snapshot listing ([[dataFiles]]) finding them
     val newRel = srcRefs.map(r => r -> ("part-" + DvBitmaps.sha1hex(r) + ".parquet")).toMap
-    val srcKeyOf: Map[String, String] = manifestOf(spark, src)
-      .map(_.map(r => r -> r).toMap)
-      .getOrElse(srcRefs.map(r => r -> r.split('/').last).toMap)
-    val srcStats = statsOf(spark, src)
-    val srcSizes =
-      try fileSizes(spark, src)
-      catch { case _: Exception => Map.empty[String, Long] }
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // a masked source's dv rides along: the zero-row placeholder records
@@ -4238,10 +4255,12 @@ object VersionedTable {
       preCommit = emptyGuard,
       recordInfo = Map("operation" -> "deep-clone",
         ChangesFormKey -> "none"),
-      finalizeVersion = (fh, dir, ver) => {
+      finalizeVersion = (dir, own) => {
+        val fh = fs(spark, destRoot)
+        val copyOf = srcRefs.map(r => r -> (dir.getName + "/" + newRel(r))).toMap
         // the zero-row commit frame leaves one empty part file in the
         // dir — drop it so the snapshot lists EXACTLY the copied files
-        dataFiles(fh, dir).foreach(s => fh.delete(s.getPath, false))
+        own.foreach(o => fh.delete(new Path(destRoot, o.ref), false))
         // DISTRIBUTED byte copy into the (already-renamed) version dir:
         // each task streams its slice of files src → dest through the
         // executor-side filesystems; O(bytes/parallelism) wall time,
@@ -4263,22 +4282,6 @@ object VersionedTable {
               false, true, hconf.value)
           }
         }
-        // stats carry re-keyed to the copied names (plain dir snapshot:
-        // bare-name keys), all-or-none as every carry
-        val rows = srcRefs.flatMap { r =>
-          srcStats.getOrElse(srcKeyOf(r), Map.empty).toSeq.map {
-            case (c, (k, mn, mx, nu, nr)) => (newRel(r), c, k, mn, mx, nu, nr)
-          }
-        }
-        val covered = srcRefs.forall(r => srcStats.contains(srcKeyOf(r)))
-        if (rows.nonEmpty && covered) TableStats.writeRows(fh, dir, rows)
-        else fh.delete(new Path(dir, "_stats"), true)
-        try FileSizes.append(fh, dir, srcRefs.flatMap(r =>
-          srcSizes.get(r).map(len => (f"v$ver%08d/" + newRel(r)) -> len)))
-        catch {
-          case e: Exception =>
-            maintLog.warn(s"size-sidecar carry skipped for deep clone $dir", e)
-        }
         // mask carry: each (file, pos) entry re-keys from the source
         // file's tail to its copied name under THIS version dir —
         // positions are byte-copy-invariant. The bitmap index keys by
@@ -4288,7 +4291,7 @@ object VersionedTable {
           import org.apache.spark.sql.functions.{broadcast, col}
           import spark.implicits._
           val keyDf = srcRefs
-            .map(r => refTail(r) -> (dir.getName + "/" + newRel(r)))
+            .map(r => refTail(r) -> copyOf(r))
             .toDF("file", "__clone_file")
           val reKeyed = dv.join(broadcast(keyDf), Seq("file"))
             .select(col("__clone_file").as("file"), col("pos"))
@@ -4301,6 +4304,11 @@ object VersionedTable {
             .get(DvBitmapFloorKey, DvBitmapFloorDefault.toString).toLong
           if (bytes > floor) DvBitmaps.write(spark, dvDir)
         }
+        // a plain record of the copies: the source's stats and sizes
+        // re-keyed to the copied names
+        FileRecord(PlainForm, srcRefs.map(copyOf),
+          statRows(statsOf(spark, src), srcRefs, copyOf),
+          sizesOr(dir, fileSizes(spark, src)).map { case (r, len) => copyOf(r) -> len })
       },
       recordSchema = Some(schema),
       recordConstraints = Some(constraintsOf(spark, src)),
@@ -4493,23 +4501,13 @@ object VersionedTable {
       preCommit = _ => currentVersion(spark, root).foreach(cv =>
         throw new IllegalStateException(
           s"concurrent CONVERT: $root gained v$cv while this one ran")),
-      finalizeVersion = (fh, dir, _) => {
-        val rows = TableStats.collectRows(spark, fh,
-          listed.map { case (p, _) => (new Path(p), p) })
-        // all-or-none coverage, as every stats table
-        val keyed = rows.map(_._1).toSet
-        if (rows.nonEmpty && refs.forall(keyed))
-          TableStats.writeRows(fh, dir, rows)
-        try FileSizes.append(fh, dir, listed)
-        catch {
-          case e: Exception =>
-            maintLog.warn(s"size-sidecar write skipped for convert $dir", e)
-        }
-        val out = fh.create(
-          new Path(new Path(dir, "_manifest"), "manifest.txt"), true)
-        try out.write(refs.mkString("", "\n", "\n").getBytes("UTF-8"))
-        finally out.close()
-      },
+      // the listed files by absolute ref, their footers read here and
+      // their sizes from the listing
+      finalizeVersion = (_, _) =>
+        FileRecord(FullForm(), refs,
+          TableStats.collectRows(spark, f,
+            listed.map { case (p, _) => (new Path(p), p) }),
+          listed.toMap),
       recordSchema = Some(schema),
       recordProperties = props)
   }
@@ -5259,18 +5257,10 @@ object VersionedTable {
     * never a driver collect. */
   def copyLedger(
       spark: SparkSession, root: String, v: Long): Option[DataFrame] = {
-    // intersect the memo with the LIVE listing: vacuumed versions keep
-    // their cached classification but must not be read (their barriers
-    // are covered by a surviving fold — the vacuum guard's invariant)
-    val live = snapshots(spark, root)
-    val scan = ledgerClassify(spark, root, live)
-    val liveLe = live.filter(_.version <= v).map(s => s.version -> s).toMap
-    val barrier = (scan.barriers & liveLe.keySet).maxOption
-    val floor = barrier.getOrElse(0L)
-    val deltas = (scan.deltas & liveLe.keySet).filter(_ > floor).toSeq.sorted
+    val (barrier, deltas, _) = ledgerSpan(spark, root, v)
     val frames =
-      barrier.flatMap(b => readExtra(spark, liveLe(b), "copyfull")).toSeq ++
-        deltas.flatMap(d => readExtra(spark, liveLe(d), "copyfiles"))
+      barrier.flatMap(b => readExtra(spark, b, "copyfull")).toSeq ++
+        deltas.flatMap(d => readExtra(spark, d, "copyfiles"))
     if (frames.isEmpty) None
     else Some(frames.reduce(_.unionByName(_)).select("file").distinct())
   }
@@ -5279,47 +5269,35 @@ object VersionedTable {
     * barrier (or the log's start) — the fold trigger's input. */
   private[graft] def copyLedgerDepth(
       spark: SparkSession, root: String, v: Long): Int = {
-    val live = snapshots(spark, root)
-    val scan = ledgerClassify(spark, root, live)
-    val liveLe = live.map(_.version).filter(_ <= v).toSet
-    (scan.barriers & liveLe).maxOption match {
-      case Some(b) => liveLe.count(_ > b) + 1
-      case None => liveLe.size
-    }
+    val (barrier, _, above) = ledgerSpan(spark, root, v)
+    above.size + barrier.size
   }
 
-  /** In-JVM memo of the per-version ledger-extra classification. A
-    * version's extras are IMMUTABLE once committed, so each version is
-    * probed at most once per JVM — without this, every `DESCRIBE
-    * DETAIL` / COPY INTO on a 100k-commit streaming table that never
-    * saw a COPY would walk the whole log (two existence probes per
-    * version, every call). Cold start still pays one full walk, the
-    * same class as [[earliestFeedStart]]'s probe; after that only the
-    * new suffix is probed. Vacuumed versions simply stop appearing in
-    * the [[versions]] listing the callers intersect with. */
-  private final case class LedgerScan(
-      probed: Set[Long], barriers: Set[Long], deltas: Set[Long])
-  private val ledgerScans =
-    new java.util.concurrent.ConcurrentHashMap[String, LedgerScan]()
-  private def ledgerClassify(
-      spark: SparkSession, root: String, listed: Seq[Snapshot]): LedgerScan = {
-    val prev = Option(ledgerScans.get(root))
-      .getOrElse(LedgerScan(Set.empty, Set.empty, Set.empty))
-    val unprobed = listed.filterNot(s => prev.probed(s.version))
-    if (unprobed.isEmpty) prev
-    else {
-      val f = fs(spark, root)
-      var barriers = prev.barriers
-      var deltas = prev.deltas
-      unprobed.foreach { s =>
-        if (f.exists(new Path(s.dir, "_copyfull"))) barriers += s.version
-        else if (f.exists(new Path(s.dir, "_copyfiles"))) deltas += s.version
-      }
-      val next = LedgerScan(prev.probed ++ unprobed.map(_.version), barriers, deltas)
-      ledgerScans.put(root, next)
-      next
-    }
+  /** The live versions at or below `v`, newest first down to the first
+    * BARRIER: (that barrier, the ledger deltas above it ascending, every
+    * version above it). Only the LIVE listing is walked, so vacuumed
+    * versions are never read (their barriers are covered by a surviving
+    * fold — the vacuum guard's invariant). */
+  private def ledgerSpan(spark: SparkSession, root: String, v: Long)
+      : (Option[Snapshot], Seq[Snapshot], Seq[Snapshot]) = {
+    val newestFirst = snapshots(spark, root, _ <= v).reverse
+    val (above, rest) = newestFirst.span(ledgerKind(spark, _) != "copyfull")
+    (rest.headOption, above.filter(ledgerKind(spark, _) == "copyfiles").reverse, above)
   }
+
+  /** Version `s`'s COPY-ledger extra: "copyfull" (a barrier),
+    * "copyfiles" (a delta) or "none". Held in the snapshot — ABSENCE
+    * included: a version's extras are immutable for its marker identity,
+    * so each version is probed at most once however often DESCRIBE
+    * DETAIL, COPY INTO or vacuum ask, and a table recreated at the same
+    * root (new markers) is probed afresh. */
+  private def ledgerKind(spark: SparkSession, s: Snapshot): String =
+    s.memo("ledger") {
+      val f = fs(spark, s.root)
+      if (f.exists(new Path(s.dir, "_copyfull"))) "copyfull"
+      else if (f.exists(new Path(s.dir, "_copyfiles"))) "copyfiles"
+      else "none"
+    }
 
   /** Fold the incremental COPY ledger into one complete "copyfull"
     * barrier via a metadata-only commit (zero data bytes, every file by
@@ -5574,38 +5552,14 @@ object VersionedTable {
             (if (!changeFeed) Map.empty[String, DataFrame]
              else Map("changes" ->
                restoreFeed(spark, root, cur, tgt, schema)))
-        // the target's stats carry forward re-keyed, exactly as
-        // commitCowInternal carries a kept file's rows
-        val tgtKeyed: Map[String, String] = manifestOf(spark, tgt)
-          .map(_.map(r => r -> r).toMap)
-          .getOrElse(tgtRefs.map(r => r -> r.stripPrefix(tgt.dirName + "/")).toMap)
-        val tgtStats = statsOf(spark, tgt)
         commitWith(empty, root, collectStats = false, extras = extras,
           recordInfo = Map("operation" -> "restore") ++
             Bucketing.carryStamp(spark, cur),
-          finalizeVersion = (fh, dir, v) => {
-            val rows = tgtRefs.flatMap { r =>
-              tgtStats.getOrElse(tgtKeyed(r), Map.empty).toSeq
-                .map { case (c, (k, mn, mx, nu, nr)) => (r, c, k, mn, mx, nu, nr) }
-            }
-            // all-or-none, as everywhere: partial stats would silently
-            // disable pruning for just the uncovered files
-            val covered = tgtRefs.forall(r => tgtStats.contains(tgtKeyed(r)))
-            if (rows.nonEmpty && covered) TableStats.writeRows(fh, dir, rows)
-            // the restored snapshot's sizes are the target's, re-carried
-            // (derived optimization — never blocks the restore)
-            try {
-              val tgtSizes = fileSizes(spark, tgt)
-              FileSizes.append(fh, dir, tgtRefs.map(r => r -> tgtSizes(r)))
-            } catch {
-              case e: Exception =>
-                maintLog.warn(s"size-sidecar carry skipped for restore $dir", e)
-            }
-            val out = fh.create(
-              new Path(new Path(dir, "_manifest"), "manifest.txt"), true)
-            try out.write(tgtRefs.mkString("", "\n", "\n").getBytes("UTF-8"))
-            finally out.close()
-          },
+          // the target's refs with their stats and sizes, exactly as
+          // commitCowInternal carries a kept file's
+          finalizeVersion = (dir, _) =>
+            FileRecord(FullForm(), tgtRefs, statRows(statsOf(spark, tgt), tgtRefs),
+              sizesOr(dir, fileSizes(spark, tgt))),
           preCommit = occValidate(spark, root, Some(cur)),
           recordSchema = Some(schema),
           // RESTORE rolls back table METADATA with the data: the
@@ -6152,14 +6106,11 @@ object VersionedTable {
     // re-run double-load them. Fold first — the fold commit is the
     // newest version, survives keepLast >= 1, and covers everything
     // below it — then recompute the drop set once.
-    def hasLedger(v: Long) =
-      f.exists(new Path(snap(v).dir, "_copyfiles")) ||
-        f.exists(new Path(snap(v).dir, "_copyfull"))
-    val ledgerDrops = drop.filter(hasLedger)
+    val ledgerDrops = drop.filter(v => ledgerKind(spark, snap(v)) != "none")
     if (ledgerDrops.nonEmpty) {
       val survivors = all.filterNot(drop.toSet)
       val covered = survivors.exists(s => s > ledgerDrops.max &&
-        f.exists(new Path(snap(s).dir, "_copyfull")))
+        ledgerKind(spark, snap(s)) == "copyfull")
       if (!covered) {
         foldCopyLedger(spark, root)
         return vacuum(spark, root, keepLast, olderThanMs, dryRun)

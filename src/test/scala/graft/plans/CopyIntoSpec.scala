@@ -170,6 +170,29 @@ class CopyIntoSpec extends SparkSpec {
       .distinct().count() == 6)
   }
 
+  test("a table recreated at the same root keeps its own ledger: a re-run " +
+      "loads nothing twice") {
+    val root = freshDir("t10") + "/t"
+    val landing = freshDir("land10")
+    land(landing, 1 to 5, "b1")
+    def copy(): Long = GraftSql.execute(spark,
+      s"COPY INTO '$root' FROM '$landing' FILEFORMAT = PARQUET")
+      .collect().head.getLong(2)
+    // the OLD table: its COPY lands at v4, after two ledger-free appends
+    seedTable(root)
+    (1 to 2).foreach(i => VersionedTable.commitAppend(
+      Seq((100L + i, "app")).toDF("id", "src"), root))
+    assert(copy() == 1L)
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // the NEW table at the same root: its COPY lands at v2, a version
+    // number the old table had without a ledger
+    seedTable(root)
+    assert(copy() == 1L)
+    assert(copy() == 0L, "the re-run re-loaded a file the new table's ledger holds")
+    assert(VersionedTable.read(spark, root).count() == 6)
+  }
+
   test("a wildcard-free PATTERN naming a missing path reports 0 files") {
     val root = freshDir("t9") + "/t"; seedTable(root)
     val landing = freshDir("land9")

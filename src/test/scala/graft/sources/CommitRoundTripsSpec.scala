@@ -67,6 +67,37 @@ class CommitRoundTripsSpec extends SparkSpec {
       s"total metadata ops per append commit grew to $total")
   }
 
+  test("a COW commit that keeps files writes its file record once and " +
+    "never reads it back") {
+    val root = freshRoot("graft_rtcow")
+    VersionedTable.commit((1L to 400L).map(i => (i, i % 7)).toDF("id", "g")
+      .repartitionByRange(4, col("id")), root)
+    val kept = VersionedTable.dataFileRefs(spark, root, 1L).sorted.drop(1)
+    assert(kept.size == 3)
+    CountingFileSystem.reset()
+    val v = VersionedTable.commitCow(
+      Seq((1000L, 1L)).toDF("id", "g"), root, keptFiles = kept)
+    val ops = CountingFileSystem.snapshot()
+    info(s"COW commit keeping 3 of 4 files: " +
+      ops.toSeq.sortBy(-_._2).map { case (k, n) => s"$k=$n" }.mkString(" "))
+    val dir = "/" + VersionedTable.snapshotAt(spark, root, v).dirName
+    def under(p: String) = p.endsWith(dir) || p.contains(dir + "/")
+    def hits(op: String, tail: String) =
+      CountingFileSystem.pathsOf(op).count(_.endsWith(dir + tail))
+    // the staging walk is the commit's only listing of its own files
+    val listed = CountingFileSystem.pathsOf("list").filter(under)
+    assert(listed.isEmpty, s"the new version dir was listed: $listed")
+    for (tail <- Seq("/_stats/stats.tsv", "/_sizes/sizes.tsv")) {
+      assert(hits("stat", tail) == 0 && hits("open", tail) == 0,
+        s"$tail was read back after the commit wrote it")
+      assert(hits("create", tail) == 1, s"$tail must be created exactly once")
+    }
+    val stats = VersionedTable.statsOf(spark, root, v)
+    val refs = VersionedTable.dataFileRefs(spark, root, v)
+    assert(refs.size == 4 && refs.forall(stats.contains))
+    assert(VersionedTable.fileSizes(spark, root, v).keySet == refs.toSet)
+  }
+
   test("a READ of the committed table costs O(snapshot), not O(versions): " +
     "version resolution rides the checkpoint, not a log scan") {
     val root = freshRoot("graft_rtread")

@@ -26,8 +26,8 @@ object CountingFileSystem {
   }
   def enter(): Boolean = { val d = depth.get; depth.set(d + 1); d == 0 }
   def exit(): Unit = depth.set(depth.get - 1)
-  // the path of every counted open, list and stat, for specs that count
-  // how often one table's files are read or probed
+  // the path of every counted create, open, list and stat, for specs
+  // that count how often one table's files are written, read or probed
   private val paths =
     new ConcurrentHashMap[String, java.util.concurrent.ConcurrentLinkedQueue[String]]()
   def reset(): Unit = { ops.clear(); paths.clear() }
@@ -65,7 +65,7 @@ class CountingFileSystem extends RawLocalFileSystem {
       p: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
-    counted("create") {
+    counted("create", Some(p)) {
       super.create(p, permission, overwrite, bufferSize, replication,
         blockSize, progress)
     }
@@ -75,7 +75,7 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def create(
       p: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream =
-    counted("create") {
+    counted("create", Some(p)) {
       super.create(p, overwrite, bufferSize, replication, blockSize, progress)
     }
   override def open(p: Path, bufferSize: Int): FSDataInputStream =

@@ -127,4 +127,55 @@ class FileSizesSpec extends SparkSpec {
     assert(VersionedTable.fileSizes(spark, dest, cv).values.sum ==
       VersionedTable.fileSizes(spark, root, vNow).values.sum)
   }
+
+  /** The record check: the version's OWN size table holds the on-disk
+    * length of every ref it records (all refs, or a delta form's adds),
+    * and its stats cover every ref or none — here every ref, since each
+    * input's source files all carry stats. */
+  private def assertRecord(root: String, v: Long, what: String): Unit = {
+    val f = hfs(root)
+    val refs = VersionedTable.dataFileRefs(spark, root, v)
+    val recorded = VersionedTable.manifestDeltaOf(spark, root, v)
+      .map(_.added).getOrElse(refs)
+    val dir = new Path(root, VersionedTable.snapshotAt(spark, root, v).dirName)
+    val sizes = FileSizes.load(f, dir)
+    recorded.foreach { r =>
+      assert(sizes.get(r).contains(f.getFileStatus(new Path(root, r)).getLen),
+        s"$what: $r recorded ${sizes.get(r)}")
+    }
+    val stats = VersionedTable.statsOf(spark, root, v)
+    assert(refs.nonEmpty && refs.forall(stats.contains),
+      s"$what: stats cover ${refs.count(stats.contains)} of ${refs.size} refs")
+  }
+
+  test("deep clone, CONVERT, a delta-form commit and a vacuum-materialized " +
+    "version record every ref's size and stats for every ref") {
+    val root = freshRoot()
+    VersionedTable.commit(
+      (1L to 400L).map(i => (i, i * 3)).toDF("id", "y").repartition(3), root)
+    val dest = freshRoot()
+    VersionedTable.deepClone(spark, dest, root)
+    assertRecord(dest, VersionedTable.currentVersion(spark, dest).get, "deep clone")
+    // the copies are the clone's only files: no empty part file recorded
+    assert(FileSizes.load(hfs(dest), currentDataDir(dest)).size == 3)
+
+    val plain = freshRoot()
+    (1L to 300L).map(i => (i, s"r$i")).toDF("id", "x").repartition(2)
+      .write.parquet(plain)
+    assertRecord(plain, VersionedTable.convertToGraft(spark, plain), "convert")
+
+    spark.conf.set(VersionedTable.DeltaFloorKey, "0")
+    try {
+      // v2 is the first manifest (its base is plain), v3 and v4 delta forms
+      for (i <- 2 to 4)
+        VersionedTable.commitAppend(Seq((1000L + i, 1L)).toDF("id", "y"), root)
+      assert(VersionedTable.manifestDeltaOf(spark, root, 4L).isDefined)
+      assertRecord(root, 4L, "delta form")
+      // dropping v1-v2 severs v3's chain: vacuum materializes it in place
+      VersionedTable.vacuum(spark, root, keepLast = 2)
+      assert(VersionedTable.manifestDeltaOf(spark, root, 3L).isEmpty)
+      assertRecord(root, 3L, "materialized")
+      assertRecord(root, 4L, "delta form over a materialized base")
+    } finally spark.conf.unset(VersionedTable.DeltaFloorKey)
+  }
 }
