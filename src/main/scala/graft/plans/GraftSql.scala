@@ -604,7 +604,6 @@ object GraftSql {
           val cur = VersionedTable.currentVersion(s, root).getOrElse(
             throw new java.io.IOException(s"no committed version under $root"))
           val schema = VersionedTable.tableSchema(s, root, cur)
-            .getOrElse(VersionedTable.readVersion(s, root, cur).schema)
           val mapping = VersionedTable.columnMapping(s, root, cur)
           schema.map(f => Row(f.name, f.dataType.simpleString, f.nullable,
             mapping.getOrElse(f.name, f.name))).toSeq

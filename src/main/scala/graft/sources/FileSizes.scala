@@ -20,8 +20,8 @@ import org.apache.spark.sql.SparkSession
   * same way the stats table does, through the one record writer
   * (`VersionedTable.recordFiles`) that writes this table.
   *
-  * LEGACY vintages (committed before this sidecar existed) resolve
-  * missing entries through ONE distributed `getFileStatus` job
+  * A version whose table write failed (the commit never blocks on it)
+  * resolves missing entries through ONE distributed `getFileStatus` job
   * ([[statRefs]] — the [[TableStats]] distributed-footer pattern), so
   * the driver never loops over O(files) metadata I/O on any road.
   *
@@ -35,7 +35,7 @@ object FileSizes {
   private val SizesDirName = "_sizes"
 
   /** Refs at or below this resolve missing sizes on the driver — a
-    * three-file legacy table must not pay a Spark-job launch. Above it,
+    * three-file table must not pay a Spark-job launch. Above it,
     * one job stats the refs in parallel (one task per slice). */
   private val DriverStatBudget = 64
 
@@ -51,7 +51,7 @@ object FileSizes {
     finally out.close()
   }
 
-  /** The recorded table, empty when absent (pre-upgrade vintages).
+  /** The recorded table, empty when absent (its write failed).
     *
     * DRIVER-MEMORY BUDGET: materializes one (ref, len) entry per data
     * file — ~100 bytes/entry, so ~80 MB at 800k files (100 TB /
@@ -60,7 +60,7 @@ object FileSizes {
     * loaded beside it. Grows with FILE COUNT, never bytes; compaction
     * keeps it bounded. */
   def load(f: FileSystem, dir: Path): Map[String, Long] =
-    // one direct open: an absent table (pre-upgrade vintage) reads empty
+    // one direct open: an absent table reads empty
     VersionedTable.readTextIfExists(f, sizesFile(dir)).map { text =>
       text.split('\n').filter(_.nonEmpty).toSeq.map { line =>
         val a = line.split('\t')

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * [[FileStatus]] proves the version is committed and gives its
   * IDENTITY (the marker's mtime: a table deleted and recreated at the
   * same root mints new markers, so a cached value of the old table can
-  * never answer for the new one); the marker's content names the data
+  * never answer for the new one); the marker's two lines name the data
   * dir (line 1) and the in-commit timestamp (line 2).
   *
   * Everything else a reader needs — grouped metadata, schema, folded
@@ -107,12 +107,11 @@ object Snapshot {
         try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
           .map(_.trim).filter(_.nonEmpty).toList
         finally in.close()
-      // line 1 names the data dir; empty content (pre-upgrade markers)
-      // is the identity name. Line 2 is the in-commit timestamp; the
-      // marker's mtime answers for vintages without one.
-      val s = new Snapshot(root, v, id,
-        lines.headOption.getOrElse(f"v$v%08d"),
-        lines.drop(1).headOption.flatMap(_.toLongOption).getOrElse(id))
+      // line 1 names the data dir, line 2 is the in-commit timestamp;
+      // an empty or one-line marker is a retired vintage
+      val ict = lines.drop(1).headOption.flatMap(_.toLongOption).getOrElse(
+        throw VersionedTable.retiredForm(root, v, "a commit marker without its timestamp line"))
+      val s = new Snapshot(root, v, id, lines.head, ict)
       synchronized {
         val old = cache.put((root, v), s)
         if (old != null) totalWeight -= old.weight

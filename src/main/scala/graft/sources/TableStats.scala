@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -58,29 +58,32 @@ object TableStats {
     * min/max None when the file has no refutable stats for the column. */
   type Row = (String, String, String, Option[String], Option[String], Long, Long)
 
-  /** Stat rows for explicit (path, key) pairs from their parquet footers —
-    * the commit's staged files (keyed by dir-relative path) and CONVERT's
-    * external-file import (keyed by the manifest refs the reader will look
-    * files up by). Driver-side under [[DriverFooterBudget]], one
-    * distributed footer job above it (one task per slice of files, the
-    * Hadoop conf re-materialized executor-side from its entries; only the
-    * O(files × columns) rows return): the driver never loops over
-    * O(files) I/O. */
+  /** Stat rows for explicit (status, key) pairs from their parquet
+    * footers — the commit's staged files (keyed by dir-relative path) and
+    * CONVERT's external-file import (keyed by the manifest refs the
+    * reader will look files up by). Each footer opens from the listed
+    * status, so no file is stat'ed again. Driver-side under
+    * [[DriverFooterBudget]], one distributed footer job above it (one
+    * task per slice of files, the Hadoop conf re-materialized
+    * executor-side from its entries; only the O(files × columns) rows
+    * return): the driver never loops over O(files) I/O. */
   private[sources] def collectRows(
-      spark: SparkSession, f: FileSystem, files: Seq[(Path, String)]): Seq[Row] =
+      spark: SparkSession, f: FileSystem, files: Seq[(FileStatus, String)]): Seq[Row] =
     if (files.size <= DriverFooterBudget)
-      files.flatMap { case (p, key) => fileRows(f.getConf, p, key) }
+      files.flatMap { case (st, key) => fileRows(f.getConf, st, key) }
     else {
       val confEntries = f.getConf.iterator().asScala
         .map(e => (e.getKey, e.getValue)).toVector
-      val paths = files.map { case (p, key) => (p.toString, key) }
-      val slices = math.min(paths.size,
+      val listed = files.map { case (st, key) => (st.getPath.toString, st.getLen, key) }
+      val slices = math.min(listed.size,
         math.max(1, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(paths, slices)
+      spark.sparkContext.parallelize(listed, slices)
         .mapPartitions { it =>
           val conf = new org.apache.hadoop.conf.Configuration(false)
           confEntries.foreach { case (k, v) => conf.set(k, v) }
-          it.flatMap { case (s, key) => fileRows(conf, new Path(s), key) }
+          it.flatMap { case (p, len, key) =>
+            fileRows(conf, new FileStatus(len, false, 0, 0, 0, new Path(p)), key)
+          }
         }
         .collect().toSeq
     }
@@ -110,9 +113,8 @@ object TableStats {
     * Takes a bare Configuration so the distributed collection path can
     * call it executor-side. */
   private def fileRows(
-      conf: org.apache.hadoop.conf.Configuration, p: Path, key: String): Seq[Row] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(p, conf))
+      conf: org.apache.hadoop.conf.Configuration, st: FileStatus, key: String): Seq[Row] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq
@@ -295,7 +297,8 @@ object TableStats {
       if (s.startsWith("1:"))
         Some(java.net.URLDecoder.decode(s.drop(2), "UTF-8"))
       else None
-    // one direct open: an absent table (pre-stats vintage) reads empty
+    // one direct open: an absent table (collectStats = false, or a
+    // failed stats write) reads empty
     VersionedTable.readTextIfExists(f, new Path(statsDir, "stats.tsv")).map { text =>
       text.split('\n').filter(_.nonEmpty).toSeq
         .map { line =>

@@ -136,8 +136,7 @@ object VersionedTable {
     * these must raise, not silently skip (Delta's
     * failOnDataLoss-on-missing-version contract). Driver-sized (one line
     * per dropped version; a year of hourly commits vacuumed is ~9 KB).
-    * Empty for never-vacuumed and pre-upgrade tables — the guard then
-    * stands down, so old tables keep reading exactly as before. */
+    * Empty for never-vacuumed tables — the guard then stands down. */
   def vacuumedVersions(spark: SparkSession, root: String): Set[Long] =
     try {
       val in = fs(spark, root).open(vacuumedFile(root))
@@ -245,29 +244,24 @@ object VersionedTable {
         val a = l.split('\t')
         a(1).toLong -> a(2).toLong
       }.toMap
-      // header: `2\t<version>` since the bytes lines shipped (the format
-      // marker makes a pre-bytes reader FAIL the header's toLong and fall
-      // back to the full log scan, instead of mis-parsing `!b` lines as a
-      // txn app literally named "!b"); a bare `<version>` header is the
-      // original vintage and still accepted
+      // header: `2\t<version>`; any other header (the bare-version
+      // original) is unreadable, and the caller scans the log instead
       val head = lines.head.split('\t')
-      val version =
-        if (head.length >= 2 && head(0) == CkptFormatV) head(1).toLong
-        else lines.head.toLong
-      Some(Checkpoint(version, txns, bytes))
+      require(head.length == 2 && head(0) == CkptFormatV, s"checkpoint header ${lines.head}")
+      Some(Checkpoint(head(1).toLong, txns, bytes))
     } catch { case _: Exception => None }
 
   /** Advance the checkpoint after publishing version `v`. Merges the
-    * previous checkpoint with the txn extras of every version it did not
-    * yet cover — normally just `v`; more only when an earlier writer
-    * crashed between publish and checkpoint, which is exactly how such a
-    * gap heals. Best-effort and MONOTONE: a lower version never replaces
-    * a higher one (concurrent writers race by version), the swap is a
-    * write-tmp-then-rename, and any failure leaves the previous file —
-    * readers then scan the short suffix the checkpoint misses.
-    * `ownBytes` is version `v`'s complete byte total when its committer
-    * already knows it (its own file record), so the commit never reads
-    * back the sidecars it just wrote. */
+    * previous checkpoint with the txn stamps and bytes of every version
+    * it did not yet cover — normally just `v`; more only when an earlier
+    * writer crashed between publish and checkpoint, which is exactly how
+    * such a gap heals. Best-effort and MONOTONE: a lower version never
+    * replaces a higher one (concurrent writers race by version), the swap
+    * is a write-tmp-then-rename, and any failure leaves the previous
+    * file — readers then scan the short suffix the checkpoint misses.
+    * `ownTxn`/`ownBytes` are version `v`'s stamps and complete byte total
+    * when its committer already knows them (its own staged stamps and
+    * file record), so the commit never reads back what it just wrote. */
   private def writeCheckpoint(
       spark: SparkSession, root: String, v: Long,
       ownTxn: Option[Seq[(String, Long)]] = None,
@@ -277,58 +271,44 @@ object VersionedTable {
       val prev = readCheckpoint(spark, root)
       if (!prev.exists(_.version >= v)) {
         val from = prev.map(_.version).getOrElse(0L)
-        val gap = snapshots(spark, root, x => x > from && x <= v)
-        val txns = gap
-          .foldLeft(prev.map(_.txns).getOrElse(Map.empty[String, Long])) { (m, vv) =>
-            // version v's stamps ARE the pairs this commit just staged
-            // (`ownTxn`, already collected driver-side): folding them
-            // directly skips even the metadata re-read. Gap versions
-            // (an earlier writer crashed between publish and
-            // checkpoint) read from the log — the grouped _meta object
-            // for current vintages, the txn parquet extra for old ones
-            // ([[txnStampsOf]]).
-            val stamps: Map[String, Long] =
-              ownTxn match {
-                case Some(own) if vv.version == v =>
-                  // THIS commit's own stamps are authoritative — also
-                  // when empty (Some(Nil): an unstamped commit stamps
-                  // nothing; no metadata read needed to know that)
-                  own.groupBy(_._1)
-                    .map { case (k, rs) => (k, rs.map(_._2).max) }
-                case _ =>
-                  // ownTxn=None means UNKNOWN, not unstamped — vacuum's
-                  // checkpoint advance passes no ownTxn, and treating
-                  // that as "no stamps" would drop the newest version's
-                  // stamps from the checkpoint forever (lastTxn only
-                  // scans above the checkpoint version)
-                  txnStampsOf(spark, vv)
+        val prevTxns = prev.map(_.txns).getOrElse(Map.empty[String, Long])
+        val prevBytes = prev.map(_.bytes).getOrElse(Map.empty[Long, Long])
+        def withStamps(m: Map[String, Long], stamps: Iterable[(String, Long)]) =
+          stamps.foldLeft(m) { case (mm, (app, b)) =>
+            mm.updated(app, math.max(mm.getOrElse(app, Long.MinValue), b))
+          }
+        val (txns, bytes0) = (ownTxn, ownBytes) match {
+          // the normal case: the previous checkpoint covers v − 1 and
+          // the committer knows v's stamps and bytes — the gap is {v},
+          // folded without listing the log the publish just observed or
+          // opening the marker it just wrote
+          case (Some(own), Some(b)) if from == v - 1 =>
+            (withStamps(prevTxns, own), prevBytes.updated(v, b))
+          case _ =>
+            // the healing road: list the gap and read each version.
+            // ownTxn=None means UNKNOWN, not unstamped — vacuum's
+            // checkpoint advance passes no ownTxn, and treating that as
+            // "no stamps" would drop the newest version's stamps from the
+            // checkpoint forever (lastTxn only scans above the checkpoint
+            // version). Bytes resolve through [[completeSnapshotBytes]]
+            // (normally one `_sizes` read), earlier entries carry
+            // forward; one unsizable version skips, never blocks. Only a
+            // COMPLETE sizing is persisted — statRefs degrades an
+            // unreachable ref to absent, and freezing that transient
+            // undercount into the checkpoint would mis-report the
+            // version's bytes FOREVER (checkpoint-first readers never
+            // recompute a covered version); an uncovered version instead
+            // answers through the live fileSizes road, which heals when
+            // the store does.
+            snapshots(spark, root, x => x > from && x <= v)
+              .foldLeft((prevTxns, prevBytes)) { case ((t, m), vv) =>
+                val own = vv.version == v
+                val stamps = ownTxn.filter(_ => own).getOrElse(txnStampsOf(spark, vv).toSeq)
+                val b = ownBytes.filter(_ => own)
+                  .orElse(completeSnapshotBytes(spark, vv, knownBase = m.get))
+                (withStamps(t, stamps), b.fold(m)(m.updated(vv.version, _)))
               }
-            stamps.foldLeft(m) { case (mm, (app, b)) =>
-              mm.updated(app, math.max(mm.getOrElse(app, Long.MinValue), b))
-            }
-          }
-        // snapshot bytes per covered version: the gap versions resolve
-        // through [[completeSnapshotBytes]] (normally one just-written
-        // `_sizes` read; a legacy vintage pays its distributed stat ONCE
-        // here and never again), earlier entries carry forward — so a
-        // deep history answers sizing from this file + the tail for
-        // RETAINED versions only (vacuumed versions prune below: no
-        // consumer sizes a version gone from the log). Per-version
-        // best-effort: one unsizable version skips, never blocks. Only a
-        // COMPLETE sizing is persisted — statRefs degrades an
-        // unreachable ref to absent, and freezing that transient
-        // undercount into the checkpoint would mis-report the version's
-        // bytes FOREVER (checkpoint-first readers never recompute a
-        // covered version); an uncovered version instead answers through
-        // the live fileSizes road, which heals when the store does.
-        val bytes0 = gap
-          .foldLeft(prev.map(_.bytes).getOrElse(Map.empty[Long, Long])) { (m, vv) =>
-            ownBytes.filter(_ => vv.version == v)
-                .orElse(completeSnapshotBytes(spark, vv, knownBase = m.get)) match {
-              case Some(b) => m.updated(vv.version, b)
-              case None => m
-            }
-          }
+        }
         // prune entries for versions vacuum has dropped: no consumer sizes
         // a version that's gone from the log (history/maintenance iterate
         // live versions only), and without the prune the map grows one
@@ -497,7 +477,7 @@ object VersionedTable {
     val exprTypes: Map[String, org.apache.spark.sql.types.DataType] =
       if (exprGens.isEmpty) Map.empty
       else recordSchema
-        .orElse(base.flatMap(b => scala.util.Try(schemaOf(spark, b)).toOption))
+        .orElse(base.map(schemaOf(spark, _)))
         .map(_.map(sf => sf.name -> sf.dataType).toMap).getOrElse(Map.empty)
     val df0e = GeneratedCols.populateExprs(df0g, exprGens, exprTypes)
     val (df0, idAdvProps, idCheck, idRelease) =
@@ -714,8 +694,7 @@ object VersionedTable {
     val stagedStats: Map[String, Seq[TableStats.Row]] =
       if (!collectStats) Map.empty
       else CommitProfiler.phase("stats_footers") {
-        try TableStats.collectRows(spark, f,
-            staged.map { case (st, rel) => (st.getPath, rel) }).groupBy(_._1)
+        try TableStats.collectRows(spark, f, staged).groupBy(_._1)
         catch {
           case e: Exception =>
             System.err.println(s"[versioned-table] stats collection skipped: ${e.getMessage}")
@@ -756,15 +735,14 @@ object VersionedTable {
     // commit info — GROUP-COMMIT into ONE object
     // ([[groupedMetaFile]]): on an object store each separate sidecar
     // is its own PUT-class round trip paid per commit (per micro-batch
-    // on a streaming/MV table), and all five are driver-sized. Section
-    // absence inside the object preserves each record's absent-file
-    // semantics exactly; OLD builds can't see the grouped object, so
-    // every grouped commit records the `grouped-meta` READER feature in
-    // the still-separate protocol record — the one sidecar that must
-    // stay where a pre-grouping reader looks, so it refuses loudly
-    // instead of serving a table without its schema/mapping. The
-    // grouped map is accumulated here and written beside the protocol
-    // record below.
+    // on a streaming/MV table), and all five are driver-sized. An
+    // absent record is an absent section. Every commit writes the
+    // object (readers refuse a version without it, [[groupedMetaOf]])
+    // and records the `grouped-meta` READER feature in the separate
+    // protocol record, where a pre-grouping build looks, so such a
+    // build refuses loudly instead of serving a table without its
+    // schema/mapping. The grouped map is accumulated here and written
+    // beside the protocol record below.
     val groupedMeta = scala.collection.mutable.Map[String, String](
       GroupedSchemaKey -> schemaJson)
     // the logical→physical column mapping + retired birth names;
@@ -829,8 +807,8 @@ object VersionedTable {
     // derived from what the commit carries — a future reader outside
     // these features' support refuses loudly instead of serving wrong
     // results (ignored DV masks resurrect deletes; ignored mapping
-    // resolves renamed columns to nothing). Absent file = no
-    // requirements, so pre-upgrade tables read unchanged.
+    // resolves renamed columns to nothing). Every commit writes it: it
+    // always names `grouped-meta`.
     val readerFeats = Set(
       if (extras.contains("dv")) Some("deletion-vectors") else None,
       if (colMap.nonEmpty || retired.nonEmpty) Some("column-mapping") else None,
@@ -871,23 +849,15 @@ object VersionedTable {
       // (line 2 = in-commit timestamp). A WRITER feature, as the Delta
       // protocol gates inCommitTimestamp: any reader that takes the
       // marker's FIRST line resolves the data dir correctly without
-      // understanding the stamp (history/time-travel merely fall back
-      // to mtimes), so ICT-capable-but-flagless readers must keep
-      // reading. An ignorant WRITER would publish one-line markers,
-      // breaking the monotone-clamp contract the stamps provide —
-      // that side is gated. Builds predating the marker syntax itself
-      // fail on dir resolution regardless of any gate; the narrow build
-      // window that checked features but parsed whole marker content now
-      // gets that path error instead of a clean ProtocolException — the
-      // accepted cost of letting every capable-but-flagless reader in.
+      // understanding the stamp, so ICT-capable-but-flagless readers
+      // must keep reading. An ignorant WRITER would publish one-line
+      // markers, which this build refuses to read ([[Snapshot.of]]) —
+      // that side is gated.
       Some("in-commit-timestamps")
     ).flatten
-    if (readerFeats.nonEmpty || writerOnlyFeats.nonEmpty)
-      writeProps(f, new Path(new Path(staging, "_protocol"),
-        "features.properties"),
-        Map("reader" -> readerFeats.toSeq.sorted.mkString(","),
-            "writer" -> (readerFeats ++ writerOnlyFeats).toSeq.sorted
-              .mkString(",")))
+    writeProps(f, new Path(new Path(staging, "_protocol"), "features.properties"),
+      Map("reader" -> readerFeats.toSeq.sorted.mkString(","),
+          "writer" -> (readerFeats ++ writerOnlyFeats).toSeq.sorted.mkString(",")))
     // (1f) COMMIT INFO: what operation produced this version (Delta's
     // commitInfo action). Informational for history, LOAD-BEARING for
     // concurrency: `blindAppend=true` is the stamp [[AppendRebase]]
@@ -1065,12 +1035,10 @@ object VersionedTable {
     * the epoch-millis the WRITER recorded as the marker's second line at
     * publish, clamped monotone at write (`max(now, prev + 1)`) so
     * history and `TIMESTAMP AS OF` stay ordered even across writer clock
-    * skew. Falls back to the marker's MODIFICATION TIME for pre-upgrade
-    * vintages — which is exactly the clock this format resolved from
-    * before, so old tables keep answering as they always did. The
-    * mtime road is what in-commit stamps exist to replace: a
-    * copied/restored table (or an object store that rewrites mtimes)
-    * would otherwise re-date every commit to the copy time. */
+    * skew. Every marker carries it; a marker without it is a retired
+    * vintage and refused with [[ProtocolException]]. Marker mtimes are
+    * never a clock: a copied/restored table (or an object store that
+    * rewrites mtimes) would re-date every commit to the copy time. */
   def commitTimeOf(spark: SparkSession, root: String, v: Long): Long =
     snapshotAt(spark, root, v).commitTime
 
@@ -1232,9 +1200,9 @@ object VersionedTable {
     }
 
   /** Sizes a record carries from another version: derived, so a failure
-    * to resolve them (e.g. the legacy-vintage stat fallback hitting a
-    * transient store error) warns and carries none rather than blocking
-    * the commit — readers fall back. */
+    * to resolve them (e.g. the stat fallback for a version whose size
+    * table write failed, hitting a transient store error) warns and
+    * carries none rather than blocking the commit — readers fall back. */
   private def sizesOr(dir: Path, sizes: => Map[String, Long]): Map[String, Long] =
     try sizes
     catch {
@@ -1369,15 +1337,6 @@ object VersionedTable {
       }
     }
 
-  /** Rewrite a DELTA-form version as its own FULL form — folded
-    * manifest, stats and sizes written into its dir, the delta record
-    * removed. Called by vacuum for retained versions whose base is
-    * about to drop (the fold backbone would go with the base's dir);
-    * idempotent and derived-only (the folded content is exactly what
-    * readers already served), so a crash mid-write merely re-runs. The
-    * version's protocol record keeps the "delta-manifest" feature — a
-    * conservative over-claim that only affects builds predating the
-    * feature, which could not have vacuumed this table anyway. */
   /** Remove a version's `_dvdelta` level with the `_bitmaps/_DONE`
     * marker deleted FIRST: an in-flight reader's executor probe treats
     * an absent bitmap bin as "no deletions" only while `_DONE` exists
@@ -1415,6 +1374,15 @@ object VersionedTable {
         .write.mode(SaveMode.Overwrite).parquet(dir.toString)
   }
 
+  /** Rewrite a DELTA-form version as its own FULL form — folded
+    * manifest, stats and sizes written into its dir, the delta record
+    * removed. Called by vacuum for retained versions whose base is
+    * about to drop (the fold backbone would go with the base's dir);
+    * idempotent and derived-only (the folded content is exactly what
+    * readers already served), so a crash mid-write merely re-runs. The
+    * version's protocol record keeps the "delta-manifest" feature — a
+    * conservative over-claim that only affects builds predating the
+    * feature, which could not have vacuumed this table anyway. */
   private def materializeManifest(spark: SparkSession, s: Snapshot): Unit = {
     val f = fs(spark, s.root)
     val dir = s.dir
@@ -1493,30 +1461,11 @@ object VersionedTable {
         .map { case (_, rel) => s.dirName + "/" + rel }
     })
 
-  /** The schema RECORDED for version `v` at commit time, or None for
-    * snapshots committed before schema tracking — callers fall back to
-    * parquet inference, so a pre-upgrade table keeps reading (and records
-    * a schema on its next commit). */
+  /** The schema RECORDED for version `v` at commit time — the grouped
+    * `_meta` record's schema section, which every commit writes. */
   def tableSchema(
-      spark: SparkSession, root: String, v: Long)
-      : Option[org.apache.spark.sql.types.StructType] =
-    tableSchema(spark, snapshotAt(spark, root, v))
-
-  private[graft] def tableSchema(
-      spark: SparkSession, s: Snapshot): Option[org.apache.spark.sql.types.StructType] =
-    s.memo("schema") {
-      // grouped vintages carry the schema JSON in the one metadata
-      // object; only pre-grouping versions pay the separate schema.json
-      // read (direct open — absent reads as None)
-      val text: Option[String] =
-        groupedMetaOf(spark, s).get(GroupedSchemaKey).orElse(
-          try readTextIfExists(fs(spark, s.root),
-            new Path(new Path(s.dir, "_schema"), "schema.json"))
-          catch { case _: Exception => None })
-      try text.map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Exception => None }
-    }
+      spark: SparkSession, root: String, v: Long): org.apache.spark.sql.types.StructType =
+    schemaOf(spark, snapshotAt(spark, root, v))
 
   // ---- protocol: table features (reader/writer gate) ----------------------
 
@@ -1540,17 +1489,31 @@ object VersionedTable {
   val SupportedWriterFeatures: Set[String] =
     SupportedReaderFeatures ++ Set("generated-columns", "identity-columns")
 
-  /** A version requires features outside what this build supports. */
-  final case class ProtocolException(
-      root: String, version: Long, missing: Set[String], side: String)
-    extends java.io.IOException(
-      s"version $version of $root requires $side feature(s) this build " +
-        s"does not support: ${missing.toSeq.sorted.mkString(", ")} — " +
-        "upgrade the library to read/write this table")
+  /** Version `version` of `root` cannot be served by this build:
+    * `reason` says why — it requires features outside what this build
+    * supports, or it was written in an on-disk form this build no
+    * longer reads. */
+  final case class ProtocolException(root: String, version: Long, reason: String)
+    extends java.io.IOException(s"version $version of $root $reason")
 
-  /** (readerFeatures, writerFeatures) RECORDED for version `v`; empty
-    * sets for pre-upgrade versions (absent file) — old tables keep
-    * reading exactly as before. */
+  private def unsupported(s: Snapshot, missing: Set[String], side: String) =
+    ProtocolException(s.root, s.version,
+      s"requires $side feature(s) this build does not support: " +
+        s"${missing.toSeq.sorted.mkString(", ")} — upgrade the library " +
+        "to read/write this table")
+
+  /** A version in an on-disk form no current commit writes: `what`
+    * names the form. This build reads ONE vintage — a two-line commit
+    * marker and the grouped `_meta/commit.properties` object. */
+  private[sources] def retiredForm(root: String, version: Long, what: String) =
+    ProtocolException(root, version,
+      s"was written in a retired on-disk form ($what); this build reads " +
+        "only versions with a two-line commit marker and a grouped " +
+        "_meta/commit.properties record")
+
+  /** (readerFeatures, writerFeatures) RECORDED for version `v`. Every
+    * version this build reads carries the record (it names at least
+    * `grouped-meta`). */
   def protocolOf(
       spark: SparkSession, root: String, v: Long): (Set[String], Set[String]) =
     protocolOf(spark, snapshotAt(spark, root, v))
@@ -1559,6 +1522,8 @@ object VersionedTable {
     * ([[assertReadable]]), so a refusal is re-probed — an operator fixing
     * the record in place is seen at once. */
   private def protocolOf(spark: SparkSession, s: Snapshot): (Set[String], Set[String]) = {
+    // a retired vintage has no features to report: refused, not empty
+    groupedMetaOf(spark, s)
     val props = readProps(spark,
       new Path(new Path(s.dir, "_protocol"), "features.properties"))
     def split(k: String) = props.get(k)
@@ -1571,7 +1536,7 @@ object VersionedTable {
     s.memo("readable") {
       val missing = protocolOf(spark, s)._1 -- SupportedReaderFeatures
       if (missing.nonEmpty)
-        throw ProtocolException(s.root, s.version, missing, "reader")
+        throw unsupported(s, missing, "reader")
       true
     }
 
@@ -1581,7 +1546,7 @@ object VersionedTable {
       // a writer must also READ the current state to commit against it
       val missing = (r -- SupportedReaderFeatures) ++ (w -- SupportedWriterFeatures)
       if (missing.nonEmpty)
-        throw ProtocolException(s.root, s.version, missing, "writer")
+        throw unsupported(s, missing, "writer")
       true
     }
 
@@ -1591,17 +1556,15 @@ object VersionedTable {
 
   // ---- grouped per-version metadata ---------------------------------------
   //
-  // The five driver-sized per-version records — schema, column mapping,
-  // CHECK constraints, table properties, commit info — land in ONE
-  // `_meta/commit.properties` object per commit (one PUT instead of up
-  // to five; one GET fills every record's snapshot slot). Sections are
-  // key-prefixed; a record's old "absent file" semantics become "no
-  // keys with my prefix". The grouped form always carries the schema,
-  // so an EMPTY grouped map ⇔ the file is absent ⇔ a pre-grouping
-  // vintage — readers fall back to the per-file sidecars, and the
-  // `grouped-meta` reader feature (recorded in the still-separate
-  // protocol sidecar) keeps pre-grouping BUILDS from misreading a
-  // grouped version as "no metadata".
+  // The driver-sized per-version records — schema, column mapping, CHECK
+  // constraints, table properties, commit info, txn stamps, extra
+  // schemas — land in ONE `_meta/commit.properties` object per commit
+  // (one PUT; one GET fills every record's snapshot slot). Sections are
+  // key-prefixed; an absent record is "no keys with my prefix". The
+  // object always carries the schema, and every commit writes it: a
+  // version without it is a retired vintage, refused here — the one
+  // read every schema, mapping, constraint, property, commit-info and
+  // txn face makes, so none of them answers "empty" for it.
   private val GroupedSchemaKey = "schema"
   private val GroupedMapPrefix = "m."
   private val GroupedCheckPrefix = "c."
@@ -1611,9 +1574,8 @@ object VersionedTable {
   private val GroupedExtraSchemaPrefix = "x."
 
   /** The schema extra `name` was staged with at version `s` — recorded
-    * in the grouped `_meta` object by [[commitWith]]. None for versions
-    * written before the record existed, or when the extra was written
-    * outside a commit. */
+    * in the grouped `_meta` object by [[commitWith]]. None when the
+    * extra was written outside a commit. */
   private def extraSchemaOf(
       spark: SparkSession, s: Snapshot,
       name: String): Option[org.apache.spark.sql.types.StructType] =
@@ -1622,58 +1584,38 @@ object VersionedTable {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Transaction stamps recorded with version `v` — app_id → high-water
-    * batch_id. Grouped vintages read them from the one _meta object
-    * (driver-side, NO Spark job); pre-grouping vintages fall back to the
-    * `txn` parquet extra. */
+    * batch_id, read from the grouped _meta object (driver-side, no
+    * Spark job). */
   def txnStampsOf(
       spark: SparkSession, root: String, v: Long): Map[String, Long] =
     txnStampsOf(spark, snapshotAt(spark, root, v))
 
-  private def txnStampsOf(spark: SparkSession, s: Snapshot): Map[String, Long] = {
-    val g = groupedMetaOf(spark, s)
-    if (g.nonEmpty)
-      groupedSection(g, GroupedTxnPrefix).map { case (k, t) => (k, t.toLong) }
-    else readExtra(spark, s, "txn") match {
-      case Some(df) => df.collect()
-        .map(r => (r.getAs[String]("app_id"), r.getAs[Long]("batch_id")))
-        .groupBy(_._1).map { case (k, rs) => (k, rs.map(_._2).max) }
-      case None => Map.empty
-    }
-  }
-  /** Cheap boolean face of [[txnStampsOf]]: "is version `s` stamped?"
-    * without materializing the stamps. Grouped vintages answer from the
-    * _meta object; pre-grouping vintages answer from the `_txn` extra's
-    * listing instead of a Spark parquet read — DESCRIBE HISTORY / vacuum
-    * over a long legacy log would otherwise pay O(versions) job launches
-    * for a yes/no. (Grouped commits never write a `_txn` parquet — extras
-    * drops "txn" before staging — so the two probes cannot disagree.) */
-  private def hasTxnStamps(spark: SparkSession, s: Snapshot): Boolean = {
-    val g = groupedMetaOf(spark, s)
-    if (g.nonEmpty) g.keys.exists(_.startsWith(GroupedTxnPrefix))
-    else sidecarOf(spark, s, "txn").isDefined
-  }
+  private def txnStampsOf(spark: SparkSession, s: Snapshot): Map[String, Long] =
+    metaSection(spark, s, GroupedTxnPrefix).map { case (k, t) => (k, t.toLong) }
+
+  /** Cheap boolean face of [[txnStampsOf]]: "is version `s` stamped?" */
+  private def hasTxnStamps(spark: SparkSession, s: Snapshot): Boolean =
+    groupedMetaOf(spark, s).keys.exists(_.startsWith(GroupedTxnPrefix))
+
   private def groupedMetaFile(versionDir: Path): Path =
     new Path(new Path(versionDir, "_meta"), "commit.properties")
-  private def groupedMetaOf(spark: SparkSession, s: Snapshot): Map[String, String] =
-    s.memo("meta") { readProps(spark, groupedMetaFile(s.dir)) }
-  /** One per-file metadata sidecar of a pre-grouping vintage (`rel`
-    * under the version dir), held in the snapshot like the grouped object. */
-  private def legacyProps(spark: SparkSession, s: Snapshot, rel: String): Map[String, String] =
-    s.memo("props:" + rel) { readProps(spark, new Path(s.dir, rel)) }
-  /** The `prefix` section of the grouped object, or — for a pre-grouping
-    * vintage (empty grouped map) — the per-file sidecar `legacyRel`. */
-  private def metaSection(
-      spark: SparkSession, s: Snapshot, prefix: String,
-      legacyRel: String): Map[String, String] = {
-    val g = groupedMetaOf(spark, s)
-    if (g.nonEmpty) groupedSection(g, prefix) else legacyProps(spark, s, legacyRel)
-  }
-  private def groupedSection(
-      g: Map[String, String], prefix: String): Map[String, String] =
-    g.collect { case (k, v) if k.startsWith(prefix) =>
-      (k.substring(prefix.length), v) }
 
-  private val MappingRel = "_schema/mapping.properties"
+  /** Version `s`'s grouped metadata record — THE vintage gate: a version
+    * whose record is absent (or carries no schema) was written before
+    * grouping and is refused with [[ProtocolException]]. */
+  private def groupedMetaOf(spark: SparkSession, s: Snapshot): Map[String, String] =
+    s.memo("meta") {
+      val g = readProps(spark, groupedMetaFile(s.dir))
+      if (!g.contains(GroupedSchemaKey))
+        throw retiredForm(s.root, s.version, "no grouped _meta record")
+      g
+    }
+
+  /** The `prefix` section of version `s`'s grouped object. */
+  private def metaSection(
+      spark: SparkSession, s: Snapshot, prefix: String): Map[String, String] =
+    groupedMetaOf(spark, s).collect { case (k, v) if k.startsWith(prefix) =>
+      (k.substring(prefix.length), v) }
 
   /** LOGICAL→PHYSICAL column mapping recorded for version `v` (Delta
     * column mapping, name mode): physical names are birth names frozen
@@ -1686,14 +1628,14 @@ object VersionedTable {
     columnMapping(spark, snapshotAt(spark, root, v))
 
   private[graft] def columnMapping(spark: SparkSession, s: Snapshot): Map[String, String] =
-    metaSection(spark, s, GroupedMapPrefix, MappingRel) - RetiredKey
+    metaSection(spark, s, GroupedMapPrefix) - RetiredKey
 
   /** Physical names RETIRED by a DROP COLUMN (or freed by a rename and
     * then shadowed): a later evolveSchema add with the same logical name
     * must mint a FRESH physical name, or old files' stale values would
     * resurrect through by-name parquet resolution. */
   private def retiredPhysicals(spark: SparkSession, s: Snapshot): Set[String] =
-    metaSection(spark, s, GroupedMapPrefix, MappingRel).get(RetiredKey)
+    metaSection(spark, s, GroupedMapPrefix).get(RetiredKey)
       .map(_.split(',').filter(_.nonEmpty).toSet).getOrElse(Set.empty)
 
   private def physicalName(mapping: Map[String, String], c: String): String =
@@ -1719,30 +1661,27 @@ object VersionedTable {
       df: DataFrame, mapping: Map[String, String]): DataFrame =
     if (mapping.isEmpty) df else df.withColumnsRenamed(mapping)
 
-  /** Version `s`'s effective schema: recorded when available, else
-    * inferred from the snapshot's parquet footers. */
+  /** Version `s`'s recorded schema ([[tableSchema]]). */
   private[graft] def schemaOf(
       spark: SparkSession, s: Snapshot): org.apache.spark.sql.types.StructType =
-    tableSchema(spark, s).getOrElse(scan(spark, s, masked = false).schema)
+    s.memo("schema") {
+      org.apache.spark.sql.types.DataType.fromJson(groupedMetaOf(spark, s)(GroupedSchemaKey))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    }
 
-  /** A parquet reader pinned to version `s`'s recorded schema when one
-    * exists (by-name column resolution: a file missing an evolved-in
-    * column yields nulls for it — exactly the Delta read-time backfill),
-    * else plain inference. */
+  /** A parquet reader pinned to version `s`'s recorded schema (by-name
+    * column resolution: a file missing an evolved-in column yields nulls
+    * for it — exactly the Delta read-time backfill). Files carry
+    * PHYSICAL (birth) names; the logical rename is a Project applied
+    * after the scan (toLogical at each read site). */
   private def versionReader(
       spark: SparkSession, s: Snapshot): org.apache.spark.sql.DataFrameReader =
     // recursiveFileLookup: dir reads of a PARTITIONED snapshot must find
     // the `p__<col>=<val>/` leaves WITHOUT Hive partition inference (the
     // dir columns are write-layout duplicates; the data files carry every
     // real column) — and leaf-file reads never wanted inference anyway
-    tableSchema(spark, s) match {
-      case Some(sch) =>
-        // files carry PHYSICAL (birth) names; the logical rename is a
-        // Project applied after the scan (toLogical at each read site)
-        spark.read.option("recursiveFileLookup", "true")
-          .schema(physicalSchema(sch, columnMapping(spark, s)))
-      case None => spark.read.option("recursiveFileLookup", "true")
-    }
+    spark.read.option("recursiveFileLookup", "true")
+      .schema(physicalSchema(schemaOf(spark, s), columnMapping(spark, s)))
 
   // ---- merge-on-read deletion vectors ------------------------------------
 
@@ -2004,8 +1943,7 @@ object VersionedTable {
     else {
       val spec = partitionColumnsOf(spark, s)
       val mapping = columnMapping(spark, s)
-      val types = tableSchema(spark, s)
-        .map(_.map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
+      val types = schemaOf(spark, s).map(f => f.name -> f.dataType).toMap
       import org.apache.spark.sql.functions._
       spec.foldLeft(df) { (d, c) =>
         val phys = physicalName(mapping, c)
@@ -2548,12 +2486,10 @@ object VersionedTable {
 
   /** TIMESTAMP-based time travel (Delta's `TIMESTAMP AS OF`): the
     * highest version whose commit time is at or before `ts` — resolved
-    * from the IN-COMMIT timestamps ([[commitTimeOf]]: marker line 2,
-    * mtime fallback for pre-upgrade vintages), the same clock
-    * [[history]] reports, with a READ-SIDE running-max clamp so a mixed
-    * history (old mtime-dated commits interleaved with in-commit-stamped
-    * ones, or skewed legacy writers) still resolves monotone — version
-    * order is the truth, time must follow it. Throws when `ts` predates
+    * from the IN-COMMIT timestamps ([[commitTimeOf]]: marker line 2),
+    * the same clock [[history]] reports, with a READ-SIDE running-max
+    * clamp so a history with skewed writers still resolves monotone —
+    * version order is the truth, time must follow it. Throws when `ts` predates
     * the earliest retained commit (vacuum may have dropped the version
     * that was current then — returning a later snapshot would silently
     * lie). */
@@ -2614,33 +2550,27 @@ object VersionedTable {
       case Some(rs) => rs.map(r => new Path(s.root, r).toString)
       case None => Seq(s.dir.toString)
     }
-    // an unrecorded schema infers from the version's files, which an
-    // empty manifest does not have: that read stays Spark's to refuse
-    val emptySchema =
-      if (paths.nonEmpty) None
-      else tableSchema(spark, s).orElse(refs.map(_ => schemaOf(spark, s)))
-    emptySchema match {
-      case Some(sch) =>
-        val tags = (if (tagFile) Seq(StructField("__dv_file", StringType)) else Nil) ++
-          (if (tagPos) Seq(StructField("__dv_pos", LongType)) else Nil)
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          StructType(sch.fields ++ tags))
-      case None =>
-        val chain = if (masked) dvChainInfo(spark, s) else None
-        val base = synthHiveParts(spark, s, versionReader(spark, s).parquet(paths: _*))
-        val withFile =
-          if (tagFile || chain.isDefined) base.withColumn("__dv_file", fileRefCol) else base
-        val tagged =
-          if (tagPos || chain.isDefined) withFile.withColumn("__dv_pos", col("_metadata.row_index"))
-          else withFile
-        val out = chain match {
-          case Some(c) =>
-            val keep = base.columns.toSeq ++
-              (if (tagFile) Seq("__dv_file") else Nil) ++ (if (tagPos) Seq("__dv_pos") else Nil)
-            foldMask(spark, tagged, c).select(keep.map(col): _*)
-          case None => tagged
-        }
-        toLogical(out, columnMapping(spark, s))
+    if (paths.isEmpty) {
+      val tags = (if (tagFile) Seq(StructField("__dv_file", StringType)) else Nil) ++
+        (if (tagPos) Seq(StructField("__dv_pos", LongType)) else Nil)
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        StructType(schemaOf(spark, s).fields ++ tags))
+    } else {
+      val chain = if (masked) dvChainInfo(spark, s) else None
+      val base = synthHiveParts(spark, s, versionReader(spark, s).parquet(paths: _*))
+      val withFile =
+        if (tagFile || chain.isDefined) base.withColumn("__dv_file", fileRefCol) else base
+      val tagged =
+        if (tagPos || chain.isDefined) withFile.withColumn("__dv_pos", col("_metadata.row_index"))
+        else withFile
+      val out = chain match {
+        case Some(c) =>
+          val keep = base.columns.toSeq ++
+            (if (tagFile) Seq("__dv_file") else Nil) ++ (if (tagPos) Seq("__dv_pos") else Nil)
+          foldMask(spark, tagged, c).select(keep.map(col): _*)
+        case None => tagged
+      }
+      toLogical(out, columnMapping(spark, s))
     }
   }
 
@@ -2738,8 +2668,7 @@ object VersionedTable {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.flatMap(TableStats.conjuncts)
     val partTypes: Map[String, org.apache.spark.sql.types.DataType] =
-      scala.util.Try(schemaOf(spark, s)).toOption
-        .map(_.map(sf => sf.name -> sf.dataType).toMap).getOrElse(Map.empty)
+      schemaOf(spark, s).map(sf => sf.name -> sf.dataType).toMap
     // GENERATED-COLUMN IMPLICATION ([[GeneratedCols.impliedFor]]): a
     // conjunct on a generator's BASE column derives sound partition-
     // column bounds, APPENDED (the base conjunct still prunes through
@@ -2748,9 +2677,7 @@ object VersionedTable {
     // Zone-sensitive generators derive only under their birth zone
     // ([[zoneSafeGens]]): a mismatched session keeps every file the
     // base conjunct can't refute, which is conservative and correct.
-    val genDefs = zoneSafeGens(spark,
-      scala.util.Try(propertiesOf(spark, s)).getOrElse(Map.empty),
-      partTypes)
+    val genDefs = zoneSafeGens(spark, propertiesOf(spark, s), partTypes)
     val conjs =
       if (genDefs.isEmpty) conjs0
       else {
@@ -2836,7 +2763,8 @@ object VersionedTable {
     * collection pass already records as unusable), so any answer returned
     * equals the scan's answer — and `None` means "stats cannot answer,
     * run the scan", never a wrong value. `None` whenever the snapshot
-    * predates stats collection, a data file is missing from the stats, or
+    * has no stats table (committed with collectStats = false, or its
+    * stats write failed), a data file is missing from the stats, or
     * any requested column has unusable stats in any file. */
   def statsAggregate(
       spark: SparkSession,
@@ -3502,14 +3430,15 @@ object VersionedTable {
 
   /** The operation record stamped with version `v` ([[commitWith]] 1f) —
     * Delta's commitInfo. Empty for versions committed by paths that
-    * don't stamp (or pre-upgrade vintages): conflict resolution treats
-    * those as opaque and falls back to a full recompute. */
+    * don't stamp: conflict resolution treats those as opaque and falls
+    * back to a full recompute. A retired vintage is refused with
+    * [[ProtocolException]], never read as empty. */
   def commitInfoOf(
       spark: SparkSession, root: String, v: Long): Map[String, String] =
     commitInfoOf(spark, snapshotAt(spark, root, v))
 
   private[graft] def commitInfoOf(spark: SparkSession, s: Snapshot): Map[String, String] =
-    metaSection(spark, s, GroupedInfoPrefix, "_commitinfo/info.properties")
+    metaSection(spark, s, GroupedInfoPrefix)
 
   /** Winner operations a losing DML may compose with by manifest
     * arithmetic: file-local COW rewrites (their whole effect is "these
@@ -4505,8 +4434,9 @@ object VersionedTable {
       // their sizes from the listing
       finalizeVersion = (_, _) =>
         FileRecord(FullForm(), refs,
-          TableStats.collectRows(spark, f,
-            listed.map { case (p, _) => (new Path(p), p) }),
+          TableStats.collectRows(spark, f, listed.map { case (p, len) =>
+            (new org.apache.hadoop.fs.FileStatus(len, false, 0, 0, 0, new Path(p)), p)
+          }),
           listed.toMap),
       recordSchema = Some(schema),
       recordProperties = props)
@@ -4790,10 +4720,11 @@ object VersionedTable {
     val v = snap.version
     val refs = dataFileRefs(spark, snap)
     // commit-recorded sizes (AddFile shape) — NOT a per-file stat walk;
-    // legacy vintages resolve via one distributed job ([[fileSizes]])
+    // sizes a failed `_sizes` write left unrecorded resolve via one
+    // distributed job ([[fileSizes]])
     val sizeOf = fileSizes(spark, snap)
-    // a ref with no resolvable size (cross-store legacy clone, dead
-    // source) counts as unsized rather than failing the report
+    // a ref with no resolvable size (cross-store clone, dead source)
+    // counts as unsized rather than failing the report
     val sizes = refs.flatMap(sizeOf.get)
     val tableBytes = sizes.sum
     val dvBytes = dvBytesOf(spark, snap)
@@ -4981,7 +4912,7 @@ object VersionedTable {
     propertiesOf(spark, snapshotAt(spark, root, v))
 
   private[graft] def propertiesOf(spark: SparkSession, s: Snapshot): Map[String, String] =
-    metaSection(spark, s, GroupedPropPrefix, "_properties/table.properties")
+    metaSection(spark, s, GroupedPropPrefix)
 
   /** Convenience: a boolean property of the CURRENT version (false when
     * unset, the table is empty, or the value isn't `true`). */
@@ -5141,7 +5072,7 @@ object VersionedTable {
     constraintsOf(spark, snapshotAt(spark, root, v))
 
   private def constraintsOf(spark: SparkSession, s: Snapshot): Map[String, String] =
-    metaSection(spark, s, GroupedCheckPrefix, "_constraints/constraints.properties")
+    metaSection(spark, s, GroupedCheckPrefix)
 
   /** Thrown when a staged write violates an active CHECK constraint, or
     * [[addConstraint]] finds existing rows the new constraint rejects.
@@ -5219,8 +5150,8 @@ object VersionedTable {
     * Building the frame launches no Spark job: the schema the commit
     * staged the extra with is recorded in the version's grouped `_meta`
     * object ([[extraSchemaOf]]) and applied to the read, so Spark skips
-    * its footer-inference job. Versions committed before the record
-    * existed read with inference, as before. */
+    * its footer-inference job. An extra without that record reads with
+    * inference. */
   def readExtra(
       spark: SparkSession, root: String, v: Long, name: String): Option[DataFrame] =
     readExtra(spark, snapshotAt(spark, root, v), name)
@@ -5231,12 +5162,9 @@ object VersionedTable {
   private[graft] def readExtra(
       spark: SparkSession, s: Snapshot, name: String): Option[DataFrame] =
     sidecarOf(spark, s, name).map { sc =>
-      // a sidecar without part files (a pre-schema-part vintage) can
-      // only be read as a dir
-      val paths = if (sc.files.nonEmpty) sc.files else Seq(new Path(s.dir, s"_$name").toString)
       extraSchemaOf(spark, s, name) match {
-        case Some(sch) => spark.read.schema(sch).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
+        case Some(sch) => spark.read.schema(sch).parquet(sc.files: _*)
+        case None => spark.read.parquet(sc.files: _*)
       }
     }
 
@@ -5340,7 +5268,6 @@ object VersionedTable {
     * and a replayed batch could double-apply). Tables without a checkpoint
     * fall back to the full newest-first scan. */
   def lastTxn(spark: SparkSession, root: String, appId: String): Option[Long] = {
-    import org.apache.spark.sql.functions.col
     val ckpt = readCheckpoint(spark, root)
     val from = ckpt.map(_.version).getOrElse(0L)
     snapshots(spark, root, _ > from).reverseIterator
@@ -5447,7 +5374,7 @@ object VersionedTable {
 
   /** The table's commit HISTORY as a frame — the `DESCRIBE HISTORY`
     * introspection face, derived entirely from stored metadata (no data
-    * read): per retained version its publish time (commit-marker mtime),
+    * read): per retained version its in-commit timestamp,
     * data-file/byte totals, how many files the commit wrote fresh vs
     * carried by manifest reference, whether it carries a change feed /
     * deletion vectors / a txn stamp, and the recorded schema width.
@@ -5462,7 +5389,7 @@ object VersionedTable {
       val ownPrefix = s.dirName + "/"
       val fresh = refs.count(_.startsWith(ownPrefix))
       // the commitinfo operation stamp (Delta's commitInfo.operation);
-      // "" for pre-stamp vintages and unstamped paths
+      // "" for unstamped paths
       val info = commitInfoOf(spark, s)
       (s.version,
         new java.sql.Timestamp(s.commitTime),
@@ -5477,7 +5404,7 @@ object VersionedTable {
         // introspection face must agree with what dvOf/readVersion serve
         hasDeletionVectors(spark, s),
         hasTxnStamps(spark, s),
-        tableSchema(spark, s).map(_.size).getOrElse(-1))
+        schemaOf(spark, s).size)
     }
     import spark.implicits._
     rows.toDF("version", "committed_at", "operation", "files", "bytes",
@@ -5651,8 +5578,8 @@ object VersionedTable {
   /** Per-file byte sizes of version `v`'s data files, keyed by the refs
     * [[dataFileRefs]] returns. Served from the commit-recorded `_sizes`
     * sidecar ([[FileSizes]] — the AddFile.size shape, zero filesystem
-    * I/O beyond one tiny tsv read); refs a pre-upgrade vintage never
-    * recorded resolve through ONE distributed `getFileStatus` job, so
+    * I/O beyond one tiny tsv read); refs a failed `_sizes` write left
+    * unrecorded resolve through ONE distributed `getFileStatus` job, so
     * the driver NEVER walks O(files) metadata serially — the walk this
     * replaces was ~800k RPCs per maintenance tick at 100 TB / 128 MiB. */
   private[graft] def fileSizes(
@@ -5666,7 +5593,7 @@ object VersionedTable {
     if (missing.isEmpty) refs.map(r => r -> recorded(r)).toMap
     else {
       // a ref statRefs couldn't resolve (cross-store clone whose source
-      // is unreachable) degrades to unsized — one dead legacy ref must
+      // is unreachable) degrades to unsized — one dead ref must
       // not fail the whole maintenance tick
       val resolved = FileSizes.statRefs(spark, s.root, missing)
       refs.flatMap(r => recorded.get(r).orElse(resolved.get(r)).map(r -> _)).toMap
@@ -5676,17 +5603,17 @@ object VersionedTable {
   /** Total data bytes of version `s`, manifest-aware (a COW snapshot's
     * bytes live partly in earlier version dirs). Held in the snapshot:
     * a published snapshot's bytes are immutable, and `DESCRIBE HISTORY`
-    * on a PRE-UPGRADE table (no recorded `_sizes` for old versions —
-    * they never heal) would otherwise re-run the distributed stat
-    * fallback for every version on every call. */
+    * over versions whose `_sizes` write failed (they never heal) would
+    * otherwise re-run the distributed stat fallback for every version
+    * on every call. */
   private def snapshotBytes(spark: SparkSession, s: Snapshot,
       ckptBytes: => Option[Map[Long, Long]] = None): Long =
     s.memo("bytes") {
       // CHECKPOINT-FIRST (the txn-mark pattern): a covered version's
       // bytes come from the one checkpoint file — a cold DESCRIBE
       // HISTORY over a deep log reads the checkpoint + the short tail,
-      // not O(versions) `_sizes` sidecars (and, for pre-sizes vintages,
-      // not O(versions) distributed stat jobs). A caller already
+      // not O(versions) `_sizes` sidecars (and, for versions without
+      // one, not O(versions) distributed stat jobs). A caller already
       // holding the parsed checkpoint passes it via `ckptBytes` so a
       // per-version loop (history's tail) doesn't re-read the file —
       // megabytes at 100k commits — once per miss.
@@ -6077,9 +6004,9 @@ object VersionedTable {
     val snap = live.map(s => s.version -> s).toMap
     val candidates = all.dropRight(keepLast)
     // retention window: age = the commit's IN-COMMIT timestamp
-    // ([[commitTimeOf]]; marker mtime for pre-upgrade vintages) — a
-    // copied/restored table's rewritten mtimes then read as "all fresh"
-    // on the OLD clock but keep their true ages here
+    // ([[commitTimeOf]]), never the marker mtime — a copied/restored
+    // table's rewritten mtimes would read as "all fresh", while its
+    // commits keep their true ages here
     val aged = olderThanMs match {
       case Some(ms) =>
         val cutoff = System.currentTimeMillis() - ms

@@ -180,51 +180,44 @@ class ChangeFeedSource(
   private def alignmentFor(s: Snapshot): Map[String, String] =
     alignMemo.getOrElseUpdate(s.version, {
       val v = s.version
-      val vSchema: Seq[StructField] =
-        VersionedTable.tableSchema(spark, s).map(_.fields.toSeq)
-          .orElse(VersionedTable.readExtra(spark, s, "changes")
-            .map(_.schema.fields.toSeq.filterNot(f => metaCols(f.name))))
-          .getOrElse(Seq.empty)
-      if (vSchema.isEmpty) Map.empty
-      else {
-        val strict = v > pinnedAt
-        val vMapping = VersionedTable.columnMapping(spark, s)
-        def phys(m: Map[String, String], c: String) = m.getOrElse(c, c)
-        val vByPhys = vSchema.map(f => phys(vMapping, f.name) -> f).toMap
-        def fail(detail: String): Nothing = throw new java.io.IOException(
-          s"change-feed schema evolved under $root at version $v: $detail — " +
-            s"the stream's schema is pinned at stream start (v$pinnedAt); " +
-            "restart the stream to adopt the evolved schema")
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        def compatible(c: StructField, p: StructField): Boolean =
-          c.dataType == p.dataType || Cast.canUpCast(c.dataType, p.dataType)
-        val renames = pinnedTableCols.flatMap { p =>
-          val byName = vSchema.find(c => c.name.equalsIgnoreCase(p.name) &&
-            phys(vMapping, c.name) == phys(pinnedMapping, p.name))
-          byName match {
-            case Some(c) =>
-              if (compatible(c, p)) None
-              else fail(s"column ${p.name} changed type " +
-                s"${p.dataType.simpleString} -> ${c.dataType.simpleString}")
-            case None => vByPhys.get(phys(pinnedMapping, p.name)) match {
-              case Some(c) if compatible(c, p) => Some(c.name -> p.name)
-              case Some(c) => fail(s"column ${p.name} (as ${c.name}) changed " +
-                s"type ${p.dataType.simpleString} -> ${c.dataType.simpleString}")
-              case None if strict => fail(s"column ${p.name} was dropped")
-              case None => None // pre-pin history: null backfill is the pin's contract
-            }
+      val vSchema: Seq[StructField] = VersionedTable.schemaOf(spark, s).fields.toSeq
+      val strict = v > pinnedAt
+      val vMapping = VersionedTable.columnMapping(spark, s)
+      def phys(m: Map[String, String], c: String) = m.getOrElse(c, c)
+      val vByPhys = vSchema.map(f => phys(vMapping, f.name) -> f).toMap
+      def fail(detail: String): Nothing = throw new java.io.IOException(
+        s"change-feed schema evolved under $root at version $v: $detail — " +
+          s"the stream's schema is pinned at stream start (v$pinnedAt); " +
+          "restart the stream to adopt the evolved schema")
+      import org.apache.spark.sql.catalyst.expressions.Cast
+      def compatible(c: StructField, p: StructField): Boolean =
+        c.dataType == p.dataType || Cast.canUpCast(c.dataType, p.dataType)
+      val renames = pinnedTableCols.flatMap { p =>
+        val byName = vSchema.find(c => c.name.equalsIgnoreCase(p.name) &&
+          phys(vMapping, c.name) == phys(pinnedMapping, p.name))
+        byName match {
+          case Some(c) =>
+            if (compatible(c, p)) None
+            else fail(s"column ${p.name} changed type " +
+              s"${p.dataType.simpleString} -> ${c.dataType.simpleString}")
+          case None => vByPhys.get(phys(pinnedMapping, p.name)) match {
+            case Some(c) if compatible(c, p) => Some(c.name -> p.name)
+            case Some(c) => fail(s"column ${p.name} (as ${c.name}) changed " +
+              s"type ${p.dataType.simpleString} -> ${c.dataType.simpleString}")
+            case None if strict => fail(s"column ${p.name} was dropped")
+            case None => None // pre-pin history: null backfill is the pin's contract
           }
-        }.toMap
-        if (strict) {
-          val known = pinnedTableCols.map(_.name.toLowerCase).toSet ++
-            renames.keys.map(_.toLowerCase)
-          val added = vSchema.map(_.name)
-            .filterNot(n => known(n.toLowerCase) || metaCols(n))
-          if (added.nonEmpty)
-            fail(s"column(s) ${added.mkString(", ")} added")
         }
-        renames
+      }.toMap
+      if (strict) {
+        val known = pinnedTableCols.map(_.name.toLowerCase).toSet ++
+          renames.keys.map(_.toLowerCase)
+        val added = vSchema.map(_.name)
+          .filterNot(n => known(n.toLowerCase) || metaCols(n))
+        if (added.nonEmpty)
+          fail(s"column(s) ${added.mkString(", ")} added")
       }
+      renames
     })
 
   /** Highest version this source already OFFERED via [[getOffset]] — the

@@ -92,32 +92,15 @@ object UpsertStream {
       doneValue: String = "purchase",
       availableNow: Boolean = false): StreamingQuery = {
     // per-appId checkpoint: two apps writing one tableRoot must not share
-    // stream progress state. MIGRATION: pre-r6 streams checkpointed at
-    // <root>_checkpoint — pointing an existing deployment at the new
-    // per-appId path would restart batch numbering at 0 and the
-    // lastTxn >= batchId replay gate would then silently SKIP genuinely
-    // new batches until the counter passed the old high-water mark. The
-    // legacy dir is adopted ONLY when this table's txn log shows stamps
-    // for THIS appId (proof the legacy progress belongs to this app) —
-    // a brand-new appId starting against a table with someone else's
-    // legacy dir must NOT inherit foreign source offsets (it would
-    // silently skip all existing input) or re-share one checkpoint
-    // across apps, the exact state the per-appId split eliminates.
-    val legacyCp = new org.apache.hadoop.fs.Path(tableRoot + "_checkpoint")
-    val perAppCp = new org.apache.hadoop.fs.Path(tableRoot + "_checkpoint_" + appId)
-    val cpFs = legacyCp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val checkpoint =
-      if (cpFs.exists(legacyCp) && !cpFs.exists(perAppCp) &&
-          graft.sources.VersionedTable.lastTxn(spark, tableRoot, appId).nonEmpty)
-        legacyCp
-      else perAppCp
+    // stream progress state
+    val checkpoint = tableRoot + "_checkpoint_" + appId
     val w = EventStream.readEvents(spark, dir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         upsertBatch(spark, tableRoot, batch, batchId, appId, runTs, doneValue)
         ()
       }
-      .option("checkpointLocation", checkpoint.toString)
+      .option("checkpointLocation", checkpoint)
     (if (availableNow)
        w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
      else w).start()

@@ -126,8 +126,8 @@ class SqlLoadSpec extends SparkSpec {
     assert(got.count() == 5 &&
       got.where(col("id") === 3).head.getLong(1) == 6L)
     // schema recorded at create
-    assert(VersionedTable.tableSchema(spark, root, 1L).exists(_.fieldNames
-      .sameElements(Array("id", "dbl"))))
+    assert(VersionedTable.tableSchema(spark, root, 1L).fieldNames
+      .sameElements(Array("id", "dbl")))
     val e = intercept[Exception](GraftSql.execute(spark,
       s"CREATE TABLE '$root' AS SELECT 1"))
     assert(e.getMessage.contains("already exists"))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** The `_commitinfo` operation stamp (Delta's commitInfo action): every
+/** The commit-info operation stamp (Delta's commitInfo action): every
   * commit path records what produced the version, `DESCRIBE HISTORY`
   * surfaces it, and the blind-append flag is the contract AppendRebase
   * trusts (AppendRebaseSpec pins the concurrency side). */
@@ -70,18 +70,21 @@ class CommitInfoSpec extends SparkSpec {
     assert(opOf(root, 6L) == "drop-column")
   }
 
-  test("pre-stamp vintages read as empty operation, not an error") {
+  test("a pre-stamp vintage is refused, not read as an empty operation") {
     val root = freshRoot()
     VersionedTable.commit(Seq((1L, "x")).toDF("id", "x"), root)
-    // simulate an old-build commit: remove the stamp
+    // an old-build commit: no grouped _meta record carrying the stamp
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(root, "v00000001/_commitinfo"), true)
-    // current builds group-commit the stamp into _meta — remove both forms
     f.delete(new org.apache.hadoop.fs.Path(root, "v00000001/_meta"), true)
-    assert(VersionedTable.commitInfoOf(spark, root, 1L).isEmpty)
-    assert(VersionedTable.history(spark, root)
-      .select("operation").head.getString(0) == "")
+    val info = intercept[VersionedTable.ProtocolException] {
+      VersionedTable.commitInfoOf(spark, root, 1L)
+    }
+    assert(info.version == 1L)
+    val hist = intercept[VersionedTable.ProtocolException] {
+      VersionedTable.history(spark, root).collect()
+    }
+    assert(hist.version == 1L)
   }
 
   test("history's change_feed column agrees with the feed readers on " +

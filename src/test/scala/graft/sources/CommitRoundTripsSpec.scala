@@ -122,4 +122,43 @@ class CommitRoundTripsSpec extends SparkSpec {
     assert(t11 <= t6 * 2,
       s"read cost grew superlinearly with history: $t6 -> $t11")
   }
+
+  test("a plain commit's footer read opens each staged file from its " +
+    "listed status, not a fresh stat") {
+    val frame = (1L to 400L).map(i => (i, i % 7)).toDF("id", "g")
+      .repartitionByRange(4, col("id"))
+    def stagedPartStats(collectStats: Boolean): Int = {
+      val root = freshRoot("graft_rtfooter")
+      CountingFileSystem.reset()
+      VersionedTable.commit(frame, root, collectStats = collectStats)
+      assert(VersionedTable.dataFileRefs(spark, root, 1L).size == 4)
+      CountingFileSystem.pathsOf("stat").count(_.matches(".*/_staging/[^/]+/part-[^/]*$"))
+    }
+    // the staging listing already holds each file's status: reading the
+    // four footers adds no stat of a staged part file (the write's own
+    // committer stats are the same with or without stats collection).
+    // Before the footer read took the listed status it added 4.
+    val off = stagedPartStats(collectStats = false)
+    val on = stagedPartStats(collectStats = true)
+    info(s"stats of staged part files: $off without footer stats, $on with")
+    assert(on == off, s"the footer read stat'ed ${on - off} staged file(s)")
+  }
+
+  test("an uncontended plain commit lists _commits at most 3 times and " +
+    "never opens its own marker") {
+    val root = freshRoot("graft_rtckpt")
+    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
+    CountingFileSystem.reset()
+    val v = VersionedTable.commit(Seq((2L, "b")).toDF("id", "x"), root)
+    val lists = CountingFileSystem.pathsOf("list").count(_.endsWith("/_commits"))
+    val ownMarker = CountingFileSystem.pathsOf("open").count(_.endsWith(f"/_commits/$v%08d"))
+    info(s"_commits listings: $lists, opens of the new marker: $ownMarker")
+    // base resolution, the claim and the publish each observe the log;
+    // the checkpoint folds {v} from what the commit knows (4 listings and
+    // one marker open before it did)
+    assert(lists <= 3, s"the commit listed _commits $lists times")
+    assert(ownMarker == 0, "the commit read back the marker it just published")
+    val ckpt = VersionedTable.readCheckpoint(spark, root).get
+    assert(ckpt.version == v && ckpt.bytes.keySet == Set(1L, v))
+  }
 }

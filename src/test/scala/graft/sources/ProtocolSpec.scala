@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * version records the format features it actually uses; a build that
   * does not support a required feature must refuse to read (serving
   * anyway would be silently wrong — ignored DV masks resurrect deleted
-  * rows) or to write (it could break the feature's invariants). Absent
-  * record = pre-upgrade table = no requirements. */
+  * rows) or to write (it could break the feature's invariants). A
+  * version in a retired on-disk form — no grouped `_meta` record, or a
+  * one-line commit marker — is refused the same way. */
 class ProtocolSpec extends SparkSpec {
   import spark.implicits._
 
@@ -104,9 +105,10 @@ class ProtocolSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     injectFutureFeature(root, 2L)
     val marker = new org.apache.hadoop.fs.Path(s"$root/_commits/00000002")
+    val content = readAll(f, marker)
     f.delete(marker, false)
     Thread.sleep(20) // local-fs mtime is ms-resolution
-    f.create(marker, true).close()
+    writeAll(f, marker, content)
     val err = intercept[VersionedTable.ProtocolException] {
       VersionedTable.readChanges(spark, root, 2L, 2L).count()
     }
@@ -130,5 +132,90 @@ class ProtocolSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("time-machine"),
       "the recreated incarnation must be probed fresh, not ride the old OK")
+  }
+
+  private def hfs(root: String) = new org.apache.hadoop.fs.Path(root)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def readAll(f: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def writeAll(
+      f: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** A two-version table whose v2 (a feed-carrying append) is rewritten
+    * by `retire` into an older on-disk form; every face must then refuse
+    * v2 with a ProtocolException naming it, and v1 keeps reading. */
+  private def refusedEverywhere(retire: (String, org.apache.hadoop.fs.Path) => Unit): Unit = {
+    val root = freshRoot()
+    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
+    VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "x"), root,
+      changeFeed = true)
+    val v2 = new org.apache.hadoop.fs.Path(root, VersionedTable.snapshotAt(spark, root, 2L).dirName)
+    retire(root, v2)
+    // a new marker identity: the form is read from disk, as by a fresh process
+    hfs(root).setTimes(new org.apache.hadoop.fs.Path(root, "_commits/00000002"),
+      System.currentTimeMillis() + 1000L, -1)
+    val faces: Seq[(String, () => Any)] = Seq(
+      "read" -> (() => VersionedTable.read(spark, root).count()),
+      "write" -> (() => VersionedTable.commitAppend(Seq((3L, "c")).toDF("id", "x"), root)),
+      "history" -> (() => graft.plans.GraftSql.execute(spark, s"DESCRIBE HISTORY '$root'").collect()),
+      "commitInfoOf" -> (() => VersionedTable.commitInfoOf(spark, root, 2L)),
+      "protocolOf" -> (() => VersionedTable.protocolOf(spark, root, 2L)),
+      "readChanges" -> (() => VersionedTable.readChanges(spark, root, 2L, 2L).count()))
+    faces.foreach { case (face, run) =>
+      val err = intercept[VersionedTable.ProtocolException](run())
+      assert(err.version == 2L && err.getMessage.contains("version 2 of "), s"$face: ${err.getMessage}")
+    }
+    assert(VersionedTable.versions(spark, root) == Seq(1L, 2L), "the refused write landed")
+    assert(VersionedTable.readVersion(spark, root, 1L).count() == 1L)
+  }
+
+  test("a version without its grouped _meta record is refused on every face") {
+    refusedEverywhere { (_, dir) =>
+      hfs(dir.toString).delete(new org.apache.hadoop.fs.Path(dir, "_meta"), true)
+    }
+  }
+
+  test("a version carrying only per-file metadata sidecars is refused on every face") {
+    refusedEverywhere { (root, dir) =>
+      val f = hfs(root)
+      val meta = new org.apache.hadoop.fs.Path(dir, "_meta/commit.properties")
+      val props = new java.util.Properties()
+      val in = f.open(meta)
+      try props.load(in) finally in.close()
+      // the pre-grouping layout: one sidecar per record
+      writeAll(f, new org.apache.hadoop.fs.Path(dir, "_schema/schema.json"),
+        props.getProperty("schema"))
+      writeAll(f, new org.apache.hadoop.fs.Path(dir, "_commitinfo/info.properties"),
+        "operation=append\n")
+      writeAll(f, new org.apache.hadoop.fs.Path(dir, "_properties/table.properties"), "")
+      f.delete(meta.getParent, true)
+    }
+  }
+
+  test("a version with a one-line commit marker is refused on every face") {
+    refusedEverywhere { (root, dir) =>
+      // only the marker changes: its form alone is refused, even beside
+      // a grouped _meta record
+      val f = hfs(root)
+      val marker = new org.apache.hadoop.fs.Path(root, "_commits/00000002")
+      f.delete(marker, false)
+      Thread.sleep(20) // new marker identity: local-fs mtime is ms-resolution
+      writeAll(f, marker, dir.getName + "\n")
+    }
+  }
+
+  test("a version stamped only through the txn parquet extra is refused on every face") {
+    refusedEverywhere { (root, dir) =>
+      Seq(("app", 7L)).toDF("app_id", "batch_id").coalesce(1)
+        .write.parquet(new org.apache.hadoop.fs.Path(dir, "_txn").toString)
+      hfs(root).delete(new org.apache.hadoop.fs.Path(dir, "_meta"), true)
+    }
   }
 }

@@ -20,7 +20,7 @@ class SchemaTrackingSpec extends SparkSpec {
     val root = freshRoot()
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
     val recorded = VersionedTable.tableSchema(spark, root, 1L)
-    assert(recorded.exists(_.fieldNames.toSeq == Seq("id", "x")))
+    assert(recorded.fieldNames.toSeq == Seq("id", "x"))
 
     // drop, add, and retype each refuse with a diagnostic — not a silent
     // parquet-union corruption at read time
@@ -108,7 +108,7 @@ class SchemaTrackingSpec extends SparkSpec {
     assert(r.getString(0) == "ADD COLUMNS" && r.getLong(2) == 2L)
     graft.plans.GraftSql.execute(spark,
       s"ALTER TABLE '$root' ADD COLUMNS (amt DECIMAL(10,2), tags ARRAY<STRING>)")
-    val sch = VersionedTable.tableSchema(spark, root, 3L).get
+    val sch = VersionedTable.tableSchema(spark, root, 3L)
     assert(sch.fieldNames.toSeq == Seq("id", "x", "score", "amt", "tags"))
     assert(sch.filter(f => f.name != "id" && f.name != "x").forall(_.nullable))
     // old rows backfill null across all three added columns
@@ -232,21 +232,20 @@ class SchemaTrackingSpec extends SparkSpec {
     }
   }
 
-  test("pre-tracking snapshots validate against the inferred schema and upgrade on write") {
+  test("pre-tracking snapshots are refused, not read with an inferred schema") {
     val root = freshRoot()
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
-    // simulate a pre-upgrade table: remove the recorded schema
+    // a pre-upgrade table: no recorded schema (no grouped _meta record)
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new org.apache.hadoop.fs.Path(s"$root/v00000001/_schema"), true)
-    // current builds group-commit the schema into _meta — remove both forms
     f.delete(new org.apache.hadoop.fs.Path(s"$root/v00000001/_meta"), true)
-    assert(VersionedTable.tableSchema(spark, root, 1L).isEmpty)
-    assert(VersionedTable.read(spark, root).count() == 1) // inference fallback
-    intercept[VersionedTable.SchemaMismatchException] {
-      VersionedTable.commitAppend(Seq(2L).toDF("id"), root)
+    val faces: Seq[() => Any] = Seq(
+      () => VersionedTable.tableSchema(spark, root, 1L),
+      () => VersionedTable.read(spark, root).count(),
+      () => VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "x"), root))
+    faces.foreach { run =>
+      assert(intercept[VersionedTable.ProtocolException](run()).version == 1L)
     }
-    VersionedTable.commitAppend(Seq((2L, "b")).toDF("id", "x"), root)
-    assert(VersionedTable.tableSchema(spark, root, 2L).nonEmpty) // upgraded
+    assert(VersionedTable.versions(spark, root) == Seq(1L)) // nothing upgraded it
   }
 }

@@ -107,15 +107,12 @@ class UpsertStreamSpec extends SparkSpec {
     assert(UpsertStream.upsertBatch(spark, root, b, 0L, "app", runTs, "purchase").isEmpty)
   }
 
-  test("legacy checkpoint adopted only when the table's txn log proves it's THIS app's") {
+  test("a pre-per-appId deployment is refused, not adopted") {
     import spark.implicits._
-    // upgrading a pre-per-appId deployment must NOT move it to a fresh
-    // checkpoint dir (batch numbering would restart at 0 and the
-    // lastTxn >= batchId replay gate would silently skip genuinely new
-    // batches) — but adopting someone ELSE's legacy dir is worse: a new
-    // appId would inherit foreign source offsets (already past all
-    // existing input) and never see that data. The tie-breaker is the
-    // table's own txn log: adopt only when it carries stamps for this app.
+    // a deployment from before per-appId checkpoints kept its progress in
+    // <root>_checkpoint, and its table predates the grouped metadata
+    // record. No stream adopts that dir: the restarted app streams from
+    // its own per-app dir and its first batch is refused at the table
     val stage = java.nio.file.Files.createTempDirectory("graft_ups_cp_src")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.schema(EventStream.eventSchema)
@@ -123,41 +120,35 @@ class UpsertStreamSpec extends SparkSpec {
       .write.parquet(stage.resolve("b1").toString)
     val f = new org.apache.hadoop.fs.Path(stage.toString)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
 
-    // true legacy deployment, simulated faithfully: appX once streamed
-    // into this table (so the txn log carries its stamps), with its
-    // checkpoint at the pre-split <root>_checkpoint location
     val root1 = java.nio.file.Files.createTempDirectory("graft_ups_cp1").toString + "/t"
     UpsertStream.start(spark, stage.toString + "/*", root1, "appX", runTs,
       availableNow = true).awaitTermination()
-    assert(f.rename(new org.apache.hadoop.fs.Path(root1 + "_checkpoint_appX"),
-      new org.apache.hadoop.fs.Path(root1 + "_checkpoint")))
-    val markAfterB1 = VersionedTable.lastTxn(spark, root1, "appX").get
+    // rewrite it into the old deployment's form: the shared checkpoint
+    // dir, versions without _meta, a bare-version table checkpoint
+    assert(f.rename(p(root1 + "_checkpoint_appX"), p(root1 + "_checkpoint")))
+    val versions = VersionedTable.versions(spark, root1)
+    versions.foreach { v =>
+      f.delete(p(root1 + "/" + VersionedTable.snapshotAt(spark, root1, v).dirName + "/_meta"), true)
+      f.setTimes(p(f"$root1/_commits/$v%08d"), System.currentTimeMillis() + 1000L, -1)
+    }
+    val ck = f.create(p(root1 + "/_checkpoint/ckpt.tsv"), true)
+    try ck.write(s"${versions.last}\nappX\t0\n".getBytes("UTF-8")) finally ck.close()
 
-    // appX restarts post-upgrade with new input: the legacy dir is
-    // provably its own (txn stamps) — adopted, batch numbering continues
-    spark.read.schema(EventStream.eventSchema)
-      .parquet(s"$dir/events.parquet").limit(80).coalesce(1)
-      .write.parquet(stage.resolve("b2").toString)
-    UpsertStream.start(spark, stage.toString + "/*", root1, "appX", runTs,
-      availableNow = true).awaitTermination()
-    assert(!f.exists(new org.apache.hadoop.fs.Path(root1 + "_checkpoint_appX")))
-    assert(VersionedTable.lastTxn(spark, root1, "appX").contains(markAfterB1 + 1),
-      "legacy adoption lost the batch counter")
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      UpsertStream.start(spark, stage.toString + "/*", root1, "appX", runTs,
+        availableNow = true).awaitTermination()
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[VersionedTable.ProtocolException]), s"$err")
+    assert(VersionedTable.versions(spark, root1) == versions, "the refused batch landed")
+    assert(f.exists(p(root1 + "_checkpoint/offsets")), "the old progress dir was touched")
 
-    // a DIFFERENT app against the same table + legacy dir: the legacy
-    // progress is not appY's — it must get its own per-app dir and
-    // process the input from the start
-    UpsertStream.start(spark, stage.toString + "/*", root1, "appY", runTs,
-      availableNow = true).awaitTermination()
-    assert(f.exists(new org.apache.hadoop.fs.Path(root1 + "_checkpoint_appY/offsets")))
-    assert(VersionedTable.lastTxn(spark, root1, "appY").nonEmpty,
-      "appY inherited foreign stream progress and skipped its input")
-
-    // fresh deployment (no legacy dir): the per-app dir is created
+    // a fresh deployment streams from its per-app dir
     val root2 = java.nio.file.Files.createTempDirectory("graft_ups_cp2").toString + "/t"
     UpsertStream.start(spark, stage.toString + "/*", root2, "appX", runTs,
       availableNow = true).awaitTermination()
-    assert(f.exists(new org.apache.hadoop.fs.Path(root2 + "_checkpoint_appX/offsets")))
+    assert(f.exists(p(root2 + "_checkpoint_appX/offsets")))
   }
 }
