@@ -38,8 +38,10 @@ object Bench {
     * finish; `index` counts from the first stage the body's jobs
     * submitted, so two runs compare) with its max and median task
     * time; the widest three SQL
-    * executions (root plan node, wall, jobs); and every commit phase with
-    * its seconds and hits. The listener bus is drained after the clock
+    * executions (root plan node, wall, jobs); `jvm.jit_s` (the JVM's
+    * JIT compilation time, whole process) and `codegen.compiles` (Spark's
+    * Janino compiles of generated code, a cache miss each) during the
+    * body; and every commit phase with its seconds and hits. The listener bus is drained after the clock
     * stops, so every event is counted and none of the wait is timed.
     * The profiler is off again when this returns or throws. */
   def profile(spark: SparkSession)(body: => Unit): Map[String, Any] = {
@@ -57,17 +59,26 @@ object Bench {
     spark.listenerManager.register(actions)
     CommitProfiler.reset()
     CommitProfiler.enable()
+    val jit = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
+      .filter(_.isCompilationTimeMonitoringSupported)
+    def jitMs: Long = jit.map(_.getTotalCompilationTime).getOrElse(0L)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     try {
+      val jit0 = jitMs
+      val compiles0 = compiles.getCount
       val t0 = System.nanoTime()
       body
       val wall = (System.nanoTime() - t0) / 1e9
+      val jitS = (jitMs - jit0) / 1e3
+      val compilesN = compiles.getCount - compiles0
       CommitProfiler.disable()
       ListenerBusBridge.drain(sc)
       val phases = CommitProfiler.snapshot().map { case (name, s, hits) =>
         name -> ListMap("s" -> s, "hits" -> hits)
       }
       ListMap("wall_s" -> wall, "spark.sql_executions" -> executions.get) ++
-        events.record ++ ListMap("commit_phases" -> ListMap(phases: _*))
+        events.record ++ ListMap("jvm.jit_s" -> jitS, "codegen.compiles" -> compilesN,
+          "commit_phases" -> ListMap(phases: _*))
     } finally {
       CommitProfiler.disable()
       spark.listenerManager.unregister(actions)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnBridge, CommandBridge, GraftCommand}
+import org.apache.spark.sql.graft.{ColumnBridge, CommandBridge, GraftCommand, RoutedWrite}
 
 import graft.sources.VersionedTable
 
@@ -2231,61 +2231,65 @@ object GraftSql {
         tDf(f.name).cast(f.dataType).as(f.name))
       val updFilter = updates.map { case (code, _) => fate === code }
         .reduceOption(_ || _).getOrElse(lit(false))
-      // SINGLE PASS PER EXECUTION (r21 ask #1, guide §1.2 "don't compute
-      // things twice" — the Delta-CDF write shape per destination): the
-      // data write and the feed write are separate staged executions,
-      // and each used to run SEVERAL passes over the merge join inside
-      // its own execution (data: survivors ∪ inserts = 2 joins; feed:
-      // delete ∪ pre ∪ post ∪ insert = 4 joins — exchange reuse shares
-      // the shuffles but every union branch re-probes the join and
-      // launches its own post-shuffle stages). Fused: the data frame is
-      // ONE filtered CASE projection (a row is a survivor image or an
-      // insert image, decided per row), and the feed is ONE
-      // explode-of-images pass (each joined row emits its ≤2 change
-      // images). Identity-allocating merges keep the branch road — the
-      // allocator reshapes the insert branch and the fates can't fuse.
-      // The claimed-bucket COW road also keeps its branch frames
-      // (alignedConcat consumes survivors/inserts separately). Fates,
-      // per-field values and regeneration are shared with the branch
-      // road above — byte-identical images, proven by the oracle.
       val insertFilter = !tPresent && sPresent && fateIns >= 0
-      // data frame as ONE filtered CASE projection: a kept row is a
-      // survivor image (tPresent) or an insert image, decided per row.
-      // `rowFilter` parameterises the road: COW/full-rewrite keep
-      // carried survivors, MOR keeps only updated images + inserts.
-      def fusedData(rowFilter: Column): Option[DataFrame] =
-        if (freeIdents.nonEmpty) None
-        else Some(regenExprs(
-          joined.filter(rowFilter)
-            .select(tSchema.fields.toSeq.map(f =>
-              when(tPresent, survivorValue(f)).otherwise(insertValue(f))
-                .as(f.name)): _*)))
-      // the fused feed frame: the ≤2 change images a joined row can emit
-      // (delete/pre as the first, post/insert as the second)
-      val fusedFeed: Option[DataFrame] =
-        if (freeIdents.nonEmpty) None
-        else Some {
-          def img(cols: Seq[Column], ct: String): Column =
-            struct((cols :+ lit(ct).as("_change_type")): _*)
-          val postCols = tSchema.fields.toSeq.map(f =>
-            survivorValue(f).as(f.name))
-          val insImgCols = tSchema.fields.toSeq.map(f =>
-            insertValue(f).as(f.name))
-          val first = when(tPresent && fate === -1, img(tCols, "delete"))
-            .when(tPresent && updFilter, img(tCols, "update_preimage"))
-          val second = when(tPresent && updFilter,
-              img(postCols, "update_postimage"))
-            .when(insertFilter, img(insImgCols, "insert"))
-          // regen over the flattened images is the branch road's rule
-          // applied uniformly: post/insert images compute from their
-          // bases, delete/pre images recompute to themselves
-          // (deterministic generators — the recorded contract)
-          regenExprs(joined
-            .select(explode(filter(array(first, second),
-              x => x.isNotNull)).as("__cdf"))
-            .select(col("__cdf.*")))
-        }
-      val feed = fusedFeed.getOrElse(
+      // ONE WRITE EXECUTION PER MERGE (the Delta CDF write shape: one
+      // plan over the join, several sinks). Each joined row that yields
+      // anything becomes ONE routed row ([[RoutedWrite]]): its data image
+      // (a survivor or an insert, decided per row) under the table's
+      // names, whether that image is written (`keep`), its ≤2 change
+      // images (delete/pre-image first, post-image/insert second) and,
+      // merge-on-read, the (file, pos) it masks. commitWith's staged
+      // write lands all of them in the same task, so the join runs once
+      // per commit instead of once per sink. `rows` and `keep`
+      // parameterise the road: COW/full-rewrite keep carried survivors,
+      // MOR keeps only updated images + inserts and masks the rest.
+      // Regeneration runs over flat columns named as the table's — first
+      // the pre-images, then the data images — so post/insert images
+      // compute from their bases and delete/pre images recompute to
+      // themselves (deterministic generators — the recorded contract),
+      // the branch road's rule applied per image.
+      def routedFrame(rows: Column, keep: Column, mask: Boolean): DataFrame = {
+        val fields = tSchema.fields.toSeq
+        val pre = fields.indices.map(i => s"__graft_pre_$i")
+        val img = fields.indices.map(i => s"__graft_img_$i")
+        val flags = Seq("__graft_del", "__graft_upd", "__graft_ins", RoutedWrite.Keep) ++
+          (if (mask) Seq("__dv_file", "__dv_pos") else Nil)
+        val pres = regenExprs(joined.filter(rows).select(tCols ++
+          fields.zip(img).map { case (f, n) =>
+            when(tPresent, survivorValue(f)).otherwise(insertValue(f)).as(n) } ++
+          Seq((tPresent && fate === -1).as("__graft_del"),
+            (tPresent && updFilter).as("__graft_upd"),
+            insertFilter.as("__graft_ins"), keep.as(RoutedWrite.Keep)) ++
+          (if (mask) Seq(col("__dv_file"), col("__dv_pos")) else Nil): _*))
+        val imgs = regenExprs(pres.select(
+          fields.zip(img).map { case (f, n) => col(n).as(f.name) } ++
+            fields.zip(pre).map { case (f, n) => col(f.name).as(n) } ++
+            flags.map(col): _*))
+        // the feed's schema: the data image's fields, nullable, then the
+        // change type — both images cast to it, so each `_changes` file
+        // carries one schema
+        val feedType = org.apache.spark.sql.types.StructType(
+          fields.map(f => imgs.schema(f.name).copy(nullable = true)) :+
+            org.apache.spark.sql.types.StructField("_change_type",
+              org.apache.spark.sql.types.StringType))
+        def image(names: Seq[String], changeType: Column): Column =
+          struct(fields.zip(names).map { case (f, n) => col(n).as(f.name) } :+
+            changeType.as("_change_type"): _*).cast(feedType)
+        val (del, upd, ins) = (col("__graft_del"), col("__graft_upd"), col("__graft_ins"))
+        imgs.select(fields.map(f => col(f.name)) ++ Seq(col(RoutedWrite.Keep),
+          when(del || upd, image(pre, when(del, lit("delete"))
+            .otherwise(lit("update_preimage")))).as(RoutedWrite.sideCol("changes", 0)),
+          when(upd || ins, image(fields.map(_.name), when(upd, lit("update_postimage"))
+            .otherwise(lit("insert")))).as(RoutedWrite.sideCol("changes", 1))) ++
+          (if (!mask) Nil
+           else Seq(when(del || upd, struct(col("__dv_file").as("file"),
+             col("__dv_pos").as("pos"))).as(RoutedWrite.sideCol("dv", 0)))): _*)
+      }
+      // the IDENTITY-ALLOCATING branch road's feed: the allocator
+      // reshapes the insert branch, so its fates can't fuse into the
+      // routed frame — one frame per change kind, written by the commit
+      // as its own staged execution
+      def branchFeed: DataFrame =
         joined.filter(tPresent && fate === -1)
           .select(tCols: _*).withColumn("_change_type", lit("delete"))
           .unionByName(joined.filter(tPresent && updFilter)
@@ -2293,7 +2297,10 @@ object GraftSql {
           .unionByName(regenExprs(joined.filter(tPresent && updFilter)
             .select(outValues: _*))
             .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(inserts.withColumn("_change_type", lit("insert"))))
+          .unionByName(inserts.withColumn("_change_type", lit("insert")))
+      val fused = freeIdents.isEmpty
+      val feedExtras: Map[String, DataFrame] =
+        (if (fused) Map.empty[String, DataFrame] else Map("changes" -> branchFeed)) ++ extraTables
 
       val occCheck: Long => Unit = w => {
         VersionedTable.occValidate(spark, root, Some(snap))(w)
@@ -2308,16 +2315,19 @@ object GraftSql {
           // at its physical position; append updated images + inserts;
           // carry EVERY file by reference — pass-through rows of touched
           // files stay where they are, unmasked
-          val affected = joined.filter(tPresent && (fate === -1 || updFilter))
-          val morData = fusedData((tPresent && updFilter) || insertFilter)
+          val affected = tPresent && (fate === -1 || updFilter)
+          val morWritten =
+            if (fused) routedFrame(affected || insertFilter,
+              (tPresent && updFilter) || insertFilter, mask = true)
+            else regenExprs(joined.filter(tPresent && updFilter).select(outValues: _*))
+              .unionByName(inserts)
           // empty-safety (a 0-partition plan leaving a schemaless
           // sidecar) is enforced at staging time by commitWith's
-          // ensureSchemaPart backstop — probing .rdd here re-executed the
-          // whole mask computation under AQE just to count partitions
-          val newDelWritable = affected.select(col("__dv_file").as("file"),
-            col("__dv_pos").as("pos"))
-          val updated = regenExprs(
-            joined.filter(tPresent && updFilter).select(outValues: _*))
+          // ensureSchemaPart backstop
+          val maskExtras: Map[String, DataFrame] =
+            if (fused) Map.empty
+            else Map("dv" -> joined.filter(affected)
+              .select(col("__dv_file").as("file"), col("__dv_pos").as("pos")))
           // on a bucketized target, land the written delta (updated
           // images + inserts — O(affected rows)) back IN the layout via
           // one explicit repartition that re-hashes actual values, and
@@ -2326,7 +2336,6 @@ object GraftSql {
           // orphan the layout (its fresh files' origin commit carries
           // no spec, so pureBuckets degrades every later merge to the
           // key-range road).
-          val morWritten = morData.getOrElse(updated.unionByName(inserts))
           val (morOut, morInfo) = morBucket match {
             case Some((_, bkeys, n)) =>
               graft.sources.Bucketing.relayout(morWritten, bkeys, n)
@@ -2335,61 +2344,66 @@ object GraftSql {
           }
           VersionedTable.commitCow(morOut, root,
             VersionedTable.dataFileRefs(spark, snap),
-            extras = Map("dv" -> newDelWritable, "changes" -> feed) ++ extraTables,
+            extras = maskExtras ++ feedExtras,
             preCommit = occCheck, recordInfo = morInfo,
             recordProperties = advProps)
-        } else keptRefs match {
-          case Some(kept) =>
-            // on the bucket road, keep the written rows in the layout and
-            // STAMP the commit, so the NEXT merge rides the claimed road
-            // again instead of degrading to the key-range fallback. Both
-            // branches come off the claimed join bucket-aligned, so the
-            // zero-exchange path is a per-partition concat
-            // (PartitionBridge.alignedConcat); identity allocation
-            // reshapes the insert branch, and any optimizer surprise
-            // changes a branch's partition count — both fall back to ONE
-            // explicit O(written-bytes) repartition, always correct.
-            val (outF, bucketInfo) = bucketRoad match {
-              case Some((_, bkeys, n)) =>
-                val keyNames = bkeys.map(k => tSchema.fieldNames
-                  .find(_.equalsIgnoreCase(k)).getOrElse(k))
-                // a generated/identity bucket key can MOVE under
-                // regeneration without any assignment naming it — the
-                // aligned road is never provable there
-                val keyGenerated = bkeys.exists(k =>
-                  exprGenDefs.keys.exists(_.equalsIgnoreCase(k)) ||
-                    genDefs.keys.exists(_.equalsIgnoreCase(k)) ||
-                    identDefs.keys.exists(_.equalsIgnoreCase(k)))
-                val aligned =
-                  if (freeIdents.nonEmpty || keyGenerated ||
-                      !bkeys.forall(k =>
-                        bucketKeyAssignmentsSafe(m, k, sDf.columns.toSeq)))
-                    None
-                  else org.apache.spark.sql.graft.PartitionBridge
-                    .alignedConcat(spark, regenExprs(survivors), inserts,
-                      keyNames, n)
-                (aligned.getOrElse(regenExprs(survivors).unionByName(inserts)
-                    .repartition(n, keyNames.map(col): _*)),
-                  Map(graft.sources.Bucketing.BucketedInfoKey ->
-                    graft.sources.Bucketing.specString(bkeys, n)))
-              case None =>
-                (fusedData((tPresent && fate =!= -1) || insertFilter)
-                   .getOrElse(regenExprs(survivors).unionByName(inserts)),
-                  Map.empty[String, String])
-            }
-            VersionedTable.commitCow(outF, root, kept,
-              extras = Map("changes" -> feed) ++ extraTables,
-              preCommit = occCheck,
-              recordInfo = bucketInfo,
+        } else {
+          // COW and full rewrite write the same rows: carried survivors,
+          // updated images and inserts; deletes route only their feed
+          val rows = tPresent || insertFilter
+          val keep = (tPresent && fate =!= -1) || insertFilter
+          def written: DataFrame =
+            if (fused) routedFrame(rows, keep, mask = false)
+            else regenExprs(survivors).unionByName(inserts)
+          keptRefs match {
+            case Some(kept) =>
+              // on the bucket road, keep the written rows in the layout and
+              // STAMP the commit, so the NEXT merge rides the claimed road
+              // again instead of degrading to the key-range fallback. Both
+              // branches come off the claimed join bucket-aligned, so the
+              // zero-exchange path is a per-partition concat
+              // (PartitionBridge.alignedConcat) of the target-side and the
+              // insert rows; identity allocation reshapes the insert
+              // branch, and any optimizer surprise changes a branch's
+              // partition count — both fall back to ONE explicit
+              // O(written-bytes) repartition, always correct.
+              val (outF, bucketInfo) = bucketRoad match {
+                case Some((_, bkeys, n)) =>
+                  val keyNames = bkeys.map(k => tSchema.fieldNames
+                    .find(_.equalsIgnoreCase(k)).getOrElse(k))
+                  // a generated/identity bucket key can MOVE under
+                  // regeneration without any assignment naming it — the
+                  // aligned road is never provable there
+                  val keyGenerated = bkeys.exists(k =>
+                    exprGenDefs.keys.exists(_.equalsIgnoreCase(k)) ||
+                      genDefs.keys.exists(_.equalsIgnoreCase(k)) ||
+                      identDefs.keys.exists(_.equalsIgnoreCase(k)))
+                  val aligned =
+                    if (!fused || keyGenerated ||
+                        !bkeys.forall(k =>
+                          bucketKeyAssignmentsSafe(m, k, sDf.columns.toSeq)))
+                      None
+                    else org.apache.spark.sql.graft.PartitionBridge
+                      .alignedConcat(spark, routedFrame(tPresent, keep, mask = false),
+                        routedFrame(insertFilter, keep, mask = false), keyNames, n)
+                  (aligned.getOrElse(
+                      written.repartition(n, keyNames.map(col): _*)),
+                    Map(graft.sources.Bucketing.BucketedInfoKey ->
+                      graft.sources.Bucketing.specString(bkeys, n)))
+                case None => (written, Map.empty[String, String])
+              }
+              VersionedTable.commitCow(outF, root, kept,
+                extras = feedExtras,
+                preCommit = occCheck,
+                recordInfo = bucketInfo,
+                recordProperties = advProps)
+            case None => VersionedTable.commit(written, root,
+              // column defaults survive via commitWith's metadata-merge
+              // fallback; nullability stays the frame's (a not-matched
+              // INSERT null-fills unassigned columns by design)
+              extras = feedExtras, preCommit = occCheck,
               recordProperties = advProps)
-          case None => VersionedTable.commit(
-            fusedData((tPresent && fate =!= -1) || insertFilter)
-              .getOrElse(regenExprs(survivors).unionByName(inserts)), root,
-            // column defaults survive via commitWith's metadata-merge
-            // fallback; nullability stays the frame's (a not-matched
-            // INSERT null-fills unassigned columns by design)
-            extras = Map("changes" -> feed) ++ extraTables, preCommit = occCheck,
-            recordProperties = advProps)
+          }
         }
       } finally idRelease()
     }

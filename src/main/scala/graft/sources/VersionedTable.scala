@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graft.RoutedWrite
 
 /** Minimal table format: versioned snapshots with METADATA-ONLY commits —
   * the missing piece between [[Sinks.truncateLoad]]'s write-then-rename
@@ -561,7 +562,16 @@ object VersionedTable {
       df.collect().map(r =>
         (r.getAs[String]("app_id"), r.getAs[Long]("batch_id"))))
     val extrasData = extras - "txn"
-    locally {
+    // every side table this commit stages, with its schema: the frames
+    // written by their own execution (`extrasData`) and the images the
+    // data frame's own rows route to ([[RoutedWrite]])
+    val routedSides = RoutedWrite.sides(df0.schema)
+    val sinks: Map[String, org.apache.spark.sql.types.StructType] =
+      extrasData.map { case (n, e) => n -> e.schema } ++ routedSides
+    // the data image's schema (the routing columns are not table columns)
+    val dataSchema0 = RoutedWrite.dataSchema(df0.schema)
+    // a staged write that fails must not leave its staging dir behind
+    try {
       // per-column parquet BLOOM FILTERS (probed by readWhere's equality
       // pruning): footer-adjacent, kilobytes per column per row group.
       // The frame and the bloom options write under PHYSICAL names.
@@ -617,22 +627,25 @@ object VersionedTable {
       // writes zero ledger bytes AND cannot race a COPY into publishing
       // with a stale ledger (the carry-forward read this replaced ran
       // outside the publish lock).
-      extras.keys.foreach { name =>
+      sinks.keys.foreach { name =>
         require(name.nonEmpty && name.forall(ch => ch.isLetterOrDigit || ch == '_'),
           s"extra table name must be alphanumeric/underscore: $name")
       }
-      // the data write and each extra's write are INDEPENDENT Spark jobs
-      // into disjoint staging subdirs — run them CONCURRENTLY. Commit
-      // latency is the format family's dominant cost (the r17 profile:
-      // a feed-carrying micro-batch commit pays 2–3 sequential ~0.3 s
-      // write jobs whose compute is milliseconds), and at 100 TB the
-      // same phases are object-store round trips a streaming micro-batch
-      // pays per commit — overlap turns the sum into the max. Group
-      // commit of the JOBS, not the files: the atomic-publish protocol
-      // (claim → rename → marker) is untouched downstream.
+      // ONE EXECUTION PER LINEAGE. Images derived from the data
+      // frame's own rows — a merge's or MOR update's feed and mask — ride
+      // the data write itself: [[RoutedWrite]]'s writer lands each row's
+      // data image, change images and mask position in the same task
+      // (the Delta CDF write shape), so the join that produces them runs
+      // once. Only an extra with an INDEPENDENT lineage (a frame of its
+      // own) is a separate Spark job, run CONCURRENTLY with the data
+      // write into its disjoint staging subdir — overlap turns the sum of
+      // the jobs' launch latencies into the max. Group commit of the
+      // JOBS, not the files: the atomic-publish protocol (claim → rename
+      // → marker) is untouched downstream.
       val stagingWrites: Seq[() => Unit] =
         (() => CommitProfiler.phase("data_write") {
-          writer.parquet(staging.toString)
+          if (routedSides.isEmpty) writer.parquet(staging.toString)
+          else RoutedWrite.save(writer, staging.toString, physSpec.size)
         }) +: extrasData.toSeq.map { case (name, extra) => () =>
           CommitProfiler.phase(s"extra_write:$name") {
             extra.write.mode(SaveMode.Overwrite)
@@ -644,14 +657,19 @@ object VersionedTable {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(
-          Future.sequence(stagingWrites.map(t => Future(t()))), Duration.Inf)
+        // let EVERY write settle before acting on a failure: a sibling
+        // still running would keep writing into the staging dir the
+        // cleanup below removes
+        val settled = Await.result(Future.sequence(
+          stagingWrites.map(t => Future(scala.util.Try(t())))), Duration.Inf)
+        settled.collectFirst { case scala.util.Failure(e) => throw e }
       }
-      // an extra whose frame planned to ZERO partitions (an empty
-      // LocalRelation feed) leaves a schemaless dir that
-      // readExtra/readChanges cannot recover a schema from
-      extrasData.foreach { case (name, extra) =>
-        ensureSchemaPart(spark, f, new Path(staging, s"_$name"), extra.schema)
+      // a sink whose frame planned to ZERO partitions (an empty
+      // LocalRelation feed) or whose images all landed in partition
+      // dirs leaves a schemaless dir that readExtra/readChanges cannot
+      // recover a schema from
+      sinks.foreach { case (name, schema) =>
+        ensureSchemaPart(spark, f, new Path(staging, s"_$name"), schema)
       }
       // DERIVED per-file bitmaps beside the row-level DV parquet: the
       // scan-integrated mask road ([[DvBitmaps]]) for reads above the
@@ -662,7 +680,7 @@ object VersionedTable {
       // every read broadcasts it skips the derivation job entirely —
       // the hourly small-delete workload pays zero extra jobs, and the
       // commit whose cumulative mask crosses the floor derives.
-      if (extras.contains("dv")) {
+      if (sinks.contains("dv")) {
         val dvStaged = new Path(staging, "_dv")
         val stagedBytes =
           listOrEmpty(f, dvStaged).iterator.filter(_.isFile).map(_.getLen).sum
@@ -677,11 +695,11 @@ object VersionedTable {
       // road until the next fold), and the job is O(own deletions) —
       // usually one task, far below the cumulative-mask rewrite this
       // form exists to avoid.
-      if (extras.contains("dvdelta"))
+      if (sinks.contains("dvdelta"))
         CommitProfiler.phase("dv_bitmaps") {
           DvBitmaps.write(spark, new Path(staging, "_dvdelta"))
         }
-    }
+    } catch { case e: Throwable => f.delete(staging, true); throw e }
     // (1a) the ONE listing of the staged data files (partition subdirs
     // included, `_` sidecars skipped): its lengths are the sizes this
     // commit records (Delta's AddFile.size), its dir-relative paths key
@@ -717,9 +735,9 @@ object VersionedTable {
     // truly wants to drop metadata records an explicit schema.
     val schemaToRecord = recordSchema.getOrElse {
       base.map(schemaOf(spark, _)) match {
-        case None => df0.schema
+        case None => dataSchema0
         case Some(prior) => org.apache.spark.sql.types.StructType(
-          df0.schema.map { fld =>
+          dataSchema0.map { fld =>
             if (fld.metadata != org.apache.spark.sql.types.Metadata.empty) fld
             else prior.find(_.name.equalsIgnoreCase(fld.name))
               .filter(_.metadata !=
@@ -792,7 +810,7 @@ object VersionedTable {
       // read physical, rename back before evaluating
       try CommitProfiler.phase("constraint_enforce") { enforceConstraints(spark,
         toLogical(spark.read.option("recursiveFileLookup", "true")
-          .schema(physicalSchema(df0.schema, colMap))
+          .schema(physicalSchema(dataSchema0, colMap))
           .parquet(staging.toString), colMap),
         checksToEnforce, root) }
       catch { case e: Throwable => f.delete(staging, true); throw e }
@@ -810,7 +828,7 @@ object VersionedTable {
     // resolves renamed columns to nothing). Every commit writes it: it
     // always names `grouped-meta`.
     val readerFeats = Set(
-      if (extras.contains("dv")) Some("deletion-vectors") else None,
+      if (sinks.contains("dv")) Some("deletion-vectors") else None,
       if (colMap.nonEmpty || retired.nonEmpty) Some("column-mapping") else None,
       if (propsToRecord.contains(PartitionByProp)) Some("partition-spec") else None,
       if (extras.contains("copyfiles") || extras.contains("copyfull"))
@@ -873,8 +891,8 @@ object VersionedTable {
       groupedMeta(GroupedTxnPrefix + a) = b.toString }
     // each staged extra's schema, so [[readExtra]] reads it back without
     // a footer-inference job
-    extrasData.foreach { case (name, extra) =>
-      groupedMeta(GroupedExtraSchemaPrefix + name) = extra.schema.json }
+    sinks.foreach { case (name, schema) =>
+      groupedMeta(GroupedExtraSchemaPrefix + name) = schema.json }
     // ONE PUT lands schema + mapping + constraints + properties +
     // info + txn stamps
     writeProps(f, groupedMetaFile(staging), groupedMeta.toMap)
@@ -2904,9 +2922,10 @@ object VersionedTable {
     // by name; nullability not compared — reading non-null data through a
     // nullable schema is always sound)
     val curMap = curSchema.map(sf => sf.name -> sf.dataType).toMap
-    val newMap = newData0.schema.map(sf => sf.name -> sf.dataType).toMap
+    val newSchema = RoutedWrite.dataSchema(newData0.schema)
+    val newMap = newSchema.map(sf => sf.name -> sf.dataType).toMap
     if (curMap != newMap)
-      throw new SchemaMismatchException(root, cur.version, curSchema, newData0.schema)
+      throw new SchemaMismatchException(root, cur.version, curSchema, newSchema)
     // record the CURRENT schema (canonical order + evolve's nullability
     // marks), not newData's incidental one
     // release per call: commitCow runs once per OCC attempt inside its
@@ -3026,16 +3045,36 @@ object VersionedTable {
     // the chain-aware [[dvOf]], so the interval-th commit CONSOLIDATES
     // the chain into its own complete `_dv` (the DV fold, riding the
     // manifest fold's cadence).
+    //
+    // A ROUTED mask (the new deletions ride the data frame's rows,
+    // [[RoutedWrite]]) takes the same roads on the frame itself: renamed
+    // to the delta level, or joined by the carried mask as mask-only rows
+    // of the same write. Carried and own deletions are disjoint (a row
+    // masked already is invisible to the scan that found the own ones),
+    // so the union needs no dedup; and since the mask is written before
+    // its size is known, an empty one lands as a zero-row sidecar rather
+    // than being skipped — it reads as no mask.
     val baseChain = dvChainInfo(spark, cur)
     val baseHasDv = baseChain.isDefined
-    val extrasWithDv: Map[String, DataFrame] =
-      if (!baseHasDv) extras
+    val routedDv = RoutedWrite.sides(newData.schema).exists(_._1 == "dv")
+    val (dataOut, extrasWithDv): (DataFrame, Map[String, DataFrame]) =
+      if (!baseHasDv) (newData, extras)
       else if (deltaForm)
-        extras.get("dv") match {
+        if (routedDv) (RoutedWrite.renameSide(newData, "dv", "dvdelta"), extras)
+        else (newData, extras.get("dv") match {
           case Some(newDel) => extras - "dv" + ("dvdelta" -> newDel)
           case None => extras // carried-only level: masks ride the chain
-        }
-      else CommitProfiler.phase("dv_carry_probe") {
+        })
+      else if (routedDv)
+        // the carried mask is rebalanced (AQE sizes its partitions) before
+        // it joins the write: as read, it arrives as one partition per
+        // part file of the base's mask, and every commit would write that
+        // many files plus its own
+        (RoutedWrite.withSideRows(newData, "dv", dvOfChain(spark, baseChain.get)
+          .where(org.apache.spark.sql.functions.col("file")
+            .isInCollection(keptFiles.map(refTail)))
+          .select("file", "pos").hint("rebalance")), extras)
+      else (newData, CommitProfiler.phase("dv_carry_probe") {
         import org.apache.spark.sql.functions.col
         // isInCollection folds to an InSet literal — metadata-scale,
         // codegen'd. Keys compare as vNNNNNNNN/name TAILS: dv entries are
@@ -3057,8 +3096,8 @@ object VersionedTable {
         if (keptIsWhole) extras.updated("dv", merged)
         else if (merged.limit(1).count() == 0L) extras - "dv"
         else extras.updated("dv", merged)
-      }
-    commitWith(newData, root, collectStats = true, extras = extrasWithDv,
+      })
+    commitWith(dataOut, root, collectStats = true, extras = extrasWithDv,
       bloomCols = bloomCols, preCommit = preCommit,
       recordSchema = recordSchema, recordConstraints = recordConstraints,
       recordProperties = recordProperties,
@@ -3366,23 +3405,44 @@ object VersionedTable {
               val tableCols = schema.fieldNames.toSeq
               // mask the old copies where they sit, append the updated
               // copies as fresh rows (fresh footer stats, so the new
-              // values re-enter data skipping)
+              // values re-enter data skipping) — ONE routed write
+              // ([[RoutedWrite]]): each matched row carries its post
+              // image as data, its position as the mask and its pre/post
+              // images as the feed, so the slice is read once for all
+              // three sinks
+              val preNames = tableCols.indices.map(i => s"__graft_pre_$i")
               val pre = hit.select(tableCols.map(col): _*)
-              val post = applySet(pre)
-              val extras = Map("dv" -> newDel) ++
-                (if (!changeFeed) Map.empty[String, DataFrame]
-                 else Map("changes" ->
-                   pre.withColumn("_change_type", lit("update_preimage"))
-                     .unionByName(post
-                       .withColumn("_change_type", lit("update_postimage")))))
+              val both = applySet(hit.select(tableCols.map(col) ++
+                tableCols.zip(preNames).map { case (c, n) => col(c).as(n) } ++
+                Seq(col("__dv_file"), col("__dv_pos")): _*))
+              val post = both.select(tableCols.map(col): _*)
+              // the feed's schema: the pre image's fields, nullable where
+              // either image is, then the change type
+              val feedType = org.apache.spark.sql.types.StructType(
+                pre.schema.fields.zip(post.schema.fields).map { case (a, b) =>
+                  a.copy(nullable = a.nullable || b.nullable) } :+
+                  org.apache.spark.sql.types.StructField("_change_type",
+                    org.apache.spark.sql.types.StringType, nullable = false))
+              def image(names: Seq[String], changeType: String): Column =
+                org.apache.spark.sql.functions.struct(
+                  tableCols.zip(names).map { case (c, n) => col(n).as(c) } :+
+                    lit(changeType).as("_change_type"): _*).cast(feedType)
+              val routed = both.select(tableCols.map(col) ++
+                Seq(lit(true).as(RoutedWrite.Keep),
+                  org.apache.spark.sql.functions.struct(col("__dv_file").as("file"),
+                    col("__dv_pos").as("pos")).as(RoutedWrite.sideCol("dv", 0))) ++
+                (if (!changeFeed) Nil
+                 else Seq(image(preNames, "update_preimage").as(RoutedWrite.sideCol("changes", 0)),
+                   image(tableCols, "update_postimage")
+                     .as(RoutedWrite.sideCol("changes", 1)))): _*)
               // as the MOR delete: the masked files are the interest set
               val maskedRefs = () =>
                 dataFileRefs(spark, cur).filter(r => tails(refTail(r))).toSet
               val rb = new AppendRebase(spark, root, cur.version,
                 allowDml = true, interest = maskedRefs,
                 readPredicate = Some(predicate))
-              commitCowInternal(post, root, cur, dataFileRefs(spark, cur),
-                extras = extras, bloomCols = Nil,
+              commitCowInternal(routed, root, cur, dataFileRefs(spark, cur),
+                extras = Map.empty, bloomCols = Nil,
                 preCommit = v => { preCommit(v); rb.validate(v) },
                 recordSchema = Some(schema),
                 rebase = Some(rb),
