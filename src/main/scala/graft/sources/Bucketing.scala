@@ -65,35 +65,14 @@ object Bucketing {
   def specString(keys: Seq[String], n: Int): String =
     (keys :+ n.toString).mkString(",")
 
-  /** The `bucketed` stamp a commit with a ZERO-ROW fresh frame must
-    * CARRY FORWARD on a bucketized table (metadata-only property /
-    * constraint / schema commits, MOR deletes, restores, partition
-    * drops — all keep-every-ref commits whose only fresh file is the
-    * writer's empty schema-preserving part file). The stamp claims the
-    * commit's fresh files are bucket-pure, which is vacuously true of a
-    * file with no rows — while WITHOUT it that one unstamped file makes
-    * [[pureBuckets]] decline forever after: a single `ALTER TABLE SET
-    * TBLPROPERTIES` (or the evolve commit `MERGE WITH SCHEMA EVOLUTION`
-    * runs first) would silently orphan the layout. Empty when the table
-    * has no recorded spec. */
-  def carryStamp(spark: SparkSession, cur: Snapshot): Map[String, String] =
-    stampOf(VersionedTable.propertiesOf(spark, cur))
-
-  /** [[carryStamp]] from an EXPLICIT (possibly just-adjusted) props
-    * map — the schema-change sites compute their post-change properties
-    * first, and the stamp must agree with THOSE. */
-  def stampOf(props: Map[String, String]): Map[String, String] =
-    specOf(props).map { case (ks, n) =>
-      BucketedInfoKey -> specString(ks, n) }.toMap
-
   /** Props with the bucket spec DROPPED when `colName` IS the spec key.
     * A schema change to the key column ends the recorded layout: a type
     * WIDEN re-keys murmur3 (a 4-byte int and an 8-byte long hash
     * differently, so the claimed HashPartitioning over the widened type
     * would silently mis-join), a RENAME orphans every recorded stamp's
     * spec string, and a DROP removes the column outright. Changes to
-    * any other column keep the spec (and the carried stamp stays
-    * vacuously true on the zero-row commit). */
+    * any other column keep the spec: the zero-row commit writes no file
+    * whose purity a stamp would have to vouch for. */
   def dropSpecIfKey(
       props: Map[String, String], colName: String): Map[String, String] =
     specOf(props) match {

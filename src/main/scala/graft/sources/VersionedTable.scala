@@ -13,23 +13,36 @@ import org.apache.spark.sql.graft.RoutedWrite
   *
   * Layout:
   * {{{
-  *   <root>/v00000001/...parquet     immutable snapshot directories
-  *   <root>/v00000002/...
-  *   <root>/_commits/00000001        empty marker files; the SET of these
-  *   <root>/_commits/00000002        IS the table state
+  *   <root>/v00000001/part-*.parquet   immutable version dirs (claimed names)
+  *   <root>/v00000001/_meta/commit.properties    schema, mapping, CHECKs,
+  *                                               properties, commit info, txn
+  *   <root>/v00000001/_protocol/features.properties   reader/writer features
+  *   <root>/v00000001/_manifest/…      the refs it carries (absent = its own files)
+  *   <root>/v00000001/_stats/, _sizes/ per-ref footer stats and byte sizes
+  *   <root>/_claims/00000001           empty create-exclusive claims
+  *   <root>/_commits/00000001          two-line markers: the version's data
+  *                                     dir name, then its in-commit timestamp;
+  *                                     the SET of these IS the table state
   * }}}
   *
   * Protocol (each writer):
   *  1. WRITE the snapshot to `_staging/<uuid>` — private, any size, fully
-  *     parallel, no table state touched;
-  *  2. CLAIM the next version: create-exclusive `_claims/<N>` (retrying
-  *     with N+1 on loss). The claim is an empty-file create — two writers
-  *     can never own the same N, so they never touch the same paths;
+  *     parallel, no table state touched; the per-version records (`_meta`,
+  *     `_protocol`, extras such as `_changes`) are staged beside it. A
+  *     commit with no rows of its own (metadata and column DDL, MOR
+  *     delete, restore, clone, convert) writes no data file at all;
+  *  2. CLAIM a version dir: create-exclusive `_claims/<N>` (retrying
+  *     with N+1 on loss). Two writers can never own the same dir name, so
+  *     they never touch the same paths;
   *  3. MOVE the staging dir to `v<N>` — a directory rename, metadata-only
-  *     on a real filesystem (the data files never move);
-  *  4. PUBLISH: create `_commits/<N>`. Readers resolve the table as
-  *     max(`_commits`) — the publish is the linearization point and the
-  *     table is never absent, never half-visible.
+  *     on a real filesystem (the data files never move) — and write the
+  *     version's `_manifest`, `_stats` and `_sizes` file record into it;
+  *  4. PUBLISH: create-if-absent `_commits/<n>` for n = (observed
+  *     current)+1, naming `v<N>` on its first line. Published numbers
+  *     stay dense even when claims burn, so `n` may be lower than the
+  *     claimed `N`. Readers resolve the table as max(`_commits`) — the
+  *     publish is the linearization point and the table is never
+  *     absent, never half-visible.
   *
   * Crash anywhere before step 4 leaves only invisible garbage (an
   * unclaimed staging dir or a claimed-but-unpublished version number that
@@ -400,6 +413,22 @@ object VersionedTable {
     (df1, advProps, check, release)
   }
 
+  /** A frame of `schema` with no rows, as an empty `LocalRelation` —
+    * the input of every commit that lands no rows of its own (metadata
+    * and column DDL, MOR delete, partition drop, restore, clones,
+    * convert, the copy-ledger fold). */
+  private def noRows(
+      spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
+  /** Whether `df` has no rows by construction: its plan is an empty
+    * `LocalRelation` ([[noRows]], or `createDataFrame` of an empty list).
+    * Read off the unanalyzed plan — no job runs. */
+  private def hasNoRows(df: DataFrame): Boolean = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r.data.isEmpty
+    case _ => false
+  }
+
   /** [[commit]] with a pre-publish hook: `finalize(versionDir, own)`
     * runs after the staging dir is renamed into place but BEFORE
     * the commit marker is created, and names the version's file record
@@ -409,7 +438,7 @@ object VersionedTable {
     * the hook leaves an unpublished dir, exactly like any other
     * pre-publish failure. */
   private def commitWith(
-      df: DataFrame, root: String, collectStats: Boolean,
+      df: DataFrame, root: String, collectStats: Boolean = true,
       extras: Map[String, DataFrame],
       finalizeVersion: (Path, Seq[OwnFile]) => FileRecord,
       bloomCols: Seq[String] = Nil,
@@ -551,6 +580,7 @@ object VersionedTable {
         "Build sessions via graft.GraftSession, which pins the conf.")
     val staging = new Path(root,
       "_staging/" + java.util.UUID.randomUUID().toString.take(12))
+    val zeroRow = hasNoRows(df)
     // TXN STAMPS ARE METADATA, not data: every producer builds a
     // driver-local frame with one (app_id, batch_id) row per feed, so
     // collect() executes on the driver (LocalTableScan — no job) and
@@ -642,17 +672,22 @@ object VersionedTable {
       // the jobs' launch latencies into the max. Group commit of the
       // JOBS, not the files: the atomic-publish protocol (claim → rename
       // → marker) is untouched downstream.
-      val stagingWrites: Seq[() => Unit] =
-        (() => CommitProfiler.phase("data_write") {
+      // a zero-row commit ([[hasNoRows]]) stages no data write: its
+      // version carries only the refs its caller names
+      val dataWrite: Seq[() => Unit] =
+        if (zeroRow) Nil
+        else Seq(() => CommitProfiler.phase("data_write") {
           if (routedSides.isEmpty) writer.parquet(staging.toString)
           else RoutedWrite.save(writer, staging.toString, physSpec.size)
-        }) +: extrasData.toSeq.map { case (name, extra) => () =>
+        })
+      val stagingWrites: Seq[() => Unit] =
+        dataWrite ++ extrasData.toSeq.map { case (name, extra) => () =>
           CommitProfiler.phase(s"extra_write:$name") {
             extra.write.mode(SaveMode.Overwrite)
               .parquet(new Path(staging, s"_$name").toString)
           }
         }
-      if (stagingWrites.size == 1) stagingWrites.head()
+      if (stagingWrites.size <= 1) stagingWrites.foreach(_())
       else {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
@@ -704,13 +739,16 @@ object VersionedTable {
     // included, `_` sidecars skipped): its lengths are the sizes this
     // commit records (Delta's AddFile.size), its dir-relative paths key
     // the footer stats, and it is the constraint pass's emptiness probe —
-    // the renamed version dir is never listed again
-    val staged = CommitProfiler.phase("file_sizes") { dataFileRels(f, staging) }
+    // the renamed version dir is never listed again. A zero-row commit
+    // staged no data file and lists nothing.
+    val staged =
+      if (zeroRow) Nil
+      else CommitProfiler.phase("file_sizes") { dataFileRels(f, staging) }
     // (1b) footer-only stats of the staged files, keyed by dir-relative
     // path until the version is known. Never blocks the commit: stats are
     // an optimization, and an unrecorded file reads conservatively.
     val stagedStats: Map[String, Seq[TableStats.Row]] =
-      if (!collectStats) Map.empty
+      if (!collectStats || staged.isEmpty) Map.empty
       else CommitProfiler.phase("stats_footers") {
         try TableStats.collectRows(spark, f, staged).groupBy(_._1)
         catch {
@@ -903,10 +941,14 @@ object VersionedTable {
     // real and must surface, not spin — and the attempt count is bounded
     // so a filesystem that misreports arbitrary failures as
     // already-exists cannot busy-loop the writer forever.
+    // The first number tried is past every claim and past the base
+    // version: a vacuum drops only claims at or below a dropped version,
+    // so every live version dir is outranked by one of the two. The loop
+    // steps past claims taken since.
     val store = StoreAdapter.forFs(f)
     var v = math.max(
       listVersions(f, claimDir(root)).lastOption.getOrElse(0L),
-      listVersions(f, commitDir(root)).lastOption.getOrElse(0L)) + 1
+      base.map(_.version).getOrElse(0L)) + 1
     var claimed = false
     var attempts = 0
     CommitProfiler.phase("version_claim") {
@@ -929,7 +971,7 @@ object VersionedTable {
     // The claim owns the DIRECTORY NAME only; the published version
     // NUMBER is decided at (4) and may be lower when other claims burned.
     val dir = versionDir(root, v)
-    if (f.exists(dir)) f.delete(dir, true)
+    f.delete(dir, true)
     if (!f.rename(staging, dir))
       throw new java.io.IOException(s"rename $staging -> $dir failed")
     // (3a') the commit's OWN files as (ref, length, stat rows), all from
@@ -2239,8 +2281,6 @@ object VersionedTable {
       dropRefs: Seq[String], changeFeed: Boolean,
       preCommit: Long => Unit = _ => ()): Long = {
     val schema = schemaOf(spark, cur)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val kept = dataFileRefs(spark, cur).filterNot(dropRefs.toSet)
     val extras =
       if (!changeFeed) Map.empty[String, DataFrame]
@@ -2249,11 +2289,10 @@ object VersionedTable {
           org.apache.spark.sql.functions.lit("delete")))
     // caller's in-claim gate (txn idempotence, validation) runs on this
     // road too — the COW and MOR roads of the same deleteWhere honor it
-    commitCowInternal(empty, root, cur, kept, extras, Nil,
+    commitCowInternal(noRows(spark, schema), root, cur, kept, extras, Nil,
       preCommit = v => { preCommit(v); occValidate(spark, root, Some(cur))(v) },
       recordSchema = Some(schema),
-      recordInfo = Map("operation" -> "delete", "partitionDrop" -> "true") ++
-        Bucketing.carryStamp(spark, cur))
+      recordInfo = Map("operation" -> "delete", "partitionDrop" -> "true"))
   }
 
   /** PARTITION-SPEC EVOLUTION: re-lay the table out under a NEW
@@ -2277,9 +2316,9 @@ object VersionedTable {
       val props0 = propertiesOf(spark, cur)
       val props = if (newSpec.isEmpty) props0 - PartitionByProp
                   else props0.updated(PartitionByProp, newSpec.mkString(","))
-      commitWith(df, root, collectStats = true,
+      commitWith(df, root,
         extras = Map.empty, // layout-only: virtual zero-row feed
-        FileRecord.plain, bloomCols,
+        finalizeVersion = FileRecord.plain, bloomCols = bloomCols,
         preCommit = occValidate(spark, root, Some(cur)),
         recordProperties = Some(props),
         partitionBy = newSpec,
@@ -3097,7 +3136,7 @@ object VersionedTable {
         else if (merged.limit(1).count() == 0L) extras - "dv"
         else extras.updated("dv", merged)
       })
-    commitWith(dataOut, root, collectStats = true, extras = extrasWithDv,
+    commitWith(dataOut, root, extras = extrasWithDv,
       bloomCols = bloomCols, preCommit = preCommit,
       recordSchema = recordSchema, recordConstraints = recordConstraints,
       recordProperties = recordProperties,
@@ -3251,9 +3290,6 @@ object VersionedTable {
               .collect().map(_.getString(0)).toSet // metadata-scale: ≤ #files
             if (tails.isEmpty) cur.version // admitted but nothing matched
             else {
-              val empty = spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                schemaOf(spark, cur))
               val tableCols = schemaOf(spark, cur).fieldNames.toSeq
               val extras = Map("dv" -> newDel) ++
                 (if (!changeFeed) Map.empty[String, DataFrame]
@@ -3268,13 +3304,13 @@ object VersionedTable {
               val rb = new AppendRebase(spark, root, cur.version,
                 allowDml = true, interest = maskedRefs,
                 readPredicate = Some(predicate))
-              commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
+              commitCowInternal(noRows(spark, schemaOf(spark, cur)), root, cur,
+                dataFileRefs(spark, cur),
                 extras = extras, bloomCols = Nil,
                 preCommit = v => { preCommit(v); rb.validate(v) },
                 recordSchema = Some(schemaOf(spark, cur)),
                 rebase = Some(rb),
-                recordInfo = Map("operation" -> "delete", "mor" -> "true") ++
-                  Bucketing.carryStamp(spark, cur))
+                recordInfo = Map("operation" -> "delete", "mor" -> "true"))
             }
           } finally hit.unpersist()
       }
@@ -3909,11 +3945,10 @@ object VersionedTable {
 
   /** EXPLICIT schema evolution — a METADATA-ONLY commit (Delta's
     * schema-in-the-log evolution): publish a new version that carries
-    * every current data file by reference, zero fresh data rows (one
-    * footer-only empty part file, O(1) bytes), and the new schema
-    * recorded. Old files read through the new schema resolve by
-    * name, so added columns backfill null at read time; the previous
-    * schema stays time-travelable with its versions.
+    * every current data file by reference, no data file of its own, and
+    * the new schema recorded. Old files read through the new schema
+    * resolve by name, so added columns backfill null at read time; the
+    * previous schema stays time-travelable with its versions.
     *
     * Additive only: every existing column must survive with its type, and
     * added columns must be nullable (existing files have no values for
@@ -4019,8 +4054,6 @@ object VersionedTable {
         s"$name is a partition column — repartition via a full commit()")
       val newSchema = org.apache.spark.sql.types.StructType(
         curSchema.map(x => if (x.name == name) x.copy(dataType = to) else x))
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
       // date→ntz: convert the carried stats from epoch DAYS to MICRO
       // bounds for the widened column, so post-evolution literals (micros)
       // compare against post-evolution stats (micros) — prune-correct
@@ -4039,7 +4072,7 @@ object VersionedTable {
                   .map(d => ((d + 1) * MicrosPerDay - 1).toString)))
           case _ => None
         }
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
+      commitCowInternal(noRows(spark, newSchema), root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
@@ -4050,9 +4083,7 @@ object VersionedTable {
           .updated(WidenedTypesProp, "true")),
         carriedStatsMap = statsMap,
         recordInfo = Map("operation" -> "widen-column",
-          ChangesFormKey -> "none") ++
-          Bucketing.stampOf(Bucketing.dropSpecIfKey(
-            propertiesOf(spark, cur), name)))
+          ChangesFormKey -> "none"))
     }
 
   private def evolveSchemaAt(
@@ -4085,16 +4116,13 @@ object VersionedTable {
         case f if usedPhys(f.name) =>
           f.name -> s"${f.name}_${java.util.UUID.randomUUID().toString.take(8)}"
       }.toMap
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
+      commitCowInternal(noRows(spark, newSchema), root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
         recordMapping = Some((mapping ++ minted, retired)),
         recordInfo = Map("operation" -> "evolve-schema",
-          ChangesFormKey -> "none") ++
-          Bucketing.carryStamp(spark, cur))
+          ChangesFormKey -> "none"))
     }
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE ... SHALLOW CLONE`): publish
@@ -4130,9 +4158,6 @@ object VersionedTable {
     val refs = srcRefs.map(r =>
       srcFs.makeQualified(new Path(srcRoot, r)).toString)
     val schema = schemaOf(spark, src)
-    // the clone's own version dir holds only metadata; data rides by ref
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // chain-aware: a source mid-chain clones its FOLDED mask — the
     // clone's sidecar must be self-contained (its reader never walks
     // the source's delta chain)
@@ -4146,7 +4171,8 @@ object VersionedTable {
         .map(l => "copyfull" -> l.localCheckpoint(eager = true)).toMap
       // clones re-emit no history: virtual zero-row feed (recordInfo)
     val absOf = srcRefs.zip(refs).toMap
-    commitWith(empty, destRoot, collectStats = false, extras = extras,
+    // the clone's own version dir holds only metadata; data rides by ref
+    commitWith(noRows(spark, schema), destRoot, extras = extras,
       recordInfo = Map("operation" -> "clone", ChangesFormKey -> "none"),
       // re-assert emptiness inside the claim: two racing cloners must not
       // both report success with one silently shadowed
@@ -4213,7 +4239,6 @@ object VersionedTable {
       // the layout exactly as any commit against the spec; masks fold
       // in the same readVersion pass)
       return commitWith(readVersion(spark, src), destRoot,
-        collectStats = true,
         extras = ledgerExtra,
         finalizeVersion = FileRecord.plain,
         preCommit = emptyGuard,
@@ -4230,26 +4255,21 @@ object VersionedTable {
     // name hashes the full ref; the part- prefix keeps the plain
     // dir-snapshot listing ([[dataFiles]]) finding them
     val newRel = srcRefs.map(r => r -> ("part-" + DvBitmaps.sha1hex(r) + ".parquet")).toMap
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // a masked source's dv rides along: the zero-row placeholder records
     // the deletion-vectors protocol feature at staging (and skips the
     // bitmap derivation there — the staged keys would be the SOURCE
     // tails); the real mask lands RE-KEYED in finalizeVersion below,
     // where the clone's version dir name is known
     val dvSrc = dvOf(spark, src) // folded: self-contained copy
-    commitWith(empty, destRoot, collectStats = false,
+    commitWith(noRows(spark, schema), destRoot,
       extras = ledgerExtra ++
         dvSrc.map(d => "dv" -> d.limit(0)).toMap,
       preCommit = emptyGuard,
       recordInfo = Map("operation" -> "deep-clone",
         ChangesFormKey -> "none"),
-      finalizeVersion = (dir, own) => {
+      finalizeVersion = (dir, _) => {
         val fh = fs(spark, destRoot)
         val copyOf = srcRefs.map(r => r -> (dir.getName + "/" + newRel(r))).toMap
-        // the zero-row commit frame leaves one empty part file in the
-        // dir — drop it so the snapshot lists EXACTLY the copied files
-        own.foreach(o => fh.delete(new Path(destRoot, o.ref), false))
         // DISTRIBUTED byte copy into the (already-renamed) version dir:
         // each task streams its slice of files src → dest through the
         // executor-side filesystems; O(bytes/parallelism) wall time,
@@ -4482,9 +4502,7 @@ object VersionedTable {
       if (partCols.isEmpty) None
       else Some(Map(PartitionByProp -> partCols.mkString(","),
         HivePartitionedProp -> "true"))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    commitWith(empty, root, collectStats = false, extras = Map.empty,
+    commitWith(noRows(spark, schema), root, extras = Map.empty,
       recordInfo = Map("operation" -> "convert"),
       // two racing converters must not both claim success
       preCommit = _ => currentVersion(spark, root).foreach(cv =>
@@ -4543,8 +4561,6 @@ object VersionedTable {
         (if (to == phys) Map.empty[String, String] else Map(to -> phys))
       val newSchema = org.apache.spark.sql.types.StructType(schema.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
       // the partition property speaks LOGICAL names: follow the rename
       // (dir segments keep the frozen physical name and resolve through
       // the mapping, so pruning and drops keep working)
@@ -4579,15 +4595,14 @@ object VersionedTable {
       val specAdjusted = Bucketing.dropSpecIfKey(gensRenamed, from)
       val renamedProps =
         if (specAdjusted == curProps) None else Some(specAdjusted)
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
+      commitCowInternal(noRows(spark, newSchema), root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
         recordProperties = renamedProps,
         recordMapping = Some((newMapping, retiredPhysicals(spark, cur))),
         recordInfo = Map("operation" -> "rename-column",
-          ChangesFormKey -> "none") ++
-          Bucketing.stampOf(specAdjusted))
+          ChangesFormKey -> "none"))
     }
 
   /** METADATA-ONLY column DROP (Delta column mapping): the logical schema
@@ -4627,9 +4642,7 @@ object VersionedTable {
       val phys = physicalName(mapping, name)
       val newSchema = org.apache.spark.sql.types.StructType(
         schema.filterNot(_.name == name))
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
-      commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
+      commitCowInternal(noRows(spark, newSchema), root, cur, dataFileRefs(spark, cur),
         Map.empty, // metadata-only: virtual zero-row feed
         Nil, preCommit = occValidate(spark, root, Some(cur)),
         recordSchema = Some(newSchema),
@@ -4638,9 +4651,7 @@ object VersionedTable {
         recordMapping = Some((mapping - name,
           retiredPhysicals(spark, cur) + phys)),
         recordInfo = Map("operation" -> "drop-column",
-          ChangesFormKey -> "none") ++
-          Bucketing.stampOf(Bucketing.dropSpecIfKey(
-            propertiesOf(spark, cur), name)))
+          ChangesFormKey -> "none"))
     }
 
   /** `SHOW PARTITIONS`: the current snapshot's live partition tuples —
@@ -5080,16 +5091,13 @@ object VersionedTable {
       recordConstraints: Option[Map[String, String]] = None,
       op: String = "metadata"): Long = {
     val schema = schemaOf(spark, cur)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
+    commitCowInternal(noRows(spark, schema), root, cur, dataFileRefs(spark, cur),
       Map.empty, Nil, // metadata-only: virtual zero-row feed
       preCommit = occValidate(spark, root, Some(cur)),
       recordSchema = Some(schema),
       recordConstraints = recordConstraints,
       recordProperties = recordProperties,
-      recordInfo = Map("operation" -> op, ChangesFormKey -> "none") ++
-        Bucketing.carryStamp(spark, cur))
+      recordInfo = Map("operation" -> op, ChangesFormKey -> "none"))
   }
 
   /** java-Properties file read shared by constraints and table
@@ -5300,9 +5308,7 @@ object VersionedTable {
         case None => cur.version
         case Some(folded) =>
           val schema = schemaOf(spark, cur)
-          val empty = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          commitCowInternal(empty, root, cur, dataFileRefs(spark, cur),
+          commitCowInternal(noRows(spark, schema), root, cur, dataFileRefs(spark, cur),
             // materialize BEFORE committing: the fold reads extras of
             // versions a concurrent vacuum could be dropping mid-write
             Map("copyfull" -> folded.localCheckpoint(eager = true)),
@@ -5529,8 +5535,6 @@ object VersionedTable {
           s"cannot restore $root to v$toVersion: ${missing.size} of its " +
             s"data files were vacuumed (e.g. ${missing.take(3).mkString(", ")})")
         val schema = schemaOf(spark, tgt)
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         val extras =
           // folded: the restore commit re-records the target's complete
           // mask as its own full-form sidecar, whatever form the target
@@ -5539,9 +5543,8 @@ object VersionedTable {
             (if (!changeFeed) Map.empty[String, DataFrame]
              else Map("changes" ->
                restoreFeed(spark, root, cur, tgt, schema)))
-        commitWith(empty, root, collectStats = false, extras = extras,
-          recordInfo = Map("operation" -> "restore") ++
-            Bucketing.carryStamp(spark, cur),
+        commitWith(noRows(spark, schema), root, extras = extras,
+          recordInfo = Map("operation" -> "restore"),
           // the target's refs with their stats and sizes, exactly as
           // commitCowInternal carries a kept file's
           finalizeVersion = (dir, _) =>

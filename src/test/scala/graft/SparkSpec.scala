@@ -27,6 +27,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (out, n.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Run `body` and return the output path of every Spark file write
+    * into a commit's `_staging/<id>` dir while it ran: the dir itself for
+    * a commit's data write, a `_<name>` subdir for an extra's. */
+  def stagedWriteTargets[A](body: => A): (A, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical.collectFirst {
+          case w: InsertIntoHadoopFsRelationCommand
+            if w.outputPath.toString.contains("/_staging/") => w.outputPath.toString
+        }.foreach(paths.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, paths.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 object SparkSpec {

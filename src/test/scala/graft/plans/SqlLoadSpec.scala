@@ -170,11 +170,11 @@ class SqlLoadSpec extends SparkSpec {
       VersionedTable.read(spark, src).orderBy("id").collect().toSeq)
     assert(VersionedTable.propertiesOf(spark, dest, 1L) ==
       Map("graft.team" -> "a"))
-    // zero-copy: no parquet data bytes under the clone's version dir
+    // zero-copy: no parquet file under the clone's version dir
     val vdir = new java.io.File(s"$dest/v00000001")
     val dataBytes = Option(vdir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.length()).sum
-    assert(dataBytes < 2048, s"clone copied data: $dataBytes bytes")
+    assert(dataBytes == 0L, s"clone copied data: $dataBytes bytes")
     // stats carried: the stats-only aggregate answers on the clone
     val agg = VersionedTable.statsAggregate(spark, dest, Seq("amount"))
     assert(agg.exists(_._1 == 10L), "clone must answer from carried stats")

@@ -806,4 +806,38 @@ class BucketingSpec extends SparkSpec {
     assert(Bucketing.specOf(VersionedTable.propertiesOf(
       spark, root, bucketized.get)) == Some((Seq("id"), 8)))
   }
+
+  test("zero-row DDL, MOR delete and RESTORE commits keep the layout: " +
+    "every ref stays bucket-pure and the next MERGE takes the claimed road") {
+    val root = freshRoot(); seed(root, 8)
+    graft.plans.GraftSql.execute(spark, s"ALTER TABLE '$root' SET TBLPROPERTIES " +
+      "('graft.enableDeletionVectors'='true')")
+    val schema = VersionedTable.schemaOf(spark, VersionedTable.latest(spark, root).get)
+    VersionedTable.evolveSchema(spark, root, schema.add("score",
+      org.apache.spark.sql.types.IntegerType, nullable = true))
+    VersionedTable.widenColumn(spark, root, "score",
+      org.apache.spark.sql.types.LongType)
+    VersionedTable.renameColumn(spark, root, "payload", "payload2")
+    VersionedTable.dropColumn(spark, root, "score")
+    val preDelete = VersionedTable.currentVersion(spark, root).get
+    VersionedTable.deleteWhere(spark, root, $"id" < 5L, mor = true)
+    VersionedTable.restore(spark, root, preDelete)
+    val cur = VersionedTable.currentVersion(spark, root).get
+    assert(Bucketing.pureBuckets(spark, root, cur, Seq("id"), 8).map(_.keySet)
+      .contains(VersionedTable.dataFileRefs(spark, root, cur).toSet),
+      "a zero-row commit orphaned the bucket layout")
+    Seq((3L, "M1"), (401L, "M1")).toDF("id", "st")
+      .createOrReplaceTempView("bkt_zero_row_src")
+    Bucketing.lastSliceOnePlan = false
+    val v = graft.plans.GraftSql.execute(spark,
+      s"""MERGE INTO `$root` AS t USING bkt_zero_row_src AS s ON t.id = s.id
+         |WHEN MATCHED THEN UPDATE SET last_status = s.st
+         |WHEN NOT MATCHED THEN INSERT (id, last_status) VALUES (s.id, s.st)
+         |""".stripMargin).collect().head.getLong(2)
+    assert(Bucketing.lastSliceOnePlan, "the MERGE did not read a bucket-aligned slice")
+    assert(VersionedTable.commitInfoOf(spark, root, v)
+      .get(Bucketing.BucketedInfoKey).contains("id,8"))
+    assert(VersionedTable.read(spark, root).where($"last_status" === "M1")
+      .select("id").as[Long].collect().sorted.toSeq == Seq(3L, 401L))
+  }
 }

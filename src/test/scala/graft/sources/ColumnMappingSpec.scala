@@ -24,16 +24,13 @@ class ColumnMappingSpec extends SparkSpec {
   private def dataFilesOf(root: String, v: Long): Seq[String] =
     VersionedTable.dataFileRefs(spark, root, v)
 
-  /** v carries every file of prev by reference, plus at most the one
-    * footer-only empty part file a metadata commit writes (O(1) bytes —
-    * same shape as evolveSchema). */
+  /** v carries every file of prev by reference and writes none of its
+    * own (same shape as evolveSchema). */
   private def assertMetadataOnly(root: String, prev: Seq[String], v: Long): Unit = {
     val after = dataFilesOf(root, v)
     assert(prev.toSet.subsetOf(after.toSet), "a kept file went missing")
     val fresh = after.toSet -- prev.toSet
-    val freshBytes = fresh.toSeq.map(r =>
-      new java.io.File(s"$root/$r").length()).sum
-    assert(freshBytes < 2048, s"metadata commit wrote data: $freshBytes bytes")
+    assert(fresh.isEmpty, s"metadata commit wrote data files: $fresh")
   }
 
   test("RENAME COLUMN is metadata-only: same files, new name over old data") {

@@ -2,10 +2,7 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.plans.GraftSql
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** A feed-carrying commit writes its data, its `_changes` feed and its
   * `_dv` mask in ONE staged-write execution: a copy-on-write MERGE, a
@@ -34,29 +31,14 @@ class OneWritePerCommitSpec extends SparkSpec {
   /** Run `body`; return (the Spark writes into a `_staging` dir, the
     * commits, the commit phases' hit counts). */
   private def stagedWrites(body: => Unit): (Int, Long, Map[String, Long]) = {
-    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.logical.collectFirst {
-            case w: InsertIntoHadoopFsRelationCommand
-              if w.outputPath.toString.contains("/_staging/") => w
-          }.isDefined) writes.incrementAndGet()
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
     CommitProfiler.reset()
     CommitProfiler.enable()
     try {
-      body
+      val (_, writes) = stagedWriteTargets(body)
       CommitProfiler.disable()
-      org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
       val phases = CommitProfiler.snapshot().map { case (k, _, n) => k -> n }.toMap
-      (writes.get, phases.getOrElse("commit_total", 0L), phases)
-    } finally {
-      CommitProfiler.disable()
-      spark.listenerManager.unregister(listener)
-    }
+      (writes.size, phases.getOrElse("commit_total", 0L), phases)
+    } finally CommitProfiler.disable()
   }
 
   private def assertOneWritePerCommit(what: String, r: (Int, Long, Map[String, Long])): Unit = {

@@ -32,13 +32,13 @@ class RestoreSpec extends SparkSpec {
     val v = VersionedTable.restore(spark, root, 1L)
     assert(VersionedTable.currentVersion(spark, root).contains(v))
     assert(VersionedTable.read(spark, root).orderBy("id").collect().toSeq == before)
-    // metadata-only: the restore version dir holds no fresh data bytes
+    // metadata-only: the restore version dir holds no data file
     val f = fsOf(root)
     val dir = new org.apache.hadoop.fs.Path(root, f"v$v%08d")
     val dataBytes = f.listStatus(dir)
       .filter(s => s.getPath.getName.startsWith("part-") &&
         s.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-    assert(dataBytes < 2048, s"restore wrote $dataBytes data bytes")
+    assert(dataBytes == 0L, s"restore wrote $dataBytes data bytes")
     // the mistake-path versions are still readable (history preserved)
     assert(VersionedTable.readVersion(spark, root, 2L).count() == 50)
     // stats carried: skipping still works on the restored snapshot

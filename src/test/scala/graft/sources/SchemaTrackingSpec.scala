@@ -53,15 +53,14 @@ class SchemaTrackingSpec extends SparkSpec {
       StructField("score", DoubleType, nullable = true)))
     val v2 = VersionedTable.evolveSchema(spark, root, evolved)
     assert(v2 == 2L)
-    // metadata-only: the new version's own data is at most one footer-only
-    // empty part file (O(1) bytes, zero rows) — never a table rewrite
+    // metadata-only: the new version writes no data file of its own
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ownBytes = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/v00000002"))
       .filter(s => s.getPath.getName.startsWith("part-") &&
         s.getPath.getName.endsWith(".parquet"))
       .map(_.getLen).sum
-    assert(ownBytes < 4096, s"evolveSchema rewrote data: $ownBytes bytes")
+    assert(ownBytes == 0L, s"evolveSchema rewrote data: $ownBytes bytes")
     // read-time null backfill for the added column, old rows intact
     val rows = VersionedTable.read(spark, root).orderBy("id").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L))
